@@ -60,15 +60,20 @@ object Ann {
     * execution of the subtree) collapse into this one action, which is
     * exactly the piggyback the PQ/IVFADC paths already had on their
     * driver collect. Row order of the local relation is irrelevant:
-    * every consumer joins or buckets by value. */
-  private def boundedLocalQueries(queries: DataFrame, method: String,
+    * every consumer joins or buckets by value. Only the two columns the
+    * search reads, (queryIdCol, vecCol), are collected: any other column
+    * of the queries frame (payload text, metadata) never reaches the
+    * driver. */
+  private def boundedLocalQueries(queries: DataFrame, queryIdCol: String,
+                                  vecCol: String, method: String,
                                   maxQueries: Int): DataFrame = {
     require(maxQueries >= 1,
       s"$method: maxQueries must be >= 1, got $maxQueries")
-    val rows = queries.limit(maxQueries + 1).collect()
+    val slim = queries.select(col(queryIdCol), col(vecCol))
+    val rows = slim.limit(maxQueries + 1).collect()
     if (rows.length > maxQueries) oversizedQueries(method, maxQueries)
     queries.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), queries.schema)
+      java.util.Arrays.asList(rows: _*), slim.schema)
   }
 
   /**
@@ -170,7 +175,8 @@ object Ann {
                      idCol: String, vecCol: String, queryIdCol: String,
                      k: Int,
                      maxQueries: Int = DefaultMaxQueries): DataFrame = {
-    val qLocal = boundedLocalQueries(queries, "bruteForceTopK", maxQueries)
+    val qLocal = boundedLocalQueries(queries, queryIdCol, vecCol, "bruteForceTopK",
+      maxQueries)
     val q = broadcast(qLocal.select(
       col(queryIdCol).as("query_id"), col(vecCol).as("qvec")))
     val scored = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("cvec"))
@@ -202,7 +208,8 @@ object Ann {
               idCol: String, vecCol: String, queryIdCol: String,
               k: Int, bits: Int = 12, tables: Int = 4,
               maxQueries: Int = DefaultMaxQueries): DataFrame = {
-    val qLocal = boundedLocalQueries(queries, "lshTopK", maxQueries)
+    val qLocal = boundedLocalQueries(queries, queryIdCol, vecCol, "lshTopK",
+      maxQueries)
     val c = withBuckets(corpus.select(col(idCol), col(vecCol)), idCol, vecCol, tables, bits)
       .select(col(idCol).as("vec_id"), col(vecCol).as("cvec"), col("table_id"), col("bucket"))
     val q = withBuckets(qLocal.select(col(queryIdCol), col(vecCol)), queryIdCol, vecCol, tables, bits)
@@ -237,7 +244,8 @@ object Ann {
               kmeansIters: Int = 0,
               refineSampleSize: Int = DefaultRefineSample,
               maxQueries: Int = DefaultMaxQueries): DataFrame = {
-    val qLocal = boundedLocalQueries(queries, "ivfTopK", maxQueries)
+    val qLocal = boundedLocalQueries(queries, queryIdCol, vecCol, "ivfTopK",
+      maxQueries)
     // ONE sampling pass covers both the codebook init and (when refining)
     // the Lloyd sample: the first nLists rows of the larger hash-ordered
     // sample ARE exactly the nLists-row codebook (same ordering, same scan)
@@ -492,7 +500,8 @@ object Ann {
                           wantNLists: Option[Int] = None,
                           wantKmeansIters: Option[Int] = None,
                           maxQueries: Int = DefaultMaxQueries): DataFrame = {
-    val qLocal = boundedLocalQueries(queries, "ivfTopKWithCodebook", maxQueries)
+    val qLocal = boundedLocalQueries(queries, queryIdCol, vecCol, "ivfTopKWithCodebook",
+      maxQueries)
     val centroids = loadCodebook(store, wantNLists, wantKmeansIters)
     if (centroids.length <= 1)
       bruteForceTopK(corpus, qLocal, idCol, vecCol, queryIdCol, k,

@@ -95,6 +95,9 @@ object Main {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .config("spark.task.maxFailures", "3")
+      // fork-free file: filesystem; set before the user's --conf so a
+      // --conf spark.hadoop.fs.file.impl=... still wins
+      .config(graft.fs.LocalFileSystems.sparkConf)
     app.master.foreach(m => b = b.master(m))
     app.conf.foreach { case (k, v) => b = b.config(k, v) }
     b.getOrCreate()

@@ -52,6 +52,8 @@ object Q154Profile {
     // only visible in a prefix plan; this is the committed evidence that
     // the fused fail chain evaluates one TokenSignals per row
     if (args.nonEmpty) {
+      // indexWhere's -1 would silently dump pipe(0), the bare source scan
+      require(stages.exists(_._1 == "gopher"), "no gopher stage to dump a prefix plan for")
       val gopherIdx = stages.indexWhere(_._1 == "gopher") + 1
       java.nio.file.Files.writeString(java.nio.file.Paths.get(args(0)),
         pipe(gopherIdx).queryExecution.explainString(

@@ -35,6 +35,30 @@ class AnnSpec extends SparkTestBase {
     all(ids.map(_ % 4)) shouldBe 0L
   }
 
+  test("broadcast methods collect only (query id, vector): a wide payload " +
+    "column never reaches the driver relation") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val slim = corpus.where("vec_id IN (0, 1, 2, 3)")
+      .select(col("vec_id").as("query_id"), col("embedding"))
+    val wide = slim.withColumn("payload", expr("repeat('x', 65536)"))
+    val methods = Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+      "brute" -> (q => Ann.bruteForceTopK(corpus, q, "vec_id", "embedding", "query_id", 5)),
+      "lsh" -> (q => Ann.lshTopK(corpus, q, "vec_id", "embedding", "query_id", 5)),
+      "ivf" -> (q => Ann.ivfTopK(corpus, q, "vec_id", "embedding", "query_id", 5,
+        nLists = 8, nProbe = 8)))
+    methods.foreach { case (name, run) =>
+      val top = run(wide)
+      val locals = top.queryExecution.analyzed.collect { case l: LocalRelation => l }
+      withClue(name) {
+        locals should not be empty
+        locals.flatMap(_.output.map(_.name)) should not contain "payload"
+        locals.flatMap(_.data).map(_.numFields).distinct shouldBe Seq(2)
+        top.orderBy("query_id", "rank").collect() shouldBe
+          run(slim).orderBy("query_id", "rank").collect()
+      }
+    }
+  }
+
   test("LSH top-k achieves high recall vs brute force on clustered data") {
     val queries = corpus.where("vec_id IN (0, 1, 2, 3)")
       .select(col("vec_id").as("query_id"), col("embedding"))
