@@ -410,7 +410,7 @@ object Bench {
       // pass would re-pay janino compilation (~50-300 ms per stage) that
       // the old back-to-back ordering only paid on pass 1
       .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config(graft.fs.LocalFileSystems.sparkConf)
+      .config(graft.fs.LocalFileSystems.sparkConf())
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // dev-loop aid: SPARK_GRAFT_BENCH_ONLY=q88_dedup_semantic,q8_join_inner

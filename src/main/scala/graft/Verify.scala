@@ -77,7 +77,7 @@ object Verify {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config(graft.fs.LocalFileSystems.sparkConf)
+      .config(graft.fs.LocalFileSystems.sparkConf())
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     only.foreach { names =>

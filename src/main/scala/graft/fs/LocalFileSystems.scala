@@ -5,11 +5,11 @@ import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermissions
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants,
-  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FileSystem,
+  FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.hadoop.io.nativeio.NativeIO
+import org.apache.spark.SparkConf
 
 /**
  * The `file:` filesystem classes every graft session runs on.
@@ -19,26 +19,52 @@ import org.apache.hadoop.io.nativeio.NativeIO
  * (`setPermission`) and a `readlink` child process for every link-status
  * probe (`getFileLinkStatus`, called by FileContext's rename — i.e. every
  * streaming checkpoint and state-store commit). Those forks are the fixed
- * per-file floor of every sink commit, quarantine append and micro-batch. These classes do the same two things through `java.nio`
- * in-process and defer to Hadoop wherever the answer could differ:
- * native Hadoop present, a non-POSIX filesystem, a sticky bit, a real
- * symlink. Everything else is the stock class.
+ * per-file floor of every sink commit, quarantine append and micro-batch.
+ * These classes do the same two things through `java.nio` in-process and
+ * defer to Hadoop wherever `java.nio` cannot give the same answer: a
+ * non-POSIX filesystem, a sticky bit, a real symlink. Everything else is
+ * the stock class.
  *
- * [[sparkConf]] is the one definition of how a session installs them;
- * users override it like any other Spark setting
+ * [[sparkConf]] is the one definition of how a session installs them.
+ * It yields to a `file:` implementation the deployment already sets, and
+ * the user overrides it like any other Spark setting
  * (`--conf spark.hadoop.fs.file.impl=org.apache.hadoop.fs.LocalFileSystem`).
  */
 object LocalFileSystems {
-  val sparkConf: Map[String, String] = Map(
+  val settings: Map[String, String] = Map(
     "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName)
+
+  /** [[settings]] minus each key the deployment sets itself: in `spark`
+    * (spark-defaults.conf, spark-submit's `--conf`, `-Dspark.*`) or, as the
+    * bare Hadoop key, in any Hadoop resource but `core-default.xml` (e.g.
+    * `core-site.xml`). A session builder option outranks both, so these
+    * must not reach the builder when either has its own. */
+  def sparkConf(spark: SparkConf = new SparkConf(),
+      hadoop: Configuration = new Configuration()): Map[String, String] =
+    settings.filter { case (key, _) =>
+      !spark.contains(key) && Option(hadoop.getPropertySources(key.stripPrefix("spark.hadoop.")))
+        .forall(_.forall(_ == "core-default.xml"))
+    }
+
+  /** A warning when `FileSystem.get` hands out another `file:` class than
+    * `hadoop` configures. Hadoop caches FileSystems by scheme and user, not
+    * by Configuration, so an instance created before the session (as
+    * spark-submit does in client mode when it resolves `file:` `--jars`/
+    * `--files`) is what the session gets, with its per-file forks. */
+  def cachedMismatch(hadoop: Configuration): Option[String] = {
+    val actual = FileSystem.get(FsConstants.LOCAL_FS_URI, hadoop).getClass.getName
+    Option(hadoop.get("fs.file.impl")).filter(_ != actual).map(configured =>
+      s"fs.file.impl is $configured but the cached file: FileSystem is $actual " +
+        "(created before this session); file: writes go through it")
+  }
 }
 
 /** `RawLocalFileSystem` without the per-file `chmod`/`readlink` forks. */
 class NioRawLocalFileSystem extends RawLocalFileSystem {
   override def setPermission(p: Path, permission: FsPermission): Unit =
     // java.nio has no sticky bit: such modes keep Hadoop's chmod
-    if (NativeIO.isAvailable || permission.getStickyBit)
+    if (permission.getStickyBit)
       super.setPermission(p, permission)
     else
       try Files.setPosixFilePermissions(pathToFile(p).toPath, PosixFilePermissions.fromString(

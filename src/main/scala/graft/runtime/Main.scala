@@ -1,5 +1,7 @@
 package graft.runtime
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 import graft.api.ConfigException
@@ -87,20 +89,29 @@ object Main {
     }
   }
 
+  /** The options createSparkSession sets on the builder. On a shared key
+    * the later group wins: graft's defaults, then the fork-free `file:`
+    * classes for each key the deployment (`deployment`: spark-defaults.conf,
+    * spark-submit's --conf; `hadoop`: core-site.xml) leaves unset, then the
+    * user's --conf. */
+  def sessionConf(app: AppConfig, deployment: SparkConf = new SparkConf(),
+      hadoop: Configuration = new Configuration()): Map[String, String] =
+    Map(
+      // reference defaults (application.conf:8-22): AQE + skew handling on
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.serializer" -> "org.apache.spark.serializer.KryoSerializer",
+      "spark.task.maxFailures" -> "3") ++
+      graft.fs.LocalFileSystems.sparkConf(deployment, hadoop) ++ app.conf
+
   def createSparkSession(app: AppConfig): SparkSession = {
     var b = SparkSession.builder().appName(app.appName)
-      // reference defaults (application.conf:8-22): AQE + skew handling on
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.task.maxFailures", "3")
-      // fork-free file: filesystem; set before the user's --conf so a
-      // --conf spark.hadoop.fs.file.impl=... still wins
-      .config(graft.fs.LocalFileSystems.sparkConf)
     app.master.foreach(m => b = b.master(m))
-    app.conf.foreach { case (k, v) => b = b.config(k, v) }
-    b.getOrCreate()
+    val spark = b.config(sessionConf(app)).getOrCreate()
+    graft.fs.LocalFileSystems.cachedMismatch(spark.sparkContext.hadoopConfiguration)
+      .foreach(new StructuredLogger("Main").warn(_))
+    spark
   }
 
   def main(args: Array[String]): Unit = {

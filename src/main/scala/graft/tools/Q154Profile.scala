@@ -53,10 +53,10 @@ object Q154Profile {
     // the fused fail chain evaluates one TokenSignals per row
     if (args.nonEmpty) {
       // indexWhere's -1 would silently dump pipe(0), the bare source scan
-      require(stages.exists(_._1 == "gopher"), "no gopher stage to dump a prefix plan for")
-      val gopherIdx = stages.indexWhere(_._1 == "gopher") + 1
+      val gopherIdx = stages.indexWhere(_._1 == "gopher")
+      require(gopherIdx >= 0, "no gopher stage to dump a prefix plan for")
       java.nio.file.Files.writeString(java.nio.file.Paths.get(args(0)),
-        pipe(gopherIdx).queryExecution.explainString(
+        pipe(gopherIdx + 1).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode))
       println(s"#q154 gopher-prefix plan -> ${args(0)}")
     }

@@ -2,12 +2,15 @@ package graft.fs
 
 import java.net.URI
 import java.nio.file.Files
+import java.security.PrivilegedExceptionAction
 
 import scala.jdk.CollectionConverters._
 
 import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
-import org.apache.hadoop.fs.{FileContext, FileSystem}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem}
+import org.apache.hadoop.security.UserGroupInformation
 
 import graft.SparkTestBase
 import graft.config._
@@ -45,6 +48,24 @@ class ForkCountSpec extends SparkTestBase {
     val conf = spark.sessionState.newHadoopConf()
     FileSystem.get(new URI("file:///"), conf) shouldBe a[NioLocalFileSystem]
     FileContext.getFileContext(conf).getDefaultFileSystem shouldBe a[NioLocalFs]
+  }
+
+  test("a stock file: FileSystem cached before the session is reported") {
+    LocalFileSystems.cachedMismatch(spark.sparkContext.hadoopConfiguration) shouldBe None
+    // the cache is keyed by user: another user's lookups start from an empty one
+    val ugi = UserGroupInformation.createRemoteUser("graft-fs-cache-probe")
+    try ugi.doAs(new PrivilegedExceptionAction[Unit] {
+      override def run(): Unit = {
+        val stock = new Configuration()
+        stock.set("fs.file.impl", classOf[LocalFileSystem].getName)
+        FileSystem.get(new URI("file:///"), stock).getClass shouldBe classOf[LocalFileSystem]
+        val ours = new Configuration()
+        ours.set("fs.file.impl", classOf[NioLocalFileSystem].getName)
+        LocalFileSystems.cachedMismatch(ours).getOrElse("") should include(
+          "fs.file.impl is graft.fs.NioLocalFileSystem but the cached file: FileSystem is " +
+            "org.apache.hadoop.fs.LocalFileSystem")
+      }
+    }) finally FileSystem.closeAllForUGI(ugi)
   }
 
   test("file sink, quarantine gate and checkpointed streaming drain start no " +

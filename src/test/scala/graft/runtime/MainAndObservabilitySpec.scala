@@ -17,6 +17,44 @@ class MainAndObservabilitySpec extends SparkTestBase {
     an[IllegalArgumentException] should be thrownBy Main.parseArguments(Array.empty)
   }
 
+  test("session conf: the file: classes yield to the deployment's own; --conf beats all") {
+    val fileImpl = "spark.hadoop.fs.file.impl"
+    val afsImpl = "spark.hadoop.fs.AbstractFileSystem.file.impl"
+    val app = Main.AppConfig(pipelinePath = "/p.yaml")
+    val nothingSet = new org.apache.spark.SparkConf(false)
+    val defaults = new org.apache.hadoop.conf.Configuration()
+    // core-default.xml names LocalFs for the FileContext side: not a choice
+    defaults.get("fs.AbstractFileSystem.file.impl") shouldBe "org.apache.hadoop.fs.local.LocalFs"
+    val plain = Main.sessionConf(app, nothingSet, defaults)
+    plain(fileImpl) shouldBe classOf[graft.fs.NioLocalFileSystem].getName
+    plain(afsImpl) shouldBe classOf[graft.fs.NioLocalFs].getName
+    plain("spark.sql.adaptive.enabled") shouldBe "true"
+
+    // spark-defaults.conf / spark-submit --conf: graft's entry stays off the builder
+    val viaSpark = Main.sessionConf(app,
+      new org.apache.spark.SparkConf(false).set(fileImpl, "com.example.SiteFs"), defaults)
+    viaSpark.get(fileImpl) shouldBe None
+    viaSpark(afsImpl) shouldBe classOf[graft.fs.NioLocalFs].getName
+
+    // a core-site.xml entry
+    val site = java.nio.file.Files.createTempFile("graft-core-site", ".xml")
+    try {
+      java.nio.file.Files.writeString(site, "<configuration><property>" +
+        "<name>fs.AbstractFileSystem.file.impl</name><value>com.example.SiteFs</value>" +
+        "</property></configuration>")
+      val hadoop = new org.apache.hadoop.conf.Configuration()
+      hadoop.addResource(new org.apache.hadoop.fs.Path(site.toUri))
+      val viaSite = Main.sessionConf(app, nothingSet, hadoop)
+      viaSite.get(afsImpl) shouldBe None
+      viaSite(fileImpl) shouldBe classOf[graft.fs.NioLocalFileSystem].getName
+    } finally java.nio.file.Files.delete(site)
+
+    // graft's own --conf wins over everything
+    Main.sessionConf(app.copy(conf = Map(fileImpl -> "org.apache.hadoop.fs.LocalFileSystem")),
+      new org.apache.spark.SparkConf(false).set(fileImpl, "com.example.SiteFs"), defaults)(fileImpl) shouldBe
+      "org.apache.hadoop.fs.LocalFileSystem"
+  }
+
   test("metrics collector: per-run records, pipeline summary, throughput, JSON export") {
     val mc = new MetricsCollector()
     val m1 = ExecutionMetrics("p1", "r1", "SUCCESS", 100, 90, 10, 2000,
