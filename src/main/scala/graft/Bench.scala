@@ -388,6 +388,26 @@ object Bench {
       System.err.println(s"bench artifact write failed: ${e.getMessage}")
     }
 
+  /** The local session every harness main (Bench, Verify, BenchLongDoc,
+    * BenchVecDim, the `graft.tools` profilers) runs on: `cpus` threads
+    * and as many shuffle partitions, UTC, AQE, no UI, graft's fork-free
+    * `file:` classes ([[graft.fs.LocalFileSystems]]), and a codegen cache
+    * large enough for the registry — a static conf, effective because
+    * the main owns the first session in its JVM: the default 100-entry
+    * cache cannot hold a 170-query registry, so under measure()'s cycle
+    * ordering every pass would re-pay janino compilation (~50-300 ms per
+    * stage) that back-to-back ordering only paid on pass 1. Each main
+    * sets its own log level. */
+  def session(cpus: String): SparkSession = SparkSession.builder()
+    .master(s"local[$cpus]")
+    .config("spark.sql.shuffle.partitions", cpus)
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.sql.adaptive.enabled", "true")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.codegen.cache.maxEntries", "8192")
+    .config(graft.fs.LocalFileSystems.sparkConf())
+    .getOrCreate()
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default 8 threads = the measured sweet spot for this suite at sf0.1
@@ -398,20 +418,7 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
     val outDir = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // static conf, effective because Bench owns the first session in
-      // this JVM: the default 100-entry codegen cache cannot hold a
-      // 170-query registry, so under measure()'s cycle ordering every
-      // pass would re-pay janino compilation (~50-300 ms per stage) that
-      // the old back-to-back ordering only paid on pass 1
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config(graft.fs.LocalFileSystems.sparkConf())
-      .getOrCreate()
+    val spark = session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // dev-loop aid: SPARK_GRAFT_BENCH_ONLY=q88_dedup_semantic,q8_join_inner
     // times just those queries (full registry when unset — the driver path)

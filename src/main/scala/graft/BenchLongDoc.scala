@@ -94,13 +94,7 @@ object BenchLongDoc {
 
   def main(args: Array[String]): Unit = {
     val cpus = math.max(2, Runtime.getRuntime.availableProcessors())
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.session(cpus.toString)
     spark.sparkContext.setLogLevel("WARN")
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val out = sys.env.getOrElse("SPARK_GRAFT_LONGDOC_DIR", "/tmp/graft-longdoc")

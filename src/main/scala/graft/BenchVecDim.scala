@@ -88,13 +88,7 @@ object BenchVecDim {
 
   def main(args: Array[String]): Unit = {
     val cpus = math.max(2, Runtime.getRuntime.availableProcessors())
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.session(cpus.toString)
     spark.sparkContext.setLogLevel("WARN")
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = sys.env.getOrElse("SPARK_GRAFT_VECDIM_DIR", "/tmp/graft-vecdim")

@@ -32,229 +32,172 @@ object SparkEntry {
   private val transforms = Registries.transforms()
   /** Streaming-input staging dirs, memoized per source dir (q32/q46): test
     * scaffolding only — real deployments stream already-landed files. */
-  private val q32InputDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def stagedEventsDir(s: SparkSession, dir: String): String =
-    q32InputDirs.computeIfAbsent(dir, { d =>
-      val tmp = java.nio.file.Files.createTempDirectory("q32in").toString
+    Scratch.staged(s"q32in#$dir") { tmp =>
       // landed partitioned by event_type — the standard landing layout for
       // typed event streams, and what lets a per-type consumer (q73's
       // click/purchase sides) partition-prune instead of scanning every
       // type's files on every micro-batch. coalesce(2) keeps the per-type
       // file count low: the file source re-lists this dir once per
       // micro-batch AND per bench pass.
-      tab(s, d, "events").coalesce(2).write.mode("overwrite")
+      tab(s, dir, "events").coalesce(2).write.mode("overwrite")
         .partitionBy("event_type").parquet(tmp)
-      tmp
-    })
+    }
 
   /** Persisted MinHash signature store for q117, memoized per source dir:
     * run-N scaffolding (the store normally comes from yesterday's
     * minhash_signatures pipeline) — q117 itself reads ONLY this parquet,
     * never the reference text. */
-  private val q117StoreDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def stagedSignatureStore(s: SparkSession, dir: String): String =
-    q117StoreDirs.computeIfAbsent(dir, { d =>
-      val tmp = java.nio.file.Files.createTempDirectory("q117sig").toString
+    Scratch.staged(s"q117sig#$dir") { tmp =>
       graft.dedup.Dedup.minhashSignatures(
-          tab(s, d, "documents").where("doc_id < 100"), "doc_id", "text")
+          tab(s, dir, "documents").where("doc_id < 100"), "doc_id", "text")
         .write.mode("overwrite").parquet(tmp)
-      tmp
-    })
+    }
 
   /** Persisted gram-hash store for q124, memoized per source dir: run-N
     * scaffolding (the store normally comes from yesterday's
     * gram_signatures pipeline) — q124 itself reads ONLY this parquet,
     * never the reference text. */
-  private val q124StoreDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def stagedGramStore(s: SparkSession, dir: String): String =
-    q124StoreDirs.computeIfAbsent(dir, { d =>
-      val tmp = java.nio.file.Files.createTempDirectory("q124gram").toString
+    Scratch.staged(s"q124gram#$dir") { tmp =>
       graft.dedup.SpanDedup.gramSignatures(
-          tab(s, d, "documents").where("doc_id < 250"), "text")
+          tab(s, dir, "documents").where("doc_id < 250"), "text")
         .write.mode("overwrite").parquet(tmp)
-      tmp
-    })
+    }
 
   /** Persisted BPE merges store for q131/q132, memoized per source dir:
     * run-N scaffolding (the store normally comes from yesterday's
     * bpe_train pipeline) — the consumers read ONLY this parquet, never
     * re-train. Built through the registry transform so the library path
     * is what's exercised. */
-  private val bpeStoreDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def stagedBpeStore(s: SparkSession, dir: String): String =
-    bpeStoreDirs.computeIfAbsent(dir, { d =>
-      val tmp = java.nio.file.Files.createTempDirectory("bpemerges").toString
-      ap(tab(s, d, "documents"),
+    Scratch.staged(s"bpemerges#$dir") { tmp =>
+      ap(tab(s, dir, "documents"),
         t("bpe_train", "textColumn" -> "text", "numMerges" -> "300"))
         .write.mode("overwrite").parquet(tmp)
-      tmp
-    })
+    }
 
   /** Persisted line-hash store for q140, memoized per source dir: run-N
     * scaffolding (the store normally comes from yesterday's
     * `line_signatures` pipeline over the ingested corpus) — q140 drops
     * history's lines reading ONLY this parquet, never reference text. */
-  private val lineStoreDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def stagedLineStore(s: SparkSession, dir: String): String =
-    lineStoreDirs.computeIfAbsent(dir, { d =>
-      import org.apache.spark.sql.functions._
-      val tmp = java.nio.file.Files.createTempDirectory("linestore").toString
-      ap(relined(s, d).where(col("doc_id") < 100),
+    Scratch.staged(s"linestore#$dir") { tmp =>
+      ap(relined(s, dir).where("doc_id < 100"),
         t("line_signatures", "textColumn" -> "text"))
         .write.mode("overwrite").parquet(tmp)
-      tmp
-    })
+    }
+
+  /** The planted corpus the q133/q143 tokenizer stores train on: a Greek
+    * alphabet disjoint from the ASCII testdata. */
+  private def plantedGreek(s: SparkSession): DataFrame = {
+    import s.implicits._
+    Seq.fill(4)(Seq("αβ", "αβγ", "γβα").mkString(" ")).toDF("text")
+  }
 
   /** BPE merges store trained on a DISJOINT planted alphabet (Greek) for
     * q133: none of its merges can fire on the ASCII corpus, so encoding
     * provably degenerates to one token per code point + one `</w>` per
     * word — arithmetic DuckDB re-derives exactly. One global store (its
     * content never depends on the source dir). */
-  private val bpeDisjointStoreDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def stagedBpeDisjointStore(s: SparkSession): String =
-    bpeDisjointStoreDir.computeIfAbsent("global", { _ =>
-      import s.implicits._
-      val tmp = java.nio.file.Files.createTempDirectory("bpemerges0").toString
-      val planted = Seq.fill(4)(Seq("αβ", "αβγ", "γβα").mkString(" "))
-      ap(planted.toDF("text"),
+    Scratch.staged("bpemerges0") { tmp =>
+      ap(plantedGreek(s),
         t("bpe_train", "textColumn" -> "text", "numMerges" -> "8",
           "minCount" -> "2"))
         .write.mode("overwrite").parquet(tmp)
-      tmp
-    })
+    }
 
   /** The q133 planted store retrained with byteFallback for q143: every
     * codepoint of the ASCII corpus is OUTSIDE its Greek alphabet, so the
     * encode provably takes the byte path for all of them — the
     * train-on-A / encode-on-B pattern with ZERO `<unk>` and an exact
     * detokenize roundtrip (the cross-corpus safety property). */
-  private val bpeFallbackStoreDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def stagedBpeFallbackStore(s: SparkSession): String =
-    bpeFallbackStoreDir.computeIfAbsent("global", { _ =>
-      import s.implicits._
-      val tmp = java.nio.file.Files.createTempDirectory("bpemergesbf").toString
-      val planted = Seq.fill(4)(Seq("αβ", "αβγ", "γβα").mkString(" "))
-      ap(planted.toDF("text"),
+    Scratch.staged("bpemergesbf") { tmp =>
+      ap(plantedGreek(s),
         t("bpe_train", "textColumn" -> "text", "numMerges" -> "8",
           "minCount" -> "2", "byteFallback" -> "true"))
         .write.mode("overwrite").parquet(tmp)
-      tmp
-    })
+    }
 
   /** Persisted k-means codebook store for q125, memoized per source dir:
     * run-N scaffolding (the store normally comes from yesterday's
     * `codebook` pipeline) — q125 itself trains NOTHING and pays no
     * sampling scan; its cluster assignment reads ONLY this parquet. */
-  private val q125StoreDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def stagedCodebookStore(s: SparkSession, dir: String): String =
-    q125StoreDirs.computeIfAbsent(dir, { d =>
-      val tmp = java.nio.file.Files.createTempDirectory("q125cb").toString
-      graft.ann.Ann.codebookFrame(plantedFamilies(s, d), "vec_id", "embedding",
+    Scratch.staged(s"q125cb#$dir") { tmp =>
+      graft.ann.Ann.codebookFrame(plantedFamilies(s, dir), "vec_id", "embedding",
           nLists = 40, kmeansIters = 2)
         .write.mode("overwrite").parquet(tmp)
-      tmp
-    })
+    }
+
+  /** The planted-twin corpus of the exact-ANN queries and their stores
+    * (q115/q116/q127/q169–q175): `emb` plus a copy of its first 5
+    * vectors under vec_id + 2000000, so every query vector has exactly
+    * one identical twin. Takes the loaded frame rather than the source
+    * dir so a query that also draws its queries from `emb` reads the
+    * table once. */
+  private def twinCorpus(emb: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions._
+    emb.unionByName(emb.where("vec_id < 5")
+      .withColumn("vec_id", col("vec_id") + 2000000L))
+  }
 
   /** Persisted IVF codebook for q127 over the twin-augmented embedding
     * corpus, memoized per source dir — q127's ANN search trains nothing
     * and probes against ONLY this parquet. */
-  private val q127StoreDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def stagedAnnCodebookStore(s: SparkSession, dir: String): String =
-    q127StoreDirs.computeIfAbsent(dir, { d =>
-      import org.apache.spark.sql.functions._
-      val tmp = java.nio.file.Files.createTempDirectory("q127cb").toString
-      val emb = tab(s, d, "embeddings")
-      val twins = emb.where("vec_id < 5")
-        .withColumn("vec_id", col("vec_id") + 2000000L)
-      graft.ann.Ann.codebookFrame(emb.unionByName(twins), "vec_id", "embedding",
-          nLists = 64, kmeansIters = 0)
+    Scratch.staged(s"q127cb#$dir") { tmp =>
+      graft.ann.Ann.codebookFrame(twinCorpus(tab(s, dir, "embeddings")),
+          "vec_id", "embedding", nLists = 64, kmeansIters = 0)
         .write.mode("overwrite").parquet(tmp)
-      tmp
-    })
+    }
 
   /** Persisted PQ codebook store for q170 over the twin-augmented
     * embedding corpus, memoized per source dir — q170's retrieval trains
     * nothing and encodes against ONLY this parquet. */
-  private val q170StoreDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def stagedPqCodebookStore(s: SparkSession, dir: String): String =
-    q170StoreDirs.computeIfAbsent(dir, { d =>
-      import org.apache.spark.sql.functions._
-      val tmp = java.nio.file.Files.createTempDirectory("q170pq").toString
-      val emb = tab(s, d, "embeddings")
-      val twins = emb.where("vec_id < 5")
-        .withColumn("vec_id", col("vec_id") + 2000000L)
-      graft.ann.Ann.pqCodebookFrame(emb.unionByName(twins), "vec_id",
-          "embedding", m = 8, k = 256, kmeansIters = 2)
+    Scratch.staged(s"q170pq#$dir") { tmp =>
+      graft.ann.Ann.pqCodebookFrame(twinCorpus(tab(s, dir, "embeddings")),
+          "vec_id", "embedding", m = 8, k = 256, kmeansIters = 2)
         .write.mode("overwrite").parquet(tmp)
-      tmp
-    })
+    }
 
   /** q174's staged PQ CODES store — the corpus of q169/q170, encoded
     * ONCE against the q170 codebook store ([[graft.ann.Ann.pqCodesFrame]]
     * via the pq_encode transform) and persisted; q174's retrieval then
     * trains nothing AND encodes nothing. */
-  private val q174CodesDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def stagedPqCodesStore(s: SparkSession, dir: String): String =
-    q174CodesDirs.computeIfAbsent(dir, { d =>
-      import org.apache.spark.sql.functions._
-      val tmp = java.nio.file.Files.createTempDirectory("q174codes").toString
-      val emb = tab(s, d, "embeddings")
-      val twins = emb.where("vec_id < 5")
-        .withColumn("vec_id", col("vec_id") + 2000000L)
+    Scratch.staged(s"q174codes#$dir") { tmp =>
       val cbs = graft.ann.Ann.loadPqCodebooks(
-        s.read.parquet(stagedPqCodebookStore(s, d)))
-      graft.ann.Ann.pqCodesFrame(emb.unionByName(twins), "vec_id",
-          "embedding", cbs)
+        s.read.parquet(stagedPqCodebookStore(s, dir)))
+      graft.ann.Ann.pqCodesFrame(twinCorpus(tab(s, dir, "embeddings")),
+          "vec_id", "embedding", cbs)
         .write.mode("overwrite").parquet(tmp)
-      tmp
-    })
+    }
 
   /** q175's staged IVFADC CODES store — q174's statement for the
     * composed quantizer. */
-  private val q175CodesDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def stagedIvfPqCodesStore(s: SparkSession, dir: String): String =
-    q175CodesDirs.computeIfAbsent(dir, { d =>
-      import org.apache.spark.sql.functions._
-      val tmp = java.nio.file.Files.createTempDirectory("q175codes").toString
-      val emb = tab(s, d, "embeddings")
-      val twins = emb.where("vec_id < 5")
-        .withColumn("vec_id", col("vec_id") + 2000000L)
+    Scratch.staged(s"q175codes#$dir") { tmp =>
       val (cents, cbs) = graft.ann.Ann.loadIvfPqStore(
-        s.read.parquet(stagedIvfPqStore(s, d)))
-      graft.ann.Ann.ivfPqCodesFrame(emb.unionByName(twins), "vec_id",
-          "embedding", cents, cbs)
+        s.read.parquet(stagedIvfPqStore(s, dir)))
+      graft.ann.Ann.ivfPqCodesFrame(twinCorpus(tab(s, dir, "embeddings")),
+          "vec_id", "embedding", cents, cbs)
         .write.mode("overwrite").parquet(tmp)
-      tmp
-    })
+    }
 
   /** q172's staged COMBINED IVFADC store — the q170 memoization for
     * [[graft.ann.Ann.ivfPqStoreFrame]]. */
-  private val q172StoreDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def stagedIvfPqStore(s: SparkSession, dir: String): String =
-    q172StoreDirs.computeIfAbsent(dir, { d =>
-      import org.apache.spark.sql.functions._
-      val tmp = java.nio.file.Files.createTempDirectory("q172ivfpq").toString
-      val emb = tab(s, d, "embeddings")
-      val twins = emb.where("vec_id < 5")
-        .withColumn("vec_id", col("vec_id") + 2000000L)
-      graft.ann.Ann.ivfPqStoreFrame(emb.unionByName(twins), "vec_id",
-          "embedding", nLists = 16, m = 8, nCentroids = 256, kmeansIters = 2)
+    Scratch.staged(s"q172ivfpq#$dir") { tmp =>
+      graft.ann.Ann.ivfPqStoreFrame(twinCorpus(tab(s, dir, "embeddings")),
+          "vec_id", "embedding", nLists = 16, m = 8, nCentroids = 256,
+          kmeansIters = 2)
         .write.mode("overwrite").parquet(tmp)
-      tmp
-    })
+    }
 
   /** The q118/q119/q125 planted corpus: 40 ids carrying 4 orthogonal
     * one-hot families (vec_id % 4) — the construction whose clustering
@@ -267,11 +210,6 @@ object SparkEntry {
           "THEN 1.0 ELSE 0.0 END AS FLOAT))").as("embedding"))
   }
 
-  /** Drain a streaming frame into a memory table (append, availableNow):
-    * unique query name, temp checkpoint, state-store partition count
-    * scoped to the query and restored after. awaitTermination's result is
-    * CHECKED — a timed-out drain means a partially-filled memory sink, so
-    * refuse it loudly instead of returning wrong rows. */
   /** State partitions for the bench/verify streaming drains: enough to
     * parallelize the stateful compute, few enough that per-store
     * fixed cost (a delta file written+fsynced EVERY micro-batch; a
@@ -296,20 +234,11 @@ object SparkEntry {
   private def streamStateParts(s: SparkSession): Int =
     math.min(s.sparkContext.defaultParallelism, 8).max(2)
 
-  /** Throwaway checkpoint dir for the verify/bench streaming drains:
-    * memory-backed (/dev/shm) when the host offers it — the state store
-    * fsyncs a delta file per partition per micro-batch, which on a
-    * DISCARDED checkpoint is pure fixed overhead (measured ~25% of the
-    * quartet's wall-clock on this box's ext4 /tmp). Production pipelines
-    * configure a durable location via StreamingConfig.checkpointLocation;
-    * this helper is bench scaffolding only. */
-  private def tmpCheckpointDir(prefix: String): String = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    if (java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm))
-      java.nio.file.Files.createTempDirectory(shm, prefix).toString
-    else java.nio.file.Files.createTempDirectory(prefix).toString
-  }
-
+  /** Drain a streaming frame into a memory table (append, availableNow):
+    * unique query name, temp checkpoint, state-store partition count
+    * scoped to the query and restored after. awaitTermination's result is
+    * CHECKED — a timed-out drain means a partially-filled memory sink, so
+    * refuse it loudly instead of returning wrong rows. */
   private def runStreamToTable(s: SparkSession, df: DataFrame, prefix: String,
                                statePartitions: Int = 0,
                                noDataBatch: Boolean = true): DataFrame = {
@@ -330,8 +259,7 @@ object SparkEntry {
     try {
       val q = df.writeStream.format("memory").queryName(qn)
         .outputMode("append")
-        .option("checkpointLocation",
-          tmpCheckpointDir(prefix + "ck"))
+        .option("checkpointLocation", Scratch.memDir(prefix + "ck"))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       if (!q.awaitTermination(120000)) {
@@ -408,36 +336,6 @@ object SparkEntry {
     TransformConfig(s"$typ-q", typ, opts.toMap)
   private def ap(df: DataFrame, tc: TransformConfig): DataFrame =
     transforms.get(tc.transformType).apply(df, tc, ctx(df.sparkSession))
-  /** Read a testdata table. The events table's `ts` encoding has DRIFTED
-    * across testdata generations — TIMESTAMP(NANOS) (which Spark 4 rejects
-    * unless read as raw longs via the legacy conf) vs plain timestamp[us]
-    * (which reads as TIMESTAMP_NTZ) — so branch on the LOADED dtype rather
-    * than assuming either:
-    *  - LongType  → nanos-as-long legacy read; truncate to micros
-    *    (matching DuckDB's ns→us cast semantics in the oracles);
-    *  - TIMESTAMP_NTZ → cast to session-zone TimestampType (session TZ is
-    *    UTC everywhere, so the wall-clock is preserved, matching DuckDB's
-    *    naive TIMESTAMP);
-    *  - TimestampType → already what we want;
-    *  - anything else → a descriptive error naming table/column/type, so
-    *    the NEXT testdata drift produces a diagnosable message instead of
-    *    a downstream Catalyst DATATYPE_MISMATCH. */
-  /** Multi-row-group staged copies of the testdata tables, memoized per
-    * (source dir, table) for the life of the JVM — run-N scaffolding
-    * built INSIDE the run (bench warmup / first use), never persisted
-    * across runs. The generated sf* parquet inputs are ONE row group per
-    * table, so every scan plans exactly one task and the per-row compute
-    * of a whole query tree runs on one core no matter how many the
-    * session has — the round-17 scaling gate measured 8 vs 32 cores
-    * indistinguishable across all 177 queries for exactly this reason.
-    * At production scale inputs arrive as thousands of row groups; the
-    * staged copy reproduces that layout at test scale (guide §6 input
-    * split sizing: file count `SPARK_GRAFT_STAGED_PARTS`, default 32 =
-    * one file per core at the driver's high core count; Spark's
-    * size+openCost split packing then yields ~minPartitionNum splits at
-    * EITHER core count automatically). Same rows, same schema — every
-    * query is row-order-independent, which the DuckDB oracle re-checks
-    * end to end at sf0.001/sf0.01 where this staging is equally active. */
   /** Per-table staged file counts, chosen from the measured tradeoff at
     * sf0.1: scan-task parallelism speeds the CPU-heavy per-row walks
     * (documents: BPE/minhash/media/curation; lineitem: the decimal agg
@@ -456,33 +354,59 @@ object SparkEntry {
   private def stagedParts(name: String): Int =
     sys.env.get("SPARK_GRAFT_STAGED_PARTS").map(_.toInt.max(1))
       .getOrElse(stagedTabPartsDefault.getOrElse(name, 1))
-  private val stagedTabDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
+  /** Read a testdata table through its multi-row-group staged copy,
+    * memoized per (source dir, table) for the life of the JVM — run-N
+    * scaffolding built INSIDE the run (bench warmup / first use), never
+    * persisted across runs. The generated sf* parquet inputs are ONE row
+    * group per table, so every scan plans exactly one task and the
+    * per-row compute of a whole query tree runs on one core no matter how
+    * many the session has — the round-17 scaling gate measured 8 vs 32
+    * cores indistinguishable across all 177 queries for exactly this
+    * reason. At production scale inputs arrive as thousands of row
+    * groups; the staged copy reproduces that layout at test scale (guide
+    * §6 input split sizing: file counts per table from
+    * [[stagedTabPartsDefault]] — documents 8, lineitem 16, orders 8,
+    * events 8, embeddings 4 — or `SPARK_GRAFT_STAGED_PARTS`; Spark's
+    * size+openCost split packing then yields ~minPartitionNum splits at
+    * EITHER core count automatically). Same rows, same schema — every
+    * query is row-order-independent, which the DuckDB oracle re-checks
+    * end to end at sf0.001/sf0.01 where this staging is equally active. */
   private def tab(s: SparkSession, dir: String, name: String): DataFrame =
     if (stagedParts(name) <= 1) rawTab(s, dir, name)
     else s.read.parquet(stagedPath(s, dir, name))
 
   /** The staged dir itself — for the YAML pipelines (q154/q158/q22/q135)
     * whose file source reads the corpus path directly rather than through
-    * [[tab]]: same rows, production-shaped file layout. Unstaged tables
-    * resolve to the raw path (only valid for non-events tables — events'
-    * ts normalization lives in [[rawTab]]). */
-  private def stagedPath(s: SparkSession, dir: String, name: String): String = {
-    val parts = stagedParts(name)
-    if (parts <= 1) {
-      require(name != "events",
-        "stagedPath: events cannot resolve to the raw path (ts normalization)")
-      s"$dir/$name.parquet"
-    } else stagedTabDirs.computeIfAbsent(s"$dir#$name", { _ =>
-      val tmp = java.nio.file.Files.createTempDirectory(s"graftin_$name").toString
-      rawTab(s, dir, name).repartition(parts)
+    * [[tab]]: same rows, production-shaped file layout. At `parts` ≤ 1 a
+    * table that [[rawTab]] leaves unchanged resolves to its raw path;
+    * events, whose `ts` rawTab normalizes, stages a one-file normalized
+    * copy instead, so the path always reads like [[tab]]. */
+  private def stagedPath(s: SparkSession, dir: String, name: String): String =
+    stagedPath(s, dir, name, stagedParts(name))
+  private[graft] def stagedPath(s: SparkSession, dir: String, name: String,
+                                parts: Int): String =
+    if (parts <= 1 && name != "events") s"$dir/$name.parquet"
+    else Scratch.staged(s"graftin_$name#$dir#$parts") { tmp =>
+      rawTab(s, dir, name).repartition(parts.max(1))
         .write.mode("overwrite").parquet(tmp)
-      tmp
-    })
-  }
+    }
 
-  private def rawTab(s: SparkSession, dir: String, name: String): DataFrame = {
+  /** Read a testdata table as generated. The events table's `ts` encoding
+    * has DRIFTED across testdata generations — TIMESTAMP(NANOS) (which
+    * Spark 4 rejects unless read as raw longs via the legacy conf) vs
+    * plain timestamp[us] (which reads as TIMESTAMP_NTZ) — so branch on
+    * the LOADED dtype rather than assuming either:
+    *  - LongType  → nanos-as-long legacy read; truncate to micros
+    *    (matching DuckDB's ns→us cast semantics in the oracles);
+    *  - TIMESTAMP_NTZ → cast to session-zone TimestampType (session TZ is
+    *    UTC everywhere, so the wall-clock is preserved, matching DuckDB's
+    *    naive TIMESTAMP);
+    *  - TimestampType → already what we want;
+    *  - anything else → a descriptive error naming table/column/type, so
+    *    the NEXT testdata drift produces a diagnosable message instead of
+    *    a downstream Catalyst DATATYPE_MISMATCH. */
+  private[graft] def rawTab(s: SparkSession, dir: String, name: String): DataFrame = {
     // Harmless when ts is not NANOS; required for the legacy-nanos files.
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = s.read.parquet(s"$dir/$name.parquet")
@@ -1450,11 +1374,9 @@ object SparkEntry {
     "q115_ann_lsh_exact" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val emb = tab(s, dir, "embeddings")
-      val twins = emb.where("vec_id < 5")
-        .withColumn("vec_id", col("vec_id") + 2000000L)
       val queries = emb.where("vec_id < 5")
         .select(col("vec_id").as("query_id"), col("embedding"))
-      graft.ann.Ann.lshTopK(emb.unionByName(twins), queries,
+      graft.ann.Ann.lshTopK(twinCorpus(emb), queries,
         "vec_id", "embedding", "query_id", 2, bits = 8, tables = 6)
         .select("query_id", "vec_id", "rank")
     }),
@@ -1473,11 +1395,9 @@ object SparkEntry {
     "q116_ann_ivf_exact" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val emb = tab(s, dir, "embeddings")
-      val twins = emb.where("vec_id < 5")
-        .withColumn("vec_id", col("vec_id") + 2000000L)
       val queries = emb.where("vec_id < 5")
         .select(col("vec_id").as("query_id"), col("embedding"))
-      graft.ann.Ann.ivfTopK(emb.unionByName(twins), queries,
+      graft.ann.Ann.ivfTopK(twinCorpus(emb), queries,
         "vec_id", "embedding", "query_id", 2, nLists = 64, nProbe = 8)
         .select("query_id", "vec_id", "rank")
     }),
@@ -1489,9 +1409,7 @@ object SparkEntry {
     "q127_ann_transform_exact" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val emb = tab(s, dir, "embeddings")
-      val twins = emb.where("vec_id < 5")
-        .withColumn("vec_id", col("vec_id") + 2000000L)
-      val corpus = emb.unionByName(twins)
+      val corpus = twinCorpus(emb)
       emb.where("vec_id < 5")
         .select(col("vec_id").as("query_id"), col("embedding"))
         .createOrReplaceTempView("q127_queries")
@@ -2107,11 +2025,9 @@ object SparkEntry {
     "q169_ann_pq_exact" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val emb = tab(s, dir, "embeddings")
-      val twins = emb.where("vec_id < 5")
-        .withColumn("vec_id", col("vec_id") + 2000000L)
       val queries = emb.where("vec_id < 5")
         .select(col("vec_id").as("query_id"), col("embedding"))
-      graft.ann.Ann.pqTopK(emb.unionByName(twins), queries,
+      graft.ann.Ann.pqTopK(twinCorpus(emb), queries,
         "vec_id", "embedding", "query_id", 2,
         m = 8, nCentroids = 256, kmeansIters = 2, candidateFactor = 8)
         .select("query_id", "vec_id", "rank")
@@ -2125,9 +2041,7 @@ object SparkEntry {
     "q170_ann_pq_store_exact" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val emb = tab(s, dir, "embeddings")
-      val twins = emb.where("vec_id < 5")
-        .withColumn("vec_id", col("vec_id") + 2000000L)
-      val corpus = emb.unionByName(twins)
+      val corpus = twinCorpus(emb)
       emb.where("vec_id < 5")
         .select(col("vec_id").as("query_id"), col("embedding"))
         .createOrReplaceTempView("q170_queries")
@@ -2151,9 +2065,7 @@ object SparkEntry {
     "q174_ann_pq_codes_exact" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val emb = tab(s, dir, "embeddings")
-      val twins = emb.where("vec_id < 5")
-        .withColumn("vec_id", col("vec_id") + 2000000L)
-      val corpus = emb.unionByName(twins)
+      val corpus = twinCorpus(emb)
       emb.where("vec_id < 5")
         .select(col("vec_id").as("query_id"), col("embedding"))
         .createOrReplaceTempView("q174_queries")
@@ -2179,11 +2091,9 @@ object SparkEntry {
     "q171_ann_ivfpq_exact" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val emb = tab(s, dir, "embeddings")
-      val twins = emb.where("vec_id < 5")
-        .withColumn("vec_id", col("vec_id") + 2000000L)
       val queries = emb.where("vec_id < 5")
         .select(col("vec_id").as("query_id"), col("embedding"))
-      graft.ann.Ann.ivfPqTopK(emb.unionByName(twins), queries,
+      graft.ann.Ann.ivfPqTopK(twinCorpus(emb), queries,
         "vec_id", "embedding", "query_id", 2,
         nLists = 16, nProbe = 4, m = 8, nCentroids = 256, kmeansIters = 2,
         candidateFactor = 8)
@@ -2195,9 +2105,7 @@ object SparkEntry {
     "q172_ann_ivfpq_store_exact" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val emb = tab(s, dir, "embeddings")
-      val twins = emb.where("vec_id < 5")
-        .withColumn("vec_id", col("vec_id") + 2000000L)
-      val corpus = emb.unionByName(twins)
+      val corpus = twinCorpus(emb)
       emb.where("vec_id < 5")
         .select(col("vec_id").as("query_id"), col("embedding"))
         .createOrReplaceTempView("q172_queries")
@@ -2217,9 +2125,7 @@ object SparkEntry {
     "q175_ann_ivfpq_codes_exact" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val emb = tab(s, dir, "embeddings")
-      val twins = emb.where("vec_id < 5")
-        .withColumn("vec_id", col("vec_id") + 2000000L)
-      val corpus = emb.unionByName(twins)
+      val corpus = twinCorpus(emb)
       emb.where("vec_id < 5")
         .select(col("vec_id").as("query_id"), col("embedding"))
         .createOrReplaceTempView("q175_queries")
@@ -2824,7 +2730,7 @@ object SparkEntry {
           "aggregations" -> "n_events:count(*),sum_value:round(sum(value), 2)"))),
         sink = SinkConfig("memory", Map("queryName" -> "q32_out")),
         streaming = Some(StreamingConfig(
-          checkpointLocation = Some(tmpCheckpointDir("q32ck")),
+          checkpointLocation = Some(Scratch.memDir("q32ck")),
           watermarkColumn = Some("ts"), watermarkDelay = Some("1 hour"),
           outputMode = "append",
           // ~3.4k distinct windows: 8 state stores, not 32 — each state
@@ -2857,7 +2763,7 @@ object SparkEntry {
           "valueColumn" -> "value", "gap" -> "30 minutes"))),
         sink = SinkConfig("memory", Map("queryName" -> "q46_out")),
         streaming = Some(StreamingConfig(
-          checkpointLocation = Some(tmpCheckpointDir("q46ck")),
+          checkpointLocation = Some(Scratch.memDir("q46ck")),
           watermarkColumn = Some("ts"), watermarkDelay = Some("0 seconds"),
           outputMode = "append",
           shufflePartitions = Some(streamStateParts(s)))))
@@ -2891,7 +2797,7 @@ object SparkEntry {
           "project" -> "true"))),
         sink = SinkConfig("memory", Map("queryName" -> "q83_out")),
         streaming = Some(StreamingConfig(
-          checkpointLocation = Some(tmpCheckpointDir("q83ck")),
+          checkpointLocation = Some(Scratch.memDir("q83ck")),
           watermarkColumn = Some("ts"), watermarkDelay = Some("365 days"),
           outputMode = "append",
           dedupColumns = Some("user_id,event_type"),

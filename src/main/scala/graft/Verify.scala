@@ -72,13 +72,7 @@ object Verify {
     // too so tools/check_oracle.py stays coherent on the partial dir
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.fs.LocalFileSystems.sparkConf())
-      .getOrCreate()
+    val spark = Bench.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     only.foreach { names =>
       // a typo'd name must fail loudly, not verify zero queries and

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round measurement aid (round-17 verdict item #6): A/B the
   * per-query job-machinery floor (~0.15–0.25 s × 84 sub-0.35 s queries)
   * against runtime session-conf variants, at whatever core count
@@ -42,14 +40,7 @@ object FloorAB {
     val subset: Set[String] =
       if (args.nonEmpty) args(0).split(",").map(_.trim).filter(_.nonEmpty).toSet
       else DefaultSubset.toSet
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
+    val spark = graft.Bench.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val unknown = subset.diff(graft.SparkEntry.queries.keySet)
     require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(",")}")

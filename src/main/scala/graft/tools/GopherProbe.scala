@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch probe: is quality_rules' filter mode paying the signal walks
@@ -8,11 +7,7 @@ import org.apache.spark.sql.functions._
 object GopherProbe {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.session("8")
     spark.sparkContext.setLogLevel("ERROR")
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .where("text IS NOT NULL").localCheckpoint()

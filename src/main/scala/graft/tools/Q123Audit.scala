@@ -7,7 +7,7 @@ package graft.tools
 // audit"). Run: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 runMain
 // graft.tools.Q123Audit
 object Q123Audit {
-  import org.apache.spark.sql.{DataFrame, SparkSession}
+  import org.apache.spark.sql.DataFrame
   import org.apache.spark.sql.functions._
 
   private def force(df: DataFrame): Unit =
@@ -23,12 +23,7 @@ object Q123Audit {
 
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.session("8")
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = spark.read.parquet(s"$dir/documents.parquet")

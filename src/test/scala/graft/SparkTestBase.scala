@@ -23,6 +23,6 @@ object TestSpark {
 
 abstract class SparkTestBase extends AnyFunSuite with Matchers {
   implicit lazy val spark: SparkSession = TestSpark.spark
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  /** A fresh directory under the JVM's scratch root, deleted at exit. */
+  def tmpDir(prefix: String): String = Scratch.dir(prefix)
 }

@@ -25,6 +25,21 @@ class TestdataSmokeSpec extends SparkTestBase {
     }
   }
 
+  test("stagedPath at one part: events stages a one-file ts-normalized " +
+    "copy, other tables resolve to the raw path") {
+    assume(available, s"$dir not present on this machine")
+    import org.apache.spark.sql.types.TimestampType
+    SparkEntry.stagedPath(spark, dir, "lineitem", 1) shouldBe
+      s"$dir/lineitem.parquet"
+    val events = SparkEntry.stagedPath(spark, dir, "events", 1)
+    events should not be s"$dir/events.parquet"
+    SparkEntry.stagedPath(spark, dir, "events", 1) shouldBe events // memoized
+    val staged = spark.read.parquet(events)
+    staged.schema("ts").dataType shouldBe TimestampType
+    staged.inputFiles.length shouldBe 1
+    staged.count() shouldBe SparkEntry.rawTab(spark, dir, "events").count()
+  }
+
   test("every oracleSql key has a queries entry") {
     val extra = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(extra.isEmpty, s"oracleSql without queries entry: $extra")

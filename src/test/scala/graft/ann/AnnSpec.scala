@@ -160,7 +160,7 @@ class AnnSpec extends SparkTestBase {
     // them and carries no SerializeFromObject/DeserializeToObject pair.
     // Parquet-backed corpus, or ConvertToLocalRelation constant-folds the
     // encode away before the physical plan exists
-    val planDir = java.nio.file.Files.createTempDirectory("pqplan").toString
+    val planDir = tmpDir("pqplan")
     corpus.write.mode("overwrite").parquet(planDir)
     val plan = Ann.pqTopK(spark.read.parquet(planDir), queries,
       "vec_id", "embedding", "query_id", 2, m = 4, nCentroids = 8,
@@ -259,7 +259,7 @@ class AnnSpec extends SparkTestBase {
       include ("geometry version")
     // encode is ONE fused native node; the scan is pruned through the
     // broadcast probe-pair join (plan shows both)
-    val planDir = java.nio.file.Files.createTempDirectory("ivfpqplan").toString
+    val planDir = tmpDir("ivfpqplan")
     corpus.write.mode("overwrite").parquet(planDir)
     val plan = Ann.ivfPqTopK(spark.read.parquet(planDir), queries,
       "vec_id", "embedding", "query_id", 2, nLists = 8, nProbe = 2,

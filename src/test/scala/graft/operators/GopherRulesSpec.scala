@@ -280,7 +280,7 @@ class GopherRulesSpec extends SparkTestBase {
     // parquet-backed input: a LocalRelation would be constant-folded by
     // ConvertToLocalRelation (legal now that the chain is deterministic),
     // leaving no plan to assert on
-    val tmp = java.nio.file.Files.createTempDirectory("gopherpush").toString
+    val tmp = tmpDir("gopherpush")
     Seq((1L, good), (2L, "too short"), (3L, null: String))
       .toDF("doc_id", "text").write.mode("overwrite").parquet(tmp)
     val d = spark.read.parquet(tmp)
@@ -316,9 +316,41 @@ class GopherRulesSpec extends SparkTestBase {
     annotated.select("doc_id").as[Long].collect().toSeq shouldBe Seq(1L)
   }
 
+  /** `gopher_fail` per doc, evaluated twice over a parquet-backed copy
+    * of `docs` (a LocalRelation would be folded by ConvertToLocalRelation
+    * through the interpreted path, so both runs would interpret): once
+    * through generated code only (whole-stage on, no fallback to eval),
+    * once fully interpreted. Each run plans a fresh DataFrame — a
+    * DataFrame caches its physical plan, so re-collecting one would
+    * replay the first run's codegen decisions. */
+  private def failsInBothEvalModes(docs: org.apache.spark.sql.DataFrame,
+      th: GopherRules.Thresholds,
+      bpeCount: Option[org.apache.spark.sql.Column => org.apache.spark.sql.Column])
+      : (Set[(Long, Any)], Set[(Long, Any)]) = {
+    val path = tmpDir("gopherparity")
+    docs.write.mode("overwrite").parquet(path)
+    def under(confs: (String, String)*): Set[(Long, Any)] = {
+      val conf = spark.conf
+      val old = confs.map { case (k, _) => k -> conf.getOption(k) }
+      try {
+        confs.foreach { case (k, v) => conf.set(k, v) }
+        GopherRules.annotate(spark.read.parquet(path), "text", th, bpeCount)
+          .select("doc_id", "gopher_fail")
+          .collect().map(r => (r.getLong(0), r.get(1))).toSet
+      } finally old.foreach {
+        case (k, Some(v)) => conf.set(k, v)
+        case (k, None) => conf.unset(k)
+      }
+    }
+    (under("spark.sql.codegen.wholeStage" -> "true",
+        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+        "spark.sql.codegen.fallback" -> "false"),
+      under("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+  }
+
   test("fused fail chain: interpreted eval matches codegen over the " +
     "planted rule corpus") {
-    import org.apache.spark.sql.functions._
     val docs = Seq(
       1L -> good, 2L -> (null: String), 3L -> "   ", 4L -> "too short",
       5L -> good.split(" ").map(_ * 4).mkString(" "),
@@ -326,22 +358,57 @@ class GopherRulesSpec extends SparkTestBase {
       7L -> good.split(" ").map("- " + _).mkString("\n"),
       8L -> good.split(" ").map(_ + "...").mkString("\n"),
       9L -> good.split(" ").map(_ => "123").mkString(" "),
-      10L -> good.replaceAll("\\b(the|and|to|with)\\b", "xx"))
+      10L -> good.replaceAll("\\b(the|and|to|with)\\b", "xx"),
+      11L -> (good + "\n" + (1 to 10).map(i => s"- item $i point")
+        .mkString("\n")),
+      12L -> (good + "\nwell...\nmaybe...\nyes..."))
       .toDF("doc_id", "text")
-    val fused = GopherRules.annotate(docs, "text")
-      .select(col("doc_id"), col("gopher_fail"))
-    val viaCodegen = fused.collect().map(r => (r.getLong(0), r.get(1))).toSet
-    val conf = spark.conf
-    val oldWs = conf.get("spark.sql.codegen.wholeStage", "true")
-    val oldFm = conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
-    val viaInterp = try {
-      conf.set("spark.sql.codegen.wholeStage", "false")
-      conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-      fused.collect().map(r => (r.getLong(0), r.get(1))).toSet
-    } finally {
-      conf.set("spark.sql.codegen.wholeStage", oldWs)
-      conf.set("spark.sql.codegen.factoryMode", oldFm)
-    }
+    // minWords = 10: at the default 50 every non-empty row (28-word base
+    // doc) stops at word_count and the rest of the chain goes unchecked
+    val (viaCodegen, viaInterp) =
+      failsInBothEvalModes(docs, GopherRules.Thresholds(minWords = 10), None)
     viaInterp shouldBe viaCodegen
+    viaCodegen.map(_._2) should contain allOf (null, "empty", "word_count",
+      "mean_word_length", "symbol_ratio", "bullet_lines", "ellipsis_lines",
+      "alpha_words", "stopwords")
+  }
+
+  test("fused fail chain: interpreted eval matches codegen with every " +
+    "opt-in rule armed") {
+    val docs = Seq(
+      1L -> good, 2L -> (null: String), 3L -> "a b",
+      4L -> Seq.fill(12)("foo bar").mkString(" "),
+      5L -> Seq.fill(4)("one two three four").mkString("\n"),
+      6L -> (Seq("w", "x", "y", "z", "v", "u").mkString("\n") + "\n" +
+        Seq.fill(2)("a much longer line that repeats once").mkString("\n")))
+      .toDF("doc_id", "text")
+    val store = graft.text.Bpe.mergesFrame(docs.na.drop(), "text",
+      numMerges = 6)
+    val loaded = graft.text.Bpe.load(store)
+    val bpe = Some((c: org.apache.spark.sql.Column) =>
+      graft.functions.expressions.BpeEncode.count(c, loaded))
+    val counts = docs.na.drop()
+      .withColumn("n", bpe.get(org.apache.spark.sql.functions.col("text")))
+      .select("doc_id", "n").as[(Long, Int)].collect().toMap
+    // doc 3 under the floor, the longest doc over the cap
+    val (minBpe, maxBpe) = (counts(3L) + 1L, counts.values.max - 1L)
+    // every default rule relaxed so each armed gate can be the first hit
+    val lax = GopherRules.Thresholds(minWords = 0, minMeanWordLength = 0,
+      maxMeanWordLength = 100, minAlphaFraction = 0, minStopwords = 0)
+    val armed = Seq(
+      lax.copy(minBpeTokens = minBpe, maxBpeTokens = maxBpe) -> bpe,
+      lax.copy(maxTopNgramFraction = 0.2, topNgramSize = 2) -> None,
+      lax.copy(maxDupLineFraction = 0.3) -> None,
+      lax.copy(maxDupLineCharFraction = 0.2) -> None,
+      lax.copy(minBpeTokens = minBpe, maxBpeTokens = maxBpe,
+        maxTopNgramFraction = 0.2, maxDupLineFraction = 0.3,
+        maxDupLineCharFraction = 0.2) -> bpe)
+    val fired = armed.flatMap { case (th, count) =>
+      val (viaCodegen, viaInterp) = failsInBothEvalModes(docs, th, count)
+      withClue(th) { viaInterp shouldBe viaCodegen }
+      viaCodegen.map(_._2)
+    }.toSet
+    fired should contain allOf ("bpe_token_count", "top_ngram", "dup_lines",
+      "dup_line_chars")
   }
 }
