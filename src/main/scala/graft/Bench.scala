@@ -58,17 +58,18 @@ object Bench {
     * DIFFERENT queries in different passes and the min discards it. The
     * recompile tax cycles would otherwise pay (a 170-query registry blows
     * the default 100-entry codegen cache between two executions of the
-    * same plan) is bought off by main's
-    * `spark.sql.codegen.cache.maxEntries` bump.
+    * same plan) is bought off by [[session]]'s codegen cache settings.
     *
     * Factored out of main so a spec can inject a deliberately-broken
     * query and assert the failure sentinel, and assert the cycle order.
     * `warmup=false` skips the untimed warmup pass — for extra guard
-    * cycles over an already-hot registry ([[measureGuarded]]). */
+    * cycles over an already-hot registry ([[measureGuarded]]). Each timed
+    * pass's compile count goes to `compiles`, outside the timed region. */
   def measure(spark: SparkSession,
               queries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame],
               sfDir: String, runs: Int,
-              warmup: Boolean = true): List[(String, List[Double])] = {
+              warmup: Boolean = true,
+              compiles: CompileCounter = new CompileCounter): List[(String, List[Double])] = {
     // NonFatal only, here and below: a driver OOM must abort the bench
     // loudly — scoring it as one query's -1 and continuing would time
     // every later query in a heap-exhausted JVM (the round-7 "15 broken
@@ -87,12 +88,16 @@ object Bench {
       // label the timed jobs with the query name (guide §1.5) — also what
       // keys the per-query task counter; warmup stays unlabeled/uncounted
       spark.sparkContext.setJobDescription(name)
+      val c0 = compilesSoFar()
       val t0 = System.nanoTime()
       try {
         force(queries(name)(spark, sfDir))
         passes(name) += (System.nanoTime() - t0) / 1e9
       } catch { case scala.util.control.NonFatal(_) => failed += name }
-      finally spark.sparkContext.setJobDescription(null)
+      finally {
+        spark.sparkContext.setJobDescription(null)
+        compiles.add(name, compilesSoFar() - c0)
+      }
     }
     names.map(n => n -> (if (failed(n)) Nil else passes(n).result()))
   }
@@ -166,12 +171,14 @@ object Bench {
                      sfDir: String, runs: Int,
                      extSample: () => Double = externalCpu _,
                      maxExtraCycles: Int = 2,
-                     settleWaitSec: Int = 240): (List[(String, List[Double])], Double, Int) = {
+                     settleWaitSec: Int = 240,
+                     compiles: CompileCounter = new CompileCounter)
+      : (List[(String, List[Double])], Double, Int) = {
     def suspects(rs: List[(String, List[Double])]): Set[String] =
       rs.collect { case (n, ps) if ps.size >= 2 &&
         ps.max / ps.min.max(1e-9) > SuspectSpreadFactor &&
         ps.max - ps.min > SuspectSpreadFloorSec => n }.toSet
-    var results = measure(spark, queries, sfDir, runs)
+    var results = measure(spark, queries, sfDir, runs, compiles = compiles)
     var extras = 0
     var ext = extSample()
     var settled = true
@@ -200,7 +207,8 @@ object Bench {
           s"quer${if (rerun.size == 1) "y" else "ies"} after quiet wait")
         Console.out.flush()
         val extra = measure(spark,
-          queries.view.filterKeys(rerun).toMap, sfDir, 1, warmup = false).toMap
+          queries.view.filterKeys(rerun).toMap, sfDir, 1, warmup = false,
+          compiles).toMap
         results = results.map { case (n, ps) =>
           extra.get(n) match {
             case Some(Nil)  => n -> Nil          // threw in the guard cycle:
@@ -249,6 +257,23 @@ object Bench {
       counts.asScala.map { case (k, v) => k -> v.get() }.toMap
     }
   }
+
+  /** Per-query codegen compile counter, the additive `"compiles"` report
+    * key: [[measure]] adds the delta of Spark's JVM-wide Janino compile
+    * count (`CodegenMetrics`, which counts compiles, not cache hits) over
+    * each timed pass. Totals across every timed pass, exact while one
+    * query runs at a time. On a warm registry a query above 0 builds a
+    * plan that defeats the codegen cache: a new class on every run, e.g.
+    * a per-run literal inlined into the generated source. */
+  private[graft] final class CompileCounter {
+    private val counts = scala.collection.mutable.Map.empty[String, Long]
+    def add(query: String, n: Long): Unit =
+      counts(query) = counts.getOrElse(query, 0L) + n
+    def snapshot: Map[String, Long] = counts.toMap
+  }
+
+  private def compilesSoFar(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   private def fmt(v: Double) = "%.4f".formatLocal(java.util.Locale.ROOT, v)
   private def minOf(passes: List[Double]): Double =
@@ -320,7 +345,8 @@ object Bench {
   def render(results: List[(String, List[Double])], sfDir: String,
              startLoad: Double, endExternalCpu: Double = -1.0,
              extraCycles: Int = 0,
-             tasks: Map[String, Long] = Map.empty): (String, String) = {
+             tasks: Map[String, Long] = Map.empty,
+             compiles: Map[String, Long] = Map.empty): (String, String) = {
     // Verify's escaper, shared: an sfDir with a backslash or quote would
     // otherwise invalidate EVERY redundant JSON channel at once (the r8
     // "parsed: null" failure mode, re-created by the report itself)
@@ -348,14 +374,17 @@ object Bench {
     val cont = (startLoad > ContendedLoadThreshold ||
       endExternalCpu > ExternalCpuThreshold).toString
     val tail = s""""load_avg_1m":$load,"external_cpu_end":${fmt(endExternalCpu)},"extra_cycles":$extraCycles,"contended":$cont"""
-    // additive "tasks" key (total tasks across this query's timed passes):
-    // parallelism evidence for the per-core-count comparison, absent when
-    // no listener was wired (specs, legacy callers)
-    val taskObj =
-      if (tasks.isEmpty) ""
+    // additive per-query count keys, each absent when its counter was not
+    // wired (specs, legacy callers): "tasks" (total tasks across this
+    // query's timed passes) is parallelism evidence for the per-core-count
+    // comparison; "compiles" (codegen compiles across the same passes)
+    // names the plans that still defeat the codegen cache
+    def perQuery(key: String, counts: Map[String, Long]): String =
+      if (counts.isEmpty) ""
       else results.map { case (k, _) =>
-        Verify.q(k) + ":" + tasks.getOrElse(k, 0L) }
-        .mkString(""""tasks":{""", ",", "},")
+        Verify.q(k) + ":" + counts.getOrElse(k, 0L) }
+        .mkString(s""""$key":{""", ",", "},")
+    val taskObj = perQuery("tasks", tasks) + perQuery("compiles", compiles)
     val big = s"""{"queries":$qs,"passes":$passes,$taskObj"sf":${Verify.q(sfDir)},"failed":$failed,$tail,"metric":"total","unit":"sec","value":${fmt(total)}}"""
     val compact = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${ok.size},"n_failed":${bad.size},"failed":$failed,$tail,"sf":${Verify.q(sfDir)}}"""
     (big, compact)
@@ -390,22 +419,21 @@ object Bench {
 
   /** The local session every harness main (Bench, Verify, BenchLongDoc,
     * BenchVecDim, the `graft.tools` profilers) runs on: `cpus` threads
-    * and as many shuffle partitions, UTC, AQE, no UI, graft's fork-free
-    * `file:` classes ([[graft.fs.LocalFileSystems]]), and a codegen cache
-    * large enough for the registry — a static conf, effective because
-    * the main owns the first session in its JVM: the default 100-entry
-    * cache cannot hold a 170-query registry, so under measure()'s cycle
-    * ordering every pass would re-pay janino compilation (~50-300 ms per
-    * stage) that back-to-back ordering only paid on pass 1. Each main
-    * sets its own log level. */
+    * and as many shuffle partitions, UTC, AQE, no UI, and graft's
+    * [[graft.runtime.SessionDefaults]] — the fork-free `file:` classes and
+    * a codegen cache that holds the whole registry (the default 100-entry
+    * cache cannot, so under measure()'s cycle ordering every pass would
+    * re-pay Janino compilation, ~50-300 ms per stage) and that streaming
+    * queries share. The cache size is a static conf, effective because
+    * the main owns the first session in its JVM. Each main sets its own
+    * log level. */
   def session(cpus: String): SparkSession = SparkSession.builder()
     .master(s"local[$cpus]")
     .config("spark.sql.shuffle.partitions", cpus)
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.ui.enabled", "false")
-    .config("spark.sql.codegen.cache.maxEntries", "8192")
-    .config(graft.fs.LocalFileSystems.sparkConf())
+    .config(graft.runtime.SessionDefaults.sparkConf())
     .getOrCreate()
 
   def main(args: Array[String]): Unit = {
@@ -443,14 +471,15 @@ object Bench {
     val quietWait = sys.env.getOrElse("SPARK_GRAFT_BENCH_QUIET_WAIT_SEC", "240").toInt
     val taskCounter = new TaskCountListener
     spark.sparkContext.addSparkListener(taskCounter)
+    val compileCounter = new CompileCounter
     val startLoad = waitForQuiet(quietWait)  // before warmup: pre-existing load
-    val (results, endExt, extraCycles) =
-      measureGuarded(spark, queries, sfDir, runs, settleWaitSec = quietWait)
+    val (results, endExt, extraCycles) = measureGuarded(spark, queries, sfDir, runs,
+      settleWaitSec = quietWait, compiles = compileCounter)
     // listener delivery is async; a short drain keeps the task counts
     // honest for the report (they are approximate by contract regardless)
     Thread.sleep(2000)
     val (big, compact) = render(results, sfDir, startLoad, endExt, extraCycles,
-      taskCounter.snapshot)
+      taskCounter.snapshot, compileCounter.snapshot)
     // a filtered dev-loop run must never clobber the committed full
     // artifact (it did, twice) — partial reports land beside it
     writeArtifact(outDir + (if (only.isDefined) "/partial" else ""), big)

@@ -9,7 +9,6 @@ import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FileS
   FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.spark.SparkConf
 
 /**
  * The `file:` filesystem classes every graft session runs on.
@@ -25,27 +24,16 @@ import org.apache.spark.SparkConf
  * non-POSIX filesystem, a sticky bit, a real symlink. Everything else is
  * the stock class.
  *
- * [[sparkConf]] is the one definition of how a session installs them.
- * It yields to a `file:` implementation the deployment already sets, and
- * the user overrides it like any other Spark setting
+ * A session installs [[settings]] through
+ * [[graft.runtime.SessionDefaults.sparkConf]], which yields to a `file:`
+ * implementation the deployment already sets; the user overrides it like
+ * any other Spark setting
  * (`--conf spark.hadoop.fs.file.impl=org.apache.hadoop.fs.LocalFileSystem`).
  */
 object LocalFileSystems {
   val settings: Map[String, String] = Map(
     "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName)
-
-  /** [[settings]] minus each key the deployment sets itself: in `spark`
-    * (spark-defaults.conf, spark-submit's `--conf`, `-Dspark.*`) or, as the
-    * bare Hadoop key, in any Hadoop resource but `core-default.xml` (e.g.
-    * `core-site.xml`). A session builder option outranks both, so these
-    * must not reach the builder when either has its own. */
-  def sparkConf(spark: SparkConf = new SparkConf(),
-      hadoop: Configuration = new Configuration()): Map[String, String] =
-    settings.filter { case (key, _) =>
-      !spark.contains(key) && Option(hadoop.getPropertySources(key.stripPrefix("spark.hadoop.")))
-        .forall(_.forall(_ == "core-default.xml"))
-    }
 
   /** A warning when `FileSystem.get` hands out another `file:` class than
     * `hadoop` configures. Hadoop caches FileSystems by scheme and user, not

@@ -90,10 +90,10 @@ object Main {
   }
 
   /** The options createSparkSession sets on the builder. On a shared key
-    * the later group wins: graft's defaults, then the fork-free `file:`
-    * classes for each key the deployment (`deployment`: spark-defaults.conf,
-    * spark-submit's --conf; `hadoop`: core-site.xml) leaves unset, then the
-    * user's --conf. */
+    * the later group wins: graft's defaults, then [[SessionDefaults]] (the
+    * fork-free `file:` classes and the codegen cache settings) for each key
+    * the deployment (`deployment`: spark-defaults.conf, spark-submit's
+    * --conf; `hadoop`: core-site.xml) leaves unset, then the user's --conf. */
   def sessionConf(app: AppConfig, deployment: SparkConf = new SparkConf(),
       hadoop: Configuration = new Configuration()): Map[String, String] =
     Map(
@@ -103,7 +103,7 @@ object Main {
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.serializer" -> "org.apache.spark.serializer.KryoSerializer",
       "spark.task.maxFailures" -> "3") ++
-      graft.fs.LocalFileSystems.sparkConf(deployment, hadoop) ++ app.conf
+      SessionDefaults.sparkConf(deployment, hadoop) ++ app.conf
 
   def createSparkSession(app: AppConfig): SparkSession = {
     var b = SparkSession.builder().appName(app.appName)

@@ -157,6 +157,24 @@ class HarnessLoudnessSpec extends SparkTestBase {
     lines.last should endWith("cum=0.7500")
   }
 
+  test("Bench counts codegen compiles per query over its timed passes: 0 " +
+    "for a plan the cache holds, one per pass for a plan with a new literal " +
+    "inlined each run") {
+    var calls = 0L
+    val fresh: (SparkSession, String) => DataFrame = (s, _) => {
+      calls += 1; s.range(3).selectExpr(s"id + ${1000003L * calls} AS id")
+    }
+    val stable: (SparkSession, String) => DataFrame =
+      (s, _) => s.range(3).selectExpr("id + 1000001 AS id")
+    val compiles = new Bench.CompileCounter
+    val results = Bench.measure(spark, Map("fresh_q" -> fresh, "stable_q" -> stable),
+      "unused", runs = 2, compiles = compiles)
+    compiles.snapshot("stable_q") shouldBe 0L   // compiled in the warmup pass
+    compiles.snapshot("fresh_q") should be >= 2L
+    val (big, _) = Bench.render(results, "sfX", 0.0, compiles = compiles.snapshot)
+    big should include regex """"compiles":\{"fresh_q":[0-9]+,"stable_q":0\},"""
+  }
+
   test("Bench writes the full report to a file artifact") {
     val out = tmpDir("benchout")
     val (big, _) = Bench.render(List("good_q" -> List(0.5)), "sfX", 0.0)

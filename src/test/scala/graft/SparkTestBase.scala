@@ -14,7 +14,7 @@ object TestSpark {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
-      .config(graft.fs.LocalFileSystems.sparkConf())
+      .config(graft.runtime.SessionDefaults.sparkConf())
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

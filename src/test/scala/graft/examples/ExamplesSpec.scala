@@ -5,37 +5,43 @@ import graft.config.YamlConfigParser
 import graft.runtime.PipelineExecutor
 
 /** Every shipped example YAML must parse and execute end-to-end with golden
-  * results (the reference's quickstart scenarios, §5 layer 3). */
+  * results (the reference's quickstart scenarios, §5 layer 3). The
+  * examples write under `/tmp/graft-examples`; here that prefix points at
+  * a fresh scratch directory, `root`, deleted at exit. */
 class ExamplesSpec extends SparkTestBase {
   import spark.implicits._
   private val executor = new PipelineExecutor()
   private val parser = new YamlConfigParser()
+  private val root = tmpDir("graft-examples")
+
+  private def parse(example: String) = parser.parse(
+    java.nio.file.Files.readString(java.nio.file.Paths.get(s"examples/$example"))
+      .replace("/tmp/graft-examples", root))
 
   private def run(example: String) = {
-    val m = executor.execute(parser.parseFile(s"examples/$example"))
+    val m = executor.execute(parse(example))
     withClue(m.error.getOrElse("")) { m.status shouldBe "SUCCESS" }
     m
   }
 
   test("quickstart-1: batch aggregation with expression aggregates and lineage") {
     run("quickstart-1-sales-aggregation.yaml")
-    val out = spark.read.parquet("/tmp/graft-examples/quickstart-1-out")
+    val out = spark.read.parquet(s"$root/quickstart-1-out")
     out.count() shouldBe 6 // 3 return flags × 2 statuses (A/F, N/O, R/F at this SF)
     out.columns should contain allOf ("total_quantity", "total_revenue", "avg_price", "n_lines", "_lineage")
     out.where("total_revenue <= 0").count() shouldBe 0
   }
 
   test("quickstart-2: kafka-style JSON metrics through tumbling windows") {
-    new java.io.File("/tmp/graft-examples").mkdirs()
     val lines = (0 until 120).map { i =>
       val metric = if (i % 2 == 0) "cpu_usage" else "memory_usage"
       f"""{"timestamp": "2024-01-01 10:00:${i % 60}%02d", "metric_name": "$metric", "value": ${10.0 + i}}"""
     }
     java.nio.file.Files.write(
-      java.nio.file.Paths.get("/tmp/graft-examples/metrics-topic"),
+      java.nio.file.Paths.get(s"$root/metrics-topic"),
       lines.mkString("\n").getBytes)
     run("quickstart-2-metrics-windowing.yaml")
-    val out = spark.read.parquet("/tmp/graft-examples/quickstart-2-out")
+    val out = spark.read.parquet(s"$root/quickstart-2-out")
     // 60 distinct seconds → 6 ten-second windows × 2 metrics
     out.count() shouldBe 12
     out.columns shouldBe Array("window_start", "window_end", "metric_name", "avg_value", "max_value", "n")
@@ -44,7 +50,7 @@ class ExamplesSpec extends SparkTestBase {
 
   test("quickstart-4: training-data curation — quality gate, near-dedup, features") {
     val m = run("quickstart-4-training-data.yaml")
-    val out = spark.read.parquet("/tmp/graft-examples/quickstart-4-out")
+    val out = spark.read.parquet(s"$root/quickstart-4-out")
     val total = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").count()
     out.count() should be > 0L
     out.count() should be <= total // near-dups and short docs removed
@@ -74,7 +80,7 @@ class ExamplesSpec extends SparkTestBase {
 
   test("quickstart-6: sampled, redacted, split and shard-packed corpus export") {
     run("quickstart-6-corpus-export.yaml")
-    val out = spark.read.parquet("/tmp/graft-examples/quickstart-6-out")
+    val out = spark.read.parquet(s"$root/quickstart-6-out")
     val n = out.count()
     n should be > 0L
     n.toDouble / 500 shouldBe 0.30 +- 0.08          // deterministic 3-of-10 sample
@@ -91,7 +97,7 @@ class ExamplesSpec extends SparkTestBase {
 
   test("quickstart-7: mixture weights → per-language caps → redact → tfidf") {
     run("quickstart-7-corpus-mixture.yaml")
-    val out = spark.read.parquet("/tmp/graft-examples/quickstart-7-out")
+    val out = spark.read.parquet(s"$root/quickstart-7-out")
     out.columns shouldBe Array("doc_id", "term", "tf", "df", "tfidf")
     out.count() should be > 0L
     // the stratified cap bounds the surviving corpus: ≤ 25 docs per language
@@ -101,7 +107,7 @@ class ExamplesSpec extends SparkTestBase {
 
   test("quickstart-8: signal scoring, quality gate, context-window chunking") {
     run("quickstart-8-signal-curation.yaml")
-    val out = spark.read.parquet("/tmp/graft-examples/quickstart-8-out")
+    val out = spark.read.parquet(s"$root/quickstart-8-out")
     out.count() should be > 0L
     out.columns should contain allOf ("doc_id", "quality_score", "chunk_id",
       "chunk_text", "chunk_len", "_lineage")
@@ -114,7 +120,7 @@ class ExamplesSpec extends SparkTestBase {
 
   test("quickstart-9: weekly resample, gap-filled rolling revenue, lag deltas") {
     run("quickstart-9-order-analytics.yaml")
-    val out = spark.read.parquet("/tmp/graft-examples/quickstart-9-out")
+    val out = spark.read.parquet(s"$root/quickstart-9-out")
     out.count() should be > 0L
     out.columns should contain allOf ("o_orderstatus", "bucket_start",
       "n_orders", "revenue", "rolling_4wk_revenue", "prev_week_revenue")
@@ -130,24 +136,21 @@ class ExamplesSpec extends SparkTestBase {
 
   test("quickstart-10: streaming YAML — watermarked window agg, exactly-once file sink") {
     import org.apache.spark.sql.functions._
-    // stage input files + clean prior runs (checkpoint makes re-runs no-ops)
-    Seq("quickstart-10-in", "quickstart-10-out", "quickstart-10-ck").foreach { d =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"/tmp/graft-examples/$d"))
-    }
+    // stage input files (a fresh root: no checkpoint to make the run a no-op)
     (1 to 500).map { i =>
       (i.toLong, java.sql.Timestamp.valueOf("2024-03-01 00:00:00").getTime +
         (i % 48) * 3600 * 1000L, (i % 10).toLong, i / 100.0)
     }.toDF("event_id", "ms", "user_id", "value")
       .select(col("event_id"), timestamp_millis(col("ms")).as("ts"),
         col("user_id"), col("value"))
-      .write.parquet("/tmp/graft-examples/quickstart-10-in")
-    val cfg = parser.parseFile("examples/quickstart-10-streaming-window.yaml")
+      .write.parquet(s"$root/quickstart-10-in")
+    val cfg = parse("quickstart-10-streaming-window.yaml")
     val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     try {
       val q = new graft.streaming.StreamingExecutor().start(cfg)(spark)
       q.awaitTermination(120000)
     } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    val out = spark.read.parquet("/tmp/graft-examples/quickstart-10-out")
+    val out = spark.read.parquet(s"$root/quickstart-10-out")
     out.columns.toSeq shouldBe Seq("window_start", "window_end", "user_id",
       "n_events", "total_value")
     // append mode emits only watermark-closed windows: ends <= max ts - 2h
@@ -159,7 +162,7 @@ class ExamplesSpec extends SparkTestBase {
 
   test("quickstart-11: percentile length gate + top-source monitoring report") {
     run("quickstart-11-corpus-monitoring.yaml")
-    val out = spark.read.parquet("/tmp/graft-examples/quickstart-11-out")
+    val out = spark.read.parquet(s"$root/quickstart-11-out")
     out.columns.toSeq shouldBe Seq("lang", "item", "est_count", "rank")
     val langs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("lang").distinct().count()
@@ -170,7 +173,7 @@ class ExamplesSpec extends SparkTestBase {
 
   test("quickstart-12: semantic dedup keeps a subset and records lineage") {
     val m = run("quickstart-12-semantic-dedup.yaml")
-    val out = spark.read.parquet("/tmp/graft-examples/quickstart-12-out")
+    val out = spark.read.parquet(s"$root/quickstart-12-out")
     val total = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").count()
     out.count() should be > 0L
     out.count() should be <= total
@@ -180,7 +183,7 @@ class ExamplesSpec extends SparkTestBase {
 
   test("quickstart-13: URL-keyed web curation with per-domain caps") {
     run("quickstart-13-web-curation.yaml")
-    val out = spark.read.parquet("/tmp/graft-examples/quickstart-13-out")
+    val out = spark.read.parquet(s"$root/quickstart-13-out")
     val total = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").count()
     out.count() should be > 0L
     out.count() should be <= total
@@ -199,7 +202,7 @@ class ExamplesSpec extends SparkTestBase {
 
   test("quickstart-14: SCD2 customer history from the order change log") {
     run("quickstart-14-dimension-history.yaml")
-    val out = spark.read.parquet("/tmp/graft-examples/quickstart-14-out")
+    val out = spark.read.parquet(s"$root/quickstart-14-out")
     out.columns should contain allOf
       ("cust", "status", "effective_from", "effective_to", "is_current")
     // exactly one open (current) version per customer
@@ -228,12 +231,11 @@ class ExamplesSpec extends SparkTestBase {
       s"""{"cust": $updCust, "status": "Z", "effective_from": $updEf, "effective_to": null, "is_current": false, "op": "U", "corr_seq": 3}""",
       // brand-new key: inserts
       s"""{"cust": 10000000, "status": "X", "effective_from": 1, "effective_to": null, "is_current": true, "op": "U", "corr_seq": 4}""")
-    new java.io.File("/tmp/graft-examples").mkdirs()
     java.nio.file.Files.write(
-      java.nio.file.Paths.get("/tmp/graft-examples/corrections-topic"),
+      java.nio.file.Paths.get(s"$root/corrections-topic"),
       corrections.mkString("\n").getBytes)
     run("quickstart-15-cdc-dimension-upsert.yaml")
-    val out = spark.read.parquet("/tmp/graft-examples/quickstart-15-out")
+    val out = spark.read.parquet(s"$root/quickstart-15-out")
     out.columns should contain allOf
       ("cust", "status", "effective_from", "effective_to", "is_current")
     out.where(s"cust = $delCust AND effective_from = $delEf").count() shouldBe 0
@@ -250,7 +252,7 @@ class ExamplesSpec extends SparkTestBase {
     try {
       run("quickstart-16-sequence-packing.yaml")
     } finally spark.conf.unset("spark.graft.planLint")
-    val out = spark.read.parquet("/tmp/graft-examples/quickstart-16-out")
+    val out = spark.read.parquet(s"$root/quickstart-16-out")
     out.count() should be > 0L
     out.columns should contain allOf ("doc_id", "seq_id", "tok_start", "tok_end", "pos_in_seq")
     // exactly-seqLen invariant: every sequence but the last carries 512
@@ -270,7 +272,7 @@ class ExamplesSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     // run N: persist the corpus's MinHash signatures
     run("quickstart-17-signature-store-build.yaml")
-    val store = spark.read.parquet("/tmp/graft-examples/quickstart-17-signatures")
+    val store = spark.read.parquet(s"$root/quickstart-17-signatures")
     store.columns should contain allOf ("doc_id", "sh", "sig", "mh_bands")
     store.columns.contains("text") shouldBe false // the whole point of the store
     // stage the increment: verbatim copies of 10 corpus docs (guaranteed
@@ -279,10 +281,10 @@ class ExamplesSpec extends SparkTestBase {
     val copies = docs.where("doc_id < 10")
       .withColumn("doc_id", col("doc_id") + 500000L)
     copies.write.mode("overwrite")
-      .parquet("/tmp/graft-examples/quickstart-17-increment")
+      .parquet(s"$root/quickstart-17-increment")
     // run N+1: dedup the increment against the store — no corpus text read
     run("quickstart-17-signature-store-dedup.yaml")
-    val out = spark.read.parquet("/tmp/graft-examples/quickstart-17-out")
+    val out = spark.read.parquet(s"$root/quickstart-17-out")
     out.count() shouldBe 0 // every increment row is a verbatim dup of history
   }
 
@@ -306,10 +308,10 @@ class ExamplesSpec extends SparkTestBase {
       ("zh", "这是另一个用中文写的句子 没有什么特别的内容 只是一个样本")
     ).toDF("lang", "text")
     labeled.write.mode("overwrite")
-      .parquet("/tmp/graft-examples/quickstart-25-labeled")
+      .parquet(s"$root/quickstart-25-labeled")
     // run N: persist the per-(lang, trigram) count store
     run("quickstart-25-lang-model-train.yaml")
-    val store = spark.read.parquet("/tmp/graft-examples/quickstart-25-lang-model")
+    val store = spark.read.parquet(s"$root/quickstart-25-lang-model")
     store.columns.toSeq should contain allOf ("label", "gram", "cnt", "clm_n")
     store.columns.contains("text") shouldBe false // counts only, never text
     store.select("label").distinct().count() shouldBe 5 // en/de/fr/es/zh
@@ -323,10 +325,10 @@ class ExamplesSpec extends SparkTestBase {
       (6L, "en", "x")) // shorter than n: no grams → 'und'
       .toDF("doc_id", "true_lang", "text")
     heldOut.select("doc_id", "text").write.mode("overwrite")
-      .parquet("/tmp/graft-examples/quickstart-25-unlabeled")
+      .parquet(s"$root/quickstart-25-unlabeled")
     // run N+1: classify against the store — no labeled text read
     run("quickstart-25-lang-classify.yaml")
-    val out = spark.read.parquet("/tmp/graft-examples/quickstart-25-out")
+    val out = spark.read.parquet(s"$root/quickstart-25-out")
     out.columns should contain allOf ("lang_pred", "lang_score")
     val preds = out.select("doc_id", "lang_pred").as[(Long, String)]
       .collect().toMap
@@ -346,7 +348,7 @@ class ExamplesSpec extends SparkTestBase {
     "documents never dropped for contamination") {
     import org.apache.spark.sql.functions._
     run("quickstart-18-span-dedup.yaml")
-    val out = spark.read.parquet("/tmp/graft-examples/quickstart-18-out")
+    val out = spark.read.parquet(s"$root/quickstart-18-out")
     val orig = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .where("doc_id >= 250")
     out.count() should be > 0L
@@ -364,10 +366,10 @@ class ExamplesSpec extends SparkTestBase {
     "consumes it in run N+1 without reading reference text") {
     import org.apache.spark.sql.functions._
     run("quickstart-19-gram-store-build.yaml")
-    val store = spark.read.parquet("/tmp/graft-examples/quickstart-19-gram-store")
+    val store = spark.read.parquet(s"$root/quickstart-19-gram-store")
     store.columns.toSeq should contain theSameElementsAs Seq("gh", "sg_n")
     run("quickstart-19-gram-store-decontam.yaml")
-    val out = spark.read.parquet("/tmp/graft-examples/quickstart-19-out")
+    val out = spark.read.parquet(s"$root/quickstart-19-out")
     val orig = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .where("doc_id >= 250")
     out.count() should be > 0L
@@ -387,12 +389,12 @@ class ExamplesSpec extends SparkTestBase {
     "consumes it in run N+1 without a sampling scan") {
     import org.apache.spark.sql.functions._
     run("quickstart-20-codebook-build.yaml")
-    val store = spark.read.parquet("/tmp/graft-examples/quickstart-20-codebook")
+    val store = spark.read.parquet(s"$root/quickstart-20-codebook")
     store.columns.toSeq should contain theSameElementsAs
       Seq("list_id", "vec", "cb_n_lists", "cb_kmeans_iters", "cb_rows")
     store.count() shouldBe 16
     run("quickstart-20-codebook-cluster.yaml")
-    val out = spark.read.parquet("/tmp/graft-examples/quickstart-20-out")
+    val out = spark.read.parquet(s"$root/quickstart-20-out")
     val total = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").count()
     out.count() shouldBe total
     out.columns should contain allOf ("vec_id", "cluster_id", "centroid_sim")
@@ -411,7 +413,7 @@ class ExamplesSpec extends SparkTestBase {
     "uniform at the same corpus size, with split labels") {
     import org.apache.spark.sql.functions._
     run("quickstart-21-temperature-mix.yaml")
-    val out = spark.read.parquet("/tmp/graft-examples/quickstart-21-out")
+    val out = spark.read.parquet(s"$root/quickstart-21-out")
     val in = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     def spread(df: org.apache.spark.sql.DataFrame): Double = {
       val counts = df.groupBy("lang").count().select("count").as[Long].collect()
@@ -437,7 +439,7 @@ class ExamplesSpec extends SparkTestBase {
   test("quickstart-22: DSIR selection — importance scoring against an " +
     "English target skews the kept half toward English") {
     run("quickstart-22-dsir-selection.yaml")
-    val out = spark.read.parquet("/tmp/graft-examples/quickstart-22-out")
+    val out = spark.read.parquet(s"$root/quickstart-22-out")
     out.columns.toSeq should contain theSameElementsAs
       Seq("doc_id", "lang", "text", "importance")
     val in = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -462,21 +464,21 @@ class ExamplesSpec extends SparkTestBase {
       "a well written english paragraph flows from one idea to the next",
       "the morning paper arrives before sunrise and the town slowly wakes")
       .toDF("text").write.mode("overwrite")
-      .parquet("/tmp/graft-examples/quickstart-27-target-corpus")
+      .parquet(s"$root/quickstart-27-target-corpus")
     run("quickstart-27-target-model-train.yaml")
-    val store = spark.read.parquet("/tmp/graft-examples/quickstart-27-target-model")
+    val store = spark.read.parquet(s"$root/quickstart-27-target-model")
     store.select("label").distinct().as[String].collect() shouldBe Array("tgt")
     // the raw corpus: english docs (ids < 100) + german docs (ids >= 100);
     // the language model is quickstart-25's persisted store (run above —
     // suites run in file order, but stage it here defensively if absent)
-    if (!new java.io.File("/tmp/graft-examples/quickstart-25-lang-model").exists()) {
+    if (!new java.io.File(s"$root/quickstart-25-lang-model").exists()) {
       Seq(
         ("en", "the quick brown fox jumps over the lazy dog and runs away with the morning paper"),
         ("en", "this is another sentence written in plain english about nothing in particular"),
         ("de", "der schnelle braune fuchs springt über den faulen hund und läuft mit der zeitung davon"),
         ("de", "dies ist ein weiterer deutscher satz über nichts besonderes geschrieben"))
         .toDF("lang", "text").write.mode("overwrite")
-        .parquet("/tmp/graft-examples/quickstart-25-labeled")
+        .parquet(s"$root/quickstart-25-labeled")
       run("quickstart-25-lang-model-train.yaml")
     }
     val en = Seq(
@@ -493,9 +495,9 @@ class ExamplesSpec extends SparkTestBase {
     (en.zipWithIndex.map { case (t, i) => (i.toLong, t) } ++
       de.zipWithIndex.map { case (t, i) => (100L + i, t) })
       .toDF("doc_id", "text").write.mode("overwrite")
-      .parquet("/tmp/graft-examples/quickstart-27-corpus")
+      .parquet(s"$root/quickstart-27-corpus")
     run("quickstart-27-dsir-lang-select.yaml")
-    val out = spark.read.parquet("/tmp/graft-examples/quickstart-27-out")
+    val out = spark.read.parquet(s"$root/quickstart-27-out")
     out.columns.toSeq should contain theSameElementsAs
       Seq("doc_id", "text", "importance", "dsir_w")
     out.count() should be > 0L
@@ -532,9 +534,9 @@ class ExamplesSpec extends SparkTestBase {
     val histCopy = docs.where("doc_id < 10")
       .withColumn("doc_id", col("doc_id") + 500000L)
     half.unionByName(inCopy).unionByName(histCopy).write.mode("overwrite")
-      .parquet("/tmp/graft-examples/quickstart-23-increment")
+      .parquet(s"$root/quickstart-23-increment")
     run("quickstart-23-nightly-curation.yaml")
-    val out = spark.read.parquet("/tmp/graft-examples/quickstart-23-out")
+    val out = spark.read.parquet(s"$root/quickstart-23-out")
     out.count() should be > 0L
     // both planted duplicate families are gone, each via its stage
     out.where("doc_id >= 500000").count() shouldBe 0
@@ -562,10 +564,10 @@ class ExamplesSpec extends SparkTestBase {
     run("quickstart-23-bpe-store.yaml")   // run N: train the tokenizer
     run("quickstart-24-vocab-export.yaml")
     run("quickstart-24-training-export.yaml")
-    val vocab = spark.read.parquet("/tmp/graft-examples/quickstart-24-vocab")
+    val vocab = spark.read.parquet(s"$root/quickstart-24-vocab")
     vocab.columns.toSeq shouldBe Seq("token_id", "token")
     vocab.where("token_id = 0").select("token").as[String].head() shouldBe "<unk>"
-    val out = spark.read.parquet("/tmp/graft-examples/quickstart-24-out")
+    val out = spark.read.parquet(s"$root/quickstart-24-out")
     out.columns should contain allOf ("seq_id", "input_ids",
       "attention_mask", "n_docs", "seq_weight", "shard_id")
     // RECTANGULAR: every row (the padded final one included) is exactly
@@ -599,7 +601,7 @@ class ExamplesSpec extends SparkTestBase {
     "participates, the output is packed spans, and the composed plan is " +
     "PlanLint error-clean") {
     import org.apache.spark.sql.functions._
-    val cfg = parser.parseFile("examples/quickstart-26-curation-pipeline.yaml")
+    val cfg = parse("quickstart-26-curation-pipeline.yaml")
     // the COMPOSED plan carries no lint errors (no cartesian product, no
     // global window) — the composition interacts cleanly, not just the
     // stages in isolation
@@ -609,7 +611,7 @@ class ExamplesSpec extends SparkTestBase {
       findings.filter(_.severity == "error") shouldBe empty
     }
     run("quickstart-26-curation-pipeline.yaml")
-    val out = spark.read.parquet("/tmp/graft-examples/quickstart-26-out")
+    val out = spark.read.parquet(s"$root/quickstart-26-out")
     out.columns should contain allOf ("doc_id", "source", "seq_id",
       "tok_start", "tok_end", "pos_in_seq")
     val docs = out.select("doc_id").distinct().count()
@@ -641,9 +643,9 @@ class ExamplesSpec extends SparkTestBase {
       .union(Seq((99L, "corrupted-bytes".getBytes("UTF-8")))
         .toDF("img_id", "payload"))
       .write.mode("overwrite")
-      .parquet("/tmp/graft-examples/quickstart-28-images")
+      .parquet(s"$root/quickstart-28-images")
     run("quickstart-28-image-dedup.yaml")
-    val out = spark.read.parquet("/tmp/graft-examples/quickstart-28-out")
+    val out = spark.read.parquet(s"$root/quickstart-28-out")
     // one survivor per scene (the smallest id) + the unreadable row
     out.select("img_id").as[Long].collect().sorted shouldBe
       Array(0L, 1L, 2L, 3L, 99L)
@@ -660,9 +662,9 @@ class ExamplesSpec extends SparkTestBase {
     spark.range(8).select(col("id").as("vec_id"))
       .select(col("vec_id"), oneHot(4).as("embedding"))
       .write.mode("overwrite")
-      .parquet("/tmp/graft-examples/quickstart-33-corpus")
+      .parquet(s"$root/quickstart-33-corpus")
     run("quickstart-33-embedding-codebook.yaml")
-    val cb = spark.read.parquet("/tmp/graft-examples/quickstart-33-codebook")
+    val cb = spark.read.parquet(s"$root/quickstart-33-codebook")
     cb.count() shouldBe 4
     cb.columns should contain allOf ("list_id", "vec", "cb_n_lists")
     // run N+1's increment: directions vec_id % 6 over ids 100..105 —
@@ -672,10 +674,10 @@ class ExamplesSpec extends SparkTestBase {
     spark.range(100, 106).select(col("id").as("vec_id"))
       .select(col("vec_id"), oneHot(6).as("embedding"))
       .write.mode("overwrite")
-      .parquet("/tmp/graft-examples/quickstart-33-increment")
+      .parquet(s"$root/quickstart-33-increment")
     run("quickstart-33-incremental-semantic.yaml")
     // ids 100..105 have directions 4,5,0,1,2,3 → only 100/101 survive
-    spark.read.parquet("/tmp/graft-examples/quickstart-33-out")
+    spark.read.parquet(s"$root/quickstart-33-out")
       .select("vec_id").as[Long].collect().sorted shouldBe
       Array(100L, 101L)
   }
@@ -691,9 +693,9 @@ class ExamplesSpec extends SparkTestBase {
       .union(Seq((99L, "corrupted-bytes".getBytes("UTF-8")))
         .toDF("img_id", "payload"))
       .write.mode("overwrite")
-      .parquet("/tmp/graft-examples/quickstart-28-images")
+      .parquet(s"$root/quickstart-28-images")
     run("quickstart-32-media-signatures.yaml")
-    val sigs = spark.read.parquet("/tmp/graft-examples/quickstart-32-sigs")
+    val sigs = spark.read.parquet(s"$root/quickstart-32-sigs")
     sigs.count() shouldBe 13
     sigs.where("sig IS NULL").count() shouldBe 1 // the corrupted payload
     // run N+1's increment: scenes 2..5 — 2 and 3 are in history, 4 and 5
@@ -703,11 +705,11 @@ class ExamplesSpec extends SparkTestBase {
     (100L until 106L).toDF("img_id")
       .select(col("img_id"), png6(col("img_id")).as("payload"))
       .write.mode("overwrite")
-      .parquet("/tmp/graft-examples/quickstart-32-increment")
+      .parquet(s"$root/quickstart-32-increment")
     run("quickstart-32-incremental-dedup.yaml")
     // ids 100..103 have seeds 4,5,0,1 → 102/103 drop (history scenes
     // 0/1), 104/105 seeds 2,3 drop (history scenes 2/3), 100/101 survive
-    spark.read.parquet("/tmp/graft-examples/quickstart-32-out")
+    spark.read.parquet(s"$root/quickstart-32-out")
       .select("img_id").as[Long].collect().sorted shouldBe
       Array(100L, 101L)
   }
@@ -733,9 +735,9 @@ class ExamplesSpec extends SparkTestBase {
       .union(Seq((97L, "corrupted-bytes".getBytes("UTF-8")), (98L, flat))
         .toDF("img_id", "payload"))
       .write.mode("overwrite")
-      .parquet("/tmp/graft-examples/quickstart-29-media")
+      .parquet(s"$root/quickstart-29-media")
     run("quickstart-29-media-curation.yaml")
-    val out = spark.read.parquet("/tmp/graft-examples/quickstart-29-out")
+    val out = spark.read.parquet(s"$root/quickstart-29-out")
     // junk fails decodable (width = -1 sentinel), the flat card fails the
     // contrast gate, and each of the 4 scenes keeps its smallest id
     out.select("img_id").as[Long].collect().sorted shouldBe
@@ -747,12 +749,12 @@ class ExamplesSpec extends SparkTestBase {
     "equals in-process training") {
     import org.apache.spark.sql.functions._
     run("quickstart-30-pq-store.yaml")
-    val store = spark.read.parquet("/tmp/graft-examples/quickstart-30-pq")
+    val store = spark.read.parquet(s"$root/quickstart-30-pq")
     store.columns.toSeq should contain allOf ("subspace", "list_id", "vec",
       "pq_m", "pq_k", "pq_kmeans_iters", "pq_sub_dim", "pq_rows")
     store.count() shouldBe 64 // 4 subspaces x 16 centroids
     run("quickstart-30-pq-search.yaml")
-    val out = spark.read.parquet("/tmp/graft-examples/quickstart-30-out")
+    val out = spark.read.parquet(s"$root/quickstart-30-out")
     out.groupBy("query_id").count().select("count").as[Long].collect()
       .foreach(_ shouldBe 5L)
     out.where("rank = 1").select("query_id", "vec_id").as[(Long, Long)]
@@ -773,14 +775,14 @@ class ExamplesSpec extends SparkTestBase {
     "equals in-process training") {
     import org.apache.spark.sql.functions._
     run("quickstart-31-ivfpq-store.yaml")
-    val store = spark.read.parquet("/tmp/graft-examples/quickstart-31-ivfpq")
+    val store = spark.read.parquet(s"$root/quickstart-31-ivfpq")
     store.columns.toSeq should contain allOf ("part", "subspace", "list_id",
       "vec", "ivfpq_n_lists", "ivfpq_m", "ivfpq_k", "ivfpq_kmeans_iters",
       "ivfpq_sub_dim", "ivfpq_rows", "ivfpq_norm")
     store.where("part = 'ivf'").count() shouldBe 8
     store.where("part = 'pq'").count() shouldBe 64 // 4 subspaces x 16
     run("quickstart-31-ivfpq-search.yaml")
-    val out = spark.read.parquet("/tmp/graft-examples/quickstart-31-out")
+    val out = spark.read.parquet(s"$root/quickstart-31-out")
     out.groupBy("query_id").count().select("count").as[Long].collect()
       .foreach(_ shouldBe 5L)
     out.where("rank = 1").select("query_id", "vec_id").as[(Long, Long)]
@@ -819,15 +821,14 @@ class ExamplesSpec extends SparkTestBase {
       val cat = Seq("Electronics", "Clothing", "Books")(i % 3)
       s"""{"product_id": $i, "product_name": "Product $i", "category": "$cat"}"""
     }
-    new java.io.File("/tmp/graft-examples").mkdirs()
     java.nio.file.Files.write(
-      java.nio.file.Paths.get("/tmp/graft-examples/products-topic"),
+      java.nio.file.Paths.get(s"$root/products-topic"),
       products.mkString("\n").getBytes)
     run("quickstart-3-multi-source-join.yaml")
-    val out = spark.read.parquet("/tmp/graft-examples/quickstart-3-out")
+    val out = spark.read.parquet(s"$root/quickstart-3-out")
     out.count() shouldBe spark.read.parquet("/root/testdata/sf0.001/orders.parquet").count()
     out.columns should contain allOf ("product_name", "order_month", "category")
-    new java.io.File("/tmp/graft-examples/quickstart-3-out").listFiles()
+    new java.io.File(s"$root/quickstart-3-out").listFiles()
       .map(_.getName).count(_.startsWith("category=")) shouldBe 3
   }
 }

@@ -55,6 +55,34 @@ class MainAndObservabilitySpec extends SparkTestBase {
       "org.apache.hadoop.fs.LocalFileSystem"
   }
 
+  test("session conf: the codegen cache settings are on by default, yield to " +
+    "the deployment's own, and lose to --conf") {
+    val cacheSize = "spark.sql.codegen.cache.maxEntries"
+    val isolation = "spark.sql.artifact.isolation.enabled"
+    val app = Main.AppConfig(pipelinePath = "/p.yaml")
+    val defaults = new org.apache.hadoop.conf.Configuration()
+    val plain = Main.sessionConf(app, new org.apache.spark.SparkConf(false), defaults)
+    plain(cacheSize) shouldBe "8192"
+    plain(isolation) shouldBe "false"
+
+    // spark-defaults.conf / spark-submit --conf: graft's entries stay off the builder
+    val deployment = new org.apache.spark.SparkConf(false)
+      .set(cacheSize, "500").set(isolation, "true")
+    val viaSpark = Main.sessionConf(app, deployment, defaults)
+    viaSpark.get(cacheSize) shouldBe None
+    viaSpark.get(isolation) shouldBe None
+
+    // graft's own --conf wins over everything
+    val own = Main.sessionConf(app.copy(conf = Map(cacheSize -> "100", isolation -> "true")),
+      deployment, defaults)
+    own(cacheSize) shouldBe "100"
+    own(isolation) shouldBe "true"
+
+    // the test session runs on the same settings
+    spark.conf.get(cacheSize) shouldBe "8192"
+    spark.conf.get(isolation) shouldBe "false"
+  }
+
   test("metrics collector: per-run records, pipeline summary, throughput, JSON export") {
     val mc = new MetricsCollector()
     val m1 = ExecutionMetrics("p1", "r1", "SUCCESS", 100, 90, 10, 2000,
