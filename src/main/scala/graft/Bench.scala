@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: one untimed warmup pass (JIT + codegen + parquet footer
   * caches), then `SPARK_GRAFT_BENCH_RUNS` (default 2) timed passes over every
@@ -31,6 +31,9 @@ import org.apache.spark.sql.SparkSession
   * (override dir with `SPARK_GRAFT_BENCH_OUT`) — a file artifact the way
   * `Verify` writes `_failed.json`, immune to stdout capture entirely. */
 object Bench {
+  /** A registry entry: builds its frame from a session and a data dir. */
+  type Query = (SparkSession, String) => DataFrame
+
   /** Force FULL materialization of every output column. `count()` is a lie
     * for projection-shaped queries: Catalyst prunes the projected columns
     * down to nothing and even eliminates a final unique-keyed left join
@@ -38,7 +41,7 @@ object Bench {
     * 0.15 s for a text-rewrite whose honest cost is ~10×). The noop sink
     * consumes every InternalRow, so the full projection runs, with zero
     * write-side I/O in the measurement. */
-  private def force(df: org.apache.spark.sql.DataFrame): Unit =
+  private[graft] def force(df: DataFrame): Unit =
     df.write.mode("overwrite").format("noop").save()
 
   /** Timed passes over `queries`, CYCLE-ordered: pass 1 of every query
@@ -66,7 +69,7 @@ object Bench {
     * cycles over an already-hot registry ([[measureGuarded]]). Each timed
     * pass's compile count goes to `compiles`, outside the timed region. */
   def measure(spark: SparkSession,
-              queries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame],
+              queries: Map[String, Query],
               sfDir: String, runs: Int,
               warmup: Boolean = true,
               compiles: CompileCounter = new CompileCounter): List[(String, List[Double])] = {
@@ -167,7 +170,7 @@ object Bench {
     * sample, extra cycles run). `extSample` is injectable so a spec can
     * script a contention arrival without loading the box. */
   def measureGuarded(spark: SparkSession,
-                     queries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame],
+                     queries: Map[String, Query],
                      sfDir: String, runs: Int,
                      extSample: () => Double = externalCpu _,
                      maxExtraCycles: Int = 2,
@@ -418,7 +421,7 @@ object Bench {
     }
 
   /** The local session every harness main (Bench, Verify, BenchLongDoc,
-    * BenchVecDim, the `graft.tools` profilers) runs on: `cpus` threads
+    * BenchVecDim, `graft.tools.Profile`) runs on: `cpus` threads
     * and as many shuffle partitions, UTC, AQE, no UI, and graft's
     * [[graft.runtime.SessionDefaults]] — the fork-free `file:` classes and
     * a codegen cache that holds the whole registry (the default 100-entry
@@ -436,36 +439,91 @@ object Bench {
     .config(graft.runtime.SessionDefaults.sparkConf())
     .getOrCreate()
 
+  /** The harness mains' shared environment: the data dir
+    * (`SPARK_GRAFT_SF_DIR`), the local thread count (`SPARK_GRAFT_CPUS`)
+    * and the timed passes per query (`SPARK_GRAFT_BENCH_RUNS`, default 2,
+    * at least 1: zero passes would score every query as failed). */
+  private[graft] final case class Env(sfDir: String, cpus: String, runs: Int)
+
+  /** Read [[Env]] from `vars`. The default of 8 threads is the measured
+    * sweet spot for the registry at sf0.1 (119-query totals on one box:
+    * 4→49.5 s, 8→43.9 s, 16→46.5 s, 32→57.3 s): past ~8, per-task
+    * scheduling overhead on sub-second queries outweighs the added
+    * parallelism at this data scale. Bigger SFs want more cores. */
+  private[graft] def env(sfDefault: String = "/root/testdata/sf0.1",
+                         cpusDefault: String = "8",
+                         vars: Map[String, String] = sys.env): Env =
+    Env(vars.getOrElse("SPARK_GRAFT_SF_DIR", sfDefault),
+      vars.getOrElse("SPARK_GRAFT_CPUS", cpusDefault),
+      vars.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1))
+
+  /** The registry subset a comma-separated list names; `source` (an env
+    * variable, or Profile's targets) labels the errors. A typo'd name
+    * fails loudly instead of running zero queries next to a
+    * valid-looking total, and so does an EMPTY list ("" from an unset
+    * interpolated shell variable). */
+  private[graft] def selectQueries(source: String, raw: String,
+      registry: Map[String, Query] = SparkEntry.queries): Map[String, Query] = {
+    val names = raw.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    require(names.nonEmpty,
+      s"$source is set but names no queries — unset it for the full registry")
+    val unknown = names.diff(registry.keySet)
+    require(unknown.isEmpty,
+      s"$source names unknown queries: ${unknown.toSeq.sorted.mkString(",")}")
+    registry.view.filterKeys(names).toMap
+  }
+
+  /** The scale gates' shared main (BenchLongDoc, BenchVecDim): derive one
+    * corpus per size from `<SPARK_GRAFT_SF_DIR>/<table>.parquet` into
+    * `<dir>/<tag><size>/<corpus>.parquet` under a [[Scratch]] root (deleted
+    * at exit), run `prepare` on the first size's dir (untimed), time
+    * `queries` on every size through [[measure]], and write one
+    * Bench-format artifact per size to `<out>/<tag><size>/bench.json` for
+    * `tools/bench_ratio.py <small> <big> --sf-step <step>`. */
+  private[graft] def scaleGate(tag: String, sizes: Seq[Int], step: Int,
+      table: String, corpus: String, sfDefault: String, out: String,
+      derive: (DataFrame, Int) => DataFrame, queries: Map[String, Query],
+      prepare: (SparkSession, String) => Unit = (_, _) => ()): Unit = {
+    // ambient load is sampled ONCE, before any of this JVM's own work: a
+    // re-sample after the first size's timed passes stamped the second
+    // artifact contended (r16 measured 2.77 on an idle box — all of it
+    // this process's not-yet-decayed 1-min average)
+    val startLoad = loadAvg()
+    val e = env(sfDefault, math.max(2, Runtime.getRuntime.availableProcessors()).toString)
+    val spark = session(e.cpus)
+    spark.sparkContext.setLogLevel("WARN")
+    val base = spark.read.parquet(s"${e.sfDir}/$table.parquet")
+    val root = Scratch.dir(s"$tag-corpus")
+    def dir(n: Int) = s"$root/$tag$n"
+    sizes.foreach { n =>
+      derive(base, n).repartition(spark.sparkContext.defaultParallelism)
+        .write.mode("overwrite").parquet(s"${dir(n)}/$corpus.parquet")
+    }
+    prepare(spark, dir(sizes.head))
+    sizes.foreach { n =>
+      // mid-run contention is stamped through externalCpu (this JVM's
+      // own threads excluded), the same signal Bench.main's guard reads
+      val results = measure(spark, queries, dir(n), e.runs)
+      val (big, compact) = render(results, s"$out/$tag$n", startLoad,
+        endExternalCpu = externalCpu())
+      perQueryLines(results).foreach(l => println(s"[$tag$n] $l"))
+      println(compact)
+      writeArtifact(s"$out/$tag$n", big)
+    }
+    println(s"artifacts: ${sizes.map(n => s"$out/$tag$n/bench.json").mkString(" ")} " +
+      s"— gate with tools/bench_ratio.py <small> <big> --sf-step $step")
+    spark.stop()
+  }
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default 8 threads = the measured sweet spot for this suite at sf0.1
-    // (119-query totals on the same box: 4→49.5 s, 8→43.9 s, 16→46.5 s,
-    // 32→57.3 s): past ~8, per-task scheduling overhead on sub-second
-    // queries outweighs the added parallelism at this data scale.
-    // Override with SPARK_GRAFT_CPUS for bigger SFs, where more cores win.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
+    val e = env()
     val outDir = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out")
-    val spark = session(cpus)
+    val spark = session(e.cpus)
     spark.sparkContext.setLogLevel("WARN")
     // dev-loop aid: SPARK_GRAFT_BENCH_ONLY=q88_dedup_semantic,q8_join_inner
     // times just those queries (full registry when unset — the driver path)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val queries = only match {
-      case Some(names) =>
-        // a typo'd name must fail loudly, not bench zero queries and
-        // print a valid-looking total — and so must an EMPTY subset
-        // ("" from an unset interpolated shell variable)
-        require(names.nonEmpty,
-          "SPARK_GRAFT_BENCH_ONLY is set but names no queries — unset it " +
-            "for the full registry")
-        val unknown = names.diff(SparkEntry.queries.keySet)
-        require(unknown.isEmpty,
-          s"SPARK_GRAFT_BENCH_ONLY names unknown queries: ${unknown.toSeq.sorted.mkString(",")}")
-        SparkEntry.queries.view.filterKeys(names).toMap
-      case None => SparkEntry.queries
-    }
+    val queries = only.fold(SparkEntry.queries)(selectQueries("SPARK_GRAFT_BENCH_ONLY", _))
     // wait (bounded) for a quiet window before sampling the pre-run load:
     // a report that never needed adjudication beats a well-marked noisy one
     val quietWait = sys.env.getOrElse("SPARK_GRAFT_BENCH_QUIET_WAIT_SEC", "240").toInt
@@ -473,12 +531,12 @@ object Bench {
     spark.sparkContext.addSparkListener(taskCounter)
     val compileCounter = new CompileCounter
     val startLoad = waitForQuiet(quietWait)  // before warmup: pre-existing load
-    val (results, endExt, extraCycles) = measureGuarded(spark, queries, sfDir, runs,
+    val (results, endExt, extraCycles) = measureGuarded(spark, queries, e.sfDir, e.runs,
       settleWaitSec = quietWait, compiles = compileCounter)
     // listener delivery is async; a short drain keeps the task counts
     // honest for the report (they are approximate by contract regardless)
     Thread.sleep(2000)
-    val (big, compact) = render(results, sfDir, startLoad, endExt, extraCycles,
+    val (big, compact) = render(results, e.sfDir, startLoad, endExt, extraCycles,
       taskCounter.snapshot, compileCounter.snapshot)
     // a filtered dev-loop run must never clobber the committed full
     // artifact (it did, twice) — partial reports land beside it

@@ -30,11 +30,13 @@ import org.apache.spark.sql.functions._
  *
  * Env: `SPARK_GRAFT_SF_DIR` (default /root/testdata/sf0.01) — the base
  * documents table; `SPARK_GRAFT_LONGDOC_DIR` (default
- * /tmp/graft-longdoc) — derived corpora + the two bench.json artifacts
- * land under `<dir>/f5` and `<dir>/f50` (factor 5 as the SMALL side,
- * not 1: at factor 1 every query is fixed-overhead-dominated and the
- * ratio reads ~1× for everything — no signal, not sub-linearity); `SPARK_GRAFT_BENCH_RUNS`
- * (default 2) — timed passes per query.
+ * /tmp/graft-longdoc) — the two bench.json artifacts land under
+ * `<dir>/f5` and `<dir>/f50` (factor 5 as the SMALL side, not 1: at
+ * factor 1 every query is fixed-overhead-dominated and the ratio reads
+ * ~1× for everything — no signal, not sub-linearity); the derived
+ * corpora live in a scratch dir deleted at exit. `SPARK_GRAFT_CPUS`
+ * (default: the host's cores) and `SPARK_GRAFT_BENCH_RUNS` as for
+ * [[Bench]].
  */
 object BenchLongDoc {
 
@@ -92,44 +94,14 @@ object BenchLongDoc {
         "idColumn" -> "doc_id", "weightColumn" -> "n_chars",
         "seqLen" -> "4096")))
 
-  def main(args: Array[String]): Unit = {
-    val cpus = math.max(2, Runtime.getRuntime.availableProcessors())
-    val spark = Bench.session(cpus.toString)
-    spark.sparkContext.setLogLevel("WARN")
-    val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val out = sys.env.getOrElse("SPARK_GRAFT_LONGDOC_DIR", "/tmp/graft-longdoc")
-    val runs = sys.env.get("SPARK_GRAFT_BENCH_RUNS").map(_.toInt).getOrElse(2)
-    val docs = spark.read.parquet(s"$base/documents.parquet")
-
-    // ambient load is sampled ONCE, before any of this JVM's own work:
-    // the second factor's artifact used to re-sample loadAvg() right
-    // after the first factor's timed passes and stamp ITSELF contended
-    // (r16 measured 2.77 on an idle box — all of it this process's
-    // not-yet-decayed 1-min average)
-    val startLoad = Bench.loadAvg()
-    val factors = Seq(5, 50)
-    factors.foreach { f =>
-      derive(docs, f).repartition(spark.sparkContext.defaultParallelism)
-        .write.mode("overwrite").parquet(s"$out/f$f/docs.parquet")
-    }
-    // one shared tokenizer store, trained on the SMALL corpus (untimed)
-    graft.text.Bpe.mergesFrame(
-        spark.read.parquet(s"$out/f${factors.head}/docs.parquet"), "text",
-        numMerges = 200, maxWords = 50000, minCount = 2L)
-      .createOrReplaceTempView("ld_bpe_store")
-
-    factors.foreach { f =>
-      // mid-run contention is stamped through externalCpu (this JVM's
-      // own threads excluded), the same signal Bench.main's guard reads
-      val results = Bench.measure(spark, queries, s"$out/f$f", runs)
-      val (big, compact) = Bench.render(results, s"$out/f$f", startLoad,
-        endExternalCpu = Bench.externalCpu())
-      Bench.perQueryLines(results).foreach(l => println(s"[f$f] $l"))
-      println(compact)
-      Bench.writeArtifact(s"$out/f$f", big)
-    }
-    println(s"artifacts: ${factors.map(f => s"$out/f$f/bench.json").mkString(" ")} " +
-      "— gate with tools/bench_ratio.py <small> <big> --sf-step 10")
-    spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    Bench.scaleGate("f", Seq(5, 50), step = 10, table = "documents",
+      corpus = "docs", sfDefault = "/root/testdata/sf0.01",
+      out = sys.env.getOrElse("SPARK_GRAFT_LONGDOC_DIR", "/tmp/graft-longdoc"),
+      derive = derive, queries = queries,
+      // one shared tokenizer store, trained on the SMALL corpus (untimed)
+      prepare = (spark, dir) => graft.text.Bpe.mergesFrame(
+          spark.read.parquet(s"$dir/docs.parquet"), "text",
+          numMerges = 200, maxWords = 50000, minCount = 2L)
+        .createOrReplaceTempView("ld_bpe_store"))
 }

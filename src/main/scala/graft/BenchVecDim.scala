@@ -22,8 +22,9 @@ import org.apache.spark.sql.functions._
  *
  * Env: `SPARK_GRAFT_SF_DIR` (default /root/testdata/sf0.1) — the base
  * embeddings table; `SPARK_GRAFT_VECDIM_DIR` (default
- * /tmp/graft-vecdim) — derived corpora + artifacts land under
- * `<dir>/d64` and `<dir>/d512`; `SPARK_GRAFT_BENCH_RUNS` (default 2).
+ * /tmp/graft-vecdim) — artifacts land under `<dir>/d64` and
+ * `<dir>/d512`, the derived corpora in a scratch dir deleted at exit;
+ * `SPARK_GRAFT_CPUS` and `SPARK_GRAFT_BENCH_RUNS` as for BenchLongDoc.
  */
 object BenchVecDim {
 
@@ -86,34 +87,9 @@ object BenchVecDim {
       graft.ann.Ann.crossMatches(emb(s, dir), qs(s, dir),
         "vec_id", "query_id", "embedding", "embedding")))
 
-  def main(args: Array[String]): Unit = {
-    val cpus = math.max(2, Runtime.getRuntime.availableProcessors())
-    val spark = Bench.session(cpus.toString)
-    spark.sparkContext.setLogLevel("WARN")
-    val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val out = sys.env.getOrElse("SPARK_GRAFT_VECDIM_DIR", "/tmp/graft-vecdim")
-    val runs = sys.env.get("SPARK_GRAFT_BENCH_RUNS").map(_.toInt).getOrElse(2)
-    val src = spark.read.parquet(s"$base/embeddings.parquet")
-
-    // ambient load sampled ONCE before this JVM's own work — the second
-    // dim's artifact otherwise stamps itself contended with the first
-    // dim's not-yet-decayed 1-min average (the BenchLongDoc fix, shared)
-    val startLoad = Bench.loadAvg()
-    val dims = Seq(64, 512)
-    dims.foreach { d =>
-      derive(src, d).repartition(spark.sparkContext.defaultParallelism)
-        .write.mode("overwrite").parquet(s"$out/d$d/emb.parquet")
-    }
-    dims.foreach { d =>
-      val results = Bench.measure(spark, queries, s"$out/d$d", runs)
-      val (big, compact) = Bench.render(results, s"$out/d$d", startLoad,
-        endExternalCpu = Bench.externalCpu())
-      Bench.perQueryLines(results).foreach(l => println(s"[d$d] $l"))
-      println(compact)
-      Bench.writeArtifact(s"$out/d$d", big)
-    }
-    println(s"artifacts: ${dims.map(d => s"$out/d$d/bench.json").mkString(" ")} " +
-      "— gate with tools/bench_ratio.py <small> <big> --sf-step 8")
-    spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    Bench.scaleGate("d", Seq(64, 512), step = 8, table = "embeddings",
+      corpus = "emb", sfDefault = "/root/testdata/sf0.1",
+      out = sys.env.getOrElse("SPARK_GRAFT_VECDIM_DIR", "/tmp/graft-vecdim"),
+      derive = derive, queries = queries)
 }

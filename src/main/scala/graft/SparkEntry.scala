@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.api.RunContext
 import graft.config.TransformConfig
@@ -234,62 +235,30 @@ object SparkEntry {
   private def streamStateParts(s: SparkSession): Int =
     math.min(s.sparkContext.defaultParallelism, 8).max(2)
 
-  /** Drain a streaming frame into a memory table (append, availableNow):
-    * unique query name, temp checkpoint, state-store partition count
-    * scoped to the query and restored after. awaitTermination's result is
-    * CHECKED — a timed-out drain means a partially-filled memory sink, so
-    * refuse it loudly instead of returning wrong rows. */
-  private def runStreamToTable(s: SparkSession, df: DataFrame, prefix: String,
-                               statePartitions: Int = 0,
-                               noDataBatch: Boolean = true): DataFrame = {
-    val stateParts =
-      if (statePartitions > 0) statePartitions else streamStateParts(s)
-    //
-    // noDataBatch=false skips the trailing empty micro-batch (~1 s of
-    // machinery here). Only sound for operators that emit on ARRIVAL —
-    // stream-stream inner join, dropDuplicates — where the final batch
-    // exists purely to expire state. Append-mode aggregations/sessions
-    // emit IN that final batch (watermark must pass the window end), so
-    // they keep the default.
-    val qn = prefix + "_" + java.util.UUID.randomUUID().toString.replace("-", "")
+  /** Run one registry streaming drain to completion: the
+    * noDataMicroBatches toggle (and, when given, the state-store
+    * partition count) scoped to the drain and restored after, and
+    * awaitTermination's result CHECKED — a timed-out drain means a
+    * partially-filled memory sink, so refuse it loudly instead of
+    * returning wrong rows. The session-global conf toggles make
+    * SparkEntry queries SEQUENTIAL-only by contract (Bench/Verify honor
+    * this): a drain started inside another drain's conf window would
+    * clone the wrong settings.
+    *
+    * noDataBatch=false skips the trailing empty micro-batch (~1 s of
+    * machinery here). Only sound for operators that emit on ARRIVAL —
+    * stream-stream inner join, dropDuplicates — where the final batch
+    * exists purely to expire state. Append-mode aggregations/sessions
+    * emit IN that final batch (watermark must pass the window end), so
+    * they keep the default. */
+  private def drain(s: SparkSession, name: String, stateParts: Option[Int],
+                    noDataBatch: Boolean)(start: => StreamingQuery): Unit = {
     val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
     val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    s.conf.set("spark.sql.shuffle.partitions", stateParts.toString)
+    stateParts.foreach(n => s.conf.set("spark.sql.shuffle.partitions", n.toString))
     s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", noDataBatch.toString)
     try {
-      val q = df.writeStream.format("memory").queryName(qn)
-        .outputMode("append")
-        .option("checkpointLocation", Scratch.memDir(prefix + "ck"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      if (!q.awaitTermination(120000)) {
-        q.stop()
-        throw new IllegalStateException(
-          s"$prefix: streaming drain exceeded 120s — refusing partial results")
-      }
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-    }
-    s.table(qn)
-  }
-
-  /** Drain a StreamingExecutor pipeline config to its memory sink and
-    * return the table — the executor-path twin of [[runStreamToTable]]
-    * (shared: conf save/restore, 120 s refuse-partial-results bound).
-    * NOTE the session-global conf toggles mean SparkEntry queries are
-    * SEQUENTIAL-only by contract (Bench/Verify honor this): a drain
-    * started concurrently inside another drain's conf window would clone
-    * the wrong settings. `noDataBatch=false` is only sound for
-    * emit-on-arrival operators (dedup, stream-stream inner join). */
-  private def drainExecutor(s: SparkSession, cfg: graft.config.PipelineConfig,
-                            name: String, queryName: String,
-                            noDataBatch: Boolean = true): DataFrame = {
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", noDataBatch.toString)
-    try {
-      val q = new graft.streaming.StreamingExecutor().start(cfg)(s)
+      val q = start
       if (!q.awaitTermination(120000)) {
         q.stop()
         throw new IllegalStateException(
@@ -299,6 +268,33 @@ object SparkEntry {
       s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
       s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
     }
+  }
+
+  /** Drain a streaming frame into a memory table (append, availableNow)
+    * under a unique query name and a temp checkpoint. */
+  private def runStreamToTable(s: SparkSession, df: DataFrame, prefix: String,
+                               statePartitions: Int = 0,
+                               noDataBatch: Boolean = true): DataFrame = {
+    val stateParts =
+      if (statePartitions > 0) statePartitions else streamStateParts(s)
+    val qn = prefix + "_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    drain(s, prefix, Some(stateParts), noDataBatch) {
+      df.writeStream.format("memory").queryName(qn)
+        .outputMode("append")
+        .option("checkpointLocation", Scratch.memDir(prefix + "ck"))
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+    }
+    s.table(qn)
+  }
+
+  /** Drain a StreamingExecutor pipeline config to its memory sink and
+    * return the table — the executor-path twin of [[runStreamToTable]]. */
+  private def drainExecutor(s: SparkSession, cfg: graft.config.PipelineConfig,
+                            name: String, queryName: String,
+                            noDataBatch: Boolean = true): DataFrame = {
+    drain(s, name, None, noDataBatch)(
+      new graft.streaming.StreamingExecutor().start(cfg)(s))
     s.table(queryName)
   }
 

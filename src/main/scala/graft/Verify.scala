@@ -31,7 +31,7 @@ object Verify {
     * Factored out of main so a spec can inject a deliberately-broken query
     * and assert the failure artifact appears. */
   def run(spark: SparkSession,
-          queries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame],
+          queries: Map[String, Bench.Query],
           oracleSql: Map[String, String],
           sfDir: String, outDir: String): Map[String, String] = {
     new java.io.File(outDir).mkdirs()
@@ -66,29 +66,14 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     // dev loop (mirrors Bench's SPARK_GRAFT_BENCH_ONLY): restrict the run
     // to a comma-separated query subset; the oracle manifest is filtered
     // too so tools/check_oracle.py stays coherent on the partial dir
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = Bench.session(cpus)
+    val queries = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
+      .fold(SparkEntry.queries)(Bench.selectQueries("SPARK_GRAFT_VERIFY_ONLY", _))
+    val oracles = SparkEntry.oracleSql.filter(kv => queries.contains(kv._1))
+    val spark = Bench.session(Bench.env().cpus)
     spark.sparkContext.setLogLevel("WARN")
-    only.foreach { names =>
-      // a typo'd name must fail loudly, not verify zero queries and
-      // leave an empty-but-clean-looking output dir — and so must an
-      // EMPTY subset ("" from an unset interpolated shell variable)
-      require(names.nonEmpty,
-        "SPARK_GRAFT_VERIFY_ONLY is set but names no queries — unset it " +
-          "for the full registry")
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_VERIFY_ONLY names unknown queries: ${unknown.toSeq.sorted.mkString(",")}")
-    }
-    val queries = only.map(s => SparkEntry.queries.filter(kv => s(kv._1)))
-      .getOrElse(SparkEntry.queries)
-    val oracles = only.map(s => SparkEntry.oracleSql.filter(kv => s(kv._1)))
-      .getOrElse(SparkEntry.oracleSql)
     val failures = run(spark, queries, oracles, sfDir, outDir)
     if (failures.nonEmpty)
       System.err.println(s"[verify] ${failures.size} FAILED: ${failures.keys.mkString(",")}")

@@ -49,45 +49,27 @@ object Main {
     * anything. The review step before pointing a new YAML at 100 TB:
     * pushed filters, read schemas, join strategies and exchange counts are
     * all visible here. */
-  def dryRun(config: graft.config.PipelineConfig)(implicit spark: SparkSession): String = {
-    // apply the pipeline's performance conf exactly as execute() does —
-    // without it the printed exchanges/lint verdict could describe a
+  def dryRun(config: graft.config.PipelineConfig)(implicit spark: SparkSession): String =
+    // the pipeline's performance confs apply exactly as in execute() —
+    // without them the printed exchanges/lint verdict could describe a
     // DIFFERENT plan than the one execute() will run (e.g. a reviewed
     // 200-partition plan for a config that sets shufflePartitions: 2000)
-    val prevShuffle = spark.conf.getOption("spark.sql.shuffle.partitions")
-    val prevCkptMode = spark.conf.getOption(graft.api.Checkpointing.ModeKey)
-    val prevCkptDir = spark.conf.getOption(graft.api.Checkpointing.DirKey)
-    def restore(key: String, prev: Option[String]): Unit = prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
+    PipelineExecutor.withPerformanceConf(config) {
+      val df = new PipelineExecutor().compose(config)
+      val sinkErrs = Registries.sinks().get(config.sink.sinkType).validate(config.sink)
+      if (sinkErrs.nonEmpty) throw new ConfigException(sinkErrs.mkString("; "))
+      val report = new StringBuilder()
+      report ++= s"pipeline: ${config.pipelineId} (DRY RUN — nothing written)\n"
+      report ++= "output schema:\n" + df.schema.treeString
+      report ++= "physical plan:\n"
+      report ++= df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      val findings = graft.plans.PlanLint.audit(df)
+      report ++= "plan lint:\n"
+      if (findings.isEmpty) report ++= "  clean\n"
+      else findings.foreach(f => report ++= s"  $f\n")
+      report.result()
     }
-    try {
-    config.performance.flatMap(_.shufflePartitions).foreach(n =>
-      spark.conf.set("spark.sql.shuffle.partitions", n.toString))
-    config.performance.flatMap(_.checkpoint).foreach(m =>
-      spark.conf.set(graft.api.Checkpointing.ModeKey, m))
-    config.performance.flatMap(_.checkpointDir).foreach(d =>
-      spark.conf.set(graft.api.Checkpointing.DirKey, d))
-    val df = new PipelineExecutor().compose(config)
-    val sinkErrs = Registries.sinks().get(config.sink.sinkType).validate(config.sink)
-    if (sinkErrs.nonEmpty) throw new ConfigException(sinkErrs.mkString("; "))
-    val report = new StringBuilder()
-    report ++= s"pipeline: ${config.pipelineId} (DRY RUN — nothing written)\n"
-    report ++= "output schema:\n" + df.schema.treeString
-    report ++= "physical plan:\n"
-    report ++= df.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
-    val findings = graft.plans.PlanLint.audit(df)
-    report ++= "plan lint:\n"
-    if (findings.isEmpty) report ++= "  clean\n"
-    else findings.foreach(f => report ++= s"  $f\n")
-    report.result()
-    } finally {
-      restore("spark.sql.shuffle.partitions", prevShuffle)
-      restore(graft.api.Checkpointing.ModeKey, prevCkptMode)
-      restore(graft.api.Checkpointing.DirKey, prevCkptDir)
-    }
-  }
 
   /** The options createSparkSession sets on the builder. On a shared key
     * the later group wins: graft's defaults, then [[SessionDefaults]] (the

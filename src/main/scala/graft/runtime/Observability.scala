@@ -10,19 +10,11 @@ import scala.jdk.CollectionConverters._
  * driver and (if ever needed) executors.
  */
 final class StructuredLogger(component: String) {
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case '\r' => "\\r"; case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
   def log(level: String, message: String, fields: Map[String, String] = Map.empty): Unit = {
     val kv = (Map(
       "ts" -> java.time.Instant.now().toString,
       "level" -> level, "component" -> component, "message" -> message) ++ fields)
-      .map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }
+      .map { case (k, v) => graft.Verify.q(k) + ":" + graft.Verify.q(v) }
     System.err.println(kv.mkString("{", ",", "}"))
   }
   def info(msg: String, fields: Map[String, String] = Map.empty): Unit = log("INFO", msg, fields)

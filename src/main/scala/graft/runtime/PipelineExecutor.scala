@@ -55,27 +55,7 @@ final class PipelineExecutor(
     val ctx = RunContext(spark, config.pipelineId, runId, Some(sources))
     val t0 = System.nanoTime()
     var persisted: List[DataFrame] = Nil
-    // planLint and the checkpoint keys are per-PIPELINE settings, not
-    // session properties like shufflePartitions — restore them so one
-    // pipeline's `fail` gate or reliable-checkpoint dir never leaks into
-    // the next pipeline run in a long-lived session
-    val prevLint = spark.conf.getOption("spark.graft.planLint")
-    val prevCkptMode = spark.conf.getOption(graft.api.Checkpointing.ModeKey)
-    val prevCkptDir = spark.conf.getOption(graft.api.Checkpointing.DirKey)
-    // shufflePartitions comes from the same per-pipeline performance block
-    // — without the restore it leaked into every later pipeline run in a
-    // long-lived session (pipeline B silently shuffling at A's 8)
-    val prevShuffle = spark.conf.getOption("spark.sql.shuffle.partitions")
-    try {
-      config.performance.flatMap(_.shufflePartitions).foreach(n =>
-        spark.conf.set("spark.sql.shuffle.partitions", n.toString))
-      config.performance.flatMap(_.checkpoint).foreach(m =>
-        spark.conf.set(graft.api.Checkpointing.ModeKey, m))
-      config.performance.flatMap(_.checkpointDir).foreach(d =>
-        spark.conf.set(graft.api.Checkpointing.DirKey, d))
-      config.performance.flatMap(_.planLint).foreach(m =>
-        spark.conf.set("spark.graft.planLint", m))
-
+    try PipelineExecutor.withPerformanceConf(config) {
       // sink config errors are cheap driver-side checks — catch them
       // BEFORE buildPlan, whose quality gate runs eager scans and appends
       // quarantine parquet (an invalid sink previously still paid a full
@@ -192,17 +172,7 @@ final class PipelineExecutor(
       case e: Throwable =>
         ExecutionMetrics(config.pipelineId, runId, "FAILED", -1, -1, -1,
           (System.nanoTime() - t0) / 1000000, Option(e.getMessage))
-    } finally {
-      persisted.foreach(_.unpersist())
-      def restore(key: String, prev: Option[String]): Unit = prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-      restore("spark.graft.planLint", prevLint)
-      restore(graft.api.Checkpointing.ModeKey, prevCkptMode)
-      restore(graft.api.Checkpointing.DirKey, prevCkptDir)
-      restore("spark.sql.shuffle.partitions", prevShuffle)
-    }
+    } finally persisted.foreach(_.unpersist())
   }
 
   /** Library-composition entry (reference §3.3): build the full lazy
@@ -366,5 +336,33 @@ final class PipelineExecutor(
         t.apply(d, tc, ctx)
       }
     Plan(df, rest, failedRows, persisted, qualityMs)
+  }
+}
+
+object PipelineExecutor {
+  /** Run `body` with the session confs a config's `performance` block
+    * sets (shuffle partitions, checkpoint mode and dir, plan lint), then
+    * restore each key's previous value, unset ones included. These are
+    * per-PIPELINE settings: without the restore, one pipeline's
+    * shufflePartitions, `fail` gate or reliable-checkpoint dir leaked into
+    * every later run in a long-lived session (pipeline B silently
+    * shuffling at A's 8). `execute` and `--dry-run` share it, so a
+    * reviewed dry-run plan is the plan `execute` runs. */
+  private[runtime] def withPerformanceConf[A](config: PipelineConfig)(body: => A)(
+      implicit spark: SparkSession): A = {
+    val perf = config.performance
+    val settings = Seq(
+      "spark.sql.shuffle.partitions" -> perf.flatMap(_.shufflePartitions).map(_.toString),
+      Checkpointing.ModeKey -> perf.flatMap(_.checkpoint),
+      Checkpointing.DirKey -> perf.flatMap(_.checkpointDir),
+      "spark.graft.planLint" -> perf.flatMap(_.planLint))
+    val prev = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      settings.foreach { case (k, v) => v.foreach(spark.conf.set(k, _)) }
+      body
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
   }
 }

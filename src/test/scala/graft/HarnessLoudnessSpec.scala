@@ -280,4 +280,24 @@ class HarnessLoudnessSpec extends SparkTestBase {
     // n_chars is the real length (the pack_sequences weight column)
     d.where("length(text) <> n_chars").count() shouldBe 0
   }
+
+  test("the shared subset selector fails loudly on an empty list (naming " +
+    "the variable) and on an unknown name (naming it)") {
+    val empty = the[IllegalArgumentException] thrownBy
+      Bench.selectQueries("SPARK_GRAFT_BENCH_ONLY", "")
+    empty.getMessage should include("SPARK_GRAFT_BENCH_ONLY")
+    val unknown = the[IllegalArgumentException] thrownBy
+      Bench.selectQueries("SPARK_GRAFT_VERIFY_ONLY", "q1_agg,nope")
+    unknown.getMessage should include("nope")
+    unknown.getMessage should not include("q1_agg")
+    Bench.selectQueries("SPARK_GRAFT_BENCH_ONLY", "q1_agg").keySet shouldBe Set("q1_agg")
+  }
+
+  test("the shared harness env clamps timed passes to at least one and " +
+    "falls back to each caller's defaults") {
+    Bench.env(vars = Map("SPARK_GRAFT_BENCH_RUNS" -> "0")).runs shouldBe 1
+    Bench.env("sfX", "3", Map.empty) shouldBe Bench.Env("sfX", "3", 2)
+    Bench.env("sfX", "3", Map("SPARK_GRAFT_CPUS" -> "5",
+      "SPARK_GRAFT_SF_DIR" -> "sfY")) shouldBe Bench.Env("sfY", "5", 2)
+  }
 }

@@ -173,4 +173,23 @@ class MainAndObservabilitySpec extends SparkTestBase {
       graft.config.TransformConfig("f", "filter", Map("condition" -> "nope > 1"))))
     an[Exception] should be thrownBy Main.dryRun(bad)
   }
+
+  test("--dry-run plans with the config's shufflePartitions and leaves the " +
+    "session's value as it was") {
+    val in = tmpDir("dry37-in")
+    Seq((1, "a"), (2, "b")).toDF("id", "k").write.mode("overwrite").parquet(in)
+    val yaml =
+      s"""pipelineId: dry-37
+         |source: {type: file, options: {path: $in}}
+         |transformations:
+         |  - {name: agg, type: aggregation, options: {groupBy: k, aggregations: "n:count(*)"}}
+         |sink: {type: file, writeMode: overwrite, options: {path: ${tmpDir("dry37-out")}/sub}}
+         |performance: {shufflePartitions: 37}
+         |""".stripMargin
+    val cfg = new graft.config.YamlConfigParser().parse(yaml)
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    before should not be "37"
+    Main.dryRun(cfg) should include regex """hashpartitioning\(k#\d+, 37\)"""
+    spark.conf.get("spark.sql.shuffle.partitions") shouldBe before
+  }
 }
