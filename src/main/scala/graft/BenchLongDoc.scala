@@ -34,9 +34,8 @@ import org.apache.spark.sql.functions._
  * `<dir>/f5` and `<dir>/f50` (factor 5 as the SMALL side, not 1: at
  * factor 1 every query is fixed-overhead-dominated and the ratio reads
  * ~1× for everything — no signal, not sub-linearity); the derived
- * corpora live in a scratch dir deleted at exit. `SPARK_GRAFT_CPUS`
- * (default: the host's cores) and `SPARK_GRAFT_BENCH_RUNS` as for
- * [[Bench]].
+ * corpora live in a scratch dir deleted at exit. `SPARK_GRAFT_BENCH_RUNS`
+ * as for [[Bench]]; the session uses the host's cores (at least 2).
  */
 object BenchLongDoc {
 

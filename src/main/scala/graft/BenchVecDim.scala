@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
  * embeddings table; `SPARK_GRAFT_VECDIM_DIR` (default
  * /tmp/graft-vecdim) — artifacts land under `<dir>/d64` and
  * `<dir>/d512`, the derived corpora in a scratch dir deleted at exit;
- * `SPARK_GRAFT_CPUS` and `SPARK_GRAFT_BENCH_RUNS` as for BenchLongDoc.
+ * `SPARK_GRAFT_BENCH_RUNS` and the thread count as for BenchLongDoc.
  */
 object BenchVecDim {
 

@@ -346,9 +346,10 @@ object PipelineExecutor {
     * per-PIPELINE settings: without the restore, one pipeline's
     * shufflePartitions, `fail` gate or reliable-checkpoint dir leaked into
     * every later run in a long-lived session (pipeline B silently
-    * shuffling at A's 8). `execute` and `--dry-run` share it, so a
-    * reviewed dry-run plan is the plan `execute` runs. */
-  private[runtime] def withPerformanceConf[A](config: PipelineConfig)(body: => A)(
+    * shuffling at A's 8). `execute`, `--dry-run` and
+    * `graft.tools.Profile` share it, so a dry-run or profiled
+    * plan is the plan `execute` runs. */
+  private[graft] def withPerformanceConf[A](config: PipelineConfig)(body: => A)(
       implicit spark: SparkSession): A = {
     val perf = config.performance
     val settings = Seq(

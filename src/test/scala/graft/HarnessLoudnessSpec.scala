@@ -296,8 +296,8 @@ class HarnessLoudnessSpec extends SparkTestBase {
   test("the shared harness env clamps timed passes to at least one and " +
     "falls back to each caller's defaults") {
     Bench.env(vars = Map("SPARK_GRAFT_BENCH_RUNS" -> "0")).runs shouldBe 1
-    Bench.env("sfX", "3", Map.empty) shouldBe Bench.Env("sfX", "3", 2)
-    Bench.env("sfX", "3", Map("SPARK_GRAFT_CPUS" -> "5",
+    Bench.env("sfX", Map.empty) shouldBe Bench.Env("sfX", "8", 2)
+    Bench.env("sfX", Map("SPARK_GRAFT_CPUS" -> "5",
       "SPARK_GRAFT_SF_DIR" -> "sfY")) shouldBe Bench.Env("sfY", "5", 2)
   }
 }

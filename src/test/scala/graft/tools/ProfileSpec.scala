@@ -8,7 +8,7 @@ class ProfileSpec extends SparkTestBase {
   import spark.implicits._
 
   /** A 3-transform pipeline over a small parquet input, as a YAML file. */
-  private def pipelineYaml(): String = {
+  private def pipelineYaml(extra: String = ""): String = {
     val in = tmpDir("profile-in")
     Seq((1, "a", 10.0), (2, "b", 20.0), (3, "a", 30.0)).toDF("id", "k", "v")
       .write.mode("overwrite").parquet(in)
@@ -20,6 +20,7 @@ class ProfileSpec extends SparkTestBase {
          |  - {name: scaled, type: map, options: {expressions: "w:v * 2"}}
          |  - {name: per-k, type: aggregation, options: {groupBy: k, aggregations: "n:count(*)"}}
          |sink: {type: file, writeMode: overwrite, options: {path: ${tmpDir("profile-out")}/out}}
+         |$extra
          |""".stripMargin
     Files.write(Paths.get(tmpDir("profile-yaml"), "p.yaml"), yaml.getBytes).toString
   }
@@ -40,10 +41,11 @@ class ProfileSpec extends SparkTestBase {
       .sameResult(whole.queryExecution.optimizedPlan))
   }
 
-  test("a registry target is one entry; one plan file per entry, and " +
-    "marginal lines per prefix") {
+  test("a registry target is one entry, no target the whole registry; one " +
+    "plan file per entry, and marginal lines per prefix") {
     Profile.entries(Seq("q6_filter")).map(e => (e.name, e.pipeline)) shouldBe
       List(("q6_filter", None))
+    Profile.entries(Nil).map(_.name) shouldBe graft.SparkEntry.queries.keys.toList.sorted
     val es = Profile.entries(Seq(pipelineYaml()))
     val out = tmpDir("profile-plans")
     Profile.writePlans(spark, es, "unused", out)
@@ -55,6 +57,25 @@ class ProfileSpec extends SparkTestBase {
     val lines = Profile.marginalLines(es, results)
     lines.map(_.split(" ")(1)) shouldBe es.map(_.name)
     all(lines) should fullyMatch regex """#prefix \S+ [0-9.]+ marginal=[-+][0-9.]+"""
+    // a failed prefix leaves the next one without a base to subtract
+    val Seq(a, b, c) = es.map(_.name)
+    Profile.marginalLines(es, Seq(a -> List(0.5), b -> Nil, c -> List(0.75))) shouldBe
+      List(s"#prefix $a 0.5000 marginal=+0.5000", s"#prefix $b FAILED",
+        s"#prefix $c 0.7500 marginal=NA")
+  }
+
+  test("a pipeline's prefixes are planned and timed under its performance " +
+    "block, and the session's confs are restored") {
+    val es = Profile.entries(Seq(pipelineYaml("performance: {shufflePartitions: 37}")))
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    before should not be "37"
+    val out = tmpDir("profile-perf")
+    val results = Profile.profile(spark, es, "unused", out, 1)
+    results.map(_._1).toSet shouldBe es.map(_.name).toSet
+    all(results.map(_._2)) should not be empty
+    Files.readString(Paths.get(out, "profile-pipe.03.per-k.txt")) should
+      include regex """hashpartitioning\(k#\d+, 37\)"""
+    spark.conf.get("spark.sql.shuffle.partitions") shouldBe before
   }
 
   test("a target that is neither a registry query nor an existing file " +
