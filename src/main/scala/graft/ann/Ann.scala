@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
 import graft.dedup.Dedup
+import graft.operators.Stores
 
 /**
  * Approximate-nearest-neighbor search over an embedding column
@@ -324,17 +325,20 @@ object Ann {
     // stays empty through every Lloyd round (empty cells keep the previous
     // centroid) and the poisoned vector persists into the (possibly
     // stored) codebook, silently shrinking the effective centroid count
-    // NaN needs no isnan(): Spark orders NaN GREATER than every value
-    // including +Inf, so `x < +Inf` excludes NaN and +Inf in one
-    // comparison and `x > -Inf` the other end — two branches per element
-    // on the full-corpus scan instead of four
     corpus.select(col(idCol), col(vecCol))
-      .where(col(vecCol).isNotNull &&
-        forall(col(vecCol), x => x.isNotNull &&
-          x > lit(Float.NegativeInfinity) && x < lit(Float.PositiveInfinity)))
+      .where(finiteVec(col(vecCol)))
       .orderBy(xxhash64(col(idCol)), col(idCol)).limit(nLists)
       .select(col(vecCol).cast("array<float>")).collect()
       .map(_.getSeq[Float](0).toArray)
+
+  /** A non-null vector whose every element is non-null and finite. NaN
+    * needs no isnan(): Spark orders NaN GREATER than every value including
+    * +Inf, so `x < +Inf` excludes NaN and +Inf in one comparison and
+    * `x > -Inf` the other end — two branches per element on a full-corpus
+    * scan instead of four. */
+  private def finiteVec(c: Column): Column = c.isNotNull &&
+    forall(c, x => x.isNotNull &&
+      x > lit(Float.NegativeInfinity) && x < lit(Float.PositiveInfinity))
 
   /** PQ geometry version stamped into [[pqCodebookFrame]] stores as
     * `pq_norm`: 1 = spherical (train + encode on L2-normalized vectors).
@@ -388,105 +392,18 @@ object Ann {
    */
   def loadCodebook(store: DataFrame, wantNLists: Option[Int] = None,
                    wantKmeansIters: Option[Int] = None): Array[Array[Float]] = {
-    // the stamp columns are REQUIRED, not optional (the minhash/gram store
-    // contract): a stamp-less store cannot prove what it was trained with,
-    // and skipping the check would let `nClusters: 40` silently consume a
-    // 64-centroid store — the exact "assignments silently mean something
-    // else" failure the stamps exist to prevent
-    // cb_rows is required too — an INTENTIONAL compatibility break for
-    // stores persisted by early codebookFrame builds that predate the
-    // stamp: such a store cannot prove it kept its tail (the row-count
-    // stamp is the only defense against truncation that the dense-
-    // sequence check cannot see), so it must be rebuilt once rather than
-    // loaded forever with that check silently skipped. The error below
-    // names the rebuild path.
-    val missing = Seq("list_id", "vec", "cb_n_lists", "cb_kmeans_iters", "cb_rows")
-      .filterNot(store.columns.contains)
-    if (missing.nonEmpty) {
-      // braces around the throw matter: a bare block following a `throw
-      // new X(...)` statement parses as an anonymous-class BODY of X
-      throw new graft.api.ConfigException(
-        s"codebook store is missing column(s) ${missing.mkString(", ")} — " +
-          "expected the codebookFrame layout (list_id, vec, cb_*); rebuild " +
-          "the store with the codebook transform")
-    }
-    locally {
-      // DISTINCT stamp set (tiny partial-agg job), not one sampled row —
-      // mixed-parameter stores (two builds appended) fail regardless of
-      // partition order, null stamps raise the config error, not an NPE
-      // (the minhash store contract). cast("int") tolerates a store
-      // round-tripped through a wider integer type — r.getInt on a bigint
-      // column would ClassCastException instead of the guided error.
-      val stamps = store.select(
-          col("cb_n_lists").cast("int"), col("cb_kmeans_iters").cast("int"))
-        .distinct().collect()
-        .map(r => (0 to 1).map(i =>
-          if (r.isNullAt(i)) None else Some(r.getInt(i))))
-      def show = stamps.map { case Seq(n, it) =>
-        s"nLists=${n.map(_.toString).getOrElse("null")}, " +
-          s"kmeansIters=${it.map(_.toString).getOrElse("null")}" }
-        .sorted.mkString("; ")
-      val ok = stamps.length <= 1 && stamps.forall { case Seq(n, it) =>
-        n.isDefined && it.isDefined &&
-          wantNLists.forall(_ == n.get) && wantKmeansIters.forall(_ == it.get)
-      }
-      if (!ok) throw new graft.api.ConfigException(
-        s"codebook store carries parameter stamp(s) [$show] but this run " +
-          s"requests nLists=${wantNLists.map(_.toString).getOrElse("(store's)")}, " +
-          s"kmeansIters=${wantKmeansIters.map(_.toString).getOrElse("(store's)")} " +
-          "— assignments against a differently-trained (or mixed/null-" +
-          "stamped) codebook would silently mean something else; rebuild " +
-          "the store or align the parameters")
-    }
-    val rows = store
-      .select(col("list_id").cast("int"), col("vec").cast("array<float>"))
-      .orderBy("list_id").collect()
-    // a zero-row store would pass every check vacuously and then stamp
-    // NULL cluster ids on every row of a non-empty corpus — the silent
-    // opposite of the fail-fast store contract
-    if (rows.isEmpty) throw new graft.api.ConfigException(
-      "codebook store is empty — the producing run saw no vectors; " +
-        "rebuild the store over a non-empty corpus (or drop codebookView " +
-        "to train in-process)")
-    val bad = rows.zipWithIndex.collectFirst {
-      case (r, i) if r.isNullAt(0) || r.getInt(0) != i || r.isNullAt(1) => i
-    }
-    if (bad.isDefined) throw new graft.api.ConfigException(
-      s"codebook store list_ids are not a dense, non-null 0..${rows.length - 1} " +
-        s"sequence (first problem at position ${bad.get}) — a hole or " +
-        "duplicate would silently renumber every later centroid")
-    // the dense check alone cannot see a store that lost its TAIL (rows
-    // 0..31 of a 64-centroid build are still dense) — the produced-count
-    // stamp makes truncation loud
-    locally {
-      val wantRows = store.select(col("cb_rows").cast("int")).distinct().collect()
-        .map(r => if (r.isNullAt(0)) "null" else r.getInt(0).toString).sorted
-      if (wantRows.exists(_ != rows.length.toString))
-        throw new graft.api.ConfigException(
-          s"codebook store row-count stamp says [${wantRows.mkString(", ")}] " +
-            s"centroids but ${rows.length} loaded — the store lost rows " +
-            "(partial overwrite or a filtered view); documents previously " +
-            "in the missing clusters would silently reassign")
-    }
-    val cents = rows.map { r =>
-      val v = r.getSeq[Any](1)
-      // a null ELEMENT would silently unbox to 0.0f — a centroid with a
-      // fabricated zero dimension; fail with the store contract's error
-      if (v.exists(_ == null)) throw new graft.api.ConfigException(
-        s"codebook store centroid list_id=${r.getInt(0)} contains a null " +
-          "vector element — rebuild the store (a null slot must never " +
-          "silently read as 0.0)")
-      v.asInstanceOf[Seq[Float]].toArray
-    }
-    // a truncated centroid would be prefix-scored by the assignment loop
-    // (math.min over dims) and could spuriously win — mixed dims are store
-    // corruption, not data
-    val dims = cents.map(_.length).distinct
-    if (dims.length > 1) throw new graft.api.ConfigException(
-      s"codebook store centroids carry mixed dimensionalities " +
-        s"${dims.sorted.mkString(", ")} — a truncated centroid would be " +
-        "prefix-scored and silently skew every assignment; rebuild the store")
-    cents
+    // ONE driver collect: the stamps are read from the collected rows.
+    // cb_rows is required (not optional): it is the only defense against a
+    // lost tail, which the dense-sequence check cannot see — a store
+    // persisted before the stamp must be rebuilt once
+    val f = Stores.Codebook
+    val rows = Stores.collect(store, f,
+      Seq(col("list_id").cast("int"), col("vec").cast("array<float>")))
+    val produced = Stores.stampsOf(f, rows, 2, wantNLists, wantKmeansIters)(2)
+    val order = Stores.denseOrder("codebook store list_ids",
+      rows.map(_.get(0)).toIndexedSeq, produced.asInstanceOf[Int])
+    Stores.vectors("codebook store centroid",
+      order.toSeq.zipWithIndex.map { case (r, id) => (s"list_id=$id", rows(r).get(1)) })
   }
 
   /** [[ivfTopK]] with the coarse quantizer read from a PERSISTED
@@ -723,11 +640,7 @@ object Ann {
     // otherwise default a poisoned subspace to code 0 (NaN never wins a
     // comparison), hand the row a finite ADC score that burns candidate
     // slots, and only vanish at the re-rank — topKPerQuery's NaN contract,
-    // enforced where the candidates are made. No isnan(): Spark orders
-    // NaN GREATER than +Inf, so `x < +Inf` excludes both in one branch
-    def finiteVec(c: Column): Column = c.isNotNull &&
-      forall(c, x => x.isNotNull &&
-        x > lit(Float.NegativeInfinity) && x < lit(Float.PositiveInfinity))
+    // enforced where the candidates are made (finiteVec).
     // 1) slim code frame: a persisted codes store (validated against THIS
     // codebook's fingerprint) skips the encode scan entirely — at
     // production scale the encode is the only full-width corpus read the
@@ -875,71 +788,29 @@ object Ann {
                       wantKmeansIters: Option[Int] = None,
                       kName: String = "k")
       : Array[Array[Array[Float]]] = {
-    val stamps = Seq("pq_m", "pq_k", "pq_kmeans_iters", "pq_sub_dim",
-      "pq_rows", "pq_norm")
-    val missing = stamps.filterNot(store.columns.contains)
-    require(missing.isEmpty,
-      s"loadPqCodebooks: store is missing stamp column(s) " +
-        s"${missing.mkString(", ")} — not a pqCodebookFrame store" +
-        (if (missing == Seq("pq_norm"))
-          " (or one persisted before the spherical-PQ geometry stamp: " +
-            "its codebooks were trained in RAW space and would silently " +
-            "re-cell every vector under the normalized encode path — " +
-            "rebuild it once with cluster_embeddings mode=pq_codebook)"
-        else ""))
-    val rows = store.select(col("subspace").cast("int"),
-        col("list_id").cast("int"), col("vec").cast("array<float>"),
-        col("pq_m").cast("int"), col("pq_k").cast("int"),
-        col("pq_kmeans_iters").cast("int"), col("pq_sub_dim").cast("int"),
-        col("pq_rows").cast("int"), col("pq_norm").cast("int"))
-      .collect()
-    require(rows.nonEmpty, "loadPqCodebooks: store is empty")
-    val (sm, sk, si, sd, sr) = (rows(0).getInt(3), rows(0).getInt(4),
-      rows(0).getInt(5), rows(0).getInt(6), rows(0).getInt(7))
-    require(rows.forall(r => r.getInt(3) == sm && r.getInt(4) == sk &&
-      r.getInt(5) == si && r.getInt(6) == sd && r.getInt(7) == sr &&
-      r.getInt(8) == rows(0).getInt(8)),
-      "loadPqCodebooks: store carries CONFLICTING parameter stamps — " +
-        "two trainings' rows mixed in one store")
-    require(rows(0).getInt(8) == PqNormSpherical,
-      s"loadPqCodebooks: store was trained with geometry version " +
-        s"pq_norm=${rows(0).getInt(8)} but this engine encodes with " +
-        s"pq_norm=$PqNormSpherical (spherical / L2-normalized) — " +
-        "rebuild the store with this engine version")
-    require(rows.length == sr,
-      s"loadPqCodebooks: store has ${rows.length} rows but was written " +
-        s"with pq_rows=$sr — rows were lost or duplicated")
-    def check(name: String, want: Option[Int], got: Int): Unit =
-      want.foreach(w => require(w == got,
-        s"loadPqCodebooks: store was trained with $name=$got but the " +
-          s"caller requests $name=$w — retrain or drop the override"))
     // kName: the mismatch message must name the knob THE CALLER types —
     // the declarative route spells k "nCentroids" (ann_topk already has a
     // k option meaning top-k)
-    check("m", wantM, sm)
-    check(kName, wantK, sk)
-    check("kmeansIters", wantKmeansIters, si)
-    val bySub = rows.groupBy(_.getInt(0))
-    require(bySub.keySet == (0 until sm).toSet,
-      s"loadPqCodebooks: store covers subspaces " +
-        s"${bySub.keySet.toSeq.sorted.mkString(",")} but pq_m=$sm demands " +
-        s"exactly 0..${sm - 1}")
-    val perSub = sr / sm
-    Array.tabulate(sm) { j =>
-      val sub = bySub(j)
-      val ids = sub.map(_.getInt(1)).sorted.toSeq
-      require(ids == (0 until perSub),
-        s"loadPqCodebooks: subspace $j has list_ids " +
-          s"${ids.take(5).mkString(",")}… — not the dense 0..${perSub - 1} " +
-          "grid (a hole would silently renumber every later centroid)")
-      sub.sortBy(_.getInt(1)).map { r =>
-        val v = r.getSeq[Float](2).toArray
-        require(v.length == sd,
-          s"loadPqCodebooks: subspace $j centroid ${r.getInt(1)} has dim " +
-            s"${v.length} but pq_sub_dim=$sd")
-        v
-      }
-    }
+    val f = Stores.PqCodebook.withKnob("pq_k", kName)
+    val rows = Stores.collect(store, f, Seq(col("subspace").cast("int"),
+      col("list_id").cast("int"), col("vec").cast("array<float>")))
+    val st = Stores.stampsOf(f, rows, 3, wantM, wantK, wantKmeansIters, None,
+      None, Some(PqNormSpherical)).map(_.asInstanceOf[Int])
+    val (sm, sd, sr) = (st(0), st(3), st(4))
+    // the (subspace, list_id) grid flattened to one dense id sequence
+    val perSub = if (sm > 0) sr / sm else 0
+    val order = Stores.denseOrder("pq codebook store (subspace, list_id) cells",
+      rows.map { r =>
+        if (r.isNullAt(0) || r.isNullAt(1)) null
+        else {
+          val (j, c) = (r.getInt(0), r.getInt(1))
+          if (j < 0 || j >= sm || c < 0 || c >= perSub) null else j * perSub + c
+        }
+      }.toIndexedSeq, sr)
+    Stores.vectors("pq codebook store centroid",
+      order.toSeq.zipWithIndex.map { case (r, i) =>
+        (s"(subspace ${i / perSub}, list_id ${i % perSub})", rows(r).get(2)) },
+      sd).grouped(perSub).toArray
   }
 
   /**
@@ -1024,9 +895,6 @@ object Ann {
    */
   def pqCodesFrame(corpus: DataFrame, idCol: String, vecCol: String,
                    cbs: Array[Array[Array[Float]]]): DataFrame = {
-    def finiteVec(c: Column): Column = c.isNotNull &&
-      forall(c, x => x.isNotNull &&
-        x > lit(Float.NegativeInfinity) && x < lit(Float.PositiveInfinity))
     corpus
       .select(col(idCol).as("vec_id"), col(vecCol).cast("array<float>").as("v"))
       .where(col("vec_id").isNotNull && finiteVec(col("v")))
@@ -1044,32 +912,8 @@ object Ann {
     * itself is never collected. */
   private def loadPqCodes(store: DataFrame,
                           cbs: Array[Array[Array[Float]]]): DataFrame = {
-    val missing = Seq("vec_id", "codes", "pq_codes_m", "pq_codes_sub_dim",
-      "pq_codes_norm", "pq_cb_hash").filterNot(store.columns.contains)
-    require(missing.isEmpty,
-      s"pqTopK: codes store is missing column(s) ${missing.mkString(", ")} " +
-        "— not a pqCodesFrame store; rebuild it with the pq_encode " +
-        "transform")
-    val want = (cbs.length, cbs(0)(0).length, PqNormSpherical,
-      pqCodebookHash(cbs))
-    val bad = store.select(col("pq_codes_m").cast("int"),
-        col("pq_codes_sub_dim").cast("int"), col("pq_codes_norm").cast("int"),
-        col("pq_cb_hash").cast("long"))
-      .where(col("pq_codes_m").isNull || col("pq_codes_m") =!= want._1 ||
-        col("pq_codes_sub_dim").isNull || col("pq_codes_sub_dim") =!= want._2 ||
-        col("pq_codes_norm").isNull || col("pq_codes_norm") =!= want._3 ||
-        col("pq_cb_hash").isNull || col("pq_cb_hash") =!= want._4)
-      .limit(1).collect()
-    bad.headOption.foreach { r =>
-      throw new IllegalArgumentException(
-        s"pqTopK: codes store carries (m=${r.get(0)}, subDim=${r.get(1)}, " +
-          s"norm=${r.get(2)}, cb_hash=${r.get(3)}) rows but the loaded " +
-          s"codebook demands (m=${want._1}, subDim=${want._2}, " +
-          s"norm=${want._3}, cb_hash=${want._4}) — the codes were encoded " +
-          "under a DIFFERENT codebook (retrained, or different " +
-          "parameters); re-encode the corpus with pq_encode against this " +
-          "codebook store")
-    }
+    Stores.check(store, Stores.PqCodes, cbs.length, cbs(0)(0).length,
+      PqNormSpherical, pqCodebookHash(cbs))
     store.select(col("vec_id"), col("codes"))
   }
 
@@ -1085,9 +929,6 @@ object Ann {
   def ivfPqCodesFrame(corpus: DataFrame, idCol: String, vecCol: String,
                       cents: Array[Array[Float]],
                       cbs: Array[Array[Array[Float]]]): DataFrame = {
-    def finiteVec(c: Column): Column = c.isNotNull &&
-      forall(c, x => x.isNotNull &&
-        x > lit(Float.NegativeInfinity) && x < lit(Float.PositiveInfinity))
     corpus
       .select(col(idCol).as("vec_id"), col(vecCol).cast("array<float>").as("v"))
       .where(col("vec_id").isNotNull && finiteVec(col("v")))
@@ -1106,35 +947,8 @@ object Ann {
     * fingerprint). */
   private def loadIvfPqCodes(store: DataFrame, cents: Array[Array[Float]],
                              cbs: Array[Array[Array[Float]]]): DataFrame = {
-    val missing = Seq("vec_id", "list_id", "codes", "ivfpq_codes_m",
-      "ivfpq_codes_sub_dim", "ivfpq_codes_norm", "ivfpq_cb_hash")
-      .filterNot(store.columns.contains)
-    require(missing.isEmpty,
-      s"ivfPqTopK: codes store is missing column(s) " +
-        s"${missing.mkString(", ")} — not an ivfPqCodesFrame store; " +
-        "rebuild it with the ivfpq_encode transform")
-    val want = (cbs.length, cbs(0)(0).length, PqNormSpherical,
-      ivfPqStoreHash(cents, cbs))
-    val bad = store.select(col("ivfpq_codes_m").cast("int"),
-        col("ivfpq_codes_sub_dim").cast("int"),
-        col("ivfpq_codes_norm").cast("int"),
-        col("ivfpq_cb_hash").cast("long"))
-      .where(col("ivfpq_codes_m").isNull || col("ivfpq_codes_m") =!= want._1 ||
-        col("ivfpq_codes_sub_dim").isNull ||
-        col("ivfpq_codes_sub_dim") =!= want._2 ||
-        col("ivfpq_codes_norm").isNull ||
-        col("ivfpq_codes_norm") =!= want._3 ||
-        col("ivfpq_cb_hash").isNull || col("ivfpq_cb_hash") =!= want._4)
-      .limit(1).collect()
-    bad.headOption.foreach { r =>
-      throw new IllegalArgumentException(
-        s"ivfPqTopK: codes store carries (m=${r.get(0)}, subDim=${r.get(1)}, " +
-          s"norm=${r.get(2)}, cb_hash=${r.get(3)}) rows but the loaded " +
-          s"store demands (m=${want._1}, subDim=${want._2}, " +
-          s"norm=${want._3}, cb_hash=${want._4}) — the codes were encoded " +
-          "under a DIFFERENT quantizer (either half retrained); re-encode " +
-          "the corpus with ivfpq_encode against this combined store")
-    }
+    Stores.check(store, Stores.IvfPqCodes, cbs.length, cbs(0)(0).length,
+      PqNormSpherical, ivfPqStoreHash(cents, cbs))
     store.select(col("vec_id"), col("list_id"), col("codes"))
   }
 
@@ -1230,9 +1044,6 @@ object Ann {
     import org.apache.spark.sql.types._
     import org.apache.spark.sql.catalyst.util.ArrayData
     val qidType = queries.schema(queryIdCol).dataType
-    def finiteVec(c: Column): Column = c.isNotNull &&
-      forall(c, x => x.isNotNull &&
-        x > lit(Float.NegativeInfinity) && x < lit(Float.PositiveInfinity))
     // slim (vec_id, list_id, codes) frame — a persisted codes store
     // (fingerprint-validated against THIS quantizer) skips the encode
     // scan; otherwise ONE fused native encode node
@@ -1373,82 +1184,37 @@ object Ann {
                      wantM: Option[Int] = None, wantK: Option[Int] = None,
                      wantKmeansIters: Option[Int] = None)
       : (Array[Array[Float]], Array[Array[Array[Float]]]) = {
-    val stamps = Seq("ivfpq_n_lists", "ivfpq_m", "ivfpq_k",
-      "ivfpq_kmeans_iters", "ivfpq_sub_dim", "ivfpq_rows", "ivfpq_norm")
-    val missing = (Seq("part", "subspace", "list_id", "vec") ++ stamps)
-      .filterNot(store.columns.contains)
-    require(missing.isEmpty,
-      s"loadIvfPqStore: store is missing column(s) ${missing.mkString(", ")} " +
-        "— not an ivfPqStoreFrame store")
-    val rows = store.select(col("part").cast("string"),
-        col("subspace").cast("int"), col("list_id").cast("int"),
-        col("vec").cast("array<float>"),
-        col("ivfpq_n_lists").cast("int"), col("ivfpq_m").cast("int"),
-        col("ivfpq_k").cast("int"), col("ivfpq_kmeans_iters").cast("int"),
-        col("ivfpq_sub_dim").cast("int"), col("ivfpq_rows").cast("int"),
-        col("ivfpq_norm").cast("int"))
-      .collect()
-    require(rows.nonEmpty, "loadIvfPqStore: store is empty")
-    val h = rows(0)
-    val (sl, sm, sk, si, sd, sr, sn) = (h.getInt(4), h.getInt(5), h.getInt(6),
-      h.getInt(7), h.getInt(8), h.getInt(9), h.getInt(10))
-    require(rows.forall(r => r.getInt(4) == sl && r.getInt(5) == sm &&
-      r.getInt(6) == sk && r.getInt(7) == si && r.getInt(8) == sd &&
-      r.getInt(9) == sr && r.getInt(10) == sn),
-      "loadIvfPqStore: store carries CONFLICTING parameter stamps — two " +
-        "trainings' rows mixed in one store")
-    require(sn == PqNormSpherical,
-      s"loadIvfPqStore: store was trained with geometry version " +
-        s"ivfpq_norm=$sn but this engine encodes with " +
-        s"ivfpq_norm=$PqNormSpherical — rebuild the store with this " +
-        "engine version")
-    require(rows.length == sr,
-      s"loadIvfPqStore: store has ${rows.length} rows but was written " +
-        s"with ivfpq_rows=$sr — rows were lost or duplicated")
-    def check(name: String, want: Option[Int], got: Int): Unit =
-      want.foreach(w => require(w == got,
-        s"loadIvfPqStore: store was trained with $name=$got but the " +
-          s"caller requests $name=$w — retrain or drop the override"))
-    check("nLists", wantNLists, sl)
-    check("m", wantM, sm)
-    check("nCentroids", wantK, sk)
-    check("kmeansIters", wantKmeansIters, si)
-    val (ivfRows, pqRows) = rows.partition(_.getString(0) == "ivf")
-    require(pqRows.forall(_.getString(0) == "pq"),
-      s"loadIvfPqStore: unknown part value(s) " +
-        s"${pqRows.map(_.getString(0)).filter(_ != "pq").distinct.mkString(", ")}")
-    require(ivfRows.map(_.getInt(2)).sorted.toSeq == (0 until sl),
-      s"loadIvfPqStore: ivf part has list_ids " +
-        s"${ivfRows.map(_.getInt(2)).sorted.take(5).mkString(",")}… — not " +
-        s"the dense 0..${sl - 1} grid (a hole would silently renumber " +
-        "every later centroid)")
-    val cents = ivfRows.sortBy(_.getInt(2)).map { r =>
-      val v = r.getSeq[Float](3).toArray
-      require(v.length == sm * sd,
-        s"loadIvfPqStore: centroid ${r.getInt(2)} has dim ${v.length} but " +
-          s"the stamps demand ${sm * sd} (m·subDim)")
-      v
-    }
-    val bySub = pqRows.groupBy(_.getInt(1))
-    require(bySub.keySet == (0 until sm).toSet,
-      s"loadIvfPqStore: pq part covers subspaces " +
-        s"${bySub.keySet.toSeq.sorted.mkString(",")} but ivfpq_m=$sm " +
-        s"demands exactly 0..${sm - 1}")
-    val perSub = pqRows.length / sm
-    val cbs = Array.tabulate(sm) { j =>
-      val sub = bySub(j)
-      require(sub.map(_.getInt(2)).sorted.toSeq == (0 until perSub),
-        s"loadIvfPqStore: subspace $j has list_ids " +
-          s"${sub.map(_.getInt(2)).sorted.take(5).mkString(",")}… — not " +
-          s"the dense 0..${perSub - 1} grid")
-      sub.sortBy(_.getInt(2)).map { r =>
-        val v = r.getSeq[Float](3).toArray
-        require(v.length == sd,
-          s"loadIvfPqStore: subspace $j centroid ${r.getInt(2)} has dim " +
-            s"${v.length} but ivfpq_sub_dim=$sd")
-        v
-      }
-    }
+    val f = Stores.IvfPqStore
+    val rows = Stores.collect(store, f, Seq(col("part").cast("string"),
+      col("subspace").cast("int"), col("list_id").cast("int"),
+      col("vec").cast("array<float>")))
+    val st = Stores.stampsOf(f, rows, 4, wantNLists, wantM, wantK,
+      wantKmeansIters, None, None, Some(PqNormSpherical))
+      .map(_.asInstanceOf[Int])
+    val (nl, sm, sd, sr) = (st(0), st(1), st(4), st(5))
+    // both parts flattened to one dense id sequence: coarse centroids
+    // first, then the residual (subspace, list_id) grid
+    val perSub = if (sm > 0) (sr - nl) / sm else 0
+    val order = Stores.denseOrder("ivfpq store (part, subspace, list_id) cells",
+      rows.map { r =>
+        if (r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)) null
+        else {
+          val (j, c) = (r.getInt(1), r.getInt(2))
+          r.getString(0) match {
+            case "ivf" if j == 0 && c >= 0 && c < nl => c
+            case "pq" if j >= 0 && j < sm && c >= 0 && c < perSub =>
+              nl + j * perSub + c
+            case _ => null
+          }
+        }
+      }.toIndexedSeq, sr)
+    val cents = Stores.vectors("ivfpq store coarse centroid",
+      order.toSeq.take(nl).zipWithIndex.map { case (r, i) =>
+        (s"list_id $i", rows(r).get(3)) }, sm * sd)
+    val cbs = Stores.vectors("ivfpq store residual centroid",
+      order.toSeq.drop(nl).zipWithIndex.map { case (r, i) =>
+        (s"(subspace ${i / perSub}, list_id ${i % perSub})", rows(r).get(3)) },
+      sd).grouped(perSub).toArray
     (cents, cbs)
   }
 

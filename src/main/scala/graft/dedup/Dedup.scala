@@ -186,40 +186,9 @@ object Dedup {
       bands: Int = 16, rowsPerBand: Int = 4, shingleSize: Int = 3,
       threshold: Double = 0.5, maxBucketSize: Int = 1000): DataFrame = {
     // the stamp columns are REQUIRED, not optional: a store without them
-    // cannot prove it was built with this run's parameters, and skipping
-    // the check re-opens the silent-zero-duplicates hole the stamps exist
-    // to close (minhashSignatures always writes them; a half-stamped store
-    // is a corrupted/hand-edited one and must get the guided error, not an
-    // UNRESOLVED_COLUMN AnalysisException)
-    val missing = Seq("doc_id", "sh", "sig",
-        "mh_bands", "mh_rows_per_band", "mh_shingle")
-      .filterNot(sigStore.columns.contains)
-    if (missing.nonEmpty) {
-      throw new graft.api.ConfigException(
-        s"minhash signature store is missing column(s) ${missing.mkString(", ")} — " +
-          "expected the minhashSignatures layout (doc_id, sh, sig, mh_*); " +
-          "rebuild the store with minhashSignatures")
-    }
-    // DISTINCT stamp set (tiny partial-agg job), not one sampled row: a
-    // mixed-parameter store (two builds appended together) must fail
-    // regardless of partition order, and a null stamp must raise the
-    // config error, not an NPE — a param mismatch means every bucket
-    // would miss, the silent-zero-duplicates failure mode. cast("int")
-    // tolerates a store round-tripped through a wider integer type.
-    val want = s"bands=$bands, rowsPerBand=$rowsPerBand, shingleSize=$shingleSize"
-    val stamps = sigStore.select(
-        Seq("mh_bands", "mh_rows_per_band", "mh_shingle")
-          .map(c => col(c).cast("int")): _*)
-      .distinct().collect()
-      .map(r => (0 to 2).map(i =>
-        if (r.isNullAt(i)) "null" else r.getInt(i).toString))
-      .map { case Seq(b, rp, sz) => s"bands=$b, rowsPerBand=$rp, shingleSize=$sz" }
-      .sorted
-    if (stamps.exists(_ != want))
-      throw new graft.api.ConfigException(
-        s"minhash signature store was written with [${stamps.mkString("; ")}] " +
-          s"but this run requests $want — matching would silently find " +
-          "zero duplicates; rebuild the store or align the parameters")
+    // cannot prove it was built with this run's parameters
+    graft.operators.Stores.check(sigStore, graft.operators.Stores.MinhashSignatures,
+      bands, rowsPerBand, shingleSize)
     minhashAgainstCore(
       sigFrame(df, idCol, textCol, bands * rowsPerBand, shingleSize),
       sigStore.select("doc_id", "sh", "sig"),

@@ -151,28 +151,8 @@ object LineDedup {
                                   minLength: Int = 1): DataFrame = {
     require(separator.nonEmpty, "dedupLines: separator must be non-empty")
     require(minLength >= 1, s"dedupLines: minLength must be >= 1, got $minLength")
-    val missing = Seq("lh", "ld_min_length", "ld_separator")
-      .filterNot(store.columns.contains)
-    if (missing.nonEmpty)
-      throw new graft.api.ConfigException(
-        s"line signature store is missing column(s) ${missing.mkString(", ")} — " +
-          "expected the lineSignatures layout (lh, ld_*); rebuild the store " +
-          "with the line_signatures transform")
-    val stamps = store.select(col("ld_min_length").cast("int"), col("ld_separator"))
-      .distinct().collect()
-    if (stamps.length != 1 || stamps.head.anyNull)
-      throw new graft.api.ConfigException(
-        "line signature store carries mixed or null parameter stamps — an " +
-          "appended or hand-edited store cannot prove one build; rebuild it " +
-          "with a single line_signatures pass")
-    val (gotMin, gotSep) = (stamps.head.getInt(0), stamps.head.getString(1))
-    if (gotMin != minLength || gotSep != separator)
-      throw new graft.api.ConfigException(
-        s"line signature store was built with minLength=$gotMin, " +
-          s"separator=${gotSep.replace("\n", "\\n")} but this run requests " +
-          s"minLength=$minLength, separator=${separator.replace("\n", "\\n")} — " +
-          "mismatched parameters would hash different lines and silently " +
-          "drop nothing; rebuild the store or align the parameters")
+    graft.operators.Stores.check(store, graft.operators.Stores.LineSignatures,
+      minLength, separator)
     val sep = java.util.regex.Pattern.quote(separator)
     // consumed twice (line frame + rebuild's id join) — truncate lineage
     // so a composed upstream tower executes once (the dedupLines fix)

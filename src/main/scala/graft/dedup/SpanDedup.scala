@@ -201,28 +201,12 @@ object SpanDedup {
     removeSpans(df, idCol, textCol,
       dupSpansAgainstStoreBloom(df, idCol, textCol, store, n, fpp))
 
-  /** Layout + parameter-stamp validation for a [[gramSignatures]] store;
-    * returns the slim hash frame keyed `__gh`. The stamp check reads the
-    * DISTINCT sg_n set (a tiny partial-agg job), not one arbitrary row —
-    * a mixed-stamp store (an n=8 build appended to by an n=12 rebuild)
-    * must fail regardless of which partition happens to be sampled, and a
-    * null stamp must raise the config error, not an NPE. */
+  /** Layout + parameter-stamp validation for a [[gramSignatures]] store
+    * ([[graft.operators.Stores.check]]); returns the slim hash frame keyed
+    * `__gh`. */
   private def validatedStoreHashes(store: DataFrame, n: Int): DataFrame = {
     require(n >= 2, s"dedup_spans: n must be >= 2, got $n")
-    val missing = Seq("gh", "sg_n").filterNot(store.columns.contains)
-    if (missing.nonEmpty) throw new graft.api.ConfigException(
-      s"gram signature store is missing column(s) ${missing.mkString(", ")} — " +
-        "expected the gramSignatures layout (gh, sg_n)")
-    // cast("int") tolerates a store round-tripped through a wider integer
-    // type (e.g. a bigint-stamped rebuild) — r.getInt on a LongType column
-    // would throw ClassCastException instead of the guided error below
-    val stamps = store.select(col("sg_n").cast("int")).distinct().collect()
-      .map(r => if (r.isNullAt(0)) "null" else r.getInt(0).toString).sorted
-    if (stamps.exists(_ != n.toString)) throw new graft.api.ConfigException(
-      s"gram signature store carries n stamp(s) ${stamps.mkString(", ")} but " +
-        s"this run requests n=$n — a mismatched (or mixed/null-stamped) " +
-        "store would silently find zero spans; rebuild the store or align " +
-        "the parameters")
+    graft.operators.Stores.check(store, graft.operators.Stores.GramSignatures, n)
     store.select(col("gh").as("__gh"))
   }
 

@@ -1326,38 +1326,14 @@ object Multimodal {
   }
 
   /** Load + validate a persisted [[mediaSignatures]] store for a
-    * `wantModality` dedup pass. Fails with guidance on missing columns,
-    * a hash-arithmetic version this engine doesn't compute (pairing
-    * across versions silently compares incomparable bits), and rows of
-    * another modality (an image store fed to dedup_audio would pair
-    * dHashes against aHashes — same silent-garbage class). Returns the
-    * slim (doc_id, sig, sig2) frame; the caller never touches history's
-    * payload bytes. */
-  def loadMediaSignatures(store: DataFrame, wantModality: String,
-                          caller: String): DataFrame = {
-    val missing = Seq("doc_id", "modality", "sig", "sig2", "ms_version")
-      .filterNot(store.columns.contains)
-    if (missing.nonEmpty) throw new graft.api.ConfigException(
-      s"$caller: signature store is missing column(s) " +
-        s"${missing.mkString(", ")} — expected the mediaSignatures layout " +
-        "(doc_id, modality, sig, sig2, ms_version); rebuild the store " +
-        "with the media_signatures transform")
-    val bad = store.select(col("ms_version").cast("int").as("v"),
-        col("modality").cast("string").as("m"))
-      .where(col("v").isNull || col("v") =!= lit(MediaSigVersion) ||
-        col("m").isNull || col("m") =!= lit(wantModality))
-      .limit(1).collect()
-    bad.headOption.foreach { r =>
-      val v = if (r.isNullAt(0)) "null" else r.getInt(0).toString
-      val m = if (r.isNullAt(1)) "null" else r.getString(1)
-      throw new graft.api.ConfigException(
-        s"$caller: signature store carries (ms_version=$v, modality=$m) " +
-          s"rows but this run pairs (ms_version=$MediaSigVersion, " +
-          s"modality=$wantModality) hashes — pairing across hash versions " +
-          "or modalities compares incomparable bits and silently reports " +
-          "garbage; rebuild the store with the media_signatures transform " +
-          "on the right corpus")
-    }
+    * `wantModality` dedup pass ([[graft.operators.Stores.check]]: a hash
+    * version this engine doesn't compute, or rows of another modality —
+    * an image store fed to dedup_audio would pair dHashes against aHashes
+    * — fail with guidance). Returns the slim (doc_id, sig, sig2) frame;
+    * the caller never touches history's payload bytes. */
+  def loadMediaSignatures(store: DataFrame, wantModality: String): DataFrame = {
+    graft.operators.Stores.check(store, graft.operators.Stores.MediaSignatures,
+      MediaSigVersion, wantModality)
     store.select(col("doc_id").cast("long").as("doc_id"),
       col("sig").cast("long").as("sig"),
       col("sig2").cast("long").as("sig2"))

@@ -349,7 +349,7 @@ object ImageDedupTransform extends NearDupTransform {
         val newSigs = graft.multimodal.Multimodal.imageHashes(media)
           .select(col("media_id").as("doc_id"), col("dhash").as("sig"))
         val store = graft.multimodal.Multimodal.loadMediaSignatures(
-          ctx.spark.table(view), modality, transformType)
+          ctx.spark.table(view), modality)
         val storeSigs =
           if (modality == "video")
             store.select(col("doc_id"), col("sig2").as("sig"))
@@ -407,7 +407,7 @@ object AudioDedupTransform extends NearDupTransform {
         val newSigs = graft.multimodal.Multimodal.imageHashes(media)
           .select(col("media_id").as("doc_id"), col("dhash").as("sig"))
         val store = graft.multimodal.Multimodal.loadMediaSignatures(
-          ctx.spark.table(view), "audio", transformType)
+          ctx.spark.table(view), "audio")
         val hits = Dedup.hammingNearDupsAgainstSignatures(newSigs,
           store.select("doc_id", "sig"),
           maxHamming = intOpt(config, "maxHamming", 3),
@@ -499,7 +499,7 @@ object VideoDedupTransform extends NearDupTransform {
         val hashes = graft.api.Checkpointing.checkpoint(
           graft.multimodal.Multimodal.videoHashes(media), eager = false)
         val store = graft.multimodal.Multimodal.loadMediaSignatures(
-          ctx.spark.table(view), "video", transformType)
+          ctx.spark.table(view), "video")
         val temporalHits = Dedup.hammingNearDupsAgainstSignatures(
           hashes.select(col("media_id").as("doc_id"), col("thash").as("sig")),
           store.select("doc_id", "sig"),

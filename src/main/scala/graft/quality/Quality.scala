@@ -159,10 +159,15 @@ object QuarantineWriter {
                    errorsCol: org.apache.spark.sql.Column): Long = {
     val obs = new org.apache.spark.sql.Observation(
       s"graft_quarantine_${ctx.runId}_${System.nanoTime()}")
+    // the run's time rides a zero-argument UDF, not current_timestamp():
+    // Catalyst folds that into a long literal which codegen inlines, so
+    // every gate run generated (and compiled) new classes; the UDF is a
+    // reference object, so the generated source is identical run to run
+    val now = java.sql.Timestamp.from(java.time.Instant.now())
     invalid
       .observe(obs, count(lit(1)).as("rows"))
       .withColumn("validation_errors", errorsCol)
-      .withColumn("quarantine_timestamp", current_timestamp())
+      .withColumn("quarantine_timestamp", udf(() => now).apply())
       .withColumn("pipeline_id", lit(ctx.pipelineId))
       .withColumn("run_id", lit(ctx.runId))
       .write.mode(SaveMode.Append).parquet(path)

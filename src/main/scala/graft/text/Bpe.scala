@@ -577,47 +577,23 @@ object Bpe {
   }
 
   /** Shared validated read: alphabet + merges in rank order plus the
-    * byte-fallback stamp. All the loud-store checks live here.
+    * byte-fallback stamp — ONE driver collect, the stamps read from the
+    * collected rows ([[graft.operators.Stores]] holds the shared checks).
     * `bpe_byte_fallback` is OPTIONAL for compatibility with stores written
     * before the stamp existed — absent means false (those stores were
     * trained without fallback by construction); present, it must be one
     * non-null value like every other stamp. */
   private def loadStore(store: DataFrame, wantNumMerges: Option[Int],
                         wantMinCount: Option[Long]): Loaded = {
-    val missing = Seq("kind", "merge_rank", "lhs", "rhs", "bpe_num_merges",
-        "bpe_min_count", "bpe_max_words", "bpe_rows", "bpe_alpha_rows")
-      .filterNot(store.columns.contains)
-    if (missing.nonEmpty) {
-      throw new graft.api.ConfigException(
-        s"bpe merges store is missing column(s) ${missing.mkString(", ")} — " +
-          "expected the mergesFrame layout (kind, merge_rank, lhs, rhs, " +
-          "bpe_*); rebuild the store with the bpe_train transform")
-    }
-    // DISTINCT stamp set (tiny partial-agg job): a mixed store (two runs'
-    // outputs appended) must fail here, not produce interleaved merges
-    val hasBff = store.columns.contains("bpe_byte_fallback")
-    val hasEsc = store.columns.contains("bpe_escape_version")
-    val stamps = store.select(
-        col("bpe_num_merges").cast("int"), col("bpe_min_count").cast("long"),
-        col("bpe_max_words").cast("int"), col("bpe_rows").cast("int"),
-        col("bpe_alpha_rows").cast("int"),
-        (if (hasBff) col("bpe_byte_fallback") else lit(false))
-          .cast("boolean").as("bpe_byte_fallback"),
-        // absent stamp = version 0: a store trained before marker
-        // escaping existed (checked below — unlike bpe_byte_fallback,
-        // "absent" here is NOT compatible: its merges were learned over
-        // raw `</w>` literals)
-        (if (hasEsc) col("bpe_escape_version") else lit(0))
-          .cast("int").as("bpe_escape_version"))
-      .distinct().collect()
-    if (stamps.length != 1 || stamps.head.anyNull)
-      throw new graft.api.ConfigException(
-        "bpe merges store carries mixed or null parameter stamps — an " +
-          "appended or hand-edited store cannot prove one training run; " +
-          "rebuild it with a single bpe_train pass")
-    val (gotNm, gotMc) = (stamps.head.getInt(0), stamps.head.getLong(1))
-    val byteFallback = stamps.head.getBoolean(5)
-    val escVer = stamps.head.getInt(6)
+    import graft.operators.Stores
+    val rows = Stores.collect(store, Stores.BpeMerges, Seq(col("kind"),
+      col("merge_rank").cast("int"), col("lhs"), col("rhs")))
+    val st = Stores.stampsOf(Stores.BpeMerges, rows, 4, wantNumMerges, wantMinCount)
+    val byteFallback = st(5).asInstanceOf[Boolean]
+    // absent stamp = version 0: a store trained before marker escaping
+    // existed — unlike bpe_byte_fallback, "absent" here is NOT compatible:
+    // its merges were learned over raw `</w>` literals
+    val escVer = st(6).asInstanceOf[Int]
     if (escVer != EscapeVersion)
       throw new graft.api.ConfigException(
         s"bpe merges store carries escape-version stamp $escVer but this " +
@@ -627,46 +603,24 @@ object Bpe {
           "rebuild the store with bpe_train" +
           (if (escVer == 0) " (version 0 = trained before marker escaping " +
             "existed: the stamp column is absent)" else ""))
-    val mism = Seq(
-      wantNumMerges.filter(_ != gotNm).map(w => s"numMerges $w vs store $gotNm"),
-      wantMinCount.filter(_ != gotMc).map(w => s"minCount $w vs store $gotMc")
-    ).flatten
-    if (mism.nonEmpty)
-      throw new graft.api.ConfigException(
-        s"bpe merges store parameter mismatch: ${mism.mkString("; ")} — " +
-          "token counts against a differently-trained vocabulary would " +
-          "silently mean something else; rebuild the store or align the " +
-          "parameters")
-    val rows = store.select(col("kind"), col("merge_rank").cast("int"),
-        col("lhs"), col("rhs"))
-      .orderBy("kind", "merge_rank").collect() // 'alpha' < 'merge'
-    val (alphaRows, rest) = rows.partition(r =>
-      !r.isNullAt(0) && r.getString(0) == "alpha")
-    val mergeRows = rest.filter(r => !r.isNullAt(0) && r.getString(0) == "merge")
-    if (mergeRows.length + alphaRows.length != rows.length)
+    def kind(k: String) = rows.filter(r => !r.isNullAt(0) && r.getString(0) == k)
+    val (alphaAll, mergeAll) = (kind("alpha"), kind("merge"))
+    if (mergeAll.length + alphaAll.length != rows.length)
       throw new graft.api.ConfigException(
         "bpe merges store contains rows whose kind is neither 'alpha' nor " +
           "'merge' — a hand-edited or corrupted store; rebuild it")
-    def checkDense(kind: String, rs: Array[org.apache.spark.sql.Row],
-                   want: Int, rhsNullable: Boolean): Unit = {
-      if (rs.length != want)
-        throw new graft.api.ConfigException(
-          s"bpe merges store row-count stamp says $want $kind rows but " +
-            s"${rs.length} loaded — the store lost or grew rows (partial " +
-            "overwrite or a filtered view); rebuild it")
-      val bad = rs.zipWithIndex.collectFirst {
-        case (r, i) if r.isNullAt(1) || r.getInt(1) != i ||
-          r.isNullAt(2) || (!rhsNullable && r.isNullAt(3)) => i
-      }
-      if (bad.isDefined)
-        throw new graft.api.ConfigException(
-          s"bpe merges store $kind ranks are not a dense, non-null " +
-            s"0..${rs.length - 1} sequence (first problem at position " +
-            s"${bad.get}) — a hole or duplicate would silently reorder " +
-            "every later entry")
+    def dense(k: String, rs: Array[org.apache.spark.sql.Row], produced: Any,
+              rhsNullable: Boolean) = {
+      val sorted = Stores.denseOrder(s"bpe merges store $k ranks",
+        rs.map(_.get(1)).toIndexedSeq, produced.asInstanceOf[Int]).map(rs(_))
+      sorted.find(r => r.isNullAt(2) || (!rhsNullable && r.isNullAt(3)))
+        .foreach(r => throw new graft.api.ConfigException(
+          s"bpe merges store $k rank ${r.getInt(1)} carries a null token — " +
+            "a hand-edited or corrupted store; rebuild it"))
+      sorted
     }
-    checkDense("merge", mergeRows, stamps.head.getInt(3), rhsNullable = false)
-    checkDense("alpha", alphaRows, stamps.head.getInt(4), rhsNullable = true)
+    val mergeRows = dense("merge", mergeAll, st(3), rhsNullable = false)
+    val alphaRows = dense("alpha", alphaAll, st(4), rhsNullable = true)
     val alpha = alphaRows.map(_.getString(2)).toSeq
     if (byteFallback) {
       // the fallback contract is only sound when every byte token has an

@@ -126,37 +126,20 @@ object ChargramLm {
   def load(store: DataFrame, wantN: Option[Int] = None,
            wantMinCount: Option[Long] = None, maxLabels: Int = 1000,
            maxModelRows: Long = 5000000L): Loaded = {
-    val missing = Seq("label", "gram", "cnt", "clm_n", "clm_min_count")
-      .filterNot(store.columns.contains)
-    if (missing.nonEmpty) throw new ConfigException(
-      s"chargram_lm store is missing column(s) ${missing.mkString(", ")} — " +
-        "expected the modelFrame layout (label, gram, cnt, clm_*); rebuild " +
-        "the store with the chargram_lm transform")
-    val stamps = store.select(col("clm_n").cast("int"),
-      col("clm_min_count").cast("long")).distinct().collect()
-    if (stamps.length != 1 || stamps.head.anyNull) throw new ConfigException(
-      "chargram_lm store carries mixed or null parameter stamps — an " +
-        "appended or hand-edited store cannot prove one build; rebuild it " +
-        "with a single chargram_lm pass")
-    val (gotN, gotMin) = (stamps.head.getInt(0), stamps.head.getLong(1))
-    wantN.filter(_ != gotN).foreach { w => throw new ConfigException(
-      s"chargram_lm store was trained with n=$gotN but this run requests " +
-        s"n=$w — a different gram width slices different grams and scores " +
-        "garbage; rebuild the store or align n") }
-    wantMinCount.filter(_ != gotMin).foreach { w => throw new ConfigException(
-      s"chargram_lm store was trained with minCount=$gotMin but this run " +
-        s"requests minCount=$w; rebuild the store or align minCount") }
-    val nRows = store.count()
-    if (nRows > maxModelRows) throw new ConfigException(
-      s"chargram_lm store holds $nRows gram rows, above " +
-        s"maxModelRows=$maxModelRows — the model is one driver/broadcast " +
-        "object (labels × vocabulary ln-tables); a store this wide is " +
-        "either a mis-pointed view or needs a coarser n/minCount")
-    if (nRows == 0L) throw new ConfigException(
-      "chargram_lm store holds zero gram rows — rebuild it with the " +
-        "chargram_lm transform")
-    val rows = store.select(col("label").cast("string"), col("gram"),
-      col("cnt").cast("long")).collect()
+    import graft.operators.Stores
+    // ONE bounded driver collect: limit(cap+1) guarantees no more than
+    // maxModelRows+1 rows ever reach the driver, one extra row proves the
+    // violation, and the stamps are read from the collected rows
+    val rows = Stores.collect(store, Stores.ChargramLm, Seq(
+        col("label").cast("string"), col("gram"), col("cnt").cast("long")),
+      limit = math.min(maxModelRows + 1, Int.MaxValue.toLong).toInt)
+    if (rows.length > maxModelRows) throw new ConfigException(
+      s"chargram_lm store holds more than maxModelRows=$maxModelRows gram " +
+        "rows — the model is one driver/broadcast object (labels × " +
+        "vocabulary ln-tables); a store this wide is either a mis-pointed " +
+        "view or needs a coarser n/minCount")
+    val st = Stores.stampsOf(Stores.ChargramLm, rows, 3, wantN, wantMinCount)
+    val (gotN, gotMin) = (st(0).asInstanceOf[Int], st(1).asInstanceOf[Long])
     // UTF-8 BYTE order, not String.compareTo's UTF-16 code-unit order:
     // LangScores' ascending `>=` scan makes the LAST label win ties, and
     // the claimed convention (Spark struct max / DuckDB max — both binary

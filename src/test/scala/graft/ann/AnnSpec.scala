@@ -235,7 +235,7 @@ class AnnSpec extends SparkTestBase {
     val (rc, rcb) = Ann.loadIvfPqStore(Ann.ivfPqStoreFrame(
       corpus.where("vec_id >= 20"), "vec_id", "embedding",
       nLists = 8, m = 4, nCentroids = 8, kmeansIters = 2))
-    (the[IllegalArgumentException] thrownBy Ann.ivfPqTopK(corpus, queries,
+    (the[graft.api.ConfigException] thrownBy Ann.ivfPqTopK(corpus, queries,
       "vec_id", "embedding", "query_id", 5, store = Some((rc, rcb)),
       codesStore = Some(vcodes)).collect()).getMessage should
       include ("encoded under a DIFFERENT quantizer")
@@ -245,16 +245,16 @@ class AnnSpec extends SparkTestBase {
       include ("pass the loaded (centroids, codebooks) alongside it")
     // loud store failures: caller mismatch, lost rows, missing stamp,
     // foreign geometry version
-    (the[IllegalArgumentException] thrownBy
+    (the[graft.api.ConfigException] thrownBy
       Ann.loadIvfPqStore(store, wantNLists = Some(64))).getMessage should
       include ("trained with nLists=8 but the caller requests nLists=64")
-    (the[IllegalArgumentException] thrownBy Ann.loadIvfPqStore(
+    (the[graft.api.ConfigException] thrownBy Ann.loadIvfPqStore(
       store.where("NOT (part = 'pq' AND subspace = 2 AND list_id = 3)")))
       .getMessage should include ("rows were lost or duplicated")
-    (the[IllegalArgumentException] thrownBy
+    (the[graft.api.ConfigException] thrownBy
       Ann.loadIvfPqStore(store.drop("ivfpq_k"))).getMessage should
       include ("missing column(s) ivfpq_k")
-    (the[IllegalArgumentException] thrownBy Ann.loadIvfPqStore(
+    (the[graft.api.ConfigException] thrownBy Ann.loadIvfPqStore(
       store.withColumn("ivfpq_norm", lit(0)))).getMessage should
       include ("geometry version")
     // encode is ONE fused native node; the scan is pruned through the
@@ -280,25 +280,25 @@ class AnnSpec extends SparkTestBase {
     loaded.map(_.map(_.toSeq).toSeq).toSeq shouldBe
       direct.map(_.map(_.toSeq).toSeq).toSeq
     // a caller asserting different training parameters fails fast
-    (the[IllegalArgumentException] thrownBy
+    (the[graft.api.ConfigException] thrownBy
       Ann.loadPqCodebooks(store, wantK = Some(16))).getMessage should
       include ("trained with k=8 but the caller requests k=16")
     // lost rows cannot pass the pq_rows check
-    (the[IllegalArgumentException] thrownBy Ann.loadPqCodebooks(
+    (the[graft.api.ConfigException] thrownBy Ann.loadPqCodebooks(
       store.where("NOT (subspace = 2 AND list_id = 3)"))).getMessage should
       include ("rows were lost or duplicated")
     // a stamp-less frame is not a store
-    (the[IllegalArgumentException] thrownBy
+    (the[graft.api.ConfigException] thrownBy
       Ann.loadPqCodebooks(store.drop("pq_k"))).getMessage should
       include ("missing stamp column(s) pq_k")
     // a store that predates the spherical-geometry stamp names the
     // rebuild path (its codebooks were trained in raw space)
-    (the[IllegalArgumentException] thrownBy
+    (the[graft.api.ConfigException] thrownBy
       Ann.loadPqCodebooks(store.drop("pq_norm"))).getMessage should
       include ("trained in RAW space")
     // a store from a DIFFERENT geometry version fails the load — it would
     // silently re-cell every vector under this engine's normalized encode
-    (the[IllegalArgumentException] thrownBy Ann.loadPqCodebooks(
+    (the[graft.api.ConfigException] thrownBy Ann.loadPqCodebooks(
       store.withColumn("pq_norm", lit(0)))).getMessage should
       include ("geometry version")
     // NaN-poisoned corpus vectors never enter PQ training: the codebooks
@@ -328,7 +328,7 @@ class AnnSpec extends SparkTestBase {
     viaCodes shouldBe inlineEnc
     val retrained = Ann.pqCodebooks(corpus.where("vec_id >= 20"),
       "vec_id", "embedding", m = 4, k = 8, kmeansIters = 2)
-    (the[IllegalArgumentException] thrownBy Ann.pqTopK(corpus, qs2,
+    (the[graft.api.ConfigException] thrownBy Ann.pqTopK(corpus, qs2,
       "vec_id", "embedding", "query_id", 5, codebooks = Some(retrained),
       codesStore = Some(codesStore)).collect()).getMessage should
       include ("encoded under a DIFFERENT codebook")
@@ -360,7 +360,7 @@ class AnnSpec extends SparkTestBase {
       .collect().toSet
     viaStore shouldBe inline
     // a store stamped with different params than the options assert fails
-    (the[IllegalArgumentException] thrownBy graft.operators.AnnTopKTransform(
+    (the[graft.api.ConfigException] thrownBy graft.operators.AnnTopKTransform(
       corpus, TransformConfig("a", "ann_topk", Map(
         "method" -> "pq", "idColumn" -> "vec_id", "vecColumn" -> "embedding",
         "queriesView" -> "pq_queries_spec", "queryIdColumn" -> "query_id",

@@ -118,4 +118,53 @@ class CodegenCacheSpec extends SparkTestBase {
       spark.read.parquet(s"$root/out1").count()
     spark.read.parquet(s"$root/out2").count() should be > 0L
   }
+
+  test("a second run of a null+duplicate quarantine gate compiles no class, " +
+    "and each run stamps its own quarantine_timestamp") {
+    val in = tmpDir("codegen-gate-in")
+    (0 until 1000).map { i =>
+      (i.toLong % 900, if (i % 50 == 0) null else s"2024-01-${1 + i % 28}", i * 0.5)
+    }.toDF("k", "ship", "value").write.mode("overwrite").parquet(in)
+    val root = tmpDir("codegen-gate-out")
+    def run(n: Int): Unit = {
+      val m = new PipelineExecutor().execute(parser.parse(
+        s"""pipelineId: codegen-gate
+           |source:
+           |  type: file
+           |  options:
+           |    path: $in
+           |    format: parquet
+           |quality:
+           |  nullChecks:
+           |    - column: ship
+           |      action: quarantine
+           |  duplicateCheck:
+           |    columns: [k]
+           |    action: quarantine
+           |  quarantinePath: $root/quarantine$n
+           |transformations:
+           |  - name: scaled
+           |    type: map
+           |    options:
+           |      expressions: "scaled:value * 2"
+           |sink:
+           |  type: file
+           |  options:
+           |    path: $root/out$n
+           |""".stripMargin))
+      withClue(m.error.getOrElse("")) { m.status shouldBe "SUCCESS" }
+    }
+    run(1)
+    compiles(run(2)) shouldBe 0
+    def stamps(n: Int) = spark.read.parquet(s"$root/quarantine$n")
+      .select("quarantine_timestamp").distinct().as[java.sql.Timestamp].collect()
+    spark.read.parquet(s"$root/quarantine2").schema("quarantine_timestamp")
+      .dataType shouldBe org.apache.spark.sql.types.TimestampType
+    spark.read.parquet(s"$root/quarantine2").count() should be > 0L
+    // one stamp per gate write (the null and the duplicate quarantine),
+    // every one of run 2's after every one of run 1's
+    val (t1, t2) = (stamps(1), stamps(2))
+    t1.length should (be >= 1 and be <= 2)
+    t2.minBy(_.getTime).after(t1.maxBy(_.getTime)) shouldBe true
+  }
 }

@@ -7,7 +7,11 @@ is where rot hides (round-8 verdict, q88).
 Usage: bench_diff.py OLD.json NEW.json [--threshold 1.5] [--floor 0.25]
 Movements are only flagged when the larger side exceeds `floor` seconds
 (sub-noise-floor swings on this shared box are meaningless) AND the ratio
-exceeds `threshold` in either direction. Exit code 0 always — informational.
+exceeds `threshold` in either direction. Per-query codegen compile counts
+(the artifacts' `"compiles"` key) are also compared: any increase is
+flagged whatever the timing, since a warm query that starts compiling
+(0 -> n) has a plan that defeats the codegen cache. Exit code 0 always —
+informational.
 """
 import json, sys
 
@@ -70,3 +74,14 @@ for _, q, a, b, tag in sorted(rows, reverse=True):
     print(f"  {tag:>9}  {q:<32} {a:7.3f} -> {b:7.3f} s")
 if not rows:
     print(f"no per-query movement beyond {threshold}x above the {floor}s floor")
+
+oc, nc = old.get("compiles"), new.get("compiles")
+if oc is None or nc is None:
+    side = "OLD" if oc is None else "NEW"
+    print(f"compiles: {side} has no per-query \"compiles\" key; not compared")
+else:
+    more = sorted((q, oc[q], nc[q]) for q in set(oc) & set(nc) if nc[q] > oc[q])
+    for q, a, b in more:
+        print(f"  compiles  {q:<32} {a:7d} -> {b:7d}")
+    if not more:
+        print("no per-query compile-count increase")
