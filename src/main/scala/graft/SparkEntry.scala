@@ -331,7 +331,7 @@ object SparkEntry {
   private def t(typ: String, opts: (String, String)*): TransformConfig =
     TransformConfig(s"$typ-q", typ, opts.toMap)
   private def ap(df: DataFrame, tc: TransformConfig): DataFrame =
-    transforms.get(tc.transformType).apply(df, tc, ctx(df.sparkSession))
+    graft.runtime.PipelineExecutor.applyAll(df, Seq(tc), transforms, ctx(df.sparkSession))
   /** Per-table staged file counts, chosen from the measured tradeoff at
     * sf0.1: scan-task parallelism speeds the CPU-heavy per-row walks
     * (documents: BPE/minhash/media/curation; lineitem: the decimal agg
@@ -348,7 +348,8 @@ object SparkEntry {
     "documents" -> 8, "lineitem" -> 16, "orders" -> 8,
     "events" -> 8, "embeddings" -> 4)
   private def stagedParts(name: String): Int =
-    sys.env.get("SPARK_GRAFT_STAGED_PARTS").map(_.toInt.max(1))
+    sys.env.get("SPARK_GRAFT_STAGED_PARTS")
+      .map(graft.config.Options.int("env", "SPARK_GRAFT_STAGED_PARTS", _).max(1))
       .getOrElse(stagedTabPartsDefault.getOrElse(name, 1))
 
   /** Read a testdata table through its multi-row-group staged copy,

@@ -1,7 +1,7 @@
 package graft.api
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.config.{SourceConfig, TransformConfig, SinkConfig}
+import graft.config.{Options, SourceConfig, TransformConfig, SinkConfig}
 
 /**
  * Component contracts — the Spark-first restatement of the reference's
@@ -21,10 +21,10 @@ final case class RunContext(
       * to the built-in registry. */
     sources: Option[Registry[Source]] = None,
     /** False when the run promises "nothing written, nothing evaluated"
-      * (compose / --dry-run): transforms with optional eager behavior
-      * (e.g. materialize's eager checkpoint) must stay lazy. This is the
-      * executor's buildPlan sideEffects flag threaded to transforms — test
-      * it, never the runId string. */
+      * (compose / --dry-run): the executor's quality gate skips its counts
+      * and quarantine writes, and transforms with optional eager behavior
+      * (e.g. materialize's eager checkpoint) stay lazy. The one carrier of
+      * that promise — test it, never the runId string. */
     sideEffects: Boolean = true)
 
 final case class ValidationError(component: String, message: String)
@@ -43,6 +43,10 @@ trait Source {
   def validate(config: SourceConfig): List[String] = Nil
 }
 
+/** A registry-dispatched pipeline step. Its options arrive as strings:
+  * read a numeric or boolean one with `intOption`/`longOption`/
+  * `doubleOption`/`boolOption`, which decode through
+  * [[graft.config.Options]], and range-check the typed value here. */
 trait Transform {
   def transformType: String
   /** Compose more plan on top of `input`. MUST NOT trigger an action. */
@@ -50,31 +54,35 @@ trait Transform {
   def validate(config: TransformConfig, schema: org.apache.spark.sql.types.StructType): List[String] = Nil
 
   protected def required(config: TransformConfig, keys: String*): Unit = {
-    val missing = keys.filterNot(config.options.contains)
-    if (missing.nonEmpty)
-      throw new ConfigException(
-        s"${transformType} transform '${config.name}' missing required option(s): ${missing.mkString(", ")}")
+    val absent = keys.filterNot(config.options.contains)
+    if (absent.nonEmpty) missing(config, absent: _*)
   }
 
-  /** Numeric option with a guided error (the one helper every operator
-    * family used to re-implement): a typo'd `k: "lots"` fails as a
-    * ConfigException naming the transform and the option, not a raw
-    * NumberFormatException from deep inside the operator. */
-  protected def intOption(config: TransformConfig, key: String,
-                          default: => Int): Int =
-    config.options.get(key).map { v =>
-      try v.trim.toInt catch { case _: NumberFormatException =>
-        throw new ConfigException(
-          s"$transformType: $key must be an integer, got '$v'") }
-    }.getOrElse(default)
+  /** Fails like [[required]]: the default of a required typed option,
+    * as in `intOption(config, "k", missing(config, "k"))`. */
+  protected def missing(config: TransformConfig, keys: String*): Nothing =
+    throw new ConfigException(
+      s"${transformType} transform '${config.name}' missing required option(s): ${keys.mkString(", ")}")
 
-  protected def longOption(config: TransformConfig, key: String,
-                           default: => Long): Long =
-    config.options.get(key).map { v =>
-      try v.trim.toLong catch { case _: NumberFormatException =>
-        throw new ConfigException(
-          s"$transformType: $key must be an integer, got '$v'") }
-    }.getOrElse(default)
+  /** Typed option readers: each decodes through [[graft.config.Options]],
+    * so `k: "lots"` fails as a ConfigException naming this transform and
+    * the option, never as a bare NumberFormatException from inside the
+    * operator. Without a default the result is None when the option is
+    * absent. */
+  protected def intOption(config: TransformConfig, key: String): Option[Int] =
+    config.options.get(key).map(Options.int(transformType, key, _))
+  protected def intOption(config: TransformConfig, key: String, default: => Int): Int =
+    intOption(config, key).getOrElse(default)
+  protected def longOption(config: TransformConfig, key: String): Option[Long] =
+    config.options.get(key).map(Options.long(transformType, key, _))
+  protected def longOption(config: TransformConfig, key: String, default: => Long): Long =
+    longOption(config, key).getOrElse(default)
+  protected def doubleOption(config: TransformConfig, key: String): Option[Double] =
+    config.options.get(key).map(Options.double(transformType, key, _))
+  protected def doubleOption(config: TransformConfig, key: String, default: => Double): Double =
+    doubleOption(config, key).getOrElse(default)
+  protected def boolOption(config: TransformConfig, key: String, default: Boolean): Boolean =
+    config.options.get(key).fold(default)(Options.bool(transformType, key, _))
 }
 
 final case class LoadResult(

@@ -83,7 +83,8 @@ final class YamlConfigParser(credentials: CredentialProvider = EnvCredentialProv
 
   private def parseQuality(m: Map[String, Object]): QualityConfig =
     QualityConfig(
-      schemaValidation = bool(m, "schemaValidation").getOrElse(false),
+      schemaValidation = str(m, "schemaValidation")
+        .exists(Options.bool("quality", "schemaValidation", _)),
       nullChecks = m.get("nullChecks").map(asList).getOrElse(Nil).map { nc =>
         val ncm = asMap(nc)
         NullCheck(
@@ -112,9 +113,11 @@ final class YamlConfigParser(credentials: CredentialProvider = EnvCredentialProv
 
   private def parsePerformance(m: Map[String, Object]): PerformanceConfig =
     PerformanceConfig(
-      repartition = int(m, "repartition"),
-      cacheIntermediate = bool(m, "cacheIntermediate").getOrElse(false),
-      shufflePartitions = int(m, "shufflePartitions"),
+      repartition = str(m, "repartition").map(Options.int("performance", "repartition", _)),
+      cacheIntermediate = str(m, "cacheIntermediate")
+        .exists(Options.bool("performance", "cacheIntermediate", _)),
+      shufflePartitions =
+        str(m, "shufflePartitions").map(Options.int("performance", "shufflePartitions", _)),
       checkpoint = str(m, "checkpoint"),
       checkpointDir = str(m, "checkpointDir"),
       planLint = str(m, "planLint"))
@@ -128,7 +131,8 @@ final class YamlConfigParser(credentials: CredentialProvider = EnvCredentialProv
       outputMode = str(m, "outputMode").getOrElse("append"),
       dedupColumns = str(m, "dedupColumns"),
       stateStoreProvider = str(m, "stateStoreProvider"),
-      shufflePartitions = int(m, "shufflePartitions"))
+      shufflePartitions =
+        str(m, "shufflePartitions").map(Options.int("streaming", "shufflePartitions", _)))
 
   // ---- helpers ----
   private def asMap(o: Object): Map[String, Object] = o match {
@@ -139,25 +143,10 @@ final class YamlConfigParser(credentials: CredentialProvider = EnvCredentialProv
     case l: java.util.List[_] => l.asScala.map(_.asInstanceOf[Object]).toList
     case other => throw new ConfigException(s"expected a list, got: $other")
   }
+  // numbers and flags decode from the RESOLVED string: `shufflePartitions:
+  // ${ENV:N}` must resolve before the Options reader sees it
   private def str(m: Map[String, Object], k: String): Option[String] =
     m.get(k).map(v => resolve(v.toString))
-  // int/bool route through resolve() like str(): `shufflePartitions:
-  // ${ENV:N}` must resolve before the numeric parse, not crash on it.
-  // Bad values get the parser's ConfigException contract, never a raw
-  // NumberFormat/IllegalArgumentException (the duplicateCheck action
-  // parse set the pattern)
-  private def int(m: Map[String, Object], k: String): Option[Int] =
-    m.get(k).map { v =>
-      val r = resolve(v.toString)
-      try r.toInt catch { case _: NumberFormatException =>
-        throw new ConfigException(s"$k must be an integer, got '$r'") }
-    }
-  private def bool(m: Map[String, Object], k: String): Option[Boolean] =
-    m.get(k).map { v =>
-      val r = resolve(v.toString)
-      try r.toBoolean catch { case _: IllegalArgumentException =>
-        throw new ConfigException(s"$k must be true|false, got '$r'") }
-    }
   private def options(m: Map[String, Object]): Map[String, String] =
     m.get("options").map(asMap).getOrElse(Map.empty).map { case (k, v) => k -> resolve(v.toString) }
 

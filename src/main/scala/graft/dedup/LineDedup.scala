@@ -213,9 +213,7 @@ object LineDedupTransform extends Transform {
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     val separator = config.options.getOrElse("separator", "\n")
     try {
-    // parse inside the try: {minLength: "two"} gets the guided
-    // ConfigException (NumberFormatException IS an IllegalArgumentException)
-    val minLength = config.options.get("minLength").map(_.toInt).getOrElse(1)
+    val minLength = intOption(config, "minLength", 1)
     if (config.options.contains("referenceView") &&
         config.options.contains("signatureView"))
       throw new ConfigException(
@@ -278,7 +276,7 @@ object LineSignaturesTransform extends Transform {
     required(config, "textColumn")
     try LineDedup.lineSignatures(input, config.options("textColumn"),
       separator = config.options.getOrElse("separator", "\n"),
-      minLength = config.options.get("minLength").map(_.toInt).getOrElse(1))
+      minLength = intOption(config, "minLength", 1))
     catch { case e: IllegalArgumentException => throw new ConfigException(e.getMessage) }
   }
 }

@@ -342,12 +342,9 @@ object SpanDedupTransform extends Transform {
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "idColumn", "textColumn")
     val id = config.options("idColumn"); val text = config.options("textColumn")
-    // numeric parses live INSIDE the try below: NumberFormatException IS an
-    // IllegalArgumentException, so {n: "eight"} gets the guided
-    // ConfigException instead of a context-free NFE
     try {
-    val n = config.options.get("n").map(_.toInt).getOrElse(8)
-    val minCount = config.options.get("minCount").map(_.toInt).getOrElse(2)
+    val n = intOption(config, "n", 8)
+    val minCount = intOption(config, "minCount", 2)
     val ref = config.options.get("referenceView").map(v => (ctx.spark.table(v),
       config.options.getOrElse("referenceTextColumn", text)))
     val sig = config.options.get("signatureView").map(ctx.spark.table)
@@ -370,7 +367,7 @@ object SpanDedupTransform extends Transform {
       throw new ConfigException(
         "dedup_spans: fpp only applies with method: bloom — the exact path " +
           "has no false-positive rate to configure")
-    val fpp = config.options.get("fpp").map(_.toDouble).getOrElse(1e-4)
+    val fpp = doubleOption(config, "fpp", 1e-4)
     val report = config.options.getOrElse("mode", "remove") match {
       case "remove" => false
       case "report" => true
@@ -424,10 +421,8 @@ object GramSignaturesTransform extends Transform {
       config.options.get("textColumn").toSeq, transformType)
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "textColumn")
-    // the .toInt parse is inside the try: a non-numeric n gets the guided
-    // ConfigException (NumberFormatException IS an IllegalArgumentException)
     try SpanDedup.gramSignatures(input, config.options("textColumn"),
-      config.options.get("n").map(_.toInt).getOrElse(8))
+      intOption(config, "n", 8))
     catch { case e: IllegalArgumentException => throw new ConfigException(e.getMessage) }
   }
 }

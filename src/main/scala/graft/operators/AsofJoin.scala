@@ -182,11 +182,7 @@ object AsofJoinTransform extends Transform {
     AsofJoin.asofJoin(input, right, keys, leftTime,
       rightTime = config.options.getOrElse("rightTime", leftTime),
       direction = config.options.getOrElse("direction", "backward"),
-      tolerance = config.options.get("tolerance").map { v =>
-        try v.toLong catch { case _: NumberFormatException =>
-          throw new graft.api.ConfigException(
-            s"join_asof: tolerance must be a long, got '$v'") }
-      },
+      tolerance = longOption(config, "tolerance"),
       prefix = config.options.getOrElse("prefix", "asof_"))
   }
 }

@@ -83,7 +83,7 @@ object AssignIdsTransform extends Transform {
     if (cols.isEmpty) throw new ConfigException("assign_ids: orderBy lists no columns")
     AssignIds.assign(input, cols,
       config.options.getOrElse("idName", "row_id"),
-      config.options.get("start").map(_.toLong).getOrElse(0L),
-      config.options.get("numPartitions").map(_.toInt).getOrElse(0))
+      longOption(config, "start", 0L),
+      intOption(config, "numPartitions", 0))
   }
 }

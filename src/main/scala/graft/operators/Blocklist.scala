@@ -90,8 +90,8 @@ object BlocklistTransform extends Transform {
     required(config, "textColumn", "terms")
     val terms = config.options("terms").split(",").map(_.trim).filter(_.nonEmpty).toSeq
     if (terms.isEmpty) throw new ConfigException("blocklist: terms list is empty")
-    val wholeWord = config.options.get("wholeWord").forall(_.toBoolean)
-    val matchCase = config.options.get("matchCase").exists(_.toBoolean)
+    val wholeWord = boolOption(config, "wholeWord", true)
+    val matchCase = boolOption(config, "matchCase", false)
     val h = Blocklist.hits(col(config.options("textColumn")), terms, wholeWord, matchCase)
     config.options.getOrElse("mode", "annotate") match {
       case "annotate" =>

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.api.{ConfigException, RunContext, Transform}
-import graft.config.TransformConfig
+import graft.config.{Options, TransformConfig}
 import graft.functions.expressions.BpeEncode
 import graft.text.Bpe
 
@@ -60,8 +60,8 @@ object BpeTransforms {
   def loadedFromView(config: TransformConfig, ctx: RunContext,
                      tname: String): Bpe.Loaded =
     Bpe.load(storeFromView(config, ctx, tname),
-      wantNumMerges = config.options.get("numMerges").map(_.toInt),
-      wantMinCount = config.options.get("minCount").map(_.toLong))
+      wantNumMerges = config.options.get("numMerges").map(Options.int(tname, "numMerges", _)),
+      wantMinCount = config.options.get("minCount").map(Options.long(tname, "minCount", _)))
 
   /** Resolve `mergesView` to the validated ordered merges list. */
   def mergesFromView(config: TransformConfig, ctx: RunContext,
@@ -114,18 +114,11 @@ object BpeTrainTransform extends Transform {
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "textColumn")
-    val bff = config.options.get("byteFallback") match {
-      case None => false
-      case Some("true") => true
-      case Some("false") => false
-      case Some(other) => throw new ConfigException(
-        s"bpe_train: byteFallback must be true|false, got '$other'")
-    }
     try Bpe.mergesFrame(input, config.options("textColumn"),
-      numMerges = config.options.get("numMerges").map(_.toInt).getOrElse(1000),
-      maxWords = config.options.get("maxWords").map(_.toInt).getOrElse(100000),
-      minCount = config.options.get("minCount").map(_.toLong).getOrElse(2L),
-      byteFallback = bff)
+      numMerges = intOption(config, "numMerges", 1000),
+      maxWords = intOption(config, "maxWords", 100000),
+      minCount = longOption(config, "minCount", 2L),
+      byteFallback = boolOption(config, "byteFallback", false))
     catch { case e: IllegalArgumentException => throw new ConfigException(e.getMessage) }
   }
 }
@@ -235,8 +228,8 @@ object BpeVocabTransform extends Transform {
         BpeTransforms.storeFromView(config, ctx, transformType)
       else input
     graft.text.Bpe.vocabFrame(store,
-      wantNumMerges = config.options.get("numMerges").map(_.toInt),
-      wantMinCount = config.options.get("minCount").map(_.toLong))
+      wantNumMerges = intOption(config, "numMerges"),
+      wantMinCount = longOption(config, "minCount"))
   }
 }
 

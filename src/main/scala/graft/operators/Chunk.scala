@@ -61,8 +61,8 @@ object ChunkTransform extends Transform {
     required(config, "idColumn", "textColumn", "size")
     val id = config.options("idColumn")
     val text = config.options("textColumn")
-    val size = config.options("size").toInt
-    val overlap = config.options.get("overlap").map(_.toInt).getOrElse(0)
+    val size = intOption(config, "size", missing(config, "size"))
+    val overlap = intOption(config, "overlap", 0)
     if (size <= 0) throw new ConfigException(s"chunk size must be positive, got $size")
     if (overlap < 0 || overlap >= size)
       throw new ConfigException(s"chunk overlap must be in [0, size), got $overlap")

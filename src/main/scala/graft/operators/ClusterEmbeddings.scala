@@ -54,16 +54,16 @@ object ClusterEmbeddingsTransform extends Transform {
     required(config, "idColumn", "vecColumn")
     val idCol = config.options("idColumn")
     val vecCol = config.options("vecColumn")
-    val nClusters = config.options.get("nClusters").map(_.toInt).getOrElse(64)
+    val nClusters = intOption(config, "nClusters", 64)
     if (nClusters < 1)
       throw new ConfigException(s"cluster_embeddings: nClusters must be >= 1, got $nClusters")
-    val iters = config.options.get("kmeansIters").map(_.toInt).getOrElse(3)
+    val iters = intOption(config, "kmeansIters", 3)
     val clusterCol = config.options.getOrElse("clusterColumn", "cluster_id")
 
     val cents = config.options.get("codebookView") match {
       case Some(view) => graft.ann.Ann.loadCodebook(ctx.spark.table(view),
-        config.options.get("nClusters").map(_.toInt),
-        config.options.get("kmeansIters").map(_.toInt))
+        intOption(config, "nClusters"),
+        intOption(config, "kmeansIters"))
       case None => graft.ann.Ann.kmeansCentroids(
         input.select(col(idCol), col(vecCol)), idCol, vecCol, nClusters, iters)
     }

@@ -83,7 +83,7 @@ object CompressionRatioTransform extends Transform {
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "textColumn")
-    val level = config.options.get("level").map(_.toInt).getOrElse(6)
+    val level = intOption(config, "level", 6)
     if (level < 1 || level > 9)
       throw new ConfigException(s"compression_ratio: level must be in [1,9], got $level")
     input.withColumn(config.options.getOrElse("outputColumn", "compression_ratio"),

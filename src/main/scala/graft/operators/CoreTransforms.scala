@@ -45,7 +45,7 @@ object MapTransform extends Transform {
       .collect { case (_, ps) if ps.size > 1 => ps.head._1 }
     if (dups.nonEmpty) throw new ConfigException(
       s"map '${config.name}': duplicate alias(es) ${dups.mkString(", ")}")
-    if (config.options.get("project").exists(_.toBoolean)) {
+    if (boolOption(config, "project", false)) {
       val keep = config.options.get("keep").map(ExprUtils.parseColumns).getOrElse(Nil)
       // a keep column colliding with a mapped alias would emit two columns
       // of the same name — the exact ambiguity the duplicate-alias guard
@@ -127,7 +127,7 @@ object JoinTransform extends Transform {
         s"join '${config.name}': unknown hint '$other' " +
           "(broadcast|merge|shuffle_hash|shuffle_replicate_nl)")
       case None =>
-        if (config.options.get("broadcast").exists(_.toBoolean)) broadcast(right0) else right0
+        if (boolOption(config, "broadcast", false)) broadcast(right0) else right0
     }
 
     val joined = (config.options.get("joinKeys"), config.options.get("leftKey"), config.options.get("rightKey")) match {

@@ -151,8 +151,8 @@ object DriftTransform extends Transform {
     val cols = graft.config.ExprUtils.parseColumns(config.options("columns"))
     try Drift.psi(input,
       ctx.spark.table(config.options("referenceView")), cols,
-      bins = config.options.get("bins").map(_.toInt).getOrElse(10),
-      epsilon = config.options.get("epsilon").map(_.toDouble).getOrElse(1e-6))
+      bins = intOption(config, "bins", 10),
+      epsilon = doubleOption(config, "epsilon", 1e-6))
     catch { case e: IllegalArgumentException => throw new ConfigException(e.getMessage) }
   }
 }

@@ -49,8 +49,8 @@ object FrequentItemsTransform extends Transform {
     if (cols.isEmpty) throw new ConfigException(
       "frequent_items: columns lists no column names")
     val groups = config.options.get("groupBy").map(ExprUtils.parseColumns).getOrElse(Nil)
-    val k = config.options.get("k").map(_.toInt).getOrElse(10)
-    val maxTracked = config.options.get("maxItemsTracked").map(_.toInt).getOrElse(10000)
+    val k = intOption(config, "k", 10)
+    val maxTracked = intOption(config, "maxItemsTracked", 10000)
     if (k < 1) throw new ConfigException(s"frequent_items: k must be >= 1, got $k")
     if (maxTracked < k) throw new ConfigException(
       s"frequent_items: maxItemsTracked ($maxTracked) must be >= k ($k)")

@@ -103,9 +103,9 @@ object FuzzyJoinTransform extends Transform {
         s"join_fuzzy: column '${config.options("rightColumn")}' not in '${config.options("rightDataset")}'")
     FuzzyJoin.fuzzyJoin(input, right,
       config.options("leftColumn"), rightCol,
-      config.options("maxDistance").toInt,
-      config.options.get("blockPrefix").map(_.toInt).getOrElse(4),
-      config.options.get("maxBlockSize").map(_.toInt).getOrElse(100000),
+      intOption(config, "maxDistance", missing(config, "maxDistance")),
+      intOption(config, "blockPrefix", 4),
+      intOption(config, "maxBlockSize", 100000),
       config.options.getOrElse("distanceColumn", "edit_distance"))
   }
 }

@@ -175,32 +175,22 @@ object GopherRulesTransform extends Transform {
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "textColumn")
     val o = config.options
-    def d(key: String, default: Double): Double =
-      try o.get(key).map(_.toDouble).getOrElse(default)
-      catch { case _: NumberFormatException =>
-        throw new ConfigException(s"quality_rules: $key must be numeric, got '${o(key)}'") }
-    // integral thresholds must not silently truncate ("50.9" gating at 50)
-    def i(key: String, default: Long): Long =
-      o.get(key).map { v =>
-        try v.toLong catch { case _: NumberFormatException =>
-          throw new ConfigException(
-            s"quality_rules: $key must be an integer, got '$v'") }
-      }.getOrElse(default)
     val th = GopherRules.Thresholds(
-      minWords = i("minWords", 50), maxWords = i("maxWords", 100000),
-      minMeanWordLength = d("minMeanWordLength", 3.0),
-      maxMeanWordLength = d("maxMeanWordLength", 10.0),
-      maxSymbolRatio = d("maxSymbolRatio", 0.1),
-      maxBulletFraction = d("maxBulletFraction", 0.9),
-      maxEllipsisFraction = d("maxEllipsisFraction", 0.3),
-      minAlphaFraction = d("minAlphaFraction", 0.8),
-      minStopwords = i("minStopwords", 2).toInt,
-      maxTopNgramFraction = d("maxTopNgramFraction", 1.0),
-      topNgramSize = i("topNgramSize", 2).toInt,
-      maxDupLineFraction = d("maxDupLineFraction", 1.0),
-      maxDupLineCharFraction = d("maxDupLineCharFraction", 1.0),
-      minBpeTokens = i("minBpeTokens", 0L),
-      maxBpeTokens = i("maxBpeTokens", Long.MaxValue))
+      minWords = longOption(config, "minWords", 50L),
+      maxWords = longOption(config, "maxWords", 100000L),
+      minMeanWordLength = doubleOption(config, "minMeanWordLength", 3.0),
+      maxMeanWordLength = doubleOption(config, "maxMeanWordLength", 10.0),
+      maxSymbolRatio = doubleOption(config, "maxSymbolRatio", 0.1),
+      maxBulletFraction = doubleOption(config, "maxBulletFraction", 0.9),
+      maxEllipsisFraction = doubleOption(config, "maxEllipsisFraction", 0.3),
+      minAlphaFraction = doubleOption(config, "minAlphaFraction", 0.8),
+      minStopwords = intOption(config, "minStopwords", 2),
+      maxTopNgramFraction = doubleOption(config, "maxTopNgramFraction", 1.0),
+      topNgramSize = intOption(config, "topNgramSize", 2),
+      maxDupLineFraction = doubleOption(config, "maxDupLineFraction", 1.0),
+      maxDupLineCharFraction = doubleOption(config, "maxDupLineCharFraction", 1.0),
+      minBpeTokens = longOption(config, "minBpeTokens", 0L),
+      maxBpeTokens = longOption(config, "maxBpeTokens", Long.MaxValue))
     val tokenGateArmed =
       o.contains("minBpeTokens") || o.contains("maxBpeTokens")
     val bpeCount: Option[Column => Column] = o.get("mergesView") match {

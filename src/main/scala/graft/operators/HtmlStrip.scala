@@ -86,16 +86,10 @@ object HtmlStripTransform extends Transform {
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "columns")
-    def flag(name: String) = config.options.get(name) match {
-      case None => false
-      case Some("true") => true
-      case Some("false") => false
-      case Some(other) => throw new ConfigException(
-        s"$transformType: $name must be true|false, got '$other'")
-    }
     val cols = config.options("columns").split(",").map(_.trim).filter(_.nonEmpty)
     if (cols.isEmpty) throw new ConfigException(s"$transformType: no columns listed")
-    val (collapse, doTrim) = (flag("collapseWhitespace"), flag("trim"))
+    val (collapse, doTrim) =
+      (boolOption(config, "collapseWhitespace", false), boolOption(config, "trim", false))
     cols.foldLeft(input) { (df, c) =>
       df.withColumn(c, strip(col(c), collapse, doTrim))
     }

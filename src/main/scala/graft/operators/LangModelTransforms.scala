@@ -38,8 +38,8 @@ object ChargramLmTransform extends Transform {
     required(config, "labelColumn", "textColumn")
     try ChargramLm.modelFrame(input, config.options("labelColumn"),
       config.options("textColumn"),
-      n = config.options.get("n").map(_.toInt).getOrElse(3),
-      minCount = config.options.get("minCount").map(_.toLong).getOrElse(1L))
+      n = intOption(config, "n", 3),
+      minCount = longOption(config, "minCount", 1L))
     catch { case e: IllegalArgumentException => throw new ConfigException(e.getMessage) }
   }
 }
@@ -63,9 +63,7 @@ private[operators] object LmDrift {
                        tname: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, round}
     val threshold = config.options.get("maxUnseenFrac").map { raw =>
-      val v = try raw.toDouble catch { case _: NumberFormatException =>
-        throw new ConfigException(
-          s"$tname: maxUnseenFrac must be a number in [0, 1], got '$raw'") }
+      val v = graft.config.Options.double(tname, "maxUnseenFrac", raw)
       if (v < 0.0 || v > 1.0) throw new ConfigException(
         s"$tname: maxUnseenFrac must be in [0, 1], got $v")
       v
@@ -137,11 +135,10 @@ object LangClassifyTransform extends Transform {
         "is O(store rows), bounded by maxModelRows — so the option no " +
         "longer guards anything; drop it (or tighten maxModelRows)")
     val loaded = ChargramLm.load(store,
-      wantN = config.options.get("n").map(_.toInt),
-      wantMinCount = config.options.get("minCount").map(_.toLong),
-      maxLabels = config.options.get("maxLabels").map(_.toInt).getOrElse(1000),
-      maxModelRows = config.options.get("maxModelRows").map(_.toLong)
-        .getOrElse(5000000L))
+      wantN = intOption(config, "n"),
+      wantMinCount = longOption(config, "minCount"),
+      maxLabels = intOption(config, "maxLabels", 1000),
+      maxModelRows = longOption(config, "maxModelRows", 5000000L))
     val out = config.options.getOrElse("outputColumn", "lang_pred")
     val scoreCol = config.options.get("scoreColumn")
     // outputColumn == scoreColumn is a self-collision the per-input checks

@@ -146,6 +146,6 @@ object MergeTransform extends Transform {
       opCol = config.options.get("opColumn"),
       deleteValue = config.options.getOrElse("deleteValue", "D"),
       orderCol = config.options.get("orderBy"),
-      broadcastChanges = config.options.get("broadcast").forall(_.toBoolean))
+      broadcastChanges = boolOption(config, "broadcast", true))
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.{Window => W}
 import org.apache.spark.sql.functions._
 
 import graft.api.{Transform, RunContext, ConfigException}
-import graft.config.{TransformConfig, ExprUtils}
+import graft.config.{ExprUtils, Options, TransformConfig}
 
 /**
  * Superset transformers the reference lacks entirely (SURVEY §2.6: no sort /
@@ -75,13 +75,7 @@ object RegisterTransform extends graft.api.Transform {
 object MaterializeTransform extends Transform {
   val transformType = "materialize"
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    val eager = config.options.get("eager") match {
-      case None => false
-      case Some(v) if v.equalsIgnoreCase("true") || v.equalsIgnoreCase("false") =>
-        v.toBoolean
-      case Some(v) => throw new ConfigException(
-        s"materialize: eager must be true|false, got '$v'")
-    }
+    val eager = boolOption(config, "eager", false)
     val unknown = config.options.keySet -- Set("eager")
     if (unknown.nonEmpty) throw new ConfigException(
       s"materialize: unknown option(s) ${unknown.mkString(", ")} — only " +
@@ -109,7 +103,7 @@ object SortTransform extends Transform {
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "orderBy")
     val cols = ExprUtils.splitTopLevel(config.options("orderBy")).map(ExprUtils.parseOrder)
-    if (config.options.get("global").forall(_.toBoolean)) input.orderBy(cols: _*)
+    if (boolOption(config, "global", true)) input.orderBy(cols: _*)
     else input.sortWithinPartitions(cols: _*)
   }
 }
@@ -120,7 +114,7 @@ object LimitTransform extends Transform {
   val transformType = "limit"
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "n")
-    input.limit(config.options("n").toInt)
+    input.limit(intOption(config, "n", missing(config, "n")))
   }
 }
 
@@ -131,9 +125,9 @@ object UnionTransform extends Transform {
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "rightDataset")
     val right = input.sparkSession.table(config.options("rightDataset"))
-    val missing = config.options.get("allowMissingColumns").exists(_.toBoolean)
+    val missing = boolOption(config, "allowMissingColumns", false)
     val unioned = input.unionByName(right, missing)
-    if (config.options.get("distinct").exists(_.toBoolean)) unioned.distinct() else unioned
+    if (boolOption(config, "distinct", false)) unioned.distinct() else unioned
   }
 }
 
@@ -200,9 +194,7 @@ object FillNaTransform extends Transform {
                            colName: String): Any = {
     import org.apache.spark.sql.types._
     val t = s.trim
-    def orFail[A](o: Option[A], what: String): A = o.getOrElse(
-      throw new ConfigException(
-        s"fillna: '$t' is not a valid $what literal for column '$colName'"))
+    val key = s"values[$colName]"
     dt match {
       // a quoted string literal ('San Jose, CA') unwraps — the quotes are
       // how a fill value carries a comma past the top-level list split
@@ -211,15 +203,11 @@ object FillNaTransform extends Transform {
             ((t.head == '\'' && t.last == '\'') || (t.head == '"' && t.last == '"')))
           t.substring(1, t.length - 1)
         else t
-      case BooleanType =>
-        if (t.equalsIgnoreCase("true")) true
-        else if (t.equalsIgnoreCase("false")) false
-        else throw new ConfigException(
-          s"fillna: '$t' is not a boolean literal for column '$colName'")
+      case BooleanType => Options.bool(transformType, key, t)
       case ByteType | ShortType | IntegerType | LongType =>
-        orFail(t.toLongOption, "integral")
+        Options.long(transformType, key, t)
       case FloatType | DoubleType | _: DecimalType =>
-        orFail(t.toDoubleOption, "numeric")
+        Options.double(transformType, key, t)
       case other => throw new ConfigException(
         s"fillna: cannot fill column '$colName' of type ${other.simpleString}")
     }

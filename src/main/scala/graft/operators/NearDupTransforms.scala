@@ -121,7 +121,7 @@ abstract class NearDupTransform extends Transform {
       // prefix-sum collect — documented).
       case "cluster" =>
         val labels = graft.dedup.Dedup.clusters(dupPairs,
-          maxIter = intOpt(config, "clusterMaxIter", 20),
+          maxIter = intOption(config, "clusterMaxIter", 20),
           // minlabel (default): O(diameter) rounds; star: O(log n) —
           // for adversarial long duplicate chains
           algorithm = config.options.getOrElse("clusterAlgorithm", "minlabel"))
@@ -146,16 +146,6 @@ abstract class NearDupTransform extends Transform {
     }
     input.join(toDrop, Seq(id), "left_anti")
   }
-
-  // guided errors for non-numeric options, not a context-free
-  // NumberFormatException from deep inside the matcher
-  protected def intOpt(config: TransformConfig, key: String, dflt: Int): Int =
-    intOption(config, key, dflt)
-  protected def doubleOpt(config: TransformConfig, key: String, dflt: Double): Double =
-    config.options.get(key).map { v =>
-      try v.toDouble catch { case _: NumberFormatException =>
-        throw new ConfigException(s"$transformType: $key must be a number, got '$v'") }
-    }.getOrElse(dflt)
 }
 
 /** MinHash+LSH near-dup removal: options bands/rowsPerBand/shingleSize/
@@ -177,11 +167,11 @@ object MinhashDedupTransform extends NearDupTransform {
   protected def pairs(input: DataFrame, id: String, text: String,
                       config: TransformConfig): DataFrame =
     Dedup.minhashNearDups(input, id, text,
-      bands = intOpt(config, "bands", 16),
-      rowsPerBand = intOpt(config, "rowsPerBand", 4),
-      shingleSize = intOpt(config, "shingleSize", 3),
-      threshold = doubleOpt(config, "threshold", 0.5),
-      maxBucketSize = intOpt(config, "maxBucketSize", 1000))
+      bands = intOption(config, "bands", 16),
+      rowsPerBand = intOption(config, "rowsPerBand", 4),
+      shingleSize = intOption(config, "shingleSize", 3),
+      threshold = doubleOption(config, "threshold", 0.5),
+      maxBucketSize = intOption(config, "maxBucketSize", 1000))
 
   override def apply(input: DataFrame, config: TransformConfig,
                      ctx: RunContext): DataFrame =
@@ -206,11 +196,11 @@ object MinhashDedupTransform extends NearDupTransform {
         required(config, "idColumn", "textColumn")
         val id = config.options("idColumn")
         val text = config.options("textColumn")
-        val bands = intOpt(config, "bands", 16)
-        val rowsPerBand = intOpt(config, "rowsPerBand", 4)
-        val shingleSize = intOpt(config, "shingleSize", 3)
-        val threshold = doubleOpt(config, "threshold", 0.5)
-        val maxBucketSize = intOpt(config, "maxBucketSize", 1000)
+        val bands = intOption(config, "bands", 16)
+        val rowsPerBand = intOption(config, "rowsPerBand", 4)
+        val shingleSize = intOption(config, "shingleSize", 3)
+        val threshold = doubleOption(config, "threshold", 0.5)
+        val maxBucketSize = intOption(config, "maxBucketSize", 1000)
         // multi-consumer branch (signature pass + keep join): stage once
         // so a composed upstream tower executes once, not per consumer
         val staged = graft.api.Checkpointing.shared(input)
@@ -248,9 +238,9 @@ object MinhashSignaturesTransform extends Transform {
     required(config, "idColumn", "textColumn")
     Dedup.minhashSignatures(input,
       config.options("idColumn"), config.options("textColumn"),
-      bands = config.options.get("bands").map(_.toInt).getOrElse(16),
-      rowsPerBand = config.options.get("rowsPerBand").map(_.toInt).getOrElse(4),
-      shingleSize = config.options.get("shingleSize").map(_.toInt).getOrElse(3))
+      bands = intOption(config, "bands", 16),
+      rowsPerBand = intOption(config, "rowsPerBand", 4),
+      shingleSize = intOption(config, "shingleSize", 3))
   }
 }
 
@@ -261,8 +251,8 @@ object SimhashDedupTransform extends NearDupTransform {
   protected def pairs(input: DataFrame, id: String, text: String,
                       config: TransformConfig): DataFrame =
     Dedup.simhashNearDups(input, id, text,
-      maxHamming = intOpt(config, "maxHamming", 3),
-      maxBucketSize = intOpt(config, "maxBucketSize", 10000))
+      maxHamming = intOption(config, "maxHamming", 3),
+      maxBucketSize = intOption(config, "maxBucketSize", 10000))
 }
 
 /** Shared plumbing for the media dedup family's `signatureView`
@@ -321,8 +311,8 @@ object ImageDedupTransform extends NearDupTransform {
       graft.multimodal.Multimodal.imageHashes(media)
         .withColumnRenamed("media_id", "doc_id")
         .withColumnRenamed("dhash", "sig"),
-      maxHamming = intOpt(config, "maxHamming", 3),
-      maxBucketSize = intOpt(config, "maxBucketSize", 10000),
+      maxHamming = intOption(config, "maxHamming", 3),
+      maxBucketSize = intOption(config, "maxBucketSize", 10000),
       tag = "image")
   }
 
@@ -355,8 +345,8 @@ object ImageDedupTransform extends NearDupTransform {
             store.select(col("doc_id"), col("sig2").as("sig"))
           else store.select("doc_id", "sig")
         val hits = Dedup.hammingNearDupsAgainstSignatures(newSigs, storeSigs,
-          maxHamming = intOpt(config, "maxHamming", 3),
-          maxBucketSize = intOpt(config, "maxBucketSize", 10000),
+          maxHamming = intOption(config, "maxHamming", 3),
+          maxBucketSize = intOption(config, "maxBucketSize", 10000),
           tag = "image")
         staged.join(hits.select(col("id").as(id)).distinct(), Seq(id), "left_anti")
     }
@@ -383,8 +373,8 @@ object AudioDedupTransform extends NearDupTransform {
       graft.multimodal.Multimodal.imageHashes(media)
         .withColumnRenamed("media_id", "doc_id")
         .withColumnRenamed("dhash", "sig"),
-      maxHamming = intOpt(config, "maxHamming", 3),
-      maxBucketSize = intOpt(config, "maxBucketSize", 10000),
+      maxHamming = intOption(config, "maxHamming", 3),
+      maxBucketSize = intOption(config, "maxBucketSize", 10000),
       tag = "audio")
   }
 
@@ -410,8 +400,8 @@ object AudioDedupTransform extends NearDupTransform {
           ctx.spark.table(view), "audio")
         val hits = Dedup.hammingNearDupsAgainstSignatures(newSigs,
           store.select("doc_id", "sig"),
-          maxHamming = intOpt(config, "maxHamming", 3),
-          maxBucketSize = intOpt(config, "maxBucketSize", 10000),
+          maxHamming = intOption(config, "maxHamming", 3),
+          maxBucketSize = intOption(config, "maxBucketSize", 10000),
           tag = "audio")
         staged.join(hits.select(col("id").as(id)).distinct(), Seq(id), "left_anti")
     }
@@ -445,11 +435,11 @@ object VideoDedupTransform extends NearDupTransform {
                       config: TransformConfig): DataFrame = {
     val media = graft.multimodal.Multimodal.asMediaFrame(
       input, id, bytesCol, modality = "video", sourceUriCol = id)
-    val maxTemporal = intOpt(config, "maxHamming", 3)
+    val maxTemporal = intOption(config, "maxHamming", 3)
     // hammingNearDups validates the temporal budget; the spatial confirm
     // must be just as loud — a negative budget would silently make
     // bit_count(xor) <= k false for EVERY pair (no dedup at all)
-    val maxSpatial = intOpt(config, "maxSpatialHamming", maxTemporal)
+    val maxSpatial = intOption(config, "maxSpatialHamming", maxTemporal)
     if (maxSpatial < 0 || maxSpatial > 64)
       throw new ConfigException(
         s"$transformType: maxSpatialHamming must be in [0, 64] (bits of " +
@@ -459,7 +449,7 @@ object VideoDedupTransform extends NearDupTransform {
     val temporalPairs = Dedup.hammingNearDups(
       hashes.select(col("media_id").as("doc_id"), col("thash").as("sig")),
       maxHamming = maxTemporal,
-      maxBucketSize = intOpt(config, "maxBucketSize", 10000),
+      maxBucketSize = intOption(config, "maxBucketSize", 10000),
       tag = "video")
     val spatial = hashes.where(col("dhash").isNotNull)
     temporalPairs
@@ -483,8 +473,8 @@ object VideoDedupTransform extends NearDupTransform {
         MediaSigIncrement.rejectSurvivorOpts(transformType, config)
         required(config, "idColumn", "bytesColumn")
         val id = config.options("idColumn")
-        val maxTemporal = intOpt(config, "maxHamming", 3)
-        val maxSpatial = intOpt(config, "maxSpatialHamming", maxTemporal)
+        val maxTemporal = intOption(config, "maxHamming", 3)
+        val maxSpatial = intOption(config, "maxSpatialHamming", maxTemporal)
         if (maxSpatial < 0 || maxSpatial > 64)
           throw new ConfigException(
             s"$transformType: maxSpatialHamming must be in [0, 64], got " +
@@ -504,7 +494,7 @@ object VideoDedupTransform extends NearDupTransform {
           hashes.select(col("media_id").as("doc_id"), col("thash").as("sig")),
           store.select("doc_id", "sig"),
           maxHamming = maxTemporal,
-          maxBucketSize = intOpt(config, "maxBucketSize", 10000),
+          maxBucketSize = intOption(config, "maxBucketSize", 10000),
           tag = "video")
         val confirmed = temporalHits
           .join(hashes.where(col("dhash").isNotNull)
@@ -576,10 +566,10 @@ object EmbeddingDedupTransform extends NearDupTransform {
   protected def pairs(input: DataFrame, id: String, vec: String,
                       config: TransformConfig): DataFrame =
     graft.ann.Ann.cosineNearDups(input, id, vec,
-      threshold = doubleOpt(config, "threshold", 0.9),
-      bits = intOpt(config, "bits", 8),
-      tables = intOpt(config, "tables", 4),
-      maxBucketSize = intOpt(config, "maxBucketSize", 1000))
+      threshold = doubleOption(config, "threshold", 0.9),
+      bits = intOption(config, "bits", 8),
+      tables = intOption(config, "tables", 4),
+      maxBucketSize = intOption(config, "maxBucketSize", 1000))
 
   override def apply(input: DataFrame, config: TransformConfig,
                      ctx: RunContext): DataFrame =
@@ -600,10 +590,10 @@ object EmbeddingDedupTransform extends NearDupTransform {
           staged, ctx.spark.table(view), id, vec,
           config.options.getOrElse("referenceIdColumn", id),
           config.options.getOrElse("referenceVecColumn", vec),
-          threshold = doubleOpt(config, "threshold", 0.9),
-          bits = intOpt(config, "bits", 8),
-          tables = intOpt(config, "tables", 4),
-          maxBucketSize = intOpt(config, "maxBucketSize", 1000))
+          threshold = doubleOption(config, "threshold", 0.9),
+          bits = intOption(config, "bits", 8),
+          tables = intOption(config, "tables", 4),
+          maxBucketSize = intOption(config, "maxBucketSize", 1000))
         staged.join(hits.select(col("id").as(id)).distinct(), Seq(id), "left_anti")
     }
 }
@@ -631,17 +621,17 @@ object SemanticDedupTransform extends NearDupTransform {
       : Option[Array[Array[Float]]] =
     config.options.get("codebookView").map { view =>
       graft.ann.Ann.loadCodebook(spark.table(view),
-        config.options.get("nClusters").map(_.toInt),
-        config.options.get("kmeansIters").map(_.toInt))
+        intOption(config, "nClusters"),
+        intOption(config, "kmeansIters"))
     }
 
   protected def pairs(input: DataFrame, id: String, vec: String,
                       config: TransformConfig): DataFrame =
     graft.ann.Ann.semanticNearDups(input, id, vec,
-      threshold = doubleOpt(config, "threshold", 0.9),
-      nClusters = intOpt(config, "nClusters", 64),
-      kmeansIters = intOpt(config, "kmeansIters", 3),
-      maxClusterSize = intOpt(config, "maxClusterSize", 1000),
+      threshold = doubleOption(config, "threshold", 0.9),
+      nClusters = intOption(config, "nClusters", 64),
+      kmeansIters = intOption(config, "kmeansIters", 3),
+      maxClusterSize = intOption(config, "maxClusterSize", 1000),
       codebook = storedCodebook(config, input.sparkSession))
 
   /** With `referenceView` (+ optional `referenceIdColumn`/
@@ -668,10 +658,10 @@ object SemanticDedupTransform extends NearDupTransform {
           staged, ctx.spark.table(view), id, vec,
           config.options.getOrElse("referenceIdColumn", id),
           config.options.getOrElse("referenceVecColumn", vec),
-          threshold = doubleOpt(config, "threshold", 0.9),
-          nClusters = intOpt(config, "nClusters", 64),
-          kmeansIters = intOpt(config, "kmeansIters", 3),
-          maxClusterSize = intOpt(config, "maxClusterSize", 1000),
+          threshold = doubleOption(config, "threshold", 0.9),
+          nClusters = intOption(config, "nClusters", 64),
+          kmeansIters = intOption(config, "kmeansIters", 3),
+          maxClusterSize = intOption(config, "maxClusterSize", 1000),
           codebook = storedCodebook(config, ctx.spark))
         staged.join(hits.select(col("id").as(id)).distinct(), Seq(id), "left_anti")
     }
@@ -712,7 +702,7 @@ object EmbeddingDecontaminateTransform extends Transform {
     val bench = ctx.spark.table(config.options("benchDataset"))
     val benchId = config.options.getOrElse("benchIdColumn", id)
     val benchVec = config.options.getOrElse("benchVecColumn", vec)
-    val threshold = config.options.get("threshold").map(_.toDouble).getOrElse(0.95)
+    val threshold = doubleOption(config, "threshold", 0.95)
     val hits = graft.ann.Ann.crossMatches(input, bench, id, benchId, vec, benchVec)
       .where(col("sim") >= threshold)
       .select(col(id)).distinct()
@@ -780,7 +770,7 @@ object DecontaminateTransform extends Transform {
     val text = config.options("textColumn")
     val bench = ctx.spark.table(config.options("benchDataset"))
     val benchText = config.options.getOrElse("benchTextColumn", text)
-    val n = config.options.get("shingleSize").map(_.toInt).getOrElse(3)
+    val n = intOption(config, "shingleSize", 3)
     // fpp only parameterizes the bloom sketch; with method=exact it is a
     // misconfiguration (the user likely meant method: bloom) — reject it
     // like the other inapplicable-option guards in this file
@@ -835,7 +825,7 @@ object DecontaminateTransform extends Transform {
       // the no-action transform rule, like survivor=cluster).
       case "bloom" =>
         Dedup.bloomDecontaminate(input, bench, text, benchText, n,
-          fpp = config.options.get("fpp").map(_.toDouble).getOrElse(1e-4))
+          fpp = doubleOption(config, "fpp", 1e-4))
       case other => throw new graft.api.ConfigException(
         s"decontaminate: method must be exact|bloom, got '$other'")
     }

@@ -195,10 +195,15 @@ object PackSequencesTransform extends Transform {
       "pack_sequences")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "idColumn", "seqLen")
+    required(config, "idColumn")
     val groups = config.options.get("groupBy").toSeq
       .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-    val nParts = config.options.get("numPartitions").map(_.toInt).getOrElse(0)
+    val seqLen = longOption(config, "seqLen", missing(config, "seqLen"))
+    val nParts = intOption(config, "numPartitions", 0)
+    // decoded before any store read: a malformed id fails with no job run
+    val appendId = intOption(config, "appendId")
+    val padId = intOption(config, "padId")
+    val emitMask = boolOption(config, "emitMask", false)
     if (config.options.getOrElse("emit", "spans") == "input_ids") {
       // the training-export path: ids encoded against the tokenizer store,
       // weight = size(ids) by construction — an independent weightColumn
@@ -217,28 +222,14 @@ object PackSequencesTransform extends Transform {
       // document boundaries inside sequences that cross them. The id is
       // caller-chosen (typically reserved at vocab size, or <unk>=0);
       // empty documents stay empty (a separator-only doc would be noise)
-      val withSep = config.options.get("appendId").map { v =>
-        val sep = try v.toInt catch { case _: NumberFormatException =>
-          throw new ConfigException(
-            s"pack_sequences: appendId must be an integer token id, got '$v'") }
+      val withSep = appendId.map { sep =>
         when(size(encoded) > 0,
           concat(encoded, array(lit(sep)))).otherwise(encoded)
       }.getOrElse(encoded)
-      val padId = config.options.get("padId").map { v =>
-        try v.toInt catch { case _: NumberFormatException =>
-          throw new ConfigException(
-            s"pack_sequences: padId must be an integer token id, got '$v'") }
-      }
-      val emitMask = config.options.get("emitMask") match {
-        case None | Some("false") => false
-        case Some("true") => true
-        case Some(other) => throw new ConfigException(
-          s"pack_sequences: emitMask must be true|false, got '$other'")
-      }
       val staged = input.withColumn("__bpe_ids", withSep)
       return try PackSequences.materializeIds(staged,
         config.options("idColumn"), "__bpe_ids",
-        config.options("seqLen").toLong, nParts, groups, padId, emitMask)
+        seqLen, nParts, groups, padId, emitMask)
       catch { case e: IllegalArgumentException => throw new ConfigException(e.getMessage) }
     }
     Seq("padId", "emitMask").filter(config.options.contains).foreach { o =>
@@ -277,13 +268,13 @@ object PackSequencesTransform extends Transform {
     val build = config.options.getOrElse("emit", "spans") match {
       case "spans" => () => PackSequences.packGrouped(
         staged, config.options("idColumn"), weightCol,
-        groups, config.options("seqLen").toLong, nParts)
+        groups, seqLen, nParts)
       case "text" => () => PackSequences.materialize(
         staged, config.options("idColumn"),
         config.options.getOrElse("textColumn",
           throw new ConfigException("pack_sequences: emit=text requires 'textColumn'")),
         weightCol,
-        config.options("seqLen").toLong, nParts, groups)
+        seqLen, nParts, groups)
       case other => throw new ConfigException(
         s"pack_sequences: emit must be spans|text|input_ids, got '$other'")
     }

@@ -173,7 +173,7 @@ object ProfileTransform extends Transform {
     val groups = config.options.get("groupBy")
       .map(graft.config.ExprUtils.parseColumns).getOrElse(Nil)
     Profile.profile(input, cols,
-      exact = config.options.get("exact").exists(_.toBoolean), groupBy = groups)
+      exact = boolOption(config, "exact", false), groupBy = groups)
   }
 }
 
@@ -195,8 +195,8 @@ object TfidfTransform extends Transform {
     config.options.getOrElse("scoring", "tfidf") match {
       case "tfidf" => graft.functions.TextFunctions.tfidf(input, id, text)
       case "bm25" => graft.functions.TextFunctions.bm25(input, id, text,
-        k1 = config.options.get("k1").map(_.toDouble).getOrElse(1.2),
-        b = config.options.get("b").map(_.toDouble).getOrElse(0.75))
+        k1 = doubleOption(config, "k1", 1.2),
+        b = doubleOption(config, "b", 0.75))
       case other => throw new IllegalArgumentException(
         s"tfidf scoring must be tfidf|bm25, got '$other'")
     }

@@ -57,8 +57,8 @@ object QuantileFilterTransform extends Transform {
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "column")
     val c = config.options("column")
-    val lower = config.options.get("lower").map(_.toDouble)
-    val upper = config.options.get("upper").map(_.toDouble)
+    val lower = doubleOption(config, "lower")
+    val upper = doubleOption(config, "upper")
     if (lower.isEmpty && upper.isEmpty) throw new ConfigException(
       "quantile_filter: at least one of lower/upper is required")
     (lower.toList ++ upper.toList).foreach { p =>
@@ -68,8 +68,8 @@ object QuantileFilterTransform extends Transform {
     for (lo <- lower; hi <- upper; if lo > hi) throw new ConfigException(
       s"quantile_filter: lower ($lo) must be <= upper ($hi)")
     val groups = config.options.get("groupBy").map(ExprUtils.parseColumns).getOrElse(Nil)
-    val exact = config.options.get("exact").exists(_.toBoolean)
-    val accuracy = config.options.get("accuracy").map(_.toInt).getOrElse(10000)
+    val exact = boolOption(config, "exact", false)
+    val accuracy = intOption(config, "accuracy", 10000)
 
     def pct(p: Double): Column = {
       val v = if (exact) expr(s"percentile(`$c`, $p)")

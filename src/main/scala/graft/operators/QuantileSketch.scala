@@ -9,7 +9,7 @@ import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 import graft.api.{ConfigException, RunContext, Transform}
-import graft.config.{ExprUtils, TransformConfig}
+import graft.config.{ExprUtils, Options, TransformConfig}
 
 /**
  * Serialization shell for a KLL sketch aggregation buffer: DataSketches
@@ -131,7 +131,7 @@ object QuantileSketchTransform extends Transform {
     if (cols.isEmpty) throw new ConfigException(
       "quantile_sketch: columns lists no column names")
     val groups = config.options.get("groupBy").map(ExprUtils.parseColumns).getOrElse(Nil)
-    val k = config.options.get("sketchK").map(_.toInt).getOrElse(200)
+    val k = intOption(config, "sketchK", 200)
     def grouped(df: DataFrame) =
       if (groups.isEmpty) df.groupBy() else df.groupBy(groups.map(col): _*)
     config.options.getOrElse("mode", "build") match {
@@ -149,7 +149,8 @@ object QuantileSketchTransform extends Transform {
         grouped(input).agg(aggs.head, aggs.tail: _*)
       case "estimate" =>
         val ps = config.options.getOrElse("quantiles", "0.25,0.5,0.75")
-          .split(",").map(_.trim).filter(_.nonEmpty).map(_.toDouble).toSeq
+          .split(",").map(_.trim).filter(_.nonEmpty)
+          .map(Options.double(transformType, "quantiles", _)).toSeq
         ps.foreach { p =>
           if (p <= 0.0 || p > 1.0) throw new ConfigException(
             s"quantile_sketch: quantiles must be in (0,1], got $p")

@@ -133,8 +133,8 @@ object RangeJoinTransform extends Transform {
       .map(ExprUtils.parseColumns).getOrElse(Seq.empty)
     RangeJoin.rangeJoin(input, ctx.spark.table(config.options("rightDataset")),
       keys, config.options("point"), config.options("lo"), config.options("hi"),
-      binWidth = config.options("binWidth").toLong,
-      maxBins = config.options.get("maxBins").map(_.toInt).getOrElse(4096),
+      binWidth = longOption(config, "binWidth", missing(config, "binWidth")),
+      maxBins = intOption(config, "maxBins", 4096),
       prefix = config.options.getOrElse("prefix", "range_"))
   }
 }

@@ -139,7 +139,7 @@ object ExplodeTransform extends Transform {
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "column")
     val c = config.options("column")
-    val outer = config.options.get("outer").exists(_.toBoolean)
+    val outer = boolOption(config, "outer", false)
     // case-insensitive, like validation and Spark's own resolution — an
     // exact-case filter would KEEP the original array column alongside the
     // exploded one, breaking the documented replace and making any

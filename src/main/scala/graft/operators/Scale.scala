@@ -45,10 +45,10 @@ object ScaleTransform extends Transform {
     required(config, "columns")
     val cols = ExprUtils.parseColumns(config.options("columns"))
     val method = config.options.getOrElse("method", "zscore")
-    val round2 = config.options.get("roundTo").map(_.toInt)
+    val round2 = intOption(config, "roundTo")
     def maybeRound(c: org.apache.spark.sql.Column) =
       round2.map(r => round(c, r)).getOrElse(c)
-    val exact = config.options.get("exact").exists(_.toBoolean)
+    val exact = boolOption(config, "exact", false)
     def med(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       if (exact) percentile(c, lit(0.5))
       else percentile_approx(c, lit(0.5), lit(10000)).cast("double")

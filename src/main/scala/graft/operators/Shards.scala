@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.api.{RunContext, Transform}
-import graft.config.TransformConfig
+import graft.config.{Options, TransformConfig}
 
 /**
  * Token-budget shard packing for training-data exports: assign every row a
@@ -73,21 +73,16 @@ object ShardTransform extends Transform {
       transformType)
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "idColumn"); required(config, "weightColumn"); required(config, "budget")
-    // surface misconfig as the engine's ConfigException, not a raw
-    // NumberFormat/IllegalArgument stack (the TokenCap/PackSequences contract)
+    // surface a library require as the engine's ConfigException, not a
+    // raw IllegalArgument stack (the TokenCap/PackSequences contract)
     try Shards.assignShards(
       input,
       config.options("idColumn"),
       config.options("weightColumn"),
-      config.options("budget").toLong,
-      config.options.get("numPartitions").map(_.toInt).getOrElse(0))
-    catch {
-      case e: graft.api.ConfigException => throw e
-      case e: NumberFormatException => throw new graft.api.ConfigException(
-        s"shard: non-numeric option value (${e.getMessage})")
-      case e: IllegalArgumentException => throw new graft.api.ConfigException(
-        s"shard: ${e.getMessage}")
-    }
+      longOption(config, "budget", missing(config, "budget")),
+      intOption(config, "numPartitions", 0))
+    catch { case e: IllegalArgumentException => throw new graft.api.ConfigException(
+      s"shard: ${e.getMessage}") }
   }
 }
 
@@ -193,7 +188,7 @@ object SampleTransform extends Transform {
     (config.options.get("keep"), config.options.get("splits"),
      config.options.get("probColumn")) match {
       case (Some(k), None, None) =>
-        val keep = k.toInt
+        val keep = Options.int(transformType, "keep", k)
         require(keep >= 0 && keep <= buckets,
           s"need 0 <= keep <= buckets, got keep=$keep buckets=$buckets")
         input.where(bucket < lit(keep))
@@ -212,7 +207,7 @@ object SampleTransform extends Transform {
       case (None, Some(splits), None) =>
         val parts = splits.split(",").map(_.trim).filter(_.nonEmpty).map { p =>
           p.split(":") match {
-            case Array(name, w) => (name.trim, w.trim.toInt)
+            case Array(name, w) => (name.trim, Options.int(transformType, "splits", w))
             case _ => throw new IllegalArgumentException(
               s"splits must be name:weight,... got '$p'")
           }
@@ -253,9 +248,7 @@ object SampleTransform extends Transform {
   private def weightedSample(input: DataFrame, config: TransformConfig,
                              keyName: String): DataFrame = {
     required(config, "k")
-    val k = try config.options("k").toInt catch { case _: NumberFormatException =>
-      throw new graft.api.ConfigException(
-        s"sample: k must be an integer, got '${config.options("k")}'") }
+    val k = intOption(config, "k", missing(config, "k"))
     if (k <= 0) throw new graft.api.ConfigException(s"sample: k must be positive, got $k")
     val wName = config.options("weightColumn")
     if (!input.columns.exists(_.equalsIgnoreCase(wName)))
@@ -270,9 +263,7 @@ object SampleTransform extends Transform {
       throw new graft.api.ConfigException(
         s"sample: weightColumn '$wName' must be numeric, got ${wType.typeName}")
     val w = col(wName).cast("double")
-    val seed = try config.options.getOrElse("seed", "0").toLong catch {
-      case _: NumberFormatException => throw new graft.api.ConfigException(
-        s"sample: seed must be an integer, got '${config.options("seed")}'") }
+    val seed = longOption(config, "seed", 0L)
     // engine-portable uniform in (0,1): the md5 hex prefix parsed as an
     // integer is exact at 52 bits, and (v + 0.5)/2^52 is exact binary
     // arithmetic — any engine re-derives the identical double from
@@ -295,10 +286,12 @@ object SampleTransform extends Transform {
     * seed) | key, buckets). */
   private[operators] def bucketFor(config: TransformConfig, key: Column,
                                    defaultBuckets: Int): (Column, Int) = {
-    val buckets = config.options.get("buckets").map(_.toInt).getOrElse(defaultBuckets)
+    val buckets = config.options.get("buckets")
+      .fold(defaultBuckets)(Options.int(config.transformType, "buckets", _))
     require(buckets > 0, s"buckets must be positive, got $buckets")
     val bucket = config.options.getOrElse("method", "hash") match {
-      case "hash" => pmod(xxhash64(key, lit(config.options.getOrElse("seed", "0").toLong)), lit(buckets))
+      case "hash" => pmod(xxhash64(key, lit(config.options.get("seed")
+        .fold(0L)(Options.long(config.transformType, "seed", _)))), lit(buckets))
       case "mod"  => pmod(key, lit(buckets))
       case other  => throw new IllegalArgumentException(s"sample method must be hash|mod, got '$other'")
     }
@@ -323,7 +316,7 @@ object SampleTransform extends Transform {
   private[operators] def parseWeights(spec: String): Seq[(String, Double)] = {
     val weights = spec.split(",").map(_.trim).filter(_.nonEmpty).toSeq.map { p =>
       p.split(":") match {
-        case Array(g, w) if w.trim.nonEmpty => (g.trim, w.trim.toDouble)
+        case Array(g, w) if w.trim.nonEmpty => (g.trim, Options.double("mix", "weights", w))
         case _ => throw new IllegalArgumentException(
           s"mix weights must be group:weight,... got '$p'")
       }
@@ -374,7 +367,7 @@ object SampleTransform extends Transform {
   private def stratifiedSample(input: DataFrame, config: TransformConfig,
                                key: Column, keyName: String, bucket: Column): DataFrame = {
     required(config, "groupBy")
-    val n = config.options("perGroup").toInt
+    val n = intOption(config, "perGroup", missing(config, "perGroup"))
     require(n > 0, s"perGroup must be positive, got $n")
     val keyType = input.schema(keyName).dataType.typeName
     val integral = Seq("long", "integer", "short", "byte").contains(keyType)
@@ -452,19 +445,16 @@ object MixTransform extends graft.api.Transform {
           throw new graft.api.ConfigException(
             "mix: weightColumn only applies with temperature — explicit " +
               "weights already state the mixture, group sizes never enter")
-        val default = config.options.get("defaultWeight").map(_.toDouble).getOrElse(0.0)
+        val default = doubleOption(config, "defaultWeight", 0.0)
         SampleTransform.mixSample(input, group,
           SampleTransform.parseWeights(spec), default, bucket, buckets)
       case (None, Some(alphaSpec)) =>
-        val alpha = try alphaSpec.toDouble catch { case _: NumberFormatException =>
-          throw new graft.api.ConfigException(
-            s"mix: temperature must be a number, got '$alphaSpec'") }
-        // NaN passes a plain < check and Infinity overflows pow — both
-        // would surface as an opaque NumberFormatException from BigDecimal
-        // deep in the weight loop instead of a guided error
-        if (!java.lang.Double.isFinite(alpha) || alpha < 0)
-          throw new graft.api.ConfigException(
-            s"mix: temperature must be a finite number >= 0, got $alpha")
+        // the reader refuses NaN and Infinity: NaN passes a plain < check
+        // and Infinity overflows pow — both would surface as an opaque
+        // NumberFormatException from BigDecimal deep in the weight loop
+        val alpha = Options.double(transformType, "temperature", alphaSpec)
+        if (alpha < 0) throw new graft.api.ConfigException(
+          s"mix: temperature must be a finite number >= 0, got $alpha")
         // every observed group gets a derived weight and null-group rows
         // drop, so a default could never apply — reject it rather than
         // silently ignoring the option
@@ -472,7 +462,8 @@ object MixTransform extends graft.api.Transform {
           throw new graft.api.ConfigException(
             "mix: defaultWeight does not apply with temperature — every " +
               "observed group gets a derived weight and null-group rows drop")
-        val maxGroups = config.options.get("maxGroups").map(_.toInt).getOrElse(1000)
+        val maxGroups = intOption(config, "maxGroups", 1000)
+        val budgetRows = doubleOption(config, "budgetRows")
         // bounded driver collect: one narrow count-by-group aggregate,
         // O(|groups|) rows (languages/domains — small by construction).
         // The limit makes the bound REAL: without it, a misconfigured
@@ -514,11 +505,7 @@ object MixTransform extends graft.api.Transform {
             "weights — use explicit weights (or raise maxGroups) for " +
             "high-cardinality mixtures")
         val counts = rawCounts.filter(_._2 > 0).sortBy(_._1)
-        val budget = config.options.get("budgetRows").map { b =>
-          try b.toDouble catch { case _: NumberFormatException =>
-            throw new graft.api.ConfigException(
-              s"mix: budgetRows must be a number, got '$b'") }
-        }.getOrElse(counts.map(_._2).sum)
+        val budget = budgetRows.getOrElse(counts.map(_._2).sum)
         if (counts.nonEmpty && !(java.lang.Double.isFinite(budget) && budget > 0))
           throw new graft.api.ConfigException(
             s"mix: budgetRows must be a finite positive number, got $budget")
@@ -639,9 +626,9 @@ object ShuffleTransform extends Transform {
     Shuffle.deterministicShuffle(
       input,
       config.options("idColumn"),
-      config.options.get("seed").map(_.toLong).getOrElse(0L),
+      longOption(config, "seed", 0L),
       config.options.getOrElse("hash", "md5"),
-      config.options.get("position").forall(_.toBoolean),
-      config.options.get("numPartitions").map(_.toInt).getOrElse(0))
+      boolOption(config, "position", true),
+      intOption(config, "numPartitions", 0))
   }
 }

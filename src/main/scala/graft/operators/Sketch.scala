@@ -38,7 +38,7 @@ object SketchTransform extends Transform {
     if (cols.isEmpty) throw new ConfigException(
       "sketch: columns lists no column names")
     val groups = config.options.get("groupBy").map(ExprUtils.parseColumns).getOrElse(Nil)
-    val lgK = config.options.get("lgConfigK").map(_.toInt).getOrElse(12)
+    val lgK = intOption(config, "lgConfigK", 12)
     def grouped(df: DataFrame) =
       if (groups.isEmpty) df.groupBy() else df.groupBy(groups.map(col): _*)
     config.options.getOrElse("mode", "build") match {

@@ -33,9 +33,9 @@ object VocabTopKTransform extends Transform {
     Validate.columnsExist(schema, config.options.get("textColumn").toSeq, "vocab_topk")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "textColumn", "k")
-    val k = config.options("k").toInt
+    val k = intOption(config, "k", missing(config, "k"))
     if (k <= 0) throw new ConfigException(s"vocab_topk: k must be positive, got $k")
-    val n = config.options.get("ngramSize").map(_.toInt).getOrElse(1)
+    val n = intOption(config, "ngramSize", 1)
     if (n < 1) throw new ConfigException(s"vocab_topk: ngramSize must be >= 1, got $n")
     TextFunctions.vocabTopK(input, config.options("textColumn"), k, n)
   }
@@ -113,16 +113,18 @@ object NormalizeTextTransform extends Transform {
     val form = config.options.getOrElse("form", "NFC")
     if (!Set("NFC", "NFD", "NFKC", "NFKD").contains(form))
       throw new ConfigException(s"normalize_text: form must be NFC|NFD|NFKC|NFKD, got '$form'")
-    def flag(name: String) = config.options.get(name).exists(_.toBoolean)
+    val Seq(stripControl, collapse, doTrim, lowercase) =
+      Seq("stripControl", "collapseWhitespace", "trim", "lowercase")
+        .map(boolOption(config, _, false))
     val cols = config.options("columns").split(",").map(_.trim).filter(_.nonEmpty)
     if (cols.isEmpty) throw new ConfigException("normalize_text: no columns listed")
     cols.foldLeft(input) { (df, c) =>
       var e = graft.functions.expressions.UnicodeNormalize(col(c), form)
-      if (flag("stripControl"))
+      if (stripControl)
         e = regexp_replace(e, "[\\x00-\\x08\\x0B-\\x1F\\x7F]", "")
-      if (flag("collapseWhitespace")) e = regexp_replace(e, "\\s+", " ")
-      if (flag("trim")) e = trim(e)
-      if (flag("lowercase")) e = lower(e)
+      if (collapse) e = regexp_replace(e, "\\s+", " ")
+      if (doTrim) e = trim(e)
+      if (lowercase) e = lower(e)
       df.withColumn(c, e)
     }
   }
@@ -147,9 +149,9 @@ object CollocationsTransform extends Transform {
     Validate.columnsExist(schema, config.options.get("textColumn").toSeq, "collocations")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "textColumn", "k")
-    val k = config.options("k").toInt
+    val k = intOption(config, "k", missing(config, "k"))
     if (k <= 0) throw new ConfigException(s"collocations: k must be positive, got $k")
-    val minCount = config.options.get("minCount").map(_.toLong).getOrElse(5L)
+    val minCount = longOption(config, "minCount", 5L)
     if (minCount < 1)
       throw new ConfigException(s"collocations: minCount must be >= 1, got $minCount")
     TextFunctions.collocations(input, config.options("textColumn"), k, minCount)
@@ -195,7 +197,7 @@ object ChargramNllTransform extends Transform {
             s"chargram_nll: $o only applies with modelView — the self-mode " +
               "model is built FROM this corpus, so nothing is ever unseen; " +
               "drop the option or score against a persisted store") }
-        val n = config.options.get("n").map(_.toInt).getOrElse(3)
+        val n = intOption(config, "n", 3)
         if (n < 1) throw new ConfigException(s"chargram_nll: n must be >= 1, got $n")
         TextFunctions.charGramNll(input, config.options("idColumn"),
           config.options("textColumn"), n)
@@ -207,8 +209,8 @@ object ChargramNllTransform extends Transform {
         val store = Stores.fromView(ctx, view, "modelView",
           transformType, "chargram_lm")
         val lm = graft.text.ChargramLm.load(store,
-          wantN = config.options.get("n").map(_.toInt),
-          wantMinCount = config.options.get("minCount").map(_.toLong))
+          wantN = intOption(config, "n"),
+          wantMinCount = longOption(config, "minCount"))
         val idx = config.options.get("label") match {
           case Some(l) =>
             val i = lm.model.labels.indexOf(l)
@@ -272,7 +274,7 @@ object ImportanceScoreTransform extends Transform {
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     import org.apache.spark.sql.functions._
     required(config, "idColumn", "textColumn")
-    val n = config.options.get("n").map(_.toInt).getOrElse(3)
+    val n = intOption(config, "n", 3)
     if (n < 1) throw new ConfigException(s"importance_score: n must be >= 1, got $n")
     (config.options.get("targetView"), config.options.get("targetModelView")) match {
       case (Some(_), Some(_)) => throw new ConfigException(

@@ -55,7 +55,7 @@ object TextSignalsTransform extends Transform {
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "textColumn")
     val text = col(config.options("textColumn"))
-    val n = config.options.get("ngramSize").map(_.toInt).getOrElse(2)
+    val n = intOption(config, "ngramSize", 2)
     val all = builders(n)
     val picked0 = config.options.get("signals") match {
       case None => all

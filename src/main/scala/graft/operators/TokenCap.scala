@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.api.{ConfigException, RunContext, Transform}
-import graft.config.TransformConfig
+import graft.config.{Options, TransformConfig}
 
 /**
  * Token-budget group caps — the absolute-volume counterpart to `mix`'s
@@ -146,9 +146,7 @@ object TokenCapTransform extends Transform {
             // "-" = unlimited: keep the whole group (books/code in a
             // web-capped mixture)
             if (b.trim == "-") (g.trim, Long.MaxValue)
-            else try (g.trim, b.trim.toLong)
-            catch { case _: NumberFormatException => throw new ConfigException(
-              s"token_cap: budget for '${g.trim}' must be a long or '-', got '${b.trim}'") }
+            else (g.trim, Options.long(transformType, s"budgets[${g.trim}]", b))
           case _ => throw new ConfigException(
             s"token_cap: budgets must be group:budget,... got '$p'")
         }
@@ -160,10 +158,10 @@ object TokenCapTransform extends Transform {
         config.options("idColumn"),
         weightCol,
         config.options.getOrElse("groupBy", ""),
-        config.options("budget").toLong,
+        longOption(config, "budget", missing(config, "budget")),
         overrides,
-        config.options.get("seed").map(_.toLong).getOrElse(0L),
-        config.options.get("numPartitions").map(_.toInt).getOrElse(0))
+        longOption(config, "seed", 0L),
+        intOption(config, "numPartitions", 0))
       catch { case e: IllegalArgumentException => throw new ConfigException(e.getMessage) }
     // the derived BPE weight is cap plumbing, not output schema — run
     // bpe_token_count beforehand to carry the count downstream

@@ -40,7 +40,7 @@ object TopKTransform extends Transform {
         config.options.get("groupBy").map(ExprUtils.parseColumns).getOrElse(Nil), "topk")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "scoreColumn", "k", "idColumn")
-    val k = config.options("k").toInt
+    val k = intOption(config, "k", missing(config, "k"))
     if (k <= 0) throw new ConfigException(s"topk: k must be positive, got $k")
     val idName = config.options("idColumn")
     val groups = config.options.get("groupBy").map(ExprUtils.parseColumns).getOrElse(Nil)
@@ -52,7 +52,7 @@ object TopKTransform extends Transform {
         s"topk: direction must be desc|asc, got '$other'")
     }
     BoundedTopK.semiJoinTopK(input, groups, score, idName, k,
-      broadcastWinners = config.options.get("broadcast").forall(_.toBoolean))
+      broadcastWinners = boolOption(config, "broadcast", true))
   }
 }
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.api.{Transform, RunContext, ConfigException}
-import graft.config.{TransformConfig, ExprUtils}
+import graft.config.{ExprUtils, Options, TransformConfig}
 
 /**
  * windowing — time-window bucketing + aggregation.
@@ -51,7 +51,7 @@ object WindowTransform extends Transform {
     val agged = input
       .groupBy(bucket.as(winCol) +: extraKeys.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
-    if (config.options.get("flatten").forall(_.toBoolean)) {
+    if (boolOption(config, "flatten", true)) {
       val rest = agged.columns.filter(_ != winCol).map(col)
       agged.select(
         col(s"$winCol.start").as("window_start") +:
@@ -77,7 +77,7 @@ object WindowRankTransform extends Transform {
     // same opt-in foot-gun policy as window_agg and sort: an unpartitioned
     // ordered window is a SinglePartition exchange — the whole input
     // through one task — and must be requested explicitly
-    if (partCols.isEmpty && !config.options.get("global").exists(_.toBoolean))
+    if (partCols.isEmpty && !boolOption(config, "global", false))
       throw new ConfigException(
         "window_rank: partitionBy is required — an unpartitioned ordered " +
           "window moves the entire input through ONE task; set " +
@@ -91,15 +91,12 @@ object WindowRankTransform extends Transform {
       case "rank"       => rank()
       case "dense_rank" => dense_rank()
       case "percent_rank" => percent_rank()
-      case "ntile"      => ntile(config.options.getOrElse("n", "4").toInt)
+      case "ntile"      => ntile(intOption(config, "n", 4))
       case other        => throw new ConfigException(s"window_rank: unknown function '$other'")
     }
     val alias = config.options.getOrElse("alias", "rank")
     val ranked = input.withColumn(alias, fn.over(w))
-    config.options.get("topK") match {
-      case Some(k) => ranked.filter(col(alias) <= k.toInt)
-      case None    => ranked
-    }
+    intOption(config, "topK").fold(ranked)(k => ranked.filter(col(alias) <= k))
   }
 }
 
@@ -130,7 +127,7 @@ object WindowAggTransform extends Transform {
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "orderBy", "aggregations")
     val partCols = config.options.get("partitionBy").map(ExprUtils.parseColumns).getOrElse(Nil)
-    if (partCols.isEmpty && !config.options.get("global").exists(_.toBoolean))
+    if (partCols.isEmpty && !boolOption(config, "global", false))
       throw new ConfigException(
         "window_agg without partitionBy funnels ALL data through one task; " +
           "set global=\"true\" to accept that, or partition")
@@ -141,7 +138,7 @@ object WindowAggTransform extends Transform {
       case "unbounded" if key == "frameStart" => W.unboundedPreceding
       case "unbounded"                        => W.unboundedFollowing
       case "current"                          => W.currentRow
-      case n                                  => n.toLong
+      case n                                  => Options.long(transformType, key, n)
     }.getOrElse(dflt)
     val framed = (config.options.get("frameType"),
                   config.options.contains("frameStart") || config.options.contains("frameEnd")) match {

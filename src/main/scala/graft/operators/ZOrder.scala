@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.api.{ConfigException, RunContext, Transform}
-import graft.config.{ExprUtils, TransformConfig}
+import graft.config.{ExprUtils, Options, TransformConfig}
 
 /**
  * zorder — Morton (Z-order) interleaving of 2–4 numeric columns: maps each
@@ -42,9 +42,10 @@ object ZOrderTransform extends Transform {
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "columns", "lo", "hi")
     val cols = ExprUtils.parseColumns(config.options("columns"))
-    val los = ExprUtils.parseColumns(config.options("lo")).map(_.toDouble)
-    val his = ExprUtils.parseColumns(config.options("hi")).map(_.toDouble)
-    val bits = config.options.get("bits").map(_.toInt).getOrElse(16)
+    def bounds(key: String) =
+      ExprUtils.parseColumns(config.options(key)).map(Options.double(transformType, key, _))
+    val (los, his) = (bounds("lo"), bounds("hi"))
+    val bits = intOption(config, "bits", 16)
     val dims = cols.length
     if (dims < 2 || dims > 4)
       throw new ConfigException(s"zorder: need 2-4 columns, got $dims")
@@ -84,7 +85,7 @@ object ZOrderTransform extends Transform {
       }
     }
     val out = input.withColumn(config.options.getOrElse("zColumn", "zvalue"), z)
-    if (config.options.get("cluster").exists(_.toBoolean)) {
+    if (boolOption(config, "cluster", false)) {
       val zc = col(config.options.getOrElse("zColumn", "zvalue"))
       // Spark's default ordering is NULLS FIRST; force nulls last so rows
       // with a null dimension land in the tail files as documented above.
@@ -93,7 +94,7 @@ object ZOrderTransform extends Transform {
       // outputs into one file and erase the tile layout the skipping
       // depends on); default leaves AQE free to size partitions.
       val ordered = zc.asc_nulls_last
-      config.options.get("numFiles").map(_.toInt) match {
+      intOption(config, "numFiles") match {
         case Some(n) =>
           if (n < 1) throw new ConfigException(s"zorder: numFiles must be >= 1, got $n")
           out.repartitionByRange(n, ordered).sortWithinPartitions(ordered)

@@ -63,13 +63,8 @@ final class PipelineExecutor(
       val sink = sinks.get(config.sink.sinkType)
       val sinkErrs = sink.validate(config.sink)
       if (sinkErrs.nonEmpty) throw new ConfigException(sinkErrs.mkString("; "))
-      val stampLineage = config.sink.options.get("lineage") match {
-        case None => false
-        case Some(v) if v.equalsIgnoreCase("true") => true
-        case Some(v) if v.equalsIgnoreCase("false") => false
-        case Some(other) => throw new ConfigException(
-          s"sink option lineage must be true|false, got '$other'")
-      }
+      val stampLineage = config.sink.options.get("lineage")
+        .exists(Options.bool(s"${config.sink.sinkType} sink", "lineage", _))
 
       val plan = buildPlan(config, ctx)
       persisted = plan.persisted
@@ -109,11 +104,8 @@ final class PipelineExecutor(
       // FAILURE for a committed write, and an orchestrated retry then
       // double-writes append-mode sinks
       val obsTimeoutMs = {
-        val raw = spark.conf.get("spark.graft.observationTimeoutMs", "2000")
-        val v = try raw.toLong catch { case _: NumberFormatException =>
-          throw new ConfigException(
-            s"spark.graft.observationTimeoutMs must be a non-negative " +
-              s"integer of milliseconds, got '$raw'") }
+        val v = Options.long("session conf", "spark.graft.observationTimeoutMs",
+          spark.conf.get("spark.graft.observationTimeoutMs", "2000"))
         if (v < 0) throw new ConfigException(
           s"spark.graft.observationTimeoutMs must be >= 0, got $v")
         // clamp so the nanos multiply below cannot overflow a huge knob
@@ -182,15 +174,15 @@ final class PipelineExecutor(
     * just the frame, so an internal persist would be impossible to
     * unpersist — persist the returned frame yourself if you want caching. */
   def compose(config: PipelineConfig)(implicit spark: SparkSession): DataFrame = {
-    val ctx = RunContext(spark, config.pipelineId, "compose", Some(sources),
-      sideEffects = false)
     // sideEffects = false: compose (and --dry-run on top of it) promises
     // "nothing written, nothing evaluated" — the quality gate's FRAME
     // shape (quarantined rows filtered out, duplicate extras dropped) is
     // applied lazily so the composed plan matches what execute() feeds
     // the sink, but the fail-check counts and quarantine parquet writes
     // that execute() runs are skipped
-    val plan = buildPlan(config, ctx, sideEffects = false)
+    val ctx = RunContext(spark, config.pipelineId, "compose", Some(sources),
+      sideEffects = false)
+    val plan = buildPlan(config, ctx)
     plan.rest(plan.in)
   }
 
@@ -199,11 +191,11 @@ final class PipelineExecutor(
                                 qualityMs: Long)
 
   /** Compose the lazy plan: read, optional quality gate, transform fold.
-    * `sideEffects = false` suppresses every Spark action and write the
+    * `ctx.sideEffects = false` suppresses every Spark action and write the
     * quality gate would run (fail-check counts, quarantine appends) while
     * keeping its lazy frame shape. */
-  private def buildPlan(config: PipelineConfig, ctx: RunContext,
-                        sideEffects: Boolean = true)(implicit spark: SparkSession): Plan = {
+  private def buildPlan(config: PipelineConfig, ctx: RunContext)(
+      implicit spark: SparkSession): Plan = {
     val source = sources.get(config.source.sourceType)
     val sErrs = source.validate(config.source)
     if (sErrs.nonEmpty) throw new ConfigException(sErrs.mkString("; "))
@@ -221,7 +213,7 @@ final class PipelineExecutor(
     // in execute(); self-describing formats (parquet/orc/avro footers)
     // stay driver-side and validate in both paths
     val canValidateHere =
-      sideEffects || !Set("csv", "json", "text").contains(srcFmt)
+      ctx.sideEffects || !Set("csv", "json", "text").contains(srcFmt)
     var df =
       if (validateSchema && declared.isDefined && canValidateHere) {
         // format-aware inference: csv without inferSchema self-describes
@@ -259,14 +251,14 @@ final class PipelineExecutor(
         q.quarantinePath.getOrElse(s"/tmp/graft-quarantine/${config.pipelineId}")
       val failChecks = q.nullChecks.filter(_.action == NullAction.Fail)
       val quarChecks = q.nullChecks.filter(_.action == NullAction.Quarantine)
-      if (failChecks.nonEmpty && sideEffects) {
+      if (failChecks.nonEmpty && ctx.sideEffects) {
         val bad = df.filter(!QualityChecker.validPredicate(failChecks)).limit(1).count()
         if (bad > 0) throw new GraftException(
           s"quality gate: null values in fail-action columns ${failChecks.map(_.column).mkString(", ")}")
       }
       if (quarChecks.nonEmpty) {
         val (valid, invalid) = QualityChecker.splitValidInvalid(df, quarChecks)
-        if (sideEffects)
+        if (ctx.sideEffects)
           failedRows += QuarantineWriter.writeCounted(
             invalid, quarantinePath, ctx, QuarantineWriter.nullErrorsCol(quarChecks))
         df = valid
@@ -284,7 +276,7 @@ final class PipelineExecutor(
         val keyCols = cols.map(keyed)
         dc.action match {
           case NullAction.Fail =>
-            if (sideEffects) {
+            if (ctx.sideEffects) {
               val dup = df.groupBy(keyCols: _*).count()
                 .filter(col("count") > 1).limit(1).count()
               if (dup > 0) throw new GraftException(
@@ -307,7 +299,7 @@ final class PipelineExecutor(
               "duplicate quarantine gate", df.columns, "__graft_rn")
             val marked = df.withColumn("__graft_rn", row_number().over(w))
             val dups = marked.filter(col("__graft_rn") > 1).drop("__graft_rn")
-            if (sideEffects)
+            if (ctx.sideEffects)
               failedRows += QuarantineWriter.writeCounted(
                 dups, quarantinePath, ctx,
                 lit(s"duplicate row on (${cols.mkString(", ")})"))
@@ -324,22 +316,30 @@ final class PipelineExecutor(
     // a persist() registered here would be unreachable for the caller to
     // unpersist and leak a CacheManager entry per compose() call
     val persisted =
-      if (sideEffects && config.performance.exists(_.cacheIntermediate)) {
+      if (ctx.sideEffects && config.performance.exists(_.cacheIntermediate)) {
         df = df.persist(); List(df)
       } else Nil
 
     val rest = (observed: DataFrame) =>
-      config.transformations.foldLeft(observed) { (d, tc) =>
-        val t = transforms.get(tc.transformType)
-        val tErrs = t.validate(tc, d.schema)
-        if (tErrs.nonEmpty) throw new ConfigException(tErrs.mkString("; "))
-        t.apply(d, tc, ctx)
-      }
+      PipelineExecutor.applyAll(observed, config.transformations, transforms, ctx)
     Plan(df, rest, failedRows, persisted, qualityMs)
   }
 }
 
 object PipelineExecutor {
+  /** Fold `steps` over `in`: each step is looked up in `transforms`,
+    * validated against the schema it will see, then applied. The one
+    * fold the batch and streaming executors and the query registry use. */
+  private[graft] def applyAll(in: DataFrame, steps: Seq[TransformConfig],
+                              transforms: Registry[Transform],
+                              ctx: RunContext): DataFrame =
+    steps.foldLeft(in) { (d, tc) =>
+      val t = transforms.get(tc.transformType)
+      val errs = t.validate(tc, d.schema)
+      if (errs.nonEmpty) throw new ConfigException(errs.mkString("; "))
+      t.apply(d, tc, ctx)
+    }
+
   /** Run `body` with the session confs a config's `performance` block
     * sets (shuffle partitions, checkpoint mode and dir, plan lint), then
     * restore each key's previous value, unset ones included. These are

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Observation, SaveMode}
 import org.apache.spark.sql.functions._
 
 import graft.api.{Sink, RunContext, LoadResult, ConfigException, LoadException}
-import graft.config.{SinkConfig, WriteMode, ExprUtils}
+import graft.config.{ExprUtils, Options, SinkConfig, WriteMode}
 
 /** Count rows through a batch write via an Observation riding the write
   * action itself — real LoadResult.recordsWritten with zero extra jobs. */
@@ -44,13 +44,14 @@ object FileSink extends Sink {
       case WriteMode.Upsert =>
         throw new ConfigException("file sink: upsert not supported (use a keyed store)")
     }
-    val bucketSpec = config.options.get("buckets").map { n =>
+    val bucketSpec = intOption(config, "buckets").map { n =>
       val cols = ExprUtils.parseColumns(config.options.getOrElse("bucketBy",
         throw new ConfigException("file sink: 'buckets' requires 'bucketBy' columns")))
-      (n.toInt, cols)
+      (n, cols)
     }
+    val coalesce = intOption(config, "coalesce")
     SinkObserve(data, ctx) { observed =>
-      val shaped = config.options.get("coalesce").map(n => observed.coalesce(n.toInt)).getOrElse(observed)
+      val shaped = coalesce.fold(observed)(observed.coalesce)
       // sortWithinPartitions (AFTER coalesce, so the FINAL partitions are
       // the clustered ones): no extra shuffle, but rows land clustered —
       // parquet RLE/dictionary pages compress better and min/max row-group
@@ -78,8 +79,12 @@ object FileSink extends Sink {
       }
     }
   }
-  override def validate(config: SinkConfig): List[String] =
+  override def validate(config: SinkConfig): List[String] = {
+    Seq("buckets", "coalesce").foreach(intOption(config, _))
     if (config.options.contains("path")) Nil else List("file sink: missing 'path'")
+  }
+  private def intOption(config: SinkConfig, key: String): Option[Int] =
+    config.options.get(key).map(Options.int("file sink", key, _))
 }
 
 /**

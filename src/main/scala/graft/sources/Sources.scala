@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.api.{Source, ConfigException, ExtractException}
-import graft.config.SourceConfig
+import graft.config.{Options, SourceConfig}
 
 /**
  * file — parquet | json | csv | orc | text from a path (local, HDFS, or
@@ -213,6 +213,9 @@ final class JdbcSource(val sourceType: String, driverClass: String) extends Sour
     val present = partOpts.count(config.options.contains)
     if (config.options.contains("partitionColumn") && present != 4)
       errs += s"$sourceType source: partitionColumn requires all of ${partOpts.mkString(", ")}"
+    // the integer options Spark would otherwise reject mid-read, unguided
+    Seq("numPartitions", "fetchsize").foreach(k =>
+      config.options.get(k).foreach(Options.int(s"$sourceType source", k, _)))
     errs.result()
   }
 }

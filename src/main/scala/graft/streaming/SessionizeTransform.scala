@@ -38,7 +38,7 @@ object SessionizeTransform extends Transform {
   private val durationRe =
     "^(\\d+)\\s*(ms|milliseconds?|s|sec|seconds?|m|min|minutes?|h|hours?)$".r
   private[graft] def durationMs(s: String): Long = s.trim.toLowerCase match {
-    case durationRe(n, u) => n.toLong * (u.head match {
+    case durationRe(n, u) => graft.config.Options.long(transformType, "gap", n) * (u.head match {
       case 'h'            => 3600000L
       case 'm' if u != "ms" && !u.startsWith("mill") => 60000L
       case 's'            => 1000L

@@ -76,12 +76,8 @@ final class StreamingExecutor(
     }
 
     val in = readStream(config.source, st)
-    val transformed = config.transformations.foldLeft(in) { (d, tc) =>
-      val t = transforms.get(tc.transformType)
-      val tErrs = t.validate(tc, d.schema)
-      if (tErrs.nonEmpty) throw new ConfigException(tErrs.mkString("; "))
-      t.apply(d, tc, ctx)
-    }
+    val transformed =
+      graft.runtime.PipelineExecutor.applyAll(in, config.transformations, transforms, ctx)
 
     // default checkpoint is keyed by pipelineId ONLY — a per-run random
     // suffix would give every restart a fresh offset log while the file
