@@ -59,15 +59,9 @@ private[operators] object LmDrift {
     * the emitted column's expression — with no column, Catalyst would
     * prune the guard out of the plan and it would never fire. */
   def withUnseenColumn(df: DataFrame, config: TransformConfig,
-                       loaded: ChargramLm.Loaded, textCol: String,
-                       tname: String): DataFrame = {
+                       threshold: Option[Double], loaded: ChargramLm.Loaded,
+                       textCol: String, tname: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, round}
-    val threshold = config.options.get("maxUnseenFrac").map { raw =>
-      val v = graft.config.Options.double(tname, "maxUnseenFrac", raw)
-      if (v < 0.0 || v > 1.0) throw new ConfigException(
-        s"$tname: maxUnseenFrac must be in [0, 1], got $v")
-      v
-    }
     config.options.get("unseenColumn") match {
       case None =>
         threshold.foreach { _ => throw new ConfigException(
@@ -85,6 +79,16 @@ private[operators] object LmDrift {
           threshold.getOrElse(Double.NaN)), 4))
     }
   }
+
+  /** The `maxUnseenFrac` guard, decoded before the store load so a bad
+    * value fails with no Spark job run. */
+  def maxUnseenFrac(config: TransformConfig, tname: String): Option[Double] =
+    config.options.get("maxUnseenFrac").map { raw =>
+      val v = graft.config.Options.double(tname, "maxUnseenFrac", raw)
+      if (v < 0.0 || v > 1.0) throw new ConfigException(
+        s"$tname: maxUnseenFrac must be in [0, 1], got $v")
+      v
+    }
 }
 
 /**
@@ -123,6 +127,7 @@ object LangClassifyTransform extends Transform {
     if (config.options.contains("idColumn")) throw new ConfigException(
       s"$transformType: idColumn is not an option — classification is a " +
         "per-row projection and needs no id; drop the option")
+    val threshold = LmDrift.maxUnseenFrac(config, transformType)
     val store = Stores.fromView(ctx, config.options("modelView"),
       "modelView", transformType, "chargram_lm")
     // the scoring model is sparse (O(store rows)); the dense-era cell
@@ -160,6 +165,6 @@ object LangClassifyTransform extends Transform {
     LmDrift.withUnseenColumn(
       ChargramLm.classify(input, config.options("textColumn"), loaded, out,
         scoreCol),
-      config, loaded, config.options("textColumn"), transformType)
+      config, threshold, loaded, config.options("textColumn"), transformType)
   }
 }

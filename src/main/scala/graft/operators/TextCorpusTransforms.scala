@@ -206,6 +206,7 @@ object ChargramNllTransform extends Transform {
         if (config.options.contains("idColumn")) throw new ConfigException(
           "chargram_nll: idColumn has no effect with modelView — store-mode " +
             "scoring is a per-row projection; drop the option")
+        val threshold = LmDrift.maxUnseenFrac(config, transformType)
         val store = Stores.fromView(ctx, view, "modelView",
           transformType, "chargram_lm")
         val lm = graft.text.ChargramLm.load(store,
@@ -232,7 +233,7 @@ object ChargramNllTransform extends Transform {
         LmDrift.withUnseenColumn(
           input.withColumn(out, round(graft.functions.expressions.LmNll(
             col(config.options("textColumn")), lm.model, idx, lm.n), 4)),
-          config, lm, config.options("textColumn"), transformType)
+          config, threshold, lm, config.options("textColumn"), transformType)
     }
   }
 }

@@ -19,6 +19,8 @@ class MalformedOptionsSpec extends SparkTestBase {
     val df = Seq((1L, " a  b c d ", "en", 0.5, 10L, Seq(1.0f, 0.0f)))
       .toDF("id", "text", "lang", "score", "ts", "vec")
     df.createOrReplaceTempView("malformed_right")
+    graft.text.ChargramLm.modelFrame(df, "lang", "text", n = 2, minCount = 1L)
+      .createOrReplaceTempView("malformed_lm")
     df
   }
   private val transforms = Registries.transforms()
@@ -71,6 +73,9 @@ class MalformedOptionsSpec extends SparkTestBase {
     ("html_strip trim", "html_strip", "trim", step("html_strip", "columns" -> "text", "trim" -> "yes")),
     ("chargram_lm n", "chargram_lm", "n",
       step("chargram_lm", "labelColumn" -> "lang", "textColumn" -> "text", "n" -> "three")),
+    ("lang_classify maxUnseenFrac", "lang_classify", "maxUnseenFrac",
+      step("lang_classify", "modelView" -> "malformed_lm", "textColumn" -> "text",
+        "unseenColumn" -> "unseen", "maxUnseenFrac" -> "most")),
     ("merge broadcast", "merge", "broadcast",
       step("merge", "rightDataset" -> "malformed_right", "keyColumns" -> "id", "broadcast" -> "nope")),
     ("limit n", "limit", "n", step("limit", "n" -> "ten")),
