@@ -247,21 +247,14 @@ object Ann {
               maxQueries: Int = DefaultMaxQueries): DataFrame = {
     val qLocal = boundedLocalQueries(queries, queryIdCol, vecCol, "ivfTopK",
       maxQueries)
-    // ONE sampling pass covers both the codebook init and (when refining)
-    // the Lloyd sample: the first nLists rows of the larger hash-ordered
-    // sample ARE exactly the nLists-row codebook (same ordering, same scan)
-    val sampleN = if (kmeansIters > 0) math.max(nLists, refineSampleSize) else nLists
-    val sample = sampledCodebook(corpus, idCol, vecCol, sampleN)
-    val sampled = sample.take(nLists)
+    val centroids = kmeansCentroids(corpus, idCol, vecCol, nLists, kmeansIters,
+      refineSampleSize)
     // degenerate corpora (0 or 1 vectors): no codebook to probe — brute
     // force IS the IVF plan with one list, and it handles empty inputs
     // (its re-check over the already-local queries is job-free)
-    if (sampled.length <= 1)
+    if (centroids.length <= 1)
       return bruteForceTopK(corpus, qLocal, idCol, vecCol, queryIdCol, k,
         maxQueries = maxQueries)
-    val centroids =
-      if (kmeansIters > 0) refineCentroids(sample, sampled, kmeansIters)
-      else sampled
     ivfWithCentroids(corpus, qLocal, idCol, vecCol, queryIdCol, k,
       centroids, nProbe)
   }
@@ -836,6 +829,9 @@ object Ann {
   def kmeansCentroids(corpus: DataFrame, idCol: String, vecCol: String,
                       nLists: Int, iters: Int,
                       refineSampleSize: Int = DefaultRefineSample): Array[Array[Float]] = {
+    // ONE sampling pass covers both the codebook init and (when refining)
+    // the Lloyd sample: the first nLists rows of the larger hash-ordered
+    // sample ARE exactly the nLists-row codebook (same ordering, same scan)
     val sampleN = if (iters > 0) math.max(nLists, refineSampleSize) else nLists
     val sample = sampledCodebook(corpus, idCol, vecCol, sampleN)
     val base = sample.take(nLists)

@@ -1,7 +1,9 @@
 package graft.api
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.config.{Options, SourceConfig, TransformConfig, SinkConfig}
+import org.apache.spark.sql.types.StructType
+
+import graft.config.{ExprUtils, Options, SourceConfig, TransformConfig, SinkConfig}
 
 /**
  * Component contracts — the Spark-first restatement of the reference's
@@ -46,12 +48,38 @@ trait Source {
 /** A registry-dispatched pipeline step. Its options arrive as strings:
   * read a numeric or boolean one with `intOption`/`longOption`/
   * `doubleOption`/`boolOption`, which decode through
-  * [[graft.config.Options]], and range-check the typed value here. */
+  * [[graft.config.Options]], and range-check the typed value here. The
+  * options that name input columns are declared once in `columnOptions`,
+  * and the default `validate` checks them against the input schema
+  * before any job runs. */
 trait Transform {
   def transformType: String
   /** Compose more plan on top of `input`. MUST NOT trigger an action. */
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame
-  def validate(config: TransformConfig, schema: org.apache.spark.sql.types.StructType): List[String] = Nil
+
+  /** The options whose value `apply` resolves as plain input column names:
+    * a comma list read through [[graft.config.ExprUtils.parseColumns]], so
+    * a single name is a one-element list. Expressions, output names and
+    * another view's columns are never declared here. */
+  def columnOptions: Seq[String] = Nil
+
+  /** Fail-fast check against the schema the step will see (error
+    * accumulation, not first-error). The default reports every column a
+    * declared column option names and the schema lacks; an override that
+    * checks more calls `super.validate`. */
+  def validate(config: TransformConfig, schema: StructType): List[String] =
+    columnOptions.toList.flatMap(o =>
+      missingColumns(schema, o, config.options.get(o).toList.flatMap(ExprUtils.parseColumns)))
+
+  /** One error per entry of `columns` absent from `schema`, matched
+    * case-insensitively like Spark's own column resolution:
+    * `<transformType>: <option> '<column>' not found in input schema`. */
+  protected def missingColumns(schema: StructType, option: String,
+                               columns: Seq[String]): List[String] = {
+    val present = schema.fieldNames.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
+    columns.filterNot(c => present(c.toLowerCase(java.util.Locale.ROOT)))
+      .map(c => s"$transformType: $option '$c' not found in input schema").toList
+  }
 
   protected def required(config: TransformConfig, keys: String*): Unit = {
     val absent = keys.filterNot(config.options.contains)

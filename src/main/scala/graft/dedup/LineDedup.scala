@@ -205,11 +205,7 @@ object LineDedup {
  */
 object LineDedupTransform extends Transform {
   val transformType = "dedup_lines"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    graft.operators.Validate.columnsExist(schema,
-      config.options.get("idColumn").toSeq ++ config.options.get("textColumn").toSeq,
-      transformType)
+  override val columnOptions = Seq("idColumn", "textColumn")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     val separator = config.options.getOrElse("separator", "\n")
     try {
@@ -268,10 +264,7 @@ object LineDedupTransform extends Transform {
  */
 object LineSignaturesTransform extends Transform {
   val transformType = "line_signatures"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    graft.operators.Validate.columnsExist(schema,
-      config.options.get("textColumn").toSeq, transformType)
+  override val columnOptions = Seq("textColumn")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "textColumn")
     try LineDedup.lineSignatures(input, config.options("textColumn"),

@@ -334,11 +334,7 @@ object SpanDedup {
  */
 object SpanDedupTransform extends Transform {
   val transformType = "dedup_spans"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    graft.operators.Validate.columnsExist(schema,
-      config.options.get("idColumn").toSeq ++ config.options.get("textColumn").toSeq,
-      transformType)
+  override val columnOptions = Seq("idColumn", "textColumn")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "idColumn", "textColumn")
     val id = config.options("idColumn"); val text = config.options("textColumn")
@@ -415,10 +411,7 @@ object SpanDedupTransform extends Transform {
   * re-scanning history's text. Options: textColumn required; n (8). */
 object GramSignaturesTransform extends Transform {
   val transformType = "gram_signatures"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    graft.operators.Validate.columnsExist(schema,
-      config.options.get("textColumn").toSeq, transformType)
+  override val columnOptions = Seq("textColumn")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "textColumn")
     try SpanDedup.gramSignatures(input, config.options("textColumn"),

@@ -50,11 +50,7 @@ import graft.config.TransformConfig
  */
 object AnnTopKTransform extends Transform {
   val transformType = "ann_topk"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      config.options.get("idColumn").toSeq ++ config.options.get("vecColumn").toSeq,
-      transformType)
+  override val columnOptions = Seq("idColumn", "vecColumn")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "idColumn", "vecColumn", "queriesView")

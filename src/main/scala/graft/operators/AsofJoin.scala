@@ -168,12 +168,7 @@ object AsofJoin {
  */
 object AsofJoinTransform extends Transform {
   val transformType = "join_asof"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      config.options.get("on").toSeq.flatMap(ExprUtils.parseColumns) ++
-        config.options.get("leftTime").toSeq,
-      transformType)
+  override val columnOptions = Seq("on", "leftTime")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "rightDataset", "on", "leftTime")
     val keys = ExprUtils.parseColumns(config.options("on"))

@@ -71,11 +71,7 @@ object AssignIds {
  */
 object AssignIdsTransform extends Transform {
   val transformType = "assign_ids"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      config.options.get("orderBy").toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty),
-      "assign_ids")
+  override val columnOptions = Seq("orderBy")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "orderBy")

@@ -82,9 +82,7 @@ object Blocklist {
  */
 object BlocklistTransform extends Transform {
   val transformType = "blocklist"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema, config.options.get("textColumn").toSeq, "blocklist")
+  override val columnOptions = Seq("textColumn")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "textColumn", "terms")

@@ -108,9 +108,7 @@ object BpeTransforms {
  */
 object BpeTrainTransform extends Transform {
   val transformType = "bpe_train"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema, config.options.get("textColumn").toSeq, transformType)
+  override val columnOptions = Seq("textColumn")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "textColumn")
@@ -143,9 +141,7 @@ object BpeTrainTransform extends Transform {
  */
 object BpeTokenizeTransform extends Transform {
   val transformType = "bpe_tokenize"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema, config.options.get("textColumn").toSeq, transformType)
+  override val columnOptions = Seq("textColumn")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "textColumn", "mergesView")
@@ -192,9 +188,7 @@ object BpeTokenizeTransform extends Transform {
  */
 object BpeDetokenizeTransform extends Transform {
   val transformType = "bpe_detokenize"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema, config.options.get("idsColumn").toSeq, transformType)
+  override val columnOptions = Seq("idsColumn")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "idsColumn", "mergesView")
@@ -240,9 +234,7 @@ object BpeVocabTransform extends Transform {
  */
 object BpeTokenCountTransform extends Transform {
   val transformType = "bpe_token_count"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema, config.options.get("textColumn").toSeq, transformType)
+  override val columnOptions = Seq("textColumn")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "textColumn", "mergesView")

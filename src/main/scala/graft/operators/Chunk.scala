@@ -52,11 +52,7 @@ import graft.config.{ExprUtils, TransformConfig}
  */
 object ChunkTransform extends Transform {
   val transformType = "chunk"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      (config.options.get("idColumn").toSeq ++ config.options.get("textColumn").toSeq ++
-        config.options.get("keep").map(ExprUtils.parseColumns).getOrElse(Nil)), "chunk")
+  override val columnOptions = Seq("idColumn", "textColumn", "keep")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "idColumn", "textColumn", "size")
     val id = config.options("idColumn")

@@ -43,11 +43,7 @@ import graft.config.TransformConfig
  */
 object ClusterEmbeddingsTransform extends Transform {
   val transformType = "cluster_embeddings"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      config.options.get("idColumn").toSeq ++ config.options.get("vecColumn").toSeq,
-      "cluster_embeddings")
+  override val columnOptions = Seq("idColumn", "vecColumn")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     import graft.functions.expressions.ArgTopCentroids
@@ -108,11 +104,7 @@ object ClusterEmbeddingsTransform extends Transform {
  */
 object CodebookTransform extends Transform {
   val transformType = "codebook"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      config.options.get("idColumn").toSeq ++ config.options.get("vecColumn").toSeq,
-      "codebook")
+  override val columnOptions = Seq("idColumn", "vecColumn")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "idColumn", "vecColumn")
@@ -135,11 +127,7 @@ object CodebookTransform extends Transform {
   * (8), `nCentroids` (16; 256 = byte-code PQ), `kmeansIters` (3). */
 object PqCodebookTransform extends Transform {
   val transformType = "pq_codebook"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      config.options.get("idColumn").toSeq ++ config.options.get("vecColumn").toSeq,
-      transformType)
+  override val columnOptions = Seq("idColumn", "vecColumn")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "idColumn", "vecColumn")
@@ -171,11 +159,7 @@ object PqCodebookTransform extends Transform {
   * `codebookView` required. */
 object PqEncodeTransform extends Transform {
   val transformType = "pq_encode"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      config.options.get("idColumn").toSeq ++ config.options.get("vecColumn").toSeq,
-      transformType)
+  override val columnOptions = Seq("idColumn", "vecColumn")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "idColumn", "vecColumn", "codebookView")
@@ -196,11 +180,7 @@ object PqEncodeTransform extends Transform {
   * `idColumn`/`vecColumn`/`codebookView` required. */
 object IvfPqEncodeTransform extends Transform {
   val transformType = "ivfpq_encode"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      config.options.get("idColumn").toSeq ++ config.options.get("vecColumn").toSeq,
-      transformType)
+  override val columnOptions = Seq("idColumn", "vecColumn")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "idColumn", "vecColumn", "codebookView")
@@ -221,11 +201,7 @@ object IvfPqEncodeTransform extends Transform {
   * `nLists` (16), `m` (8), `nCentroids` (16), `kmeansIters` (3). */
 object IvfPqCodebookTransform extends Transform {
   val transformType = "ivfpq_codebook"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      config.options.get("idColumn").toSeq ++ config.options.get("vecColumn").toSeq,
-      transformType)
+  override val columnOptions = Seq("idColumn", "vecColumn")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "idColumn", "vecColumn")

@@ -77,9 +77,7 @@ object CompressionRatio {
  */
 object CompressionRatioTransform extends Transform {
   val transformType = "compression_ratio"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema, config.options.get("textColumn").toSeq, "compression_ratio")
+  override val columnOptions = Seq("textColumn")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "textColumn")

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 import graft.api.{Transform, RunContext, ConfigException, TransformException}
 import graft.config.{TransformConfig, ExprUtils}
@@ -72,6 +71,7 @@ object MapTransform extends Transform {
  */
 object AggregateTransform extends Transform {
   val transformType = "aggregation"
+  override val columnOptions = Seq("groupBy")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "aggregations")
     val aggs = ExprUtils.parseAggregations(config.options("aggregations"))
@@ -88,11 +88,6 @@ object AggregateTransform extends Transform {
     }
     grouped.agg(aggs.head, aggs.tail: _*)
   }
-  override def validate(config: TransformConfig, schema: StructType): List[String] = {
-    val missing = config.options.get("groupBy").map(ExprUtils.parseColumns).getOrElse(Nil)
-      .filterNot(c => schema.fieldNames.map(_.toLowerCase).contains(c.toLowerCase))
-    missing.map(c => s"groupBy column '$c' not found in input schema")
-  }
 }
 
 /**
@@ -106,6 +101,7 @@ object AggregateTransform extends Transform {
  */
 object JoinTransform extends Transform {
   val transformType = "join"
+  override val columnOptions = Seq("joinKeys", "leftKey")
   private val types = Set("inner", "left", "right", "full", "left_outer", "right_outer",
     "full_outer", "leftsemi", "left_semi", "leftanti", "left_anti", "cross")
 

@@ -140,11 +140,7 @@ object Drift {
  */
 object DriftTransform extends Transform {
   val transformType = "drift"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      config.options.get("columns").toSeq
-        .flatMap(graft.config.ExprUtils.parseColumns), "drift")
+  override val columnOptions = Seq("columns")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "columns", "referenceView")

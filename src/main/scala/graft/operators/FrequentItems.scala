@@ -40,8 +40,9 @@ import graft.config.{ExprUtils, TransformConfig}
  * default 10); `maxItemsTracked` sketch capacity (default 10000, must be
  * >= k); `groupBy` optional.
  */
-object FrequentItemsTransform extends Transform {
+object FrequentItemsTransform extends SketchColumns {
   val transformType = "frequent_items"
+  override protected val rawModes = Set("build", "topk")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "columns")

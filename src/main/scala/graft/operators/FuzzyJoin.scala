@@ -87,9 +87,7 @@ object FuzzyJoin {
  */
 object FuzzyJoinTransform extends Transform {
   val transformType = "join_fuzzy"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema, config.options.get("leftColumn").toSeq, "join_fuzzy")
+  override val columnOptions = Seq("leftColumn")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "rightDataset", "leftColumn", "rightColumn", "maxDistance")

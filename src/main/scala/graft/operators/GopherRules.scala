@@ -168,9 +168,7 @@ object GopherRules {
  */
 object GopherRulesTransform extends Transform {
   val transformType = "quality_rules"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema, config.options.get("textColumn").toSeq, "quality_rules")
+  override val columnOptions = Seq("textColumn")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "textColumn")

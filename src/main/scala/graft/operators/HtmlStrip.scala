@@ -77,12 +77,7 @@ object HtmlStripTransform extends Transform {
     if (doTrim) regexp_replace(collapsed, "^\\s+|\\s+$", "") else collapsed
   }
 
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      config.options.get("columns").toSeq.flatMap(_.split(",")).map(_.trim)
-        .filter(_.nonEmpty),
-      transformType)
+  override val columnOptions = Seq("columns")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "columns")

@@ -29,11 +29,7 @@ import graft.text.ChargramLm
  */
 object ChargramLmTransform extends Transform {
   val transformType = "chargram_lm"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      config.options.get("labelColumn").toSeq ++ config.options.get("textColumn").toSeq,
-      transformType)
+  override val columnOptions = Seq("labelColumn", "textColumn")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "labelColumn", "textColumn")
     try ChargramLm.modelFrame(input, config.options("labelColumn"),
@@ -115,10 +111,7 @@ private[operators] object LmDrift {
  */
 object LangClassifyTransform extends Transform {
   val transformType = "lang_classify"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema, config.options.get("textColumn").toSeq,
-      transformType)
+  override val columnOptions = Seq("textColumn")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "textColumn", "modelView")
     // scoring is per-row — an id plays no role; accepting one silently

@@ -131,12 +131,7 @@ object Merge {
 object MergeTransform extends Transform {
   val transformType = "merge"
 
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      config.options.get("keyColumns").toSeq
-        .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty),
-      "merge")
+  override val columnOptions = Seq("keyColumns")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "rightDataset", "keyColumns")

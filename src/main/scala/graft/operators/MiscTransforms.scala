@@ -142,6 +142,7 @@ object UnionTransform extends Transform {
  */
 object DedupTransform extends Transform {
   val transformType = "dedup"
+  override val columnOptions = Seq("columns")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     (config.options.get("columns").map(ExprUtils.parseColumns), config.options.get("orderBy")) match {
       case (None, _) => input.distinct()
@@ -175,15 +176,14 @@ object DedupTransform extends Transform {
  */
 object FillNaTransform extends Transform {
   val transformType = "fillna"
+  override val columnOptions = Seq("columns")
+  // `values` is a `col:literal` list: its columns are the keys
   override def validate(config: TransformConfig,
                         schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
+    super.validate(config, schema) ++ missingColumns(schema, "values",
       config.options.get("values").toSeq
         .flatMap(v => graft.config.ExprUtils.splitTopLevel(v))
-        .map(_.split(":", 2)(0).trim).filter(_.nonEmpty) ++
-        config.options.get("columns").toSeq
-          .flatMap(graft.config.ExprUtils.parseColumns),
-      "fillna")
+        .map(_.split(":", 2)(0).trim).filter(_.nonEmpty))
 
   /** Literal coercion is driven by the TARGET COLUMN's type, not the
     * literal's shape: "00501" filling a string column stays the string

@@ -40,6 +40,7 @@ import graft.multimodal.Multimodal
  */
 object MultimodalTransform extends Transform {
   val transformType = "multimodal"
+  override val columnOptions = Seq("idColumn", "bytesColumn", "sourceUriColumn")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "operation", "idColumn", "bytesColumn")

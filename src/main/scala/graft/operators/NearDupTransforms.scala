@@ -35,16 +35,7 @@ abstract class NearDupTransform extends Transform {
     * the text matchers, vecColumn for the embedding matcher. */
   protected def contentOption: String = "textColumn"
 
-  // a typo'd column should fail at plan-time validation with a guided
-  // message, like every graft.dedup transform — not at apply with a raw
-  // UNRESOLVED_COLUMN AnalysisException
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      config.options.get("idColumn").toSeq ++
-        config.options.get(contentOption).toSeq ++
-        config.options.get("survivorColumn").toSeq,
-      transformType)
+  override def columnOptions: Seq[String] = Seq("idColumn", contentOption, "survivorColumn")
 
   def apply(input0: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "idColumn", contentOption)
@@ -68,8 +59,6 @@ abstract class NearDupTransform extends Transform {
     // frame — the corpus itself never reshuffles.
     val survivorKey: Option[Column => Column] =
       config.options.get("survivorColumn").map { sc =>
-        if (!input.columns.contains(sc)) throw new ConfigException(
-          s"$transformType: survivorColumn '$sc' not found in input")
         val sign = config.options.getOrElse("survivorOrder", "max") match {
           case "max" => -1.0
           case "min" => 1.0
@@ -229,11 +218,7 @@ object MinhashDedupTransform extends NearDupTransform {
   * rowsPerBand (4), shingleSize (3). Zero-shuffle projection. */
 object MinhashSignaturesTransform extends Transform {
   val transformType = "minhash_signatures"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      config.options.get("idColumn").toSeq ++ config.options.get("textColumn").toSeq,
-      transformType)
+  override val columnOptions = Seq("idColumn", "textColumn")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "idColumn", "textColumn")
     Dedup.minhashSignatures(input,
@@ -523,12 +508,7 @@ object VideoDedupTransform extends NearDupTransform {
   * output REPLACES the frame. */
 object MediaSignaturesTransform extends Transform {
   val transformType = "media_signatures"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      config.options.get("idColumn").toSeq ++
-        config.options.get("bytesColumn").toSeq,
-      transformType)
+  override val columnOptions = Seq("idColumn", "bytesColumn")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "idColumn", "bytesColumn")
     val modality = config.options.getOrElse("modality", "image")
@@ -689,12 +669,7 @@ object SemanticDedupTransform extends NearDupTransform {
  */
 object EmbeddingDecontaminateTransform extends Transform {
   val transformType = "decontaminate_embedding"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      config.options.get("idColumn").toSeq ++
-        config.options.get("vecColumn").toSeq,
-      transformType)
+  override val columnOptions = Seq("idColumn", "vecColumn")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "idColumn", "vecColumn", "benchDataset")
     val id = config.options("idColumn")
@@ -728,10 +703,7 @@ object EmbeddingDecontaminateTransform extends Transform {
  */
 object DedupAgainstTransform extends Transform {
   val transformType = "dedup_against"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      config.options.get("textColumn").toSeq, transformType)
+  override val columnOptions = Seq("textColumn")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "textColumn", "referenceView")
     val text = config.options("textColumn")
@@ -758,12 +730,7 @@ object DedupAgainstTransform extends Transform {
   * (default = textColumn), shingleSize (default 3). */
 object DecontaminateTransform extends Transform {
   val transformType = "decontaminate"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      config.options.get("idColumn").toSeq ++
-        config.options.get("textColumn").toSeq,
-      transformType)
+  override val columnOptions = Seq("idColumn", "textColumn")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "idColumn", "textColumn", "benchDataset")
     val id = config.options("idColumn")

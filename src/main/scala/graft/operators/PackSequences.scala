@@ -186,13 +186,7 @@ object PackSequences {
  */
 object PackSequencesTransform extends Transform {
   val transformType = "pack_sequences"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      Seq("idColumn", "weightColumn", "textColumn").flatMap(config.options.get) ++
-        config.options.get("groupBy").toSeq
-          .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty),
-      "pack_sequences")
+  override val columnOptions = Seq("idColumn", "weightColumn", "textColumn", "groupBy")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "idColumn")

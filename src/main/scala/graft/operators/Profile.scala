@@ -167,6 +167,7 @@ object Profile {
  */
 object ProfileTransform extends Transform {
   val transformType = "profile"
+  override val columnOptions = Seq("columns", "groupBy")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "columns")
     val cols = graft.config.ExprUtils.parseColumns(config.options("columns"))
@@ -189,6 +190,7 @@ object ProfileTransform extends Transform {
  */
 object TfidfTransform extends Transform {
   val transformType = "tfidf"
+  override val columnOptions = Seq("idColumn", "textColumn")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "idColumn", "textColumn")
     val id = config.options("idColumn"); val text = config.options("textColumn")

@@ -47,12 +47,7 @@ import graft.config.{ExprUtils, TransformConfig}
 object QuantileFilterTransform extends Transform {
   val transformType = "quantile_filter"
 
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      config.options.get("column").toList ++
-        config.options.get("groupBy").map(ExprUtils.parseColumns).getOrElse(Nil),
-      "quantile_filter")
+  override val columnOptions = Seq("column", "groupBy")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "column")

@@ -112,7 +112,7 @@ final class KllMergeAggregator(k: Int) extends Aggregator[KllBytesIn, KllHolder,
  * "0.25,0.5,0.75", fractions in (0,1]); `sketchK` (200, exactness/error
  * knob); `groupBy` optional.
  */
-object QuantileSketchTransform extends Transform {
+object QuantileSketchTransform extends SketchColumns {
   val transformType = "quantile_sketch"
 
   private def pLabel(p: Double): String = {

@@ -121,12 +121,7 @@ object RangeJoin {
  */
 object RangeJoinTransform extends Transform {
   val transformType = "join_range"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      config.options.get("on").toSeq.flatMap(ExprUtils.parseColumns) ++
-        config.options.get("point").toSeq,
-      transformType)
+  override val columnOptions = Seq("on", "point")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "rightDataset", "point", "lo", "hi", "binWidth")
     val keys = config.options.get("on")

@@ -40,11 +40,7 @@ import graft.config.{ExprUtils, TransformConfig}
  */
 object ResampleTransform extends Transform {
   val transformType = "resample"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      config.options.get("timeColumn").toSeq ++
-        config.options.get("groupBy").map(ExprUtils.parseColumns).getOrElse(Nil), "resample")
+  override val columnOptions = Seq("timeColumn", "groupBy")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "timeColumn", "interval", "aggregations")
     val ts = config.options("timeColumn")

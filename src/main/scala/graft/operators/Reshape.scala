@@ -36,11 +36,7 @@ import graft.config.{ExprUtils, TransformConfig}
  */
 object PivotTransform extends Transform {
   val transformType = "pivot"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      config.options.get("groupBy").map(ExprUtils.parseColumns).getOrElse(Nil) ++
-        config.options.get("pivotColumn").toSeq, "pivot")
+  override val columnOptions = Seq("groupBy", "pivotColumn")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "groupBy", "pivotColumn", "values", "aggregations")
     val groups = ExprUtils.parseColumns(config.options("groupBy"))
@@ -68,11 +64,7 @@ object PivotTransform extends Transform {
  */
 object UnpivotTransform extends Transform {
   val transformType = "unpivot"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      (config.options.get("ids").toSeq ++ config.options.get("cols").toSeq)
-        .flatMap(ExprUtils.parseColumns), "unpivot")
+  override val columnOptions = Seq("ids", "cols")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "ids", "cols")
     val ids = ExprUtils.parseColumns(config.options("ids")).map(col)
@@ -133,9 +125,7 @@ object SetOpTransform extends Transform {
  */
 object ExplodeTransform extends Transform {
   val transformType = "explode"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema, config.options.get("column").toSeq, "explode")
+  override val columnOptions = Seq("column")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "column")
     val c = config.options("column")
@@ -171,13 +161,4 @@ object ExplodeTransform extends Transform {
         input.select(others :+ gen.as(pos +: outNames): _*)
     }
   }
-}
-
-/** Shared schema-validation helper for transform `validate` overrides. */
-private[graft] object Validate {
-  def columnsExist(schema: org.apache.spark.sql.types.StructType,
-                   cols: Seq[String], what: String): List[String] =
-    cols.filterNot(c => schema.fieldNames.map(_.toLowerCase)
-        .contains(c.toLowerCase))
-      .map(c => s"$what column '$c' not found in input schema").toList
 }

@@ -37,10 +37,7 @@ import graft.config.{ExprUtils, TransformConfig}
  */
 object ScaleTransform extends Transform {
   val transformType = "scale"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      config.options.get("columns").map(ExprUtils.parseColumns).getOrElse(Nil), "scale")
+  override val columnOptions = Seq("columns")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "columns")
     val cols = ExprUtils.parseColumns(config.options("columns"))

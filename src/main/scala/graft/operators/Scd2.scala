@@ -84,12 +84,7 @@ object Scd2 {
  */
 object Scd2Transform extends Transform {
   val transformType = "scd2"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      config.options.get("keyColumns").toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty) ++
-        config.options.get("timeColumn").toSeq,
-      "scd2")
+  override val columnOptions = Seq("keyColumns", "timeColumn", "compareColumns")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "keyColumns", "timeColumn")

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.api.{RunContext, Transform}
 import graft.config.{Options, TransformConfig}
@@ -66,11 +65,7 @@ object Shards {
  */
 object ShardTransform extends Transform {
   val transformType = "shard"
-  override def validate(config: TransformConfig,
-                        schema: StructType): List[String] =
-    Validate.columnsExist(schema,
-      config.options.get("idColumn").toSeq ++ config.options.get("weightColumn").toSeq,
-      transformType)
+  override val columnOptions = Seq("idColumn", "weightColumn")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "idColumn"); required(config, "weightColumn"); required(config, "budget")
     // surface a library require as the engine's ConfigException, not a
@@ -102,6 +97,7 @@ object ShardTransform extends Transform {
  */
 object RedactTransform extends Transform {
   val transformType = "redact"
+  override val columnOptions = Seq("columns")
   private[operators] val builtins: Map[String, (String, String)] = Map(
     "email" -> ("[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}" -> "<EMAIL>"),
     // boundary-anchored (RE2-safe, like ipv4) so a longer digit run — a
@@ -157,6 +153,7 @@ object RedactTransform extends Transform {
  */
 object SampleTransform extends Transform {
   val transformType = "sample"
+  override val columnOptions = Seq("on", "column", "weightColumn", "probColumn", "groupBy")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     // `column` is an alias for `on`: bare `on` is a YAML 1.1 boolean, so
     // unquoted YAML configs silently lose the key
@@ -250,19 +247,7 @@ object SampleTransform extends Transform {
     required(config, "k")
     val k = intOption(config, "k", missing(config, "k"))
     if (k <= 0) throw new graft.api.ConfigException(s"sample: k must be positive, got $k")
-    val wName = config.options("weightColumn")
-    if (!input.columns.exists(_.equalsIgnoreCase(wName)))
-      throw new graft.api.ConfigException(
-        s"sample: weightColumn '$wName' not found in input")
-    // guided type check: a string/struct weight would otherwise die as an
-    // unguided ANSI cast error mid-job (or, ANSI off, silently null every
-    // race key and emit an empty sample)
-    val wType = input.schema(
-      input.columns.find(_.equalsIgnoreCase(wName)).get).dataType
-    if (!wType.isInstanceOf[org.apache.spark.sql.types.NumericType])
-      throw new graft.api.ConfigException(
-        s"sample: weightColumn '$wName' must be numeric, got ${wType.typeName}")
-    val w = col(wName).cast("double")
+    val w = numericWeight(input, transformType, config.options("weightColumn"))
     val seed = longOption(config, "seed", 0L)
     // engine-portable uniform in (0,1): the md5 hex prefix parsed as an
     // integer is exact at 52 bits, and (v + 0.5)/2^52 is exact binary
@@ -280,6 +265,21 @@ object SampleTransform extends Transform {
     // the aggregator keeps HIGHEST first (ties: id asc) → negate so the
     // smallest race key wins, ties deterministically toward smaller ids
     BoundedTopK.semiJoinTopK(input, groups, negate(raceKey), keyName, k)
+  }
+
+  /** The `weightColumn` of sample's race and mix's token sizes, as a
+    * double. A string/struct weight would otherwise die as an unguided
+    * ANSI cast error mid-job (or, ANSI off, silently null every weight);
+    * a call that skipped `validate` gets the same guided error for an
+    * absent column. */
+  private[operators] def numericWeight(input: DataFrame, transformType: String,
+                                       name: String): Column = {
+    val field = input.schema.fields.find(_.name.equalsIgnoreCase(name))
+    if (!field.exists(_.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]))
+      throw new graft.api.ConfigException(
+        s"$transformType: weightColumn '$name' must name a numeric input column, " +
+          s"got ${field.fold("none")(_.dataType.typeName)}")
+    col(field.get.name).cast("double")
   }
 
   /** The deterministic bucket shared by sample/mix: pmod(xxhash64(key,
@@ -428,6 +428,7 @@ object SampleTransform extends Transform {
  */
 object MixTransform extends graft.api.Transform {
   val transformType = "mix"
+  override val columnOptions = Seq("on", "column", "groupBy", "weightColumn")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     val keyName = config.options.get("on").orElse(config.options.get("column"))
       .getOrElse { required(config, "on"); "" }
@@ -482,15 +483,7 @@ object MixTransform extends graft.api.Transform {
         val sizeExpr = config.options.get("weightColumn") match {
           case None => count(lit(1)).cast("double")
           case Some(w) =>
-            val wcol = input.columns.find(_.equalsIgnoreCase(w)).getOrElse(
-              throw new graft.api.ConfigException(
-                s"mix: weightColumn '$w' not found in input"))
-            if (!input.schema(wcol).dataType
-                .isInstanceOf[org.apache.spark.sql.types.NumericType])
-              throw new graft.api.ConfigException(
-                s"mix: weightColumn '$w' must be numeric, got " +
-                  input.schema(wcol).dataType.typeName)
-            coalesce(sum(col(wcol).cast("double")), lit(0.0))
+            coalesce(sum(SampleTransform.numericWeight(input, transformType, w)), lit(0.0))
         }
         val rawCounts = input.where(col(group).isNotNull)
           .groupBy(col(group).cast("string").as("__g"))
@@ -621,6 +614,7 @@ object Shuffle {
  */
 object ShuffleTransform extends Transform {
   val transformType = "shuffle"
+  override val columnOptions = Seq("idColumn")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "idColumn")
     Shuffle.deterministicShuffle(

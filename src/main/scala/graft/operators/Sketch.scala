@@ -6,6 +6,20 @@ import org.apache.spark.sql.functions._
 import graft.api.{ConfigException, RunContext, Transform}
 import graft.config.{ExprUtils, TransformConfig}
 
+/** The column options of the mergeable-sketch transforms (`sketch`,
+  * `quantile_sketch`, `frequent_items`): `columns` names input columns
+  * only in the modes that read raw values; the others read the
+  * `<column>_<state>` columns a build step wrote. */
+private[operators] trait SketchColumns extends Transform {
+  protected def rawModes: Set[String] = Set("build")
+  override def columnOptions: Seq[String] = Seq("columns", "groupBy")
+  override def validate(config: TransformConfig,
+                        schema: org.apache.spark.sql.types.StructType): List[String] =
+    super.validate(
+      if (rawModes(config.options.getOrElse("mode", "build"))) config
+      else config.copy(options = config.options - "columns"), schema)
+}
+
 /**
  * sketch — mergeable distinct-count sketches (Apache DataSketches HLL via
  * Spark's `hll_sketch_agg`/`hll_union_agg`/`hll_sketch_estimate`): the
@@ -30,7 +44,7 @@ import graft.config.{ExprUtils, TransformConfig}
  *   options: {columns: "user_id,session_id", groupBy: ingest_date}
  * }}}
  */
-object SketchTransform extends Transform {
+object SketchTransform extends SketchColumns {
   val transformType = "sketch"
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "columns")

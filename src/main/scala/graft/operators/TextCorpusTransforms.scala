@@ -28,9 +28,7 @@ import graft.functions.TextFunctions
  */
 object VocabTopKTransform extends Transform {
   val transformType = "vocab_topk"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema, config.options.get("textColumn").toSeq, "vocab_topk")
+  override val columnOptions = Seq("textColumn")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "textColumn", "k")
     val k = intOption(config, "k", missing(config, "k"))
@@ -54,10 +52,7 @@ object VocabTopKTransform extends Transform {
  */
 object EntropyTransform extends Transform {
   val transformType = "entropy"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      config.options.get("idColumn").toSeq ++ config.options.get("textColumn").toSeq, "entropy")
+  override val columnOptions = Seq("idColumn", "textColumn")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "idColumn", "textColumn")
     TextFunctions.tokenEntropy(input, config.options("idColumn"), config.options("textColumn"))
@@ -102,11 +97,7 @@ object EntropyTransform extends Transform {
  */
 object NormalizeTextTransform extends Transform {
   val transformType = "normalize_text"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      config.options.get("columns").toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty),
-      "normalize_text")
+  override val columnOptions = Seq("columns")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     import org.apache.spark.sql.functions._
     required(config, "columns")
@@ -144,9 +135,7 @@ object NormalizeTextTransform extends Transform {
  */
 object CollocationsTransform extends Transform {
   val transformType = "collocations"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema, config.options.get("textColumn").toSeq, "collocations")
+  override val columnOptions = Seq("textColumn")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "textColumn", "k")
     val k = intOption(config, "k", missing(config, "k"))
@@ -177,12 +166,14 @@ object CollocationsTransform extends Transform {
  */
 object ChargramNllTransform extends Transform {
   val transformType = "chargram_nll"
+  override val columnOptions = Seq("idColumn", "textColumn")
+  // with a modelView apply refuses idColumn as having no effect: that
+  // message, not a missing-column one, is the one to report
   override def validate(config: TransformConfig,
                         schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      (if (config.options.contains("modelView")) Nil
-       else config.options.get("idColumn").toSeq) ++
-        config.options.get("textColumn").toSeq, "chargram_nll")
+    super.validate(
+      if (config.options.contains("modelView")) config.copy(options = config.options - "idColumn")
+      else config, schema)
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     import org.apache.spark.sql.functions._
     required(config, "textColumn")
@@ -267,11 +258,7 @@ object ChargramNllTransform extends Transform {
  */
 object ImportanceScoreTransform extends Transform {
   val transformType = "importance_score"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      config.options.get("idColumn").toSeq ++ config.options.get("textColumn").toSeq,
-      transformType)
+  override val columnOptions = Seq("idColumn", "textColumn")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     import org.apache.spark.sql.functions._
     required(config, "idColumn", "textColumn")
@@ -345,9 +332,7 @@ object ImportanceScoreTransform extends Transform {
  */
 object UrlNormalizeTransform extends Transform {
   val transformType = "url_normalize"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema, config.options.get("column").toSeq, "url_normalize")
+  override val columnOptions = Seq("column")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     import org.apache.spark.sql.functions.col
     import graft.functions.UrlFunctions

@@ -31,9 +31,7 @@ import graft.config.TransformConfig
  */
 object TextSignalsTransform extends Transform {
   val transformType = "text_signals"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema, config.options.get("textColumn").toSeq, "text_signals")
+  override val columnOptions = Seq("textColumn")
 
   import graft.functions.TextFunctions._
   /** signal name → (output column, builder). */

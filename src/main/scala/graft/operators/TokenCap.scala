@@ -112,11 +112,7 @@ object TokenCap {
  */
 object TokenCapTransform extends Transform {
   val transformType = "token_cap"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      Seq("idColumn", "weightColumn", "textColumn", "groupBy")
-        .flatMap(config.options.get), "token_cap")
+  override val columnOptions = Seq("idColumn", "weightColumn", "textColumn", "groupBy")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "idColumn", "budget")

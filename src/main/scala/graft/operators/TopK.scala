@@ -33,11 +33,7 @@ import graft.config.{ExprUtils, TransformConfig}
  */
 object TopKTransform extends Transform {
   val transformType = "topk"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      config.options.get("scoreColumn").toSeq ++ config.options.get("idColumn").toSeq ++
-        config.options.get("groupBy").map(ExprUtils.parseColumns).getOrElse(Nil), "topk")
+  override val columnOptions = Seq("scoreColumn", "idColumn", "groupBy")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "scoreColumn", "k", "idColumn")
     val k = intOption(config, "k", missing(config, "k"))

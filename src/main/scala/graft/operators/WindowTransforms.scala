@@ -20,6 +20,7 @@ import graft.config.{ExprUtils, Options, TransformConfig}
  */
 object WindowTransform extends Transform {
   val transformType = "windowing"
+  override val columnOptions = Seq("timeColumn", "groupBy")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "timeColumn", "aggregations")
@@ -71,6 +72,7 @@ object WindowTransform extends Transform {
  */
 object WindowRankTransform extends Transform {
   val transformType = "window_rank"
+  override val columnOptions = Seq("partitionBy")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "orderBy")
     val partCols = config.options.get("partitionBy").map(ExprUtils.parseColumns).getOrElse(Nil)
@@ -124,6 +126,7 @@ object WindowRankTransform extends Transform {
  */
 object WindowAggTransform extends Transform {
   val transformType = "window_agg"
+  override val columnOptions = Seq("partitionBy")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "orderBy", "aggregations")
     val partCols = config.options.get("partitionBy").map(ExprUtils.parseColumns).getOrElse(Nil)

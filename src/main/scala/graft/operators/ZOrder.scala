@@ -34,10 +34,7 @@ import graft.config.{ExprUtils, Options, TransformConfig}
  */
 object ZOrderTransform extends Transform {
   val transformType = "zorder"
-  override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    Validate.columnsExist(schema,
-      config.options.get("columns").map(ExprUtils.parseColumns).getOrElse(Nil), "zorder")
+  override val columnOptions = Seq("columns")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     required(config, "columns", "lo", "hi")

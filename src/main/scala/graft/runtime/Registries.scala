@@ -17,94 +17,43 @@ object Registries {
     "postgres"                 -> new JdbcSource("postgres", "org.postgresql.Driver"),
     "mysql"                    -> new JdbcSource("mysql", "com.mysql.cj.jdbc.Driver")))
 
-  def transforms(): Registry[Transform] = new Registry[Transform]("transform", Map(
-    FilterTransform.transformType     -> FilterTransform,
-    MapTransform.transformType        -> MapTransform,
-    AggregateTransform.transformType  -> AggregateTransform,
-    JoinTransform.transformType       -> JoinTransform,
-    WindowTransform.transformType     -> WindowTransform,
-    WindowRankTransform.transformType -> WindowRankTransform,
-    WindowAggTransform.transformType  -> WindowAggTransform,
-    ResampleTransform.transformType   -> ResampleTransform,
-    SketchTransform.transformType     -> SketchTransform,
-    ScaleTransform.transformType      -> ScaleTransform,
-    TopKTransform.transformType       -> TopKTransform,
-    ZOrderTransform.transformType     -> ZOrderTransform,
-    SortTransform.transformType       -> SortTransform,
-    MaterializeTransform.transformType -> MaterializeTransform,
-    LimitTransform.transformType      -> LimitTransform,
-    UnionTransform.transformType      -> UnionTransform,
-    DedupTransform.transformType      -> DedupTransform,
-    MinhashDedupTransform.transformType -> MinhashDedupTransform,
-    MinhashSignaturesTransform.transformType -> MinhashSignaturesTransform,
-    SimhashDedupTransform.transformType -> SimhashDedupTransform,
-    ImageDedupTransform.transformType -> ImageDedupTransform,
-    MediaSignaturesTransform.transformType -> MediaSignaturesTransform,
-    AudioDedupTransform.transformType -> AudioDedupTransform,
-    VideoDedupTransform.transformType -> VideoDedupTransform,
-    EmbeddingDedupTransform.transformType -> EmbeddingDedupTransform,
-    SemanticDedupTransform.transformType  -> SemanticDedupTransform,
-    QuantileFilterTransform.transformType -> QuantileFilterTransform,
-    FrequentItemsTransform.transformType  -> FrequentItemsTransform,
-    QuantileSketchTransform.transformType -> QuantileSketchTransform,
-    graft.dedup.LineDedupTransform.transformType -> graft.dedup.LineDedupTransform,
-    graft.dedup.LineSignaturesTransform.transformType -> graft.dedup.LineSignaturesTransform,
-    graft.dedup.SpanDedupTransform.transformType -> graft.dedup.SpanDedupTransform,
-    graft.dedup.GramSignaturesTransform.transformType -> graft.dedup.GramSignaturesTransform,
-    DecontaminateTransform.transformType  -> DecontaminateTransform,
-    EmbeddingDecontaminateTransform.transformType -> EmbeddingDecontaminateTransform,
-    AsofJoinTransform.transformType   -> AsofJoinTransform,
-    ProfileTransform.transformType    -> ProfileTransform,
-    RangeJoinTransform.transformType  -> RangeJoinTransform,
-    TfidfTransform.transformType      -> TfidfTransform,
-    MultimodalTransform.transformType -> MultimodalTransform,
-    TextSignalsTransform.transformType -> TextSignalsTransform,
-    GopherRulesTransform.transformType -> GopherRulesTransform,
-    PivotTransform.transformType      -> PivotTransform,
-    UnpivotTransform.transformType    -> UnpivotTransform,
-    SetOpTransform.transformType      -> SetOpTransform,
-    ChunkTransform.transformType      -> ChunkTransform,
-    ShardTransform.transformType      -> ShardTransform,
-    PackSequencesTransform.transformType -> PackSequencesTransform,
-    DriftTransform.transformType      -> DriftTransform,
-    ShuffleTransform.transformType    -> ShuffleTransform,
-    SampleTransform.transformType     -> SampleTransform,
-    MixTransform.transformType        -> MixTransform,
-    TokenCapTransform.transformType   -> TokenCapTransform,
-    BpeTrainTransform.transformType   -> BpeTrainTransform,
-    BpeTokenizeTransform.transformType -> BpeTokenizeTransform,
-    BpeTokenCountTransform.transformType -> BpeTokenCountTransform,
-    BpeVocabTransform.transformType   -> BpeVocabTransform,
-    BpeDetokenizeTransform.transformType -> BpeDetokenizeTransform,
-    RedactTransform.transformType     -> RedactTransform,
-    VocabTopKTransform.transformType  -> VocabTopKTransform,
-    NormalizeTextTransform.transformType -> NormalizeTextTransform,
-    HtmlStripTransform.transformType   -> HtmlStripTransform,
-    UrlNormalizeTransform.transformType  -> UrlNormalizeTransform,
-    BlocklistTransform.transformType     -> BlocklistTransform,
-    AssignIdsTransform.transformType     -> AssignIdsTransform,
-    CompressionRatioTransform.transformType -> CompressionRatioTransform,
-    ClusterEmbeddingsTransform.transformType -> ClusterEmbeddingsTransform,
-    CodebookTransform.transformType   -> CodebookTransform,
-    PqCodebookTransform.transformType -> PqCodebookTransform,
-    IvfPqCodebookTransform.transformType -> IvfPqCodebookTransform,
-    PqEncodeTransform.transformType -> PqEncodeTransform,
-    IvfPqEncodeTransform.transformType -> IvfPqEncodeTransform,
-    AnnTopKTransform.transformType    -> AnnTopKTransform,
-    DedupAgainstTransform.transformType      -> DedupAgainstTransform,
-    FuzzyJoinTransform.transformType         -> FuzzyJoinTransform,
-    CollocationsTransform.transformType      -> CollocationsTransform,
-    ExplodeTransform.transformType           -> ExplodeTransform,
-    Scd2Transform.transformType              -> Scd2Transform,
-    MergeTransform.transformType             -> MergeTransform,
-    FillNaTransform.transformType            -> FillNaTransform,
-    EntropyTransform.transformType    -> EntropyTransform,
-    ChargramNllTransform.transformType -> ChargramNllTransform,
-    ChargramLmTransform.transformType  -> ChargramLmTransform,
-    LangClassifyTransform.transformType -> LangClassifyTransform,
-    ImportanceScoreTransform.transformType -> ImportanceScoreTransform,
-    graft.streaming.SessionizeTransform.transformType -> graft.streaming.SessionizeTransform,
-    RegisterTransform.transformType   -> RegisterTransform))
+  /** Every built-in transform, keyed by its own `transformType`. */
+  def transforms(): Registry[Transform] = new Registry[Transform]("transform", byType(Seq(
+    FilterTransform, MapTransform, AggregateTransform, JoinTransform, WindowTransform,
+    WindowRankTransform, WindowAggTransform, ResampleTransform, SketchTransform,
+    ScaleTransform, TopKTransform, ZOrderTransform, SortTransform,
+    MaterializeTransform, LimitTransform, UnionTransform, DedupTransform,
+    MinhashDedupTransform, MinhashSignaturesTransform, SimhashDedupTransform,
+    ImageDedupTransform, MediaSignaturesTransform, AudioDedupTransform,
+    VideoDedupTransform, EmbeddingDedupTransform, SemanticDedupTransform,
+    QuantileFilterTransform, FrequentItemsTransform, QuantileSketchTransform,
+    graft.dedup.LineDedupTransform, graft.dedup.LineSignaturesTransform,
+    graft.dedup.SpanDedupTransform, graft.dedup.GramSignaturesTransform,
+    DecontaminateTransform, EmbeddingDecontaminateTransform, AsofJoinTransform,
+    ProfileTransform, RangeJoinTransform, TfidfTransform, MultimodalTransform,
+    TextSignalsTransform, GopherRulesTransform, PivotTransform, UnpivotTransform,
+    SetOpTransform, ChunkTransform, ShardTransform, PackSequencesTransform,
+    DriftTransform, ShuffleTransform, SampleTransform, MixTransform,
+    TokenCapTransform, BpeTrainTransform, BpeTokenizeTransform,
+    BpeTokenCountTransform, BpeVocabTransform, BpeDetokenizeTransform,
+    RedactTransform, VocabTopKTransform, NormalizeTextTransform, HtmlStripTransform,
+    UrlNormalizeTransform, BlocklistTransform, AssignIdsTransform,
+    CompressionRatioTransform, ClusterEmbeddingsTransform, CodebookTransform,
+    PqCodebookTransform, IvfPqCodebookTransform, PqEncodeTransform,
+    IvfPqEncodeTransform, AnnTopKTransform, DedupAgainstTransform, FuzzyJoinTransform,
+    CollocationsTransform, ExplodeTransform, Scd2Transform, MergeTransform,
+    FillNaTransform, EntropyTransform, ChargramNllTransform, ChargramLmTransform,
+    LangClassifyTransform, ImportanceScoreTransform,
+    graft.streaming.SessionizeTransform, RegisterTransform)))
+
+  /** Keys each transform by its `transformType`; two sharing one is a
+    * wiring error, so it fails here rather than letting the later one win. */
+  private[graft] def byType(ts: Seq[Transform]): Map[String, Transform] = {
+    val shared = ts.groupBy(_.transformType).collect { case (t, xs) if xs.size > 1 => t }
+    if (shared.nonEmpty) throw new IllegalStateException(
+      s"transform type(s) registered twice: ${shared.toList.sorted.mkString(", ")}")
+    ts.map(t => t.transformType -> t).toMap
+  }
 
   def sinks(): Registry[Sink] = new Registry[Sink]("sink", Map(
     FileSink.sinkType      -> FileSink,

@@ -34,6 +34,10 @@ private[sinks] object SinkObserve {
  */
 object FileSink extends Sink {
   val sinkType = "file"
+  /** Options that shape the batch write's layout and never reach Spark's
+    * writer; the streaming file sink supports none of them. */
+  val layoutOptions = Seq("coalesce", "buckets", "bucketBy", "sortBy", "table",
+    "sortWithinPartitions")
   def write(data: DataFrame, config: SinkConfig, ctx: RunContext): LoadResult = {
     val path = config.options.getOrElse("path",
       throw new ConfigException("file sink: 'path' option required"))
@@ -61,8 +65,7 @@ object FileSink extends Sink {
         .map(s => shaped.sortWithinPartitions(ExprUtils.parseColumns(s).map(col): _*))
         .getOrElse(shaped)
       var writer = out.write.format(format).mode(mode)
-        .options(config.options -- Seq("path", "format", "coalesce", "buckets",
-          "bucketBy", "sortBy", "table", "sortWithinPartitions"))
+        .options(config.options -- Seq("path", "format") -- layoutOptions)
       if (config.partitionBy.nonEmpty) writer = writer.partitionBy(config.partitionBy: _*)
       bucketSpec match {
         case Some((n, cols)) =>

@@ -34,6 +34,7 @@ import graft.config.TransformConfig
  */
 object SessionizeTransform extends Transform {
   val transformType = "sessionize"
+  override val columnOptions = Seq("keyColumn", "tsColumn", "valueColumn")
 
   private val durationRe =
     "^(\\d+)\\s*(ms|milliseconds?|s|sec|seconds?|m|min|minutes?|h|hours?)$".r
@@ -55,14 +56,6 @@ object SessionizeTransform extends Transform {
     if (gapMs <= 0) throw new ConfigException("sessionize: gap must be positive")
     import input.sparkSession.implicits._
     import org.apache.spark.sql.functions._
-    // guided errors for missing columns — input.schema(name) would throw
-    // a raw IllegalArgumentException with no option name
-    for ((opt, name) <- Seq("keyColumn" -> keyName,
-        "tsColumn" -> config.options("tsColumn")) ++
-        config.options.get("valueColumn").map("valueColumn" -> _))
-      if (!input.columns.exists(_.equalsIgnoreCase(name)))
-        throw new ConfigException(
-          s"sessionize: $opt '$name' not found in input")
     val keyType = input.schema(keyName).dataType
     keyType match {
       case _: org.apache.spark.sql.types.StructType |

@@ -34,6 +34,7 @@ final class StreamingExecutor(
     sinks: Registry[Sink] = Registries.sinks()) {
 
   def start(config: PipelineConfig)(implicit spark: SparkSession): StreamingQuery = {
+    refuseUnsupported(config)
     val runId = UUID.randomUUID().toString
     val ctx = RunContext(spark, config.pipelineId, runId)
     val st = config.streaming.getOrElse(StreamingConfig())
@@ -124,6 +125,25 @@ final class StreamingExecutor(
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .start()
+  }
+
+  /** Config a streaming run would otherwise silently ignore: the
+    * `quality` and `performance` blocks (batch-executor features) and the
+    * batch file sink's layout options, which Spark's streaming writer
+    * would receive as unknown options. */
+  private def refuseUnsupported(config: PipelineConfig): Unit = {
+    if (config.quality.isDefined) throw new ConfigException(
+      "quality: not supported in micro-batch mode — the quality gate runs " +
+        "in the batch executor only; drop the block or run the pipeline as batch")
+    if (config.performance.isDefined) throw new ConfigException(
+      "performance: not supported in micro-batch mode — set shuffle " +
+        "partitions under streaming.shufflePartitions instead")
+    if (config.sink.sinkType == "file")
+      graft.sinks.FileSink.layoutOptions.find(config.sink.options.contains).foreach { o =>
+        throw new ConfigException(
+          s"file sink: '$o' is not supported by the streaming file sink — " +
+            "it shapes batch writes only")
+      }
   }
 
   private def readStream(src: SourceConfig, st: StreamingConfig)

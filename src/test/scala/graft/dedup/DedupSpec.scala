@@ -339,8 +339,12 @@ class DedupSpec extends SparkTestBase {
         "idColumn" -> "doc_id", "textColumn" -> "text", "threshold" -> "0.9",
         "survivorColumn" -> "quality")), ctx)
       .select("doc_id").as[Long].collect().toSet should contain (1L)
+    // a missing survivorColumn is refused by validate, which every
+    // executor runs before apply
     an[graft.api.ConfigException] should be thrownBy
-      run(Map("survivorColumn" -> "nope"))
+      graft.runtime.PipelineExecutor.applyAll(corpus, Seq(TransformConfig("nd",
+        "dedup_minhash", Map("idColumn" -> "doc_id", "textColumn" -> "text",
+          "survivorColumn" -> "nope"))), graft.runtime.Registries.transforms(), ctx)
     an[graft.api.ConfigException] should be thrownBy
       run(Map("survivorColumn" -> "quality", "survivorOrder" -> "sideways"))
     an[graft.api.ConfigException] should be thrownBy

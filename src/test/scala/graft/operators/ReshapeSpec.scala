@@ -78,7 +78,7 @@ class ReshapeSpec extends SparkTestBase {
   test("schema-aware validate flags unknown columns before any job runs") {
     PivotTransform.validate(tc("pivot", "groupBy" -> "nope,k",
       "pivotColumn" -> "p"), sales.schema) shouldBe
-      List("pivot column 'nope' not found in input schema")
+      List("pivot: groupBy 'nope' not found in input schema")
     UnpivotTransform.validate(tc("unpivot", "ids" -> "k",
       "cols" -> "v,ghost"), sales.schema).head should include ("ghost")
     ChunkTransform.validate(tc("chunk", "idColumn" -> "k",

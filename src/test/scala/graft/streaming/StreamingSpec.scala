@@ -679,6 +679,50 @@ class StreamingSpec extends SparkTestBase {
     e2.getMessage should include ("nope")
   }
 
+  /** A micro-batch file→file pipeline whose checkpoint dir does not exist
+    * yet, so a refusal can be shown to come before the query creates it. */
+  private def refusable(id: String): (PipelineConfig, java.nio.file.Path) = {
+    val ckpt = java.nio.file.Paths.get(tmpDir(s"$id-root"), "ckpt")
+    (PipelineConfig(
+      pipelineId = id,
+      executionMode = ExecutionMode.MicroBatch,
+      source = SourceConfig("file", Map(
+        "path" -> eventsDir, "format" -> "parquet",
+        "schema" -> "ts TIMESTAMP, metric STRING, v DOUBLE")),
+      sink = SinkConfig("file", Map("path" -> tmpDir(s"$id-out"))),
+      streaming = Some(StreamingConfig(checkpointLocation = Some(ckpt.toString)))), ckpt)
+  }
+
+  private def refusedBeforeStart(cfg: PipelineConfig, ckpt: java.nio.file.Path): String = {
+    val active = spark.streams.active.length
+    val e = intercept[graft.api.ConfigException] { executor.start(cfg) }
+    java.nio.file.Files.exists(ckpt) shouldBe false
+    spark.streams.active.length shouldBe active
+    e.getMessage
+  }
+
+  test("streaming start refuses a quality block it would ignore, before the query starts") {
+    val (cfg, ckpt) = refusable("refuse-quality")
+    refusedBeforeStart(cfg.copy(quality = Some(QualityConfig(
+      nullChecks = List(NullCheck("metric", NullAction.Fail))))), ckpt) should
+      startWith ("quality: not supported in micro-batch mode")
+  }
+
+  test("streaming start refuses a performance block it would ignore, before the query starts") {
+    val (cfg, ckpt) = refusable("refuse-perf")
+    refusedBeforeStart(cfg.copy(performance = Some(PerformanceConfig(
+      shufflePartitions = Some(3)))), ckpt) should
+      startWith ("performance: not supported in micro-batch mode")
+  }
+
+  test("streaming file sink refuses the batch sink's layout options, before the query starts") {
+    val (cfg, ckpt) = refusable("refuse-layout")
+    for (o <- graft.sinks.FileSink.layoutOptions)
+      refusedBeforeStart(cfg.copy(sink = cfg.sink.copy(
+        options = cfg.sink.options + (o -> "2"))), ckpt) should
+        startWith (s"file sink: '$o' is not supported by the streaming file sink")
+  }
+
   test("streaming file sink passes user options through (compression)") {
     val outDir = tmpDir("zstd-out")
     val cfg = PipelineConfig(
