@@ -1429,7 +1429,6 @@ object SparkEntry {
     // vector; empty centroids keep their previous value) — so cohesion,
     // separation, and centroid_sim = 1.0 are provable, not probabilistic.
     "q118_cluster_exact" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
       val clustered = ap(plantedFamilies(s, dir), t("cluster_embeddings",
         "idColumn" -> "vec_id", "vecColumn" -> "embedding",
         "nClusters" -> "40", "kmeansIters" -> "2", "appendSim" -> "centroid_sim"))
@@ -1442,7 +1441,6 @@ object SparkEntry {
     // sampling scan, and fails loud if the store's parameter stamp
     // disagrees with the asserted nClusters/kmeansIters
     "q125_codebook_store_exact" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
       s.read.parquet(stagedCodebookStore(s, dir))
         .createOrReplaceTempView("q125_codebook")
       val clustered = ap(plantedFamilies(s, dir), t("cluster_embeddings",
@@ -1456,7 +1454,6 @@ object SparkEntry {
     // cell, cross-family cosine is exactly 0, and greedy removal keeps
     // the family minimum — survivors are provably vec_id 0..3
     "q119_semantic_exact" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
       ap(plantedFamilies(s, dir), t("dedup_semantic",
         "idColumn" -> "vec_id", "vecColumn" -> "embedding",
         "threshold" -> "0.95", "nClusters" -> "40", "kmeansIters" -> "2"))
@@ -2390,7 +2387,6 @@ object SparkEntry {
     // add-one-smoothed argmax (matched mass + all-unseen grid term,
     // struct-max tie-break) term-for-term
     "q149_lang_classify" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
       ap(tab(s, dir, "documents"),
         t("chargram_lm", "labelColumn" -> "lang", "textColumn" -> "text",
           "n" -> "3", "minCount" -> "2"))
@@ -2506,7 +2502,6 @@ object SparkEntry {
     // (identical list arithmetic on the DuckDB side) — near-dup documents
     // then share real line-level boilerplate for the operator to strip.
     "q81_dedup_lines" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
       val lined = relined(s, dir)
       ap(lined, t("dedup_lines", "idColumn" -> "doc_id", "textColumn" -> "text"))
         .select("doc_id", "text")
@@ -2911,7 +2906,7 @@ object SparkEntry {
     // through the registry transform; expected merges independently
     // re-derived from the published algorithm by tools/gen_golden_bpe.py
     // (pure-Python, not a port) and inlined as VALUES
-    "q134_bpe_train_golden" -> ((s, dir) => {
+    "q134_bpe_train_golden" -> ((s, _) => {
       import s.implicits._
       import org.apache.spark.sql.functions._
       val docs = Seq("low low low low low", "lower lower",
@@ -2963,7 +2958,7 @@ object SparkEntry {
     // golden-vocab oracle: the q134 corpus's id assignment (<unk>=0,
     // alphabet in UTF-8 order, merge products in merge order)
     // independently re-derived by tools/gen_golden_bpe.py's vocab()
-    "q138_bpe_vocab_golden" -> ((s, dir) => {
+    "q138_bpe_vocab_golden" -> ((s, _) => {
       import s.implicits._
       val docs = Seq("low low low low low", "lower lower",
         "newest newest newest newest newest newest",
@@ -2996,7 +2991,7 @@ object SparkEntry {
     // emit=input_ids + padId + emitMask over the golden corpus — DuckDB
     // pins every padded row BYTE-IDENTICALLY (ids and mask as CSV) from
     // tools/gen_golden_bpe.py's independent pack_padded() re-derivation
-    "q144_pack_padded_golden" -> ((s, dir) => {
+    "q144_pack_padded_golden" -> ((s, _) => {
       import s.implicits._
       import org.apache.spark.sql.functions._
       val docs = Seq((1L, "low low low low low"), (2L, "lower lower"),

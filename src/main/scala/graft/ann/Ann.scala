@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, Column, Encoders, Row}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
-import graft.dedup.Dedup
 import graft.operators.Stores
 
 /**

@@ -3,7 +3,7 @@ package graft.api
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-import graft.config.{ExprUtils, Options, SourceConfig, TransformConfig, SinkConfig}
+import graft.config.{ExprUtils, SourceConfig, TransformConfig, SinkConfig}
 
 /**
  * Component contracts — the Spark-first restatement of the reference's
@@ -45,72 +45,67 @@ trait Source {
   def validate(config: SourceConfig): List[String] = Nil
 }
 
-/** A registry-dispatched pipeline step. Its options arrive as strings:
-  * read a numeric or boolean one with `intOption`/`longOption`/
-  * `doubleOption`/`boolOption`, which decode through
-  * [[graft.config.Options]], and range-check the typed value here. The
-  * options that name input columns are declared once in `columnOptions`,
-  * and the default `validate` checks them against the input schema
-  * before any job runs. */
+/** A registry-dispatched pipeline step. Its whole option surface is
+  * declared once, as [[Opt]] vals in its body (`Opt.int("k", min = 1)
+  * .default(10)`); constructing one declares it, and it is the only way
+  * `apply` reads that option. The declarations drive every check: unknown
+  * keys, missing required keys, undecodable, out-of-range and one-of
+  * values ([[checkOptions]]), input columns ([[checkColumns]]) and views
+  * (`PipelineExecutor.checkSteps`), all before any Spark job. A transform
+  * that declares nothing is checked for nothing. */
 trait Transform {
   def transformType: String
   /** Compose more plan on top of `input`. MUST NOT trigger an action. */
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame
 
-  /** The options whose value `apply` resolves as plain input column names:
-    * a comma list read through [[graft.config.ExprUtils.parseColumns]], so
-    * a single name is a one-element list. Expressions, output names and
-    * another view's columns are never declared here. */
-  def columnOptions: Seq[String] = Nil
+  /** The owner every `Opt` built in this transform's body declares itself on. */
+  protected implicit final def optOwner: Transform = this
 
-  /** Fail-fast check against the schema the step will see (error
-    * accumulation, not first-error). The default reports every column a
-    * declared column option names and the schema lacks; an override that
-    * checks more calls `super.validate`. */
-  def validate(config: TransformConfig, schema: StructType): List[String] =
-    columnOptions.toList.flatMap(o =>
-      missingColumns(schema, o, config.options.get(o).toList.flatMap(ExprUtils.parseColumns)))
+  private val declared = scala.collection.mutable.LinkedHashMap.empty[String, Opt[_]]
 
-  /** One error per entry of `columns` absent from `schema`, matched
-    * case-insensitively like Spark's own column resolution:
+  /** A later declaration of the same key (a refined copy) replaces the earlier. */
+  private[api] def declare(o: Opt[_]): Unit = declared(o.key) = o
+
+  /** The declared option surface, in declaration order. */
+  final def options: Seq[Opt[_]] = declared.values.toSeq
+
+  /** Schema-free checks of `config` against the declarations (error
+    * accumulation, not first-error): unknown keys with a nearest-name
+    * hint, missing required keys, then every present value's decode,
+    * range and one-of check. */
+  final def checkOptions(config: TransformConfig): List[String] = {
+    val known = options.flatMap(_.keys)
+    val unknown =
+      if (declared.isEmpty || options.exists(_.kind == Opt.Passthrough)) Nil
+      else config.options.keys.toList.sorted.filterNot(known.contains).map(k =>
+        s"$transformType transform '${config.name}': unknown option '$k'${Opt.hint(k, known)}")
+    val absent = options.filter(o => o.isRequired && !o.isSet(config)).map(_.key)
+    unknown ++ absent.headOption.map(_ => missingMessage(config, absent)) ++
+      options.flatMap(_.problem(config))
+  }
+
+  /** Every column a declared column option names and `schema` lacks,
+    * matched case-insensitively like Spark's own column resolution:
     * `<transformType>: <option> '<column>' not found in input schema`. */
-  protected def missingColumns(schema: StructType, option: String,
-                               columns: Seq[String]): List[String] = {
+  final def checkColumns(config: TransformConfig, schema: StructType): List[String] =
+    options.toList.filter(_.kind == Opt.Column).flatMap(_.setting(config))
+      .flatMap { case (k, v) => missingColumns(schema, k, ExprUtils.parseColumns(v)) }
+
+  protected final def missingColumns(schema: StructType, option: String,
+                                     columns: Seq[String]): List[String] = {
     val present = schema.fieldNames.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
     columns.filterNot(c => present(c.toLowerCase(java.util.Locale.ROOT)))
       .map(c => s"$transformType: $option '$c' not found in input schema").toList
   }
 
-  protected def required(config: TransformConfig, keys: String*): Unit = {
-    val absent = keys.filterNot(config.options.contains)
-    if (absent.nonEmpty) missing(config, absent: _*)
-  }
+  /** Fail-fast check against the schema the step will see: the declared
+    * option and column checks. An override that checks more calls
+    * `super.validate`. */
+  def validate(config: TransformConfig, schema: StructType): List[String] =
+    checkOptions(config) ++ checkColumns(config, schema)
 
-  /** Fails like [[required]]: the default of a required typed option,
-    * as in `intOption(config, "k", missing(config, "k"))`. */
-  protected def missing(config: TransformConfig, keys: String*): Nothing =
-    throw new ConfigException(
-      s"${transformType} transform '${config.name}' missing required option(s): ${keys.mkString(", ")}")
-
-  /** Typed option readers: each decodes through [[graft.config.Options]],
-    * so `k: "lots"` fails as a ConfigException naming this transform and
-    * the option, never as a bare NumberFormatException from inside the
-    * operator. Without a default the result is None when the option is
-    * absent. */
-  protected def intOption(config: TransformConfig, key: String): Option[Int] =
-    config.options.get(key).map(Options.int(transformType, key, _))
-  protected def intOption(config: TransformConfig, key: String, default: => Int): Int =
-    intOption(config, key).getOrElse(default)
-  protected def longOption(config: TransformConfig, key: String): Option[Long] =
-    config.options.get(key).map(Options.long(transformType, key, _))
-  protected def longOption(config: TransformConfig, key: String, default: => Long): Long =
-    longOption(config, key).getOrElse(default)
-  protected def doubleOption(config: TransformConfig, key: String): Option[Double] =
-    config.options.get(key).map(Options.double(transformType, key, _))
-  protected def doubleOption(config: TransformConfig, key: String, default: => Double): Double =
-    doubleOption(config, key).getOrElse(default)
-  protected def boolOption(config: TransformConfig, key: String, default: Boolean): Boolean =
-    config.options.get(key).fold(default)(Options.bool(transformType, key, _))
+  private[api] def missingMessage(config: TransformConfig, keys: Seq[String]): String =
+    s"$transformType transform '${config.name}' missing required option(s): ${keys.mkString(", ")}"
 }
 
 final case class LoadResult(

@@ -3,7 +3,6 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextFunctions
 
 /**
  * Document-deduplication suite for training-data pipelines: exact,
@@ -290,20 +289,6 @@ object Dedup {
     // null-text docs have no shingles to test — kept, like the exact path
     docs.where(col(textCol).isNull ||
       !exists(ShingleHashes(col(textCol), shingleSize), mightContain))
-  }
-
-  /** 64-bit SimHash over tokens: per-bit weighted vote folded per-row
-    * (no shuffle), reassembled into one long. */
-  def simhash64(text: Column): Column = {
-    val t = TextFunctions.tokens(text)
-    val counters = aggregate(
-      t, array_repeat(lit(0), 64),
-      (acc, w) => zip_with(acc, sequence(lit(0), lit(63)),
-        (c, b) => c + when(call_function("shiftright", xxhash64(w), b).bitwiseAND(1) === 1, 1).otherwise(-1)))
-    aggregate(
-      zip_with(counters, sequence(lit(0), lit(63)),
-        (c, b) => when(c >= 0, call_function("shiftleft", lit(1L), b)).otherwise(0L)),
-      lit(0L), (acc, v) => acc + v)
   }
 
   /**

@@ -3,7 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.api.{ConfigException, RunContext, Transform}
+import graft.api.{ConfigException, Opt, RunContext, Transform}
 import graft.config.TransformConfig
 
 /**
@@ -205,48 +205,46 @@ object LineDedup {
  */
 object LineDedupTransform extends Transform {
   val transformType = "dedup_lines"
-  override val columnOptions = Seq("idColumn", "textColumn")
+  private val TextColumn = Opt.column("textColumn").required
+  // scope: corpus only
+  private val IdColumn = Opt.column("idColumn")
+  private val Scope = Opt.oneOf("scope", "corpus", "document").default("corpus")
+  private val Separator = Opt.string("separator").default("\n")
+  private val MinLength = Opt.int("minLength").default(1)
+  // scope: corpus, one of a reference corpus or a persisted line-hash store
+  private val ReferenceView = Opt.view("referenceView")
+  private val SignatureView = Opt.view("signatureView")
+  private val ReferenceTextColumn = Opt.string("referenceTextColumn")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    val separator = config.options.getOrElse("separator", "\n")
+    val separator = Separator(config)
     try {
-    val minLength = intOption(config, "minLength", 1)
-    if (config.options.contains("referenceView") &&
-        config.options.contains("signatureView"))
+    val minLength = MinLength(config)
+    if (ReferenceView.isSet(config) && SignatureView.isSet(config))
       throw new ConfigException(
         "dedup_lines: referenceView and signatureView are mutually " +
           "exclusive — the reference is either a text corpus or a " +
           "precomputed line-hash store, not both")
-    config.options.getOrElse("scope", "corpus") match {
-      case "corpus" if config.options.contains("referenceView") =>
-        required(config, "idColumn", "textColumn")
-        val text = config.options("textColumn")
-        LineDedup.dedupLinesAgainst(input,
-          config.options("idColumn"), text,
-          ctx.spark.table(config.options("referenceView")),
-          config.options.getOrElse("referenceTextColumn", text),
+    val text = TextColumn(config)
+    Scope(config) match {
+      case "corpus" if ReferenceView.isSet(config) =>
+        LineDedup.dedupLinesAgainst(input, IdColumn(config), text,
+          ReferenceView.table(config, ctx.spark),
+          ReferenceTextColumn.get(config).getOrElse(text),
           separator = separator, minLength = minLength)
-      case "corpus" if config.options.contains("signatureView") =>
-        required(config, "idColumn", "textColumn")
-        LineDedup.dedupLinesAgainstSignatures(input,
-          config.options("idColumn"), config.options("textColumn"),
-          ctx.spark.table(config.options("signatureView")),
+      case "corpus" if SignatureView.isSet(config) =>
+        LineDedup.dedupLinesAgainstSignatures(input, IdColumn(config), text,
+          SignatureView.table(config, ctx.spark),
           separator = separator, minLength = minLength)
       case "corpus" =>
-        required(config, "idColumn", "textColumn")
-        LineDedup.dedupLines(input,
-          config.options("idColumn"), config.options("textColumn"),
+        LineDedup.dedupLines(input, IdColumn(config), text,
           separator = separator, minLength = minLength)
-      case "document" =>
-        if (config.options.contains("referenceView") ||
-            config.options.contains("signatureView")) throw new ConfigException(
+      case _ =>
+        if (ReferenceView.isSet(config) || SignatureView.isSet(config)) throw new ConfigException(
           "dedup_lines: referenceView/signatureView require scope: corpus " +
             "(document scope dedups within each row only — it never " +
             "consults a reference)")
-        required(config, "textColumn")
-        LineDedup.dedupLinesInDoc(input, config.options("textColumn"),
+        LineDedup.dedupLinesInDoc(input, text,
           separator = separator, minLength = minLength)
-      case other => throw new ConfigException(
-        s"dedup_lines scope must be corpus|document, got '$other'")
     }
     } catch { case e: IllegalArgumentException => throw new ConfigException(e.getMessage) }
   }
@@ -264,12 +262,12 @@ object LineDedupTransform extends Transform {
  */
 object LineSignaturesTransform extends Transform {
   val transformType = "line_signatures"
-  override val columnOptions = Seq("textColumn")
+  private val TextColumn = Opt.column("textColumn").required
+  private val Separator = Opt.string("separator").default("\n")
+  private val MinLength = Opt.int("minLength").default(1)
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "textColumn")
-    try LineDedup.lineSignatures(input, config.options("textColumn"),
-      separator = config.options.getOrElse("separator", "\n"),
-      minLength = intOption(config, "minLength", 1))
+    try LineDedup.lineSignatures(input, TextColumn(config),
+      separator = Separator(config), minLength = MinLength(config))
     catch { case e: IllegalArgumentException => throw new ConfigException(e.getMessage) }
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.api.{ConfigException, RunContext, Transform}
+import graft.api.{ConfigException, Opt, RunContext, Transform}
 import graft.config.TransformConfig
 
 /**
@@ -251,7 +251,7 @@ object SpanDedup {
     df.join(spans, col(idCol) === col("__sid"), "left")
       .withColumn(textCol, when(col("__spans").isNull, col(textCol))
         .otherwise(array_join(
-          filter(toks, (t, i) => !exists(col("__spans"),
+          filter(toks, (_, i) => !exists(col("__spans"),
             s => i + 1 >= s.getField("s") && i + 1 <= s.getField("e"))),
           " ")))
       .drop("__sid", "__spans")
@@ -334,42 +334,43 @@ object SpanDedup {
  */
 object SpanDedupTransform extends Transform {
   val transformType = "dedup_spans"
-  override val columnOptions = Seq("idColumn", "textColumn")
+  private val IdColumn = Opt.column("idColumn").required
+  private val TextColumn = Opt.column("textColumn").required
+  private val N = Opt.int("n").default(8)
+  private val MinCount = Opt.int("minCount").default(2)
+  private val ReferenceView = Opt.view("referenceView")
+  private val ReferenceTextColumn = Opt.string("referenceTextColumn")
+  private val SignatureView = Opt.view("signatureView")
+  private val Method = Opt.oneOf("method", "exact", "bloom").default("exact")
+  private val Fpp = Opt.double("fpp").default(1e-4)
+  private val Mode = Opt.oneOf("mode", "remove", "report").default("remove")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "idColumn", "textColumn")
-    val id = config.options("idColumn"); val text = config.options("textColumn")
+    val id = IdColumn(config); val text = TextColumn(config)
     try {
-    val n = intOption(config, "n", 8)
-    val minCount = intOption(config, "minCount", 2)
-    val ref = config.options.get("referenceView").map(v => (ctx.spark.table(v),
-      config.options.getOrElse("referenceTextColumn", text)))
-    val sig = config.options.get("signatureView").map(ctx.spark.table)
+    val n = N(config)
+    val minCount = MinCount(config)
+    val ref = ReferenceView.tableIfSet(config, ctx.spark).map(v =>
+      (v, ReferenceTextColumn.get(config).getOrElse(text)))
+    val sig = SignatureView.tableIfSet(config, ctx.spark)
     if (ref.isDefined && sig.isDefined) throw new ConfigException(
       "dedup_spans: referenceView and signatureView are mutually exclusive — " +
         "the reference is either a text corpus or a precomputed gram-hash " +
         "store, not both")
-    if ((ref.isDefined || sig.isDefined) && config.options.contains("minCount"))
+    if ((ref.isDefined || sig.isDefined) && MinCount.isSet(config))
       throw new ConfigException("dedup_spans: minCount does not apply with " +
         "referenceView/signatureView (any reference occurrence marks the span)")
-    val method = config.options.getOrElse("method", "exact")
-    if (method != "exact" && method != "bloom") throw new ConfigException(
-      s"dedup_spans: method must be exact|bloom, got '$method'")
+    val method = Method(config)
     if (method == "bloom" && ref.isEmpty && sig.isEmpty) throw new ConfigException(
       "dedup_spans: method bloom requires referenceView or signatureView " +
         "(corpus-scope duplication needs exact counts, not membership)")
     // fpp only parameterizes the bloom sketch — with method=exact the user
     // likely meant method: bloom; reject rather than silently ignore
-    if (method != "bloom" && config.options.contains("fpp"))
+    if (method != "bloom" && Fpp.isSet(config))
       throw new ConfigException(
         "dedup_spans: fpp only applies with method: bloom — the exact path " +
           "has no false-positive rate to configure")
-    val fpp = doubleOption(config, "fpp", 1e-4)
-    val report = config.options.getOrElse("mode", "remove") match {
-      case "remove" => false
-      case "report" => true
-      case other => throw new ConfigException(
-        s"dedup_spans mode must be remove|report, got '$other'")
-    }
+    val fpp = Fpp(config)
+    val report = Mode(config) == "report"
     // every branch consumes the input at least twice (the gram stream,
     // corpus-scope dup counting, and remove-mode's rebuild join) — in a
     // composed pipeline each consumer would re-execute the whole upstream
@@ -411,11 +412,10 @@ object SpanDedupTransform extends Transform {
   * re-scanning history's text. Options: textColumn required; n (8). */
 object GramSignaturesTransform extends Transform {
   val transformType = "gram_signatures"
-  override val columnOptions = Seq("textColumn")
+  private val TextColumn = Opt.column("textColumn").required
+  private val N = Opt.int("n").default(8)
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "textColumn")
-    try SpanDedup.gramSignatures(input, config.options("textColumn"),
-      intOption(config, "n", 8))
+    try SpanDedup.gramSignatures(input, TextColumn(config), N(config))
     catch { case e: IllegalArgumentException => throw new ConfigException(e.getMessage) }
   }
 }

@@ -48,7 +48,7 @@ case class TokenSignals(child: Expression, stops: Seq[String],
                         withFingerprint: Boolean = true)
     extends UnaryExpression {
 
-  override def dataType: DataType = TokenSignals.outType(langProfiles.length)
+  override def dataType: DataType = TokenSignals.outType
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
@@ -121,7 +121,7 @@ object TokenSignals {
             langProfiles: Seq[Seq[String]]): Column =
     apply(toks, stops, distinctStops, langProfiles, withFingerprint = true)
 
-  private[expressions] def outType(nProfiles: Int): DataType = StructType(Seq(
+  private[expressions] def outType: DataType = StructType(Seq(
     StructField("n", IntegerType, nullable = false),
     StructField("sum_len", LongType, nullable = false),
     StructField("stop_hits", IntegerType, nullable = false),

@@ -104,7 +104,7 @@ object CharNgramStrings {
   def compute(input: UTF8String, n: Int): ArrayData = {
     val bytes = input.getBytes
     // character start offsets + end sentinel
-    var starts = new Array[Int](math.max(16, bytes.length + 1))
+    val starts = new Array[Int](math.max(16, bytes.length + 1))
     var nChars = 0
     var i = 0
     while (i < bytes.length) {

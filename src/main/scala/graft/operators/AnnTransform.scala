@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 
-import graft.api.{ConfigException, RunContext, Transform}
+import graft.api.{ConfigException, Opt, RunContext}
 import graft.config.TransformConfig
 
 /**
@@ -48,130 +48,124 @@ import graft.config.TransformConfig
  * every method broadcasts/collects it, so exceeding the cap throws the
  * guided error instead of OOMing the driver; batch larger query sets.
  */
-object AnnTopKTransform extends Transform {
+object AnnTopKTransform extends IdVecColumns {
   val transformType = "ann_topk"
-  override val columnOptions = Seq("idColumn", "vecColumn")
+  private val QueriesView = Opt.view("queriesView").required
+  // columns of the queries view
+  private val QueryIdColumn = Opt.string("queryIdColumn")
+  private val QueryVecColumn = Opt.string("queryVecColumn")
+  private val K = Opt.int("k", min = 1).default(10)
+  private val Method = Opt.oneOf("method", "brute", "lsh", "ivf", "pq", "ivfpq").default("brute")
+  // the ANN family's loud "queries are small" contract: every method
+  // broadcasts/collects the queries frame, so its size is capped — see
+  // graft.ann.Ann.DefaultMaxQueries and docs/SCALE.md
+  private val MaxQueries = Opt.int("maxQueries").default(graft.ann.Ann.DefaultMaxQueries)
+  private val Bits = Opt.int("bits").default(12)
+  private val Tables = Opt.int("tables").default(4)
+  // the quantizer knobs: training parameters, or with codebookView the
+  // stamps the store must match; defaults differ by method
+  private val M = Opt.int("m")
+  private val NCentroids = Opt.int("nCentroids")
+  private val KmeansIters = Opt.int("kmeansIters")
+  private val NLists = Opt.int("nLists")
+  private val NProbe = Opt.int("nProbe")
+  private val CandidateFactor = Opt.int("candidateFactor").default(8)
+  private val CodebookView = Opt.view("codebookView")
+  private val CodesView = Opt.view("codesView")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "idColumn", "vecColumn", "queriesView")
-    val id = config.options("idColumn")
-    val vec = config.options("vecColumn")
-    val queries = ctx.spark.table(config.options("queriesView"))
-    val qid = config.options.getOrElse("queryIdColumn", id)
-    val qvec = config.options.getOrElse("queryVecColumn", vec)
+    val id = IdColumn(config)
+    val vec = VecColumn(config)
+    val queries = QueriesView.table(config, ctx.spark)
+    val qid = QueryIdColumn.get(config).getOrElse(id)
+    val qvec = QueryVecColumn.get(config).getOrElse(vec)
     if (!queries.columns.contains(qid) || !queries.columns.contains(qvec))
       throw new ConfigException(
-        s"ann_topk: queries view '${config.options("queriesView")}' is missing " +
+        s"ann_topk: queries view '${QueriesView(config)}' is missing " +
           s"column(s) ${Seq(qid, qvec).filterNot(queries.columns.contains).mkString(", ")}")
     // the queries frame must present (queryIdColumn, vecColumn) to the
     // engine — rename an aliased query vector column up front
     val q = queries.select(
       org.apache.spark.sql.functions.col(qid).as(qid),
       org.apache.spark.sql.functions.col(qvec).as(vec))
-    val k = intOption(config, "k", 10)
-    if (k < 1) throw new ConfigException(s"ann_topk: k must be >= 1, got $k")
-    val method = config.options.getOrElse("method", "brute")
-    // the ANN family's loud "queries are small" contract: every method
-    // broadcasts/collects the queries frame, so its size is capped — see
-    // graft.ann.Ann.DefaultMaxQueries and docs/SCALE.md
-    val maxQueries =
-      intOption(config, "maxQueries", graft.ann.Ann.DefaultMaxQueries)
+    val k = K(config)
+    val method = Method(config)
+    val maxQueries = MaxQueries(config)
     // codebookView only parameterizes IVF and PQ — with brute/lsh the user
     // almost certainly meant one of those; reject rather than silently
     // ignore
-    if (method != "ivf" && method != "pq" && method != "ivfpq" &&
-        config.options.contains("codebookView"))
+    if (method != "ivf" && method != "pq" && method != "ivfpq" && CodebookView.isSet(config))
       throw new ConfigException(
         "ann_topk: codebookView only applies with method: ivf|pq|ivfpq — " +
           s"method '$method' never consults a codebook")
-    if (method != "pq" && method != "ivfpq" &&
-        config.options.contains("codesView"))
+    if (method != "pq" && method != "ivfpq" && CodesView.isSet(config))
       throw new ConfigException(
         "ann_topk: codesView only applies with method: pq|ivfpq — " +
           s"method '$method' never reads a pre-encoded codes frame")
+    def or(o: Opt[Int], dflt: Int): Int = o.get(config).getOrElse(dflt)
     method match {
       case "brute" => graft.ann.Ann.bruteForceTopK(input, q, id, vec, qid, k,
         maxQueries = maxQueries)
       case "lsh" => graft.ann.Ann.lshTopK(input, q, id, vec, qid, k,
-        bits = intOption(config, "bits", 12), tables = intOption(config, "tables", 4),
-        maxQueries = maxQueries)
+        bits = Bits(config), tables = Tables(config), maxQueries = maxQueries)
       case "pq" =>
         // a persisted pqCodebookFrame store skips the sampling scan and
         // keeps yesterday's cells comparable; m/nCentroids/kmeansIters
         // (when given) assert against its parameter stamp
-        val stored = config.options.get("codebookView").map { view =>
-          graft.ann.Ann.loadPqCodebooks(ctx.spark.table(view),
-            wantM = config.options.get("m").map(_ => intOption(config, "m", 0)),
-            wantK = config.options.get("nCentroids")
-              .map(_ => intOption(config, "nCentroids", 0)),
-            wantKmeansIters = config.options.get("kmeansIters")
-              .map(_ => intOption(config, "kmeansIters", 0)),
-            kName = "nCentroids")
+        val stored = CodebookView.tableIfSet(config, ctx.spark).map { store =>
+          graft.ann.Ann.loadPqCodebooks(store,
+            wantM = M.get(config), wantK = NCentroids.get(config),
+            wantKmeansIters = KmeansIters.get(config), kName = "nCentroids")
         }
         // a persisted pqCodesFrame store (pq_encode output) additionally
         // skips the ENCODE scan; it is only meaningful against the exact
         // codebook it was encoded under, so codebookView is required
         // with it and the store's pq_cb_hash fingerprint is asserted
-        val codes = config.options.get("codesView").map { view =>
+        val codes = CodesView.tableIfSet(config, ctx.spark).map { store =>
           if (stored.isEmpty) throw new ConfigException(
             "ann_topk: codesView requires codebookView — a codes store " +
               "is only meaningful against the exact codebook it was " +
               "encoded under (its pq_cb_hash stamp is checked)")
-          ctx.spark.table(view)
+          store
         }
         graft.ann.Ann.pqTopK(input, q, id, vec, qid, k,
-          m = intOption(config, "m", 8),
-          nCentroids = intOption(config, "nCentroids", 16),
-          kmeansIters = intOption(config, "kmeansIters", 3),
-          candidateFactor = intOption(config, "candidateFactor", 8),
+          m = or(M, 8), nCentroids = or(NCentroids, 16), kmeansIters = or(KmeansIters, 3),
+          candidateFactor = CandidateFactor(config),
           codebooks = stored, codesStore = codes, maxQueries = maxQueries)
-      case "ivf" => config.options.get("codebookView") match {
-        case Some(view) => graft.ann.Ann.ivfTopKWithCodebook(input, q, id, vec,
-          qid, k, ctx.spark.table(view),
-          nProbe = intOption(config, "nProbe", 8),
-          wantNLists = config.options.get("nLists").map(_ => intOption(config, "nLists", 0)),
-          wantKmeansIters = config.options.get("kmeansIters").map(_ => intOption(config, "kmeansIters", 0)),
+      case "ivf" => CodebookView.tableIfSet(config, ctx.spark) match {
+        case Some(store) => graft.ann.Ann.ivfTopKWithCodebook(input, q, id, vec,
+          qid, k, store,
+          nProbe = or(NProbe, 8),
+          wantNLists = NLists.get(config),
+          wantKmeansIters = KmeansIters.get(config),
           maxQueries = maxQueries)
         case None => graft.ann.Ann.ivfTopK(input, q, id, vec, qid, k,
-          nLists = intOption(config, "nLists", 64),
-          nProbe = intOption(config, "nProbe", 8),
-          kmeansIters = intOption(config, "kmeansIters", 0),
+          nLists = or(NLists, 64), nProbe = or(NProbe, 8), kmeansIters = or(KmeansIters, 0),
           maxQueries = maxQueries)
       }
-      case "ivfpq" =>
+      case _ =>
         // a persisted COMBINED ivfPqStoreFrame skips the sampling scan;
         // every knob given alongside it asserts against the stamps
-        val stored = config.options.get("codebookView").map { view =>
-          graft.ann.Ann.loadIvfPqStore(ctx.spark.table(view),
-            wantNLists = config.options.get("nLists")
-              .map(_ => intOption(config, "nLists", 0)),
-            wantM = config.options.get("m").map(_ => intOption(config, "m", 0)),
-            wantK = config.options.get("nCentroids")
-              .map(_ => intOption(config, "nCentroids", 0)),
-            wantKmeansIters = config.options.get("kmeansIters")
-              .map(_ => intOption(config, "kmeansIters", 0)))
+        val stored = CodebookView.tableIfSet(config, ctx.spark).map { store =>
+          graft.ann.Ann.loadIvfPqStore(store,
+            wantNLists = NLists.get(config), wantM = M.get(config),
+            wantK = NCentroids.get(config), wantKmeansIters = KmeansIters.get(config))
         }
         // a persisted ivfPqCodesFrame additionally skips the encode scan;
         // only meaningful against the exact combined store (both-halves
         // ivfpq_cb_hash fingerprint asserted)
-        val codes = config.options.get("codesView").map { view =>
+        val codes = CodesView.tableIfSet(config, ctx.spark).map { store =>
           if (stored.isEmpty) throw new ConfigException(
             "ann_topk: codesView requires codebookView — a codes store " +
               "is only meaningful against the exact quantizer it was " +
               "encoded under (its ivfpq_cb_hash stamp is checked)")
-          ctx.spark.table(view)
+          store
         }
         graft.ann.Ann.ivfPqTopK(input, q, id, vec, qid, k,
-          nLists = intOption(config, "nLists", 16),
-          nProbe = intOption(config, "nProbe", 4),
-          m = intOption(config, "m", 8),
-          nCentroids = intOption(config, "nCentroids", 16),
-          kmeansIters = intOption(config, "kmeansIters", 3),
-          candidateFactor = intOption(config, "candidateFactor", 8),
+          nLists = or(NLists, 16), nProbe = or(NProbe, 4), m = or(M, 8),
+          nCentroids = or(NCentroids, 16), kmeansIters = or(KmeansIters, 3),
+          candidateFactor = CandidateFactor(config),
           store = stored, codesStore = codes, maxQueries = maxQueries)
-      case other => throw new ConfigException(
-        s"ann_topk: method must be brute|lsh|ivf|pq|ivfpq, got '$other'")
     }
   }
-
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
 
-import graft.api.{Transform, RunContext}
+import graft.api.{Opt, RunContext, Transform}
 import graft.config.{ExprUtils, TransformConfig}
 
 /**
@@ -168,16 +168,19 @@ object AsofJoin {
  */
 object AsofJoinTransform extends Transform {
   val transformType = "join_asof"
-  override val columnOptions = Seq("on", "leftTime")
+  private val RightDataset = Opt.view("rightDataset").required
+  private val On = Opt.columns("on").required
+  private val LeftTime = Opt.column("leftTime").required
+  private val RightTime = Opt.string("rightTime")
+  private val Direction = Opt.oneOf("direction", "backward", "forward").default("backward")
+  private val Tolerance = Opt.long("tolerance")
+  private val Prefix = Opt.string("prefix").default("asof_")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "rightDataset", "on", "leftTime")
-    val keys = ExprUtils.parseColumns(config.options("on"))
-    val right = ctx.spark.table(config.options("rightDataset"))
-    val leftTime = config.options("leftTime")
-    AsofJoin.asofJoin(input, right, keys, leftTime,
-      rightTime = config.options.getOrElse("rightTime", leftTime),
-      direction = config.options.getOrElse("direction", "backward"),
-      tolerance = longOption(config, "tolerance"),
-      prefix = config.options.getOrElse("prefix", "asof_"))
+    val leftTime = LeftTime(config)
+    AsofJoin.asofJoin(input, RightDataset.table(config, ctx.spark), On(config), leftTime,
+      rightTime = RightTime.get(config).getOrElse(leftTime),
+      direction = Direction(config),
+      tolerance = Tolerance.get(config),
+      prefix = Prefix(config))
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.api.{ConfigException, RunContext, Transform}
+import graft.api.{Opt, RunContext, Transform}
 import graft.config.TransformConfig
 
 /**
@@ -71,15 +71,12 @@ object AssignIds {
  */
 object AssignIdsTransform extends Transform {
   val transformType = "assign_ids"
-  override val columnOptions = Seq("orderBy")
+  private val OrderBy = Opt.columns("orderBy").required.nonEmpty
+  private val IdName = Opt.string("idName").default("row_id")
+  private val Start = Opt.long("start").default(0L)
+  private val NumPartitions = Opt.int("numPartitions").default(0)
 
-  def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "orderBy")
-    val cols = config.options("orderBy").split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    if (cols.isEmpty) throw new ConfigException("assign_ids: orderBy lists no columns")
-    AssignIds.assign(input, cols,
-      config.options.getOrElse("idName", "row_id"),
-      longOption(config, "start", 0L),
-      intOption(config, "numPartitions", 0))
-  }
+  def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame =
+    AssignIds.assign(input, OrderBy(config), IdName(config), Start(config),
+      NumPartitions(config))
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.api.{ConfigException, RunContext, Transform}
+import graft.api.{Opt, RunContext, Transform}
 import graft.config.TransformConfig
 
 /**
@@ -82,21 +82,17 @@ object Blocklist {
  */
 object BlocklistTransform extends Transform {
   val transformType = "blocklist"
-  override val columnOptions = Seq("textColumn")
+  private val TextColumn = Opt.column("textColumn").required
+  private val Terms = Opt.parsed("terms")(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    .required.nonEmpty
+  private val WholeWord = Opt.bool("wholeWord").default(true)
+  private val MatchCase = Opt.bool("matchCase").default(false)
+  private val Mode = Opt.oneOf("mode", "annotate", "filter").default("annotate")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "textColumn", "terms")
-    val terms = config.options("terms").split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    if (terms.isEmpty) throw new ConfigException("blocklist: terms list is empty")
-    val wholeWord = boolOption(config, "wholeWord", true)
-    val matchCase = boolOption(config, "matchCase", false)
-    val h = Blocklist.hits(col(config.options("textColumn")), terms, wholeWord, matchCase)
-    config.options.getOrElse("mode", "annotate") match {
-      case "annotate" =>
-        input.withColumn("blocklist_hits", h).withColumn("blocklist_keep", h === 0L)
-      case "filter" => input.where(h === 0L)
-      case other => throw new ConfigException(
-        s"blocklist mode must be annotate|filter, got '$other'")
-    }
+    val h = Blocklist.hits(col(TextColumn(config)), Terms(config), WholeWord(config),
+      MatchCase(config))
+    if (Mode(config) == "filter") input.where(h === 0L)
+    else input.withColumn("blocklist_hits", h).withColumn("blocklist_keep", h === 0L)
   }
 }

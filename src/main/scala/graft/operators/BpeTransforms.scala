@@ -3,8 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.api.{ConfigException, RunContext, Transform}
-import graft.config.{Options, TransformConfig}
+import graft.api.{ConfigException, Opt, RunContext, Transform}
+import graft.config.TransformConfig
 import graft.functions.expressions.BpeEncode
 import graft.text.Bpe
 
@@ -38,45 +38,32 @@ import graft.text.Bpe
  * O(numMerges) bounded driver read with the loud-store stamp contract —
  * the same accepted driver-read class as the codebook/signature loads.
  */
+/** A transform that reads a persisted `bpe_train` store: `mergesView`
+  * (declared by each reader, required or not) and the optional
+  * `numMerges`/`minCount` stamps the store must match. */
+private[operators] trait BpeStoreReader extends Transform {
+  protected def mergesView: Opt[String]
+  protected val WantNumMerges = Opt.int("numMerges")
+  protected val WantMinCount = Opt.long("minCount")
+
+  /** The full validated [[Bpe.Loaded]] bundle (merges + alphabet +
+    * byte-fallback stamp — vocab derives lazily) of the store
+    * `mergesView` names. ONE validated store read per transform. */
+  protected def loadedStore(config: TransformConfig, ctx: RunContext): Bpe.Loaded =
+    Bpe.load(mergesView.table(config, ctx.spark),
+      wantNumMerges = WantNumMerges.get(config), wantMinCount = WantMinCount.get(config))
+}
+
 object BpeTransforms {
-  /** Resolve `mergesView` to the registered store frame. The view must
-    * already be registered (the `register` transform or a prior
-    * `createOrReplaceTempView`). */
-  def storeFromView(config: TransformConfig, ctx: RunContext,
-                    tname: String): org.apache.spark.sql.DataFrame = {
-    val view = config.options("mergesView")
-    try ctx.spark.table(view)
-    catch { case e: org.apache.spark.sql.AnalysisException =>
-      throw new ConfigException(
-        s"$tname: mergesView '$view' is not a registered view/table — " +
-          s"register the persisted bpe_train store first (${e.getMessage})")
-    }
-  }
-
-  /** Resolve `mergesView` to the full validated [[Bpe.Loaded]] bundle
-    * (merges + alphabet + byte-fallback stamp — vocab derives lazily);
-    * `numMerges`/`minCount` options, when present, must match the
-    * store's training stamps. ONE validated store read per transform. */
-  def loadedFromView(config: TransformConfig, ctx: RunContext,
-                     tname: String): Bpe.Loaded =
-    Bpe.load(storeFromView(config, ctx, tname),
-      wantNumMerges = config.options.get("numMerges").map(Options.int(tname, "numMerges", _)),
-      wantMinCount = config.options.get("minCount").map(Options.long(tname, "minCount", _)))
-
-  /** Resolve `mergesView` to the validated ordered merges list. */
-  def mergesFromView(config: TransformConfig, ctx: RunContext,
-                     tname: String): Seq[(String, String)] =
-    loadedFromView(config, ctx, tname).merges
-
   /** Shared `oovColumn` option: when set, append the per-row
     * out-of-alphabet codepoint count ([[graft.functions.expressions
     * .BpeOovCount]]) — exactly the `<unk>` ids a non-fallback id-encode
     * would emit, and under byteFallback the codepoints that took the byte
     * path. The encode-drift observability every store consumer shares. */
-  def withOovColumn(df: DataFrame, config: TransformConfig,
+  def withOovColumn(df: DataFrame, oovColumn: Option[String],
                     loaded: Bpe.Loaded, text: org.apache.spark.sql.Column,
                     tname: String): DataFrame =
-    config.options.get("oovColumn") match {
+    oovColumn match {
       case None => df
       case Some(out) =>
         // case-INSENSITIVE: Spark's withColumn resolves case-insensitively,
@@ -108,15 +95,16 @@ object BpeTransforms {
  */
 object BpeTrainTransform extends Transform {
   val transformType = "bpe_train"
-  override val columnOptions = Seq("textColumn")
+  private val TextColumn = Opt.column("textColumn").required
+  private val NumMerges = Opt.int("numMerges").default(1000)
+  private val MaxWords = Opt.int("maxWords").default(100000)
+  private val MinCount = Opt.long("minCount").default(2L)
+  private val ByteFallback = Opt.bool("byteFallback").default(false)
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "textColumn")
-    try Bpe.mergesFrame(input, config.options("textColumn"),
-      numMerges = intOption(config, "numMerges", 1000),
-      maxWords = intOption(config, "maxWords", 100000),
-      minCount = longOption(config, "minCount", 2L),
-      byteFallback = boolOption(config, "byteFallback", false))
+    try Bpe.mergesFrame(input, TextColumn(config),
+      numMerges = NumMerges(config), maxWords = MaxWords(config),
+      minCount = MinCount(config), byteFallback = ByteFallback(config))
     catch { case e: IllegalArgumentException => throw new ConfigException(e.getMessage) }
   }
 }
@@ -139,40 +127,37 @@ object BpeTrainTransform extends Transform {
  * codepoints into byte tokens automatically (the stamp rides in the
  * store — no option here), so it never produces `<unk>` or trips `fail`.
  */
-object BpeTokenizeTransform extends Transform {
+object BpeTokenizeTransform extends BpeStoreReader {
   val transformType = "bpe_tokenize"
-  override val columnOptions = Seq("textColumn")
+  private val TextColumn = Opt.column("textColumn").required
+  protected val mergesView = Opt.view("mergesView").required
+  private val Emit = Opt.oneOf("emit", "tokens", "ids").default("tokens")
+  private val OutputColumn = Opt.string("outputColumn")
+  private val OnOov = Opt.oneOf("onOov", "unk", "fail")
+  private val OovColumn = Opt.string("oovColumn")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "textColumn", "mergesView")
-    val emit = config.options.getOrElse("emit", "tokens")
-    val out = config.options.getOrElse("outputColumn",
+    val emit = Emit(config)
+    val out = OutputColumn.get(config).getOrElse(
       if (emit == "ids") "input_ids" else "bpe_tokens")
     if (input.columns.contains(out)) throw new ConfigException(
       s"$transformType: output column '$out' already exists in the input — " +
         "set outputColumn to a fresh name")
-    val failOnOov = config.options.get("onOov") match {
-      case None | Some("unk") => false
-      case Some("fail") => true
-      case Some(other) => throw new ConfigException(
-        s"$transformType: onOov must be unk|fail, got '$other'")
-    }
-    val text = col(config.options("textColumn"))
-    val loaded = BpeTransforms.loadedFromView(config, ctx, transformType)
+    val failOnOov = OnOov.get(config).contains("fail")
+    val text = col(TextColumn(config))
+    val loaded = loadedStore(config, ctx)
     val encoded = emit match {
       case "tokens" =>
-        if (config.options.contains("onOov")) throw new ConfigException(
+        if (OnOov.isSet(config)) throw new ConfigException(
           s"$transformType: onOov applies to emit=ids only — string tokens " +
             "carry out-of-alphabet symbols verbatim (use oovColumn to " +
             "observe them)")
         input.withColumn(out, BpeEncode(text, loaded))
-      case "ids" =>
+      case _ =>
         input.withColumn(out,
           graft.functions.expressions.BpeEncodeIds(text, loaded, failOnOov))
-      case other => throw new ConfigException(
-        s"$transformType: emit must be tokens|ids, got '$other'")
     }
-    BpeTransforms.withOovColumn(encoded, config, loaded, text, transformType)
+    BpeTransforms.withOovColumn(encoded, OovColumn.get(config), loaded, text, transformType)
   }
 }
 
@@ -186,19 +171,19 @@ object BpeTokenizeTransform extends Transform {
  * Options: `idsColumn`, `mergesView` (required); `outputColumn` (default
  * `detok_text`); `numMerges`/`minCount` stamp checks.
  */
-object BpeDetokenizeTransform extends Transform {
+object BpeDetokenizeTransform extends BpeStoreReader {
   val transformType = "bpe_detokenize"
-  override val columnOptions = Seq("idsColumn")
+  private val IdsColumn = Opt.column("idsColumn").required
+  protected val mergesView = Opt.view("mergesView").required
+  private val OutputColumn = Opt.string("outputColumn").default("detok_text")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "idsColumn", "mergesView")
-    val out = config.options.getOrElse("outputColumn", "detok_text")
+    val out = OutputColumn(config)
     if (input.columns.contains(out)) throw new ConfigException(
       s"$transformType: output column '$out' already exists in the input — " +
         "set outputColumn to a fresh name")
-    val loaded = BpeTransforms.loadedFromView(config, ctx, transformType)
     input.withColumn(out, graft.functions.expressions.BpeDecodeIds(
-      col(config.options("idsColumn")), loaded))
+      col(IdsColumn(config)), loadedStore(config, ctx)))
   }
 }
 
@@ -214,16 +199,13 @@ object BpeDetokenizeTransform extends Transform {
  * meaningful); `mergesView` names a registered view instead. Options:
  * `numMerges`/`minCount` stamp checks.
  */
-object BpeVocabTransform extends Transform {
+object BpeVocabTransform extends BpeStoreReader {
   val transformType = "bpe_vocab"
+  protected val mergesView = Opt.view("mergesView")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    val store =
-      if (config.options.contains("mergesView"))
-        BpeTransforms.storeFromView(config, ctx, transformType)
-      else input
+    val store = mergesView.tableIfSet(config, ctx.spark).getOrElse(input)
     graft.text.Bpe.vocabFrame(store,
-      wantNumMerges = intOption(config, "numMerges"),
-      wantMinCount = longOption(config, "minCount"))
+      wantNumMerges = WantNumMerges.get(config), wantMinCount = WantMinCount.get(config))
   }
 }
 
@@ -232,20 +214,22 @@ object BpeVocabTransform extends Transform {
  * `token_cap`/`pack_sequences`/`mix` budgets should run on). Options as
  * [[BpeTokenizeTransform]]; `outputColumn` defaults to `n_bpe_tokens`.
  */
-object BpeTokenCountTransform extends Transform {
+object BpeTokenCountTransform extends BpeStoreReader {
   val transformType = "bpe_token_count"
-  override val columnOptions = Seq("textColumn")
+  private val TextColumn = Opt.column("textColumn").required
+  protected val mergesView = Opt.view("mergesView").required
+  private val OutputColumn = Opt.string("outputColumn").default("n_bpe_tokens")
+  private val OovColumn = Opt.string("oovColumn")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "textColumn", "mergesView")
-    val out = config.options.getOrElse("outputColumn", "n_bpe_tokens")
+    val out = OutputColumn(config)
     if (input.columns.contains(out)) throw new ConfigException(
       s"$transformType: output column '$out' already exists in the input — " +
         "set outputColumn to a fresh name")
-    val text = col(config.options("textColumn"))
-    val loaded = BpeTransforms.loadedFromView(config, ctx, transformType)
+    val text = col(TextColumn(config))
+    val loaded = loadedStore(config, ctx)
     BpeTransforms.withOovColumn(
       input.withColumn(out, BpeEncode.count(text, loaded)),
-      config, loaded, text, transformType)
+      OovColumn.get(config), loaded, text, transformType)
   }
 }

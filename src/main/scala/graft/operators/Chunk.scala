@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.api.{ConfigException, RunContext, Transform}
+import graft.api.{ConfigException, Opt, RunContext}
 import graft.config.{ExprUtils, TransformConfig}
 
 /**
@@ -50,34 +50,36 @@ import graft.config.{ExprUtils, TransformConfig}
  *             mergesView: v_merges, size: "2048", overlap: "128"}
  * }}}
  */
-object ChunkTransform extends Transform {
+object ChunkTransform extends BpeStoreReader {
   val transformType = "chunk"
-  override val columnOptions = Seq("idColumn", "textColumn", "keep")
+  private val IdColumn = Opt.column("idColumn").required
+  private val TextColumn = Opt.column("textColumn").required
+  private val Keep = Opt.columns("keep").default(Nil)
+  private val Size = Opt.int("size", min = 1).required
+  private val Overlap = Opt.int("overlap", min = 0).default(0)
+  private val Unit = Opt.oneOf("unit", "chars", "tokens").default("chars")
+  // read by unit=tokens only
+  protected val mergesView = Opt.view("mergesView")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "idColumn", "textColumn", "size")
-    val id = config.options("idColumn")
-    val text = config.options("textColumn")
-    val size = intOption(config, "size", missing(config, "size"))
-    val overlap = intOption(config, "overlap", 0)
-    if (size <= 0) throw new ConfigException(s"chunk size must be positive, got $size")
-    if (overlap < 0 || overlap >= size)
+    val id = IdColumn(config)
+    val text = TextColumn(config)
+    val size = Size(config)
+    val overlap = Overlap(config)
+    if (overlap >= size)
       throw new ConfigException(s"chunk overlap must be in [0, size), got $overlap")
     val stride = size - overlap
-    val keep = config.options.get("keep").map(ExprUtils.parseColumns).getOrElse(Nil)
-    val unit = config.options.getOrElse("unit", "chars")
-    if (unit != "chars" && unit != "tokens") throw new ConfigException(
-      s"chunk: unit must be chars|tokens, got '$unit'")
-    if (unit == "chars" && config.options.contains("mergesView"))
+    val keep = Keep(config)
+    val unit = Unit(config)
+    if (unit == "chars" && mergesView.isSet(config))
       throw new ConfigException(
         "chunk: mergesView only applies to unit=tokens — a char window " +
           "never consults the tokenizer; set unit: tokens or drop the view")
 
     if (unit == "tokens") {
-      required(config, "mergesView")
       // fixed output/staging names collide loudly, never silently
       ExprUtils.requireNoHelperCollision("chunk", (id +: keep) :+ text,
         "chunk_id", "chunk_ids", "chunk_text", "chunk_len", "__chunk_ids")
-      val loaded = BpeTransforms.loadedFromView(config, ctx, transformType)
+      val loaded = loadedStore(config, ctx)
       val ids = col("__chunk_ids")
       val n = size2(ids)
       val nChunks = when(n <= size, lit(1L))

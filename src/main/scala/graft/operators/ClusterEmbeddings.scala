@@ -3,8 +3,14 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.api.{ConfigException, RunContext, Transform}
+import graft.api.{Opt, RunContext, Transform}
 import graft.config.TransformConfig
+
+/** The `idColumn`/`vecColumn` pair every embedding transform reads. */
+private[operators] trait IdVecColumns extends Transform {
+  protected val IdColumn = Opt.column("idColumn").required
+  protected val VecColumn = Opt.column("vecColumn").required
+}
 
 /**
  * `cluster_embeddings` — corpus organization by spherical k-means:
@@ -41,31 +47,29 @@ import graft.config.TransformConfig
  * NearestCentroidSim node carrying the same codebook as a reference
  * object (never as plan literals). No row of the corpus is ever shuffled.
  */
-object ClusterEmbeddingsTransform extends Transform {
+object ClusterEmbeddingsTransform extends IdVecColumns {
   val transformType = "cluster_embeddings"
-  override val columnOptions = Seq("idColumn", "vecColumn")
+  // trained-mode knobs; with codebookView, stamps the store must match
+  private val NClusters = Opt.int("nClusters", min = 1)
+  private val KmeansIters = Opt.int("kmeansIters")
+  private val CodebookView = Opt.view("codebookView")
+  private val ClusterColumn = Opt.string("clusterColumn").default("cluster_id")
+  private val AppendSim = Opt.string("appendSim")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     import graft.functions.expressions.ArgTopCentroids
-    required(config, "idColumn", "vecColumn")
-    val idCol = config.options("idColumn")
-    val vecCol = config.options("vecColumn")
-    val nClusters = intOption(config, "nClusters", 64)
-    if (nClusters < 1)
-      throw new ConfigException(s"cluster_embeddings: nClusters must be >= 1, got $nClusters")
-    val iters = intOption(config, "kmeansIters", 3)
-    val clusterCol = config.options.getOrElse("clusterColumn", "cluster_id")
-
-    val cents = config.options.get("codebookView") match {
-      case Some(view) => graft.ann.Ann.loadCodebook(ctx.spark.table(view),
-        intOption(config, "nClusters"),
-        intOption(config, "kmeansIters"))
+    val idCol = IdColumn(config)
+    val vecCol = VecColumn(config)
+    val cents = CodebookView.tableIfSet(config, ctx.spark) match {
+      case Some(store) => graft.ann.Ann.loadCodebook(store,
+        NClusters.get(config), KmeansIters.get(config))
       case None => graft.ann.Ann.kmeansCentroids(
-        input.select(col(idCol), col(vecCol)), idCol, vecCol, nClusters, iters)
+        input.select(col(idCol), col(vecCol)), idCol, vecCol,
+        NClusters.get(config).getOrElse(64), KmeansIters.get(config).getOrElse(3))
     }
-    val assigned = input.withColumn(clusterCol,
+    val assigned = input.withColumn(ClusterColumn(config),
       ArgTopCentroids(col(vecCol), cents, 1).getItem(0))
-    config.options.get("appendSim") match {
+    AppendSim.get(config) match {
       case None => assigned
       case Some(simCol) if cents.isEmpty =>
         // empty input → empty codebook: array() of zero literals types as
@@ -102,19 +106,14 @@ object ClusterEmbeddingsTransform extends Transform {
  *
  * `idColumn`/`vecColumn` required; `nLists` (64), `kmeansIters` (3).
  */
-object CodebookTransform extends Transform {
+object CodebookTransform extends IdVecColumns {
   val transformType = "codebook"
-  override val columnOptions = Seq("idColumn", "vecColumn")
+  private val NLists = Opt.int("nLists", min = 1).default(64)
+  private val KmeansIters = Opt.int("kmeansIters").default(3)
 
-  def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "idColumn", "vecColumn")
-    val nLists = intOption(config, "nLists", 64)
-    if (nLists < 1)
-      throw new ConfigException(s"codebook: nLists must be >= 1, got $nLists")
-    graft.ann.Ann.codebookFrame(input,
-      config.options("idColumn"), config.options("vecColumn"),
-      nLists, intOption(config, "kmeansIters", 3))
-  }
+  def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame =
+    graft.ann.Ann.codebookFrame(input, IdColumn(config), VecColumn(config),
+      NLists(config), KmeansIters(config))
 }
 
 /** `pq_codebook` — train and persist PRODUCT-QUANTIZATION codebooks
@@ -125,27 +124,17 @@ object CodebookTransform extends Transform {
   * — no sampling scan, cells comparable across runs (the PQ analogue of
   * `codebook` for IVF). Options: `idColumn`/`vecColumn` required; `m`
   * (8), `nCentroids` (16; 256 = byte-code PQ), `kmeansIters` (3). */
-object PqCodebookTransform extends Transform {
+object PqCodebookTransform extends IdVecColumns {
   val transformType = "pq_codebook"
-  override val columnOptions = Seq("idColumn", "vecColumn")
+  // ranged here, not by pqCodebooks' raw require: the YAML author typed
+  // the knob, so the error must speak YAML
+  private val M = Opt.int("m", min = 1).default(8)
+  private val NCentroids = Opt.int("nCentroids", min = 1).default(16)
+  private val KmeansIters = Opt.int("kmeansIters").default(3)
 
-  def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "idColumn", "vecColumn")
-    val m = intOption(config, "m", 8)
-    val nCentroids = intOption(config, "nCentroids", 16)
-    // guided ConfigException, not pqCodebooks' raw require: the YAML
-    // author typed the knob, so the error must speak YAML (the sibling
-    // CodebookTransform's nLists contract)
-    if (m < 1)
-      throw new ConfigException(s"pq_codebook: m must be >= 1, got $m")
-    if (nCentroids < 1)
-      throw new ConfigException(
-        s"pq_codebook: nCentroids must be >= 1, got $nCentroids")
-    graft.ann.Ann.pqCodebookFrame(input,
-      config.options("idColumn"), config.options("vecColumn"),
-      m = m, k = nCentroids,
-      kmeansIters = intOption(config, "kmeansIters", 3))
-  }
+  def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame =
+    graft.ann.Ann.pqCodebookFrame(input, IdColumn(config), VecColumn(config),
+      m = M(config), k = NCentroids(config), kmeansIters = KmeansIters(config))
 }
 
 /** `pq_encode` — quantize a corpus against a PERSISTED PQ codebook store
@@ -157,16 +146,14 @@ object PqCodebookTransform extends Transform {
   * train NOTHING and encode NOTHING — the candidate phase's only
   * full-width corpus read disappears. Options: `idColumn`/`vecColumn`/
   * `codebookView` required. */
-object PqEncodeTransform extends Transform {
+object PqEncodeTransform extends IdVecColumns {
   val transformType = "pq_encode"
-  override val columnOptions = Seq("idColumn", "vecColumn")
+  private val CodebookView = Opt.view("codebookView").required
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "idColumn", "vecColumn", "codebookView")
-    val cbs = graft.ann.Ann.loadPqCodebooks(
-      ctx.spark.table(config.options("codebookView")), kName = "nCentroids")
-    graft.ann.Ann.pqCodesFrame(input,
-      config.options("idColumn"), config.options("vecColumn"), cbs)
+    val cbs = graft.ann.Ann.loadPqCodebooks(CodebookView.table(config, ctx.spark),
+      kName = "nCentroids")
+    graft.ann.Ann.pqCodesFrame(input, IdColumn(config), VecColumn(config), cbs)
   }
 }
 
@@ -178,16 +165,13 @@ object PqEncodeTransform extends Transform {
   * method: ivfpq` runs pass it back via `codesView` (alongside the same
   * `codebookView`) and train nothing, encode nothing. Options:
   * `idColumn`/`vecColumn`/`codebookView` required. */
-object IvfPqEncodeTransform extends Transform {
+object IvfPqEncodeTransform extends IdVecColumns {
   val transformType = "ivfpq_encode"
-  override val columnOptions = Seq("idColumn", "vecColumn")
+  private val CodebookView = Opt.view("codebookView").required
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "idColumn", "vecColumn", "codebookView")
-    val (cents, cbs) = graft.ann.Ann.loadIvfPqStore(
-      ctx.spark.table(config.options("codebookView")))
-    graft.ann.Ann.ivfPqCodesFrame(input,
-      config.options("idColumn"), config.options("vecColumn"), cents, cbs)
+    val (cents, cbs) = graft.ann.Ann.loadIvfPqStore(CodebookView.table(config, ctx.spark))
+    graft.ann.Ann.ivfPqCodesFrame(input, IdColumn(config), VecColumn(config), cents, cbs)
   }
 }
 
@@ -199,22 +183,15 @@ object IvfPqEncodeTransform extends Transform {
   * `codebookView` — no sampling scan, list assignments and code cells
   * comparable across runs. Options: `idColumn`/`vecColumn` required;
   * `nLists` (16), `m` (8), `nCentroids` (16), `kmeansIters` (3). */
-object IvfPqCodebookTransform extends Transform {
+object IvfPqCodebookTransform extends IdVecColumns {
   val transformType = "ivfpq_codebook"
-  override val columnOptions = Seq("idColumn", "vecColumn")
+  private val NLists = Opt.int("nLists", min = 1).default(16)
+  private val M = Opt.int("m", min = 1).default(8)
+  private val NCentroids = Opt.int("nCentroids", min = 1).default(16)
+  private val KmeansIters = Opt.int("kmeansIters").default(3)
 
-  def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "idColumn", "vecColumn")
-    val nLists = intOption(config, "nLists", 16)
-    val m = intOption(config, "m", 8)
-    val nCentroids = intOption(config, "nCentroids", 16)
-    for ((name, v) <- Seq("nLists" -> nLists, "m" -> m,
-        "nCentroids" -> nCentroids) if v < 1)
-      throw new ConfigException(
-        s"$transformType: $name must be >= 1, got $v")
-    graft.ann.Ann.ivfPqStoreFrame(input,
-      config.options("idColumn"), config.options("vecColumn"),
-      nLists = nLists, m = m, nCentroids = nCentroids,
-      kmeansIters = intOption(config, "kmeansIters", 3))
-  }
+  def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame =
+    graft.ann.Ann.ivfPqStoreFrame(input, IdColumn(config), VecColumn(config),
+      nLists = NLists(config), m = M(config), nCentroids = NCentroids(config),
+      kmeansIters = KmeansIters(config))
 }

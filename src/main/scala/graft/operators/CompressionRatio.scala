@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.api.{ConfigException, RunContext, Transform}
+import graft.api.{Opt, RunContext, Transform}
 import graft.config.TransformConfig
 
 /**
@@ -77,14 +77,11 @@ object CompressionRatio {
  */
 object CompressionRatioTransform extends Transform {
   val transformType = "compression_ratio"
-  override val columnOptions = Seq("textColumn")
+  private val TextColumn = Opt.column("textColumn").required
+  private val Level = Opt.int("level", min = 1, max = 9).default(6)
+  private val OutputColumn = Opt.string("outputColumn").default("compression_ratio")
 
-  def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "textColumn")
-    val level = intOption(config, "level", 6)
-    if (level < 1 || level > 9)
-      throw new ConfigException(s"compression_ratio: level must be in [1,9], got $level")
-    input.withColumn(config.options.getOrElse("outputColumn", "compression_ratio"),
-      CompressionRatio.ratio(col(config.options("textColumn")), level))
-  }
+  def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame =
+    input.withColumn(OutputColumn(config),
+      CompressionRatio.ratio(col(TextColumn(config)), Level(config)))
 }

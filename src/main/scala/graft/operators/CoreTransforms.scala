@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.api.{Transform, RunContext, ConfigException, TransformException}
+import graft.api.{Transform, RunContext, ConfigException, Opt}
 import graft.config.{TransformConfig, ExprUtils}
 
 /**
@@ -14,10 +14,9 @@ import graft.config.{TransformConfig, ExprUtils}
  */
 object FilterTransform extends Transform {
   val transformType = "filter"
-  def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "condition")
-    input.filter(expr(config.options("condition")))
-  }
+  private val Condition = Opt.expr("condition").required
+  def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame =
+    input.filter(expr(Condition(config)))
 }
 
 /**
@@ -33,9 +32,11 @@ object FilterTransform extends Transform {
  */
 object MapTransform extends Transform {
   val transformType = "map"
+  private val Expressions = Opt.expr("expressions").required
+  private val Project = Opt.bool("project").default(false)
+  private val Keep = Opt.columns("keep").default(Nil)
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "expressions")
-    val pairs = ExprUtils.parseExprList(config.options("expressions"))
+    val pairs = ExprUtils.parseExprList(Expressions(config))
     if (pairs.isEmpty) throw new ConfigException(s"map '${config.name}': empty expressions")
     // case-INsensitive, like Spark's default resolution (and the keep-clash
     // guard below): "Price: a, price: b" is a duplicate, not two columns.
@@ -44,8 +45,8 @@ object MapTransform extends Transform {
       .collect { case (_, ps) if ps.size > 1 => ps.head._1 }
     if (dups.nonEmpty) throw new ConfigException(
       s"map '${config.name}': duplicate alias(es) ${dups.mkString(", ")}")
-    if (boolOption(config, "project", false)) {
-      val keep = config.options.get("keep").map(ExprUtils.parseColumns).getOrElse(Nil)
+    if (Project(config)) {
+      val keep = Keep(config)
       // a keep column colliding with a mapped alias would emit two columns
       // of the same name — the exact ambiguity the duplicate-alias guard
       // above exists to prevent
@@ -71,20 +72,17 @@ object MapTransform extends Transform {
  */
 object AggregateTransform extends Transform {
   val transformType = "aggregation"
-  override val columnOptions = Seq("groupBy")
+  private val GroupBy = Opt.columns("groupBy").default(Nil)
+  private val Aggregations = Opt.expr("aggregations").required
+  private val GroupingSets = Opt.oneOf("groupingSets", "cube", "rollup")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "aggregations")
-    val aggs = ExprUtils.parseAggregations(config.options("aggregations"))
+    val aggs = ExprUtils.parseAggregations(Aggregations(config))
     if (aggs.isEmpty) throw new ConfigException(s"aggregation '${config.name}': no aggregations")
-    val groupCols = config.options.get("groupBy").map(ExprUtils.parseColumns).getOrElse(Nil)
-    val grouped = config.options.get("groupingSets") match {
-      case Some("cube")   => input.cube(groupCols.map(col): _*)
-      case Some("rollup") => input.rollup(groupCols.map(col): _*)
-      case None           => input.groupBy(groupCols.map(col): _*)
-      // a typo ("CUBE", "roll_up") must not silently fall back to a plain
-      // groupBy and drop every super-aggregate row
-      case Some(other) => throw new ConfigException(
-        s"aggregation '${config.name}': groupingSets must be cube|rollup, got '$other'")
+    val groupCols = GroupBy(config).map(col)
+    val grouped = GroupingSets.get(config) match {
+      case Some("cube")   => input.cube(groupCols: _*)
+      case Some("rollup") => input.rollup(groupCols: _*)
+      case _              => input.groupBy(groupCols: _*)
     }
     grouped.agg(aggs.head, aggs.tail: _*)
   }
@@ -101,34 +99,32 @@ object AggregateTransform extends Transform {
  */
 object JoinTransform extends Transform {
   val transformType = "join"
-  override val columnOptions = Seq("joinKeys", "leftKey")
-  private val types = Set("inner", "left", "right", "full", "left_outer", "right_outer",
-    "full_outer", "leftsemi", "left_semi", "leftanti", "left_anti", "cross")
+  private val RightDataset = Opt.view("rightDataset").required
+  private val JoinType = Opt.oneOf("joinType", "inner", "left", "right", "full", "left_outer",
+    "right_outer", "full_outer", "leftsemi", "left_semi", "leftanti", "left_anti", "cross")
+    .default("inner")
+  private val Hint = Opt.oneOfIgnoringCase("hint", "broadcast", "merge", "shuffle_hash", "shuffle_replicate_nl")
+  private val Broadcast = Opt.bool("broadcast").default(false)
+  private val JoinKeys = Opt.columns("joinKeys")
+  private val LeftKey = Opt.column("leftKey")
+  private val RightKey = Opt.string("rightKey")
+  private val SelectColumns = Opt.parsed("selectColumns")(ExprUtils.parseColumns)
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "rightDataset")
-    val spark = input.sparkSession
-    val joinType = config.options.getOrElse("joinType", "inner")
-    if (!types.contains(joinType))
-      throw new ConfigException(s"join '${config.name}': unknown joinType '$joinType'")
-    val right0 = spark.table(config.options("rightDataset"))
+    val joinType = JoinType(config)
+    val right0 = RightDataset.table(config, input.sparkSession)
     // strategy hints: broadcast (dims), or force merge / shuffle_hash when
     // the optimizer's stats-blind default picks wrong at scale (e.g. a
     // sort-merge over pre-sorted bucketed inputs, or hash when one side
     // is memory-tight). Catalyst still validates applicability.
-    val right = config.options.get("hint").map(_.trim.toLowerCase) match {
-      case Some(h @ ("merge" | "shuffle_hash" | "shuffle_replicate_nl" | "broadcast")) =>
-        right0.hint(h)
-      case Some(other) => throw new ConfigException(
-        s"join '${config.name}': unknown hint '$other' " +
-          "(broadcast|merge|shuffle_hash|shuffle_replicate_nl)")
-      case None =>
-        if (boolOption(config, "broadcast", false)) broadcast(right0) else right0
+    val right = Hint.get(config) match {
+      case Some(h) => right0.hint(h)
+      case None    => if (Broadcast(config)) broadcast(right0) else right0
     }
 
-    val joined = (config.options.get("joinKeys"), config.options.get("leftKey"), config.options.get("rightKey")) match {
+    val joined = (JoinKeys.get(config), LeftKey.get(config), RightKey.get(config)) match {
       case (Some(keys), _, _) =>
-        input.join(right, ExprUtils.parseColumns(keys), joinType)
+        input.join(right, keys, joinType)
       case (None, Some(lk), Some(rk)) =>
         val j = input.join(right, input(lk) === right(rk), joinType)
         // reference semantics: drop right-side duplicates of shared names, keep left
@@ -142,8 +138,8 @@ object JoinTransform extends Transform {
       case _ =>
         throw new ConfigException(s"join '${config.name}': need joinKeys or leftKey+rightKey")
     }
-    config.options.get("selectColumns") match {
-      case Some(cols) => joined.select(ExprUtils.parseColumns(cols).map(col): _*)
+    SelectColumns.get(config) match {
+      case Some(cols) => joined.select(cols.map(col): _*)
       case None       => joined
     }
   }

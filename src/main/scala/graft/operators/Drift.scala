@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.api.{ConfigException, RunContext, Transform}
+import graft.api.{ConfigException, Opt, RunContext, Transform}
 import graft.config.TransformConfig
 
 /**
@@ -140,15 +140,14 @@ object Drift {
  */
 object DriftTransform extends Transform {
   val transformType = "drift"
-  override val columnOptions = Seq("columns")
+  private val Columns = Opt.columns("columns").required
+  private val ReferenceView = Opt.view("referenceView").required
+  private val Bins = Opt.int("bins").default(10)
+  private val Epsilon = Opt.double("epsilon").default(1e-6)
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "columns", "referenceView")
-    val cols = graft.config.ExprUtils.parseColumns(config.options("columns"))
-    try Drift.psi(input,
-      ctx.spark.table(config.options("referenceView")), cols,
-      bins = intOption(config, "bins", 10),
-      epsilon = doubleOption(config, "epsilon", 1e-6))
+    try Drift.psi(input, ReferenceView.table(config, ctx.spark), Columns(config),
+      bins = Bins(config), epsilon = Epsilon(config))
     catch { case e: IllegalArgumentException => throw new ConfigException(e.getMessage) }
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.api.{ConfigException, RunContext, Transform}
+import graft.api.{ConfigException, Opt, RunContext}
 import graft.config.{ExprUtils, TransformConfig}
 
 /**
@@ -42,21 +42,17 @@ import graft.config.{ExprUtils, TransformConfig}
  */
 object FrequentItemsTransform extends SketchColumns {
   val transformType = "frequent_items"
-  override protected val rawModes = Set("build", "topk")
+  override protected def modes = Seq("build", "merge", "estimate", "topk")
+  override protected def rawModes = Set("build", "topk")
+  private val K = Opt.int("k", min = 1).default(10)
+  private val MaxItemsTracked = Opt.int("maxItemsTracked").default(10000)
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "columns")
-    val cols = ExprUtils.parseColumns(config.options("columns"))
-    if (cols.isEmpty) throw new ConfigException(
-      "frequent_items: columns lists no column names")
-    val groups = config.options.get("groupBy").map(ExprUtils.parseColumns).getOrElse(Nil)
-    val k = intOption(config, "k", 10)
-    val maxTracked = intOption(config, "maxItemsTracked", 10000)
-    if (k < 1) throw new ConfigException(s"frequent_items: k must be >= 1, got $k")
+    val cols = Columns(config)
+    val k = K(config)
+    val maxTracked = MaxItemsTracked(config)
     if (maxTracked < k) throw new ConfigException(
       s"frequent_items: maxItemsTracked ($maxTracked) must be >= k ($k)")
-    def grouped(df: DataFrame) =
-      if (groups.isEmpty) df.groupBy() else df.groupBy(groups.map(col): _*)
     def estimated(df: DataFrame) = {
       // each column's explode has its own row count — estimate emits rows
       // for ONE column at a time
@@ -82,22 +78,20 @@ object FrequentItemsTransform extends SketchColumns {
           col("__e.count").cast("long").as("est_count") :+
           (col("__rank") + 1).as("rank")): _*)
     }
-    config.options.getOrElse("mode", "build") match {
+    Mode(config) match {
       case "build" =>
         val aggs = cols.map(c =>
           expr(s"approx_top_k_accumulate(`$c`, $maxTracked)").as(s"${c}_topk"))
-        grouped(input).agg(aggs.head, aggs.tail: _*)
+        grouped(input, config).agg(aggs.head, aggs.tail: _*)
       case "merge" =>
         val aggs = cols.map(c =>
           expr(s"approx_top_k_combine(`${c}_topk`, $maxTracked)").as(s"${c}_topk"))
-        grouped(input).agg(aggs.head, aggs.tail: _*)
+        grouped(input, config).agg(aggs.head, aggs.tail: _*)
       case "estimate" => estimated(input)
-      case "topk" =>
+      case _ =>
         val aggs = cols.map(c =>
           expr(s"approx_top_k_accumulate(`$c`, $maxTracked)").as(s"${c}_topk"))
-        estimated(grouped(input).agg(aggs.head, aggs.tail: _*))
-      case other => throw new ConfigException(
-        s"frequent_items mode must be build|merge|estimate|topk, got '$other'")
+        estimated(grouped(input, config).agg(aggs.head, aggs.tail: _*))
     }
   }
 }

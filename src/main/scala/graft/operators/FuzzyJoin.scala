@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.api.{ConfigException, RunContext, Transform}
+import graft.api.{ConfigException, Opt, RunContext, Transform}
 import graft.config.TransformConfig
 
 /**
@@ -87,23 +87,25 @@ object FuzzyJoin {
  */
 object FuzzyJoinTransform extends Transform {
   val transformType = "join_fuzzy"
-  override val columnOptions = Seq("leftColumn")
+  private val RightDataset = Opt.view("rightDataset").required
+  private val LeftColumn = Opt.column("leftColumn").required
+  private val RightColumn = Opt.string("rightColumn").required
+  private val MaxDistance = Opt.int("maxDistance").required
+  private val BlockPrefix = Opt.int("blockPrefix").default(4)
+  private val MaxBlockSize = Opt.int("maxBlockSize").default(100000)
+  private val DistanceColumn = Opt.string("distanceColumn").default("edit_distance")
+  private val RightPrefix = Opt.string("rightPrefix").default("r_")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "rightDataset", "leftColumn", "rightColumn", "maxDistance")
-    val pre = config.options.getOrElse("rightPrefix", "r_")
-    val right0 = ctx.spark.table(config.options("rightDataset"))
+    val pre = RightPrefix(config)
+    val right0 = RightDataset.table(config, ctx.spark)
     // one projection, not N stacked withColumnRenamed analyzer passes
     val right = right0.toDF(right0.columns.map(pre + _): _*)
-    val rightCol = pre + config.options("rightColumn")
+    val rightCol = pre + RightColumn(config)
     if (!right.columns.contains(rightCol))
       throw new ConfigException(
-        s"join_fuzzy: column '${config.options("rightColumn")}' not in '${config.options("rightDataset")}'")
-    FuzzyJoin.fuzzyJoin(input, right,
-      config.options("leftColumn"), rightCol,
-      intOption(config, "maxDistance", missing(config, "maxDistance")),
-      intOption(config, "blockPrefix", 4),
-      intOption(config, "maxBlockSize", 100000),
-      config.options.getOrElse("distanceColumn", "edit_distance"))
+        s"join_fuzzy: column '${RightColumn(config)}' not in '${RightDataset(config)}'")
+    FuzzyJoin.fuzzyJoin(input, right, LeftColumn(config), rightCol, MaxDistance(config),
+      BlockPrefix(config), MaxBlockSize(config), DistanceColumn(config))
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.api.{ConfigException, RunContext, Transform}
+import graft.api.{ConfigException, Opt, RunContext}
 import graft.config.TransformConfig
 import graft.functions.TextFunctions
 
@@ -166,32 +166,38 @@ object GopherRules {
  * the store without a threshold (loaded but never used) is a config
  * contradiction and fails with a guided error.
  */
-object GopherRulesTransform extends Transform {
+object GopherRulesTransform extends BpeStoreReader {
   val transformType = "quality_rules"
-  override val columnOptions = Seq("textColumn")
+  private val TextColumn = Opt.column("textColumn").required
+  private val Mode = Opt.oneOf("mode", "annotate", "filter").default("annotate")
+  private val MinWords = Opt.long("minWords").default(50L)
+  private val MaxWords = Opt.long("maxWords").default(100000L)
+  private val MinMeanWordLength = Opt.double("minMeanWordLength").default(3.0)
+  private val MaxMeanWordLength = Opt.double("maxMeanWordLength").default(10.0)
+  private val MaxSymbolRatio = Opt.double("maxSymbolRatio").default(0.1)
+  private val MaxBulletFraction = Opt.double("maxBulletFraction").default(0.9)
+  private val MaxEllipsisFraction = Opt.double("maxEllipsisFraction").default(0.3)
+  private val MinAlphaFraction = Opt.double("minAlphaFraction").default(0.8)
+  private val MinStopwords = Opt.int("minStopwords").default(2)
+  private val MaxTopNgramFraction = Opt.double("maxTopNgramFraction").default(1.0)
+  private val TopNgramSize = Opt.int("topNgramSize").default(2)
+  private val MaxDupLineFraction = Opt.double("maxDupLineFraction").default(1.0)
+  private val MaxDupLineCharFraction = Opt.double("maxDupLineCharFraction").default(1.0)
+  // the token gate counts with the mergesView tokenizer store
+  private val MinBpeTokens = Opt.long("minBpeTokens").default(0L)
+  private val MaxBpeTokens = Opt.long("maxBpeTokens").default(Long.MaxValue)
+  protected val mergesView = Opt.view("mergesView")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "textColumn")
-    val o = config.options
-    val th = GopherRules.Thresholds(
-      minWords = longOption(config, "minWords", 50L),
-      maxWords = longOption(config, "maxWords", 100000L),
-      minMeanWordLength = doubleOption(config, "minMeanWordLength", 3.0),
-      maxMeanWordLength = doubleOption(config, "maxMeanWordLength", 10.0),
-      maxSymbolRatio = doubleOption(config, "maxSymbolRatio", 0.1),
-      maxBulletFraction = doubleOption(config, "maxBulletFraction", 0.9),
-      maxEllipsisFraction = doubleOption(config, "maxEllipsisFraction", 0.3),
-      minAlphaFraction = doubleOption(config, "minAlphaFraction", 0.8),
-      minStopwords = intOption(config, "minStopwords", 2),
-      maxTopNgramFraction = doubleOption(config, "maxTopNgramFraction", 1.0),
-      topNgramSize = intOption(config, "topNgramSize", 2),
-      maxDupLineFraction = doubleOption(config, "maxDupLineFraction", 1.0),
-      maxDupLineCharFraction = doubleOption(config, "maxDupLineCharFraction", 1.0),
-      minBpeTokens = longOption(config, "minBpeTokens", 0L),
-      maxBpeTokens = longOption(config, "maxBpeTokens", Long.MaxValue))
-    val tokenGateArmed =
-      o.contains("minBpeTokens") || o.contains("maxBpeTokens")
-    val bpeCount: Option[Column => Column] = o.get("mergesView") match {
+    // the declarations above, in Thresholds' field order
+    val th = GopherRules.Thresholds(MinWords(config), MaxWords(config),
+      MinMeanWordLength(config), MaxMeanWordLength(config), MaxSymbolRatio(config),
+      MaxBulletFraction(config), MaxEllipsisFraction(config), MinAlphaFraction(config),
+      MinStopwords(config), MaxTopNgramFraction(config), TopNgramSize(config),
+      MaxDupLineFraction(config), MaxDupLineCharFraction(config), MinBpeTokens(config),
+      MaxBpeTokens(config))
+    val tokenGateArmed = MinBpeTokens.isSet(config) || MaxBpeTokens.isSet(config)
+    val bpeCount: Option[Column => Column] = mergesView.get(config) match {
       case None if tokenGateArmed => throw new ConfigException(
         "quality_rules: minBpeTokens/maxBpeTokens need a mergesView " +
           "tokenizer store to count with — register the persisted " +
@@ -202,16 +208,12 @@ object GopherRulesTransform extends Transform {
           "maxBpeTokens is — the store would be loaded and never used; " +
           "set a token threshold or drop mergesView")
       case Some(_) =>
-        val loaded = BpeTransforms.loadedFromView(config, ctx, transformType)
+        val loaded = loadedStore(config, ctx)
         Some((c: Column) =>
           graft.functions.expressions.BpeEncode.count(c, loaded))
     }
-    val textCol = o("textColumn")
-    o.getOrElse("mode", "annotate") match {
-      case "annotate" => GopherRules.annotate(input, textCol, th, bpeCount)
-      case "filter"   => GopherRules.applyFilter(input, textCol, th, bpeCount)
-      case other => throw new ConfigException(
-        s"quality_rules mode must be annotate|filter, got '$other'")
-    }
+    val textCol = TextColumn(config)
+    if (Mode(config) == "filter") GopherRules.applyFilter(input, textCol, th, bpeCount)
+    else GopherRules.annotate(input, textCol, th, bpeCount)
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.api.{ConfigException, RunContext, Transform}
+import graft.api.{Opt, RunContext, Transform}
 import graft.config.TransformConfig
 
 /**
@@ -77,15 +77,13 @@ object HtmlStripTransform extends Transform {
     if (doTrim) regexp_replace(collapsed, "^\\s+|\\s+$", "") else collapsed
   }
 
-  override val columnOptions = Seq("columns")
+  private val Columns = Opt.columns("columns").required.nonEmpty
+  private val CollapseWhitespace = Opt.bool("collapseWhitespace").default(false)
+  private val Trim = Opt.bool("trim").default(false)
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "columns")
-    val cols = config.options("columns").split(",").map(_.trim).filter(_.nonEmpty)
-    if (cols.isEmpty) throw new ConfigException(s"$transformType: no columns listed")
-    val (collapse, doTrim) =
-      (boolOption(config, "collapseWhitespace", false), boolOption(config, "trim", false))
-    cols.foldLeft(input) { (df, c) =>
+    val (collapse, doTrim) = (CollapseWhitespace(config), Trim(config))
+    Columns(config).foldLeft(input) { (df, c) =>
       df.withColumn(c, strip(col(c), collapse, doTrim))
     }
   }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 
-import graft.api.{ConfigException, RunContext, Transform}
+import graft.api.{ConfigException, Opt, RunContext, Transform}
 import graft.config.TransformConfig
 import graft.text.ChargramLm
 
@@ -29,13 +29,13 @@ import graft.text.ChargramLm
  */
 object ChargramLmTransform extends Transform {
   val transformType = "chargram_lm"
-  override val columnOptions = Seq("labelColumn", "textColumn")
+  private val LabelColumn = Opt.column("labelColumn").required
+  private val TextColumn = Opt.column("textColumn").required
+  private val N = Opt.int("n").default(3)
+  private val MinCount = Opt.long("minCount").default(1L)
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "labelColumn", "textColumn")
-    try ChargramLm.modelFrame(input, config.options("labelColumn"),
-      config.options("textColumn"),
-      n = intOption(config, "n", 3),
-      minCount = longOption(config, "minCount", 1L))
+    try ChargramLm.modelFrame(input, LabelColumn(config), TextColumn(config),
+      n = N(config), minCount = MinCount(config))
     catch { case e: IllegalArgumentException => throw new ConfigException(e.getMessage) }
   }
 }
@@ -48,43 +48,39 @@ object ChargramLmTransform extends Transform {
  * drift LOUDLY, either as a watched fraction column or as a per-row
  * threshold guard, never as silently degraded scores.
  */
-private[operators] object LmDrift {
+private[operators] trait LmDrift extends Transform {
+  /** The store's `n`/`minCount` training stamps, when given. */
+  protected val WantN = Opt.int("n", min = 1)
+  protected val WantMinCount = Opt.long("minCount")
+  protected val UnseenColumn = Opt.string("unseenColumn")
+  protected val MaxUnseenFrac = Opt.double("maxUnseenFrac", min = 0.0, max = 1.0)
+
   /** Append `unseenColumn` (rounded per-row unseen-gram fraction, armed
     * with the optional `maxUnseenFrac` per-row guard) when configured.
     * `maxUnseenFrac` without `unseenColumn` is refused: the guard rides
     * the emitted column's expression — with no column, Catalyst would
     * prune the guard out of the plan and it would never fire. */
-  def withUnseenColumn(df: DataFrame, config: TransformConfig,
-                       threshold: Option[Double], loaded: ChargramLm.Loaded,
-                       textCol: String, tname: String): DataFrame = {
+  protected def withUnseenColumn(df: DataFrame, config: TransformConfig,
+                                 loaded: ChargramLm.Loaded, textCol: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, round}
-    config.options.get("unseenColumn") match {
+    val threshold = MaxUnseenFrac.get(config)
+    UnseenColumn.get(config) match {
       case None =>
         threshold.foreach { _ => throw new ConfigException(
-          s"$tname: maxUnseenFrac is set but unseenColumn is not — the " +
+          s"$transformType: maxUnseenFrac is set but unseenColumn is not — the " +
             "guard rides the unseen-fraction column's expression, so " +
             "without a column it would be pruned out of the plan and " +
             "never fire; name the column via unseenColumn") }
         df
       case Some(out) =>
         if (df.columns.exists(_.equalsIgnoreCase(out))) throw new ConfigException(
-          s"$tname: unseenColumn '$out' already exists on the input — " +
+          s"$transformType: unseenColumn '$out' already exists on the input — " +
             "set it to a fresh name")
         df.withColumn(out, round(graft.functions.expressions.LmUnseenFrac(
           col(textCol), loaded.model, loaded.n,
           threshold.getOrElse(Double.NaN)), 4))
     }
   }
-
-  /** The `maxUnseenFrac` guard, decoded before the store load so a bad
-    * value fails with no Spark job run. */
-  def maxUnseenFrac(config: TransformConfig, tname: String): Option[Double] =
-    config.options.get("maxUnseenFrac").map { raw =>
-      val v = graft.config.Options.double(tname, "maxUnseenFrac", raw)
-      if (v < 0.0 || v > 1.0) throw new ConfigException(
-        s"$tname: maxUnseenFrac must be in [0, 1], got $v")
-      v
-    }
 }
 
 /**
@@ -99,7 +95,7 @@ private[operators] object LmDrift {
  * 5000000) the one driver collect AND the whole in-memory model (the
  * scoring representation is sparse — O(store rows), one (labelIdx, ln)
  * pair per row — so no separate cell ceiling exists; the dense-era
- * `maxModelCells` option is refused with guidance). Documents with no
+ * `maxModelCells` option is refused as an unknown one). Documents with no
  * grams (null / shorter than the store's n) classify as `"und"` — the
  * `langId` convention.
  *
@@ -109,36 +105,22 @@ private[operators] object LmDrift {
  *   options: {textColumn: text, modelView: lang_model}
  * }}}
  */
-object LangClassifyTransform extends Transform {
+object LangClassifyTransform extends LmDrift {
   val transformType = "lang_classify"
-  override val columnOptions = Seq("textColumn")
+  private val TextColumn = Opt.column("textColumn").required
+  private val ModelView = Opt.view("modelView").required
+  private val MaxLabels = Opt.int("maxLabels").default(1000)
+  private val MaxModelRows = Opt.long("maxModelRows").default(5000000L)
+  private val OutputColumn = Opt.string("outputColumn").default("lang_pred")
+  private val ScoreColumn = Opt.string("scoreColumn")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "textColumn", "modelView")
-    // scoring is per-row — an id plays no role; accepting one silently
-    // would imply join semantics that don't exist (set-but-unused options
-    // are config contradictions, the text_signals/mergesView discipline)
-    if (config.options.contains("idColumn")) throw new ConfigException(
-      s"$transformType: idColumn is not an option — classification is a " +
-        "per-row projection and needs no id; drop the option")
-    val threshold = LmDrift.maxUnseenFrac(config, transformType)
-    val store = Stores.fromView(ctx, config.options("modelView"),
-      "modelView", transformType, "chargram_lm")
-    // the scoring model is sparse (O(store rows)); the dense-era cell
-    // ceiling no longer guards anything, and silently accepting it would
-    // imply a bound that isn't enforced (set-but-unused options are
-    // config contradictions, the idColumn discipline above)
-    if (config.options.contains("maxModelCells")) throw new ConfigException(
-      s"$transformType: maxModelCells was the DENSE scoring model's " +
-        "grams × labels ceiling; the model is now sparse — its footprint " +
-        "is O(store rows), bounded by maxModelRows — so the option no " +
-        "longer guards anything; drop it (or tighten maxModelRows)")
-    val loaded = ChargramLm.load(store,
-      wantN = intOption(config, "n"),
-      wantMinCount = longOption(config, "minCount"),
-      maxLabels = intOption(config, "maxLabels", 1000),
-      maxModelRows = longOption(config, "maxModelRows", 5000000L))
-    val out = config.options.getOrElse("outputColumn", "lang_pred")
-    val scoreCol = config.options.get("scoreColumn")
+    val loaded = ChargramLm.load(ModelView.table(config, ctx.spark),
+      wantN = WantN.get(config),
+      wantMinCount = WantMinCount.get(config),
+      maxLabels = MaxLabels(config),
+      maxModelRows = MaxModelRows(config))
+    val out = OutputColumn(config)
+    val scoreCol = ScoreColumn.get(config)
     // outputColumn == scoreColumn is a self-collision the per-input checks
     // below cannot see: withColumn(scoreCol) would silently overwrite the
     // prediction with the rounded score (Spark resolves case-insensitively)
@@ -155,9 +137,8 @@ object LangClassifyTransform extends Transform {
     }
     // drift observability LAST: classify's outputs are real columns by
     // then, so a colliding unseenColumn is caught by the exists check
-    LmDrift.withUnseenColumn(
-      ChargramLm.classify(input, config.options("textColumn"), loaded, out,
-        scoreCol),
-      config, threshold, loaded, config.options("textColumn"), transformType)
+    val text = TextColumn(config)
+    withUnseenColumn(ChargramLm.classify(input, text, loaded, out, scoreCol),
+      config, loaded, text)
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.api.{ConfigException, RunContext, Transform}
+import graft.api.{ConfigException, Opt, RunContext, Transform}
 import graft.config.TransformConfig
 
 /**
@@ -131,16 +131,18 @@ object Merge {
 object MergeTransform extends Transform {
   val transformType = "merge"
 
-  override val columnOptions = Seq("keyColumns")
+  private val RightDataset = Opt.view("rightDataset").required
+  private val KeyColumns = Opt.columns("keyColumns").required
+  // columns of the change set, not of the input
+  private val OpColumn = Opt.string("opColumn")
+  private val DeleteValue = Opt.string("deleteValue").default("D")
+  private val OrderBy = Opt.string("orderBy")
+  private val Broadcast = Opt.bool("broadcast").default(true)
 
-  def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "rightDataset", "keyColumns")
-    val changes = input.sparkSession.table(config.options("rightDataset"))
-    val keys = config.options("keyColumns").split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    Merge(input, changes, keys,
-      opCol = config.options.get("opColumn"),
-      deleteValue = config.options.getOrElse("deleteValue", "D"),
-      orderCol = config.options.get("orderBy"),
-      broadcastChanges = boolOption(config, "broadcast", true))
-  }
+  def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame =
+    Merge(input, RightDataset.table(config, input.sparkSession), KeyColumns(config),
+      opCol = OpColumn.get(config),
+      deleteValue = DeleteValue(config),
+      orderCol = OrderBy.get(config),
+      broadcastChanges = Broadcast(config))
 }

@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Column}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.{Window => W}
 import org.apache.spark.sql.functions._
 
-import graft.api.{Transform, RunContext, ConfigException}
+import graft.api.{Transform, RunContext, ConfigException, Opt}
 import graft.config.{ExprUtils, Options, TransformConfig}
 
 /**
@@ -24,27 +24,33 @@ import graft.config.{ExprUtils, Options, TransformConfig}
  */
 object RegisterTransform extends graft.api.Transform {
   val transformType = "register"
+  private val ViewName = Opt.viewDef("viewName").required
+  private val SourceType = Opt.string("sourceType").default("file")
+  private val Expressions = Opt.expr("expressions")
+  private val Project = Opt.bool("project")
+  private val Keep = Opt.string("keep")
+  private val Condition = Opt.expr("condition")
+  private val SourceOptions = Opt.passthrough
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "viewName")
-    val sourceType = config.options.getOrElse("sourceType", "file")
+    val sourceType = SourceType(config)
     // resolve through the executor's registry (threaded via RunContext) so
     // user-registered source types work inside register transforms
     val src = ctx.sources.getOrElse(graft.runtime.Registries.sources()).get(sourceType)
-    val srcConfig = graft.config.SourceConfig(
-      sourceType, config.options -- Seq(
-        "viewName", "sourceType", "expressions", "project", "keep", "condition"))
-    val raw = src.read(srcConfig)(input.sparkSession)
+    val raw = src.read(graft.config.SourceConfig(sourceType, SourceOptions(config)))(
+      input.sparkSession)
     // optional map-style projection before registering (e.g. parsing a
-    // kafka JSON value into typed columns for the join key)
+    // kafka JSON value into typed columns for the join key); `project`
+    // and `keep` are map's own options
     val shaped =
-      if (config.options.contains("expressions"))
-        MapTransform(raw, config.copy(transformType = "map"), ctx)
+      if (Expressions.isSet(config))
+        MapTransform(raw, TransformConfig(config.name, MapTransform.transformType,
+          Seq(Expressions, Project, Keep).flatMap(_.setting(config)).toMap), ctx)
       else raw
     // optional row filter (applied after the projection so it can
     // reference mapped columns; Catalyst pushes it to the scan) — e.g.
     // registering one corpus half as a dedup/decontamination reference
-    val filtered = config.options.get("condition").map(shaped.where).getOrElse(shaped)
-    filtered.createOrReplaceTempView(config.options("viewName"))
+    val filtered = Condition.get(config).map(shaped.where).getOrElse(shaped)
+    filtered.createOrReplaceTempView(ViewName(config))
     input
   }
 }
@@ -74,12 +80,8 @@ object RegisterTransform extends graft.api.Transform {
  */
 object MaterializeTransform extends Transform {
   val transformType = "materialize"
+  private val Eager = Opt.bool("eager").default(false)
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    val eager = boolOption(config, "eager", false)
-    val unknown = config.options.keySet -- Set("eager")
-    if (unknown.nonEmpty) throw new ConfigException(
-      s"materialize: unknown option(s) ${unknown.mkString(", ")} — only " +
-        "`eager` is accepted")
     // a streaming frame cannot checkpoint its lineage (Spark would throw a
     // deep AnalysisException at start); say it in pipeline terms instead
     if (input.isStreaming) throw new ConfigException(
@@ -91,8 +93,7 @@ object MaterializeTransform extends Transform {
     // would run the upstream job at PLAN time — force lazy there (the
     // barrier's plan shape is identical either way). ctx.sideEffects is
     // the executor's buildPlan flag, not a runId string match.
-    graft.api.Checkpointing.checkpoint(input,
-      eager && ctx.sideEffects)
+    graft.api.Checkpointing.checkpoint(input, Eager(config) && ctx.sideEffects)
   }
 }
 
@@ -100,10 +101,11 @@ object MaterializeTransform extends Transform {
   * sortWithinPartitions (`global=false`) unless a total order is required. */
 object SortTransform extends Transform {
   val transformType = "sort"
+  private val OrderBy = Opt.expr("orderBy").required
+  private val Global = Opt.bool("global").default(true)
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "orderBy")
-    val cols = ExprUtils.splitTopLevel(config.options("orderBy")).map(ExprUtils.parseOrder)
-    if (boolOption(config, "global", true)) input.orderBy(cols: _*)
+    val cols = ExprUtils.splitTopLevel(OrderBy(config)).map(ExprUtils.parseOrder)
+    if (Global(config)) input.orderBy(cols: _*)
     else input.sortWithinPartitions(cols: _*)
   }
 }
@@ -112,22 +114,22 @@ object SortTransform extends Transform {
   * partial per-partition limits, so it never materializes the full input. */
 object LimitTransform extends Transform {
   val transformType = "limit"
-  def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "n")
-    input.limit(intOption(config, "n", missing(config, "n")))
-  }
+  private val N = Opt.int("n").required
+  def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame =
+    input.limit(N(config))
 }
 
 /** union — unionByName with another registered temp view;
   * allowMissingColumns option fills gaps with nulls. */
 object UnionTransform extends Transform {
   val transformType = "union"
+  private val RightDataset = Opt.view("rightDataset").required
+  private val AllowMissingColumns = Opt.bool("allowMissingColumns").default(false)
+  private val Distinct = Opt.bool("distinct").default(false)
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "rightDataset")
-    val right = input.sparkSession.table(config.options("rightDataset"))
-    val missing = boolOption(config, "allowMissingColumns", false)
-    val unioned = input.unionByName(right, missing)
-    if (boolOption(config, "distinct", false)) unioned.distinct() else unioned
+    val unioned = input.unionByName(RightDataset.table(config, input.sparkSession),
+      AllowMissingColumns(config))
+    if (Distinct(config)) unioned.distinct() else unioned
   }
 }
 
@@ -142,9 +144,10 @@ object UnionTransform extends Transform {
  */
 object DedupTransform extends Transform {
   val transformType = "dedup"
-  override val columnOptions = Seq("columns")
+  private val Columns = Opt.columns("columns")
+  private val OrderBy = Opt.expr("orderBy")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    (config.options.get("columns").map(ExprUtils.parseColumns), config.options.get("orderBy")) match {
+    (Columns.get(config), OrderBy.get(config)) match {
       case (None, _) => input.distinct()
       case (Some(cols), None) => input.dropDuplicates(cols)
       case (Some(cols), Some(order)) =>
@@ -176,14 +179,27 @@ object DedupTransform extends Transform {
  */
 object FillNaTransform extends Transform {
   val transformType = "fillna"
-  override val columnOptions = Seq("columns")
+  private val Mode = Opt.oneOf("mode", "fill", "drop").default("fill")
+  private val How = Opt.oneOf("how", "any", "all").default("any")
+  private val Columns = Opt.columns("columns")
+  // quote-aware split so a fill literal can carry a comma
+  private val Values = Opt.parsed("values") { v =>
+    val pairs = ExprUtils.splitTopLevel(v).map(_.trim).filter(_.nonEmpty).map { kv =>
+      kv.split(":", 2) match {
+        case Array(c, lit) => c.trim -> lit
+        case _ => throw new ConfigException(s"fillna: values entry '$kv' is not col:literal")
+      }
+    }
+    if (pairs.isEmpty) throw new ConfigException("fillna: values is empty")
+    pairs
+  }
   // `values` is a `col:literal` list: its columns are the keys
   override def validate(config: TransformConfig,
-                        schema: org.apache.spark.sql.types.StructType): List[String] =
-    super.validate(config, schema) ++ missingColumns(schema, "values",
-      config.options.get("values").toSeq
-        .flatMap(v => graft.config.ExprUtils.splitTopLevel(v))
-        .map(_.split(":", 2)(0).trim).filter(_.nonEmpty))
+                        schema: org.apache.spark.sql.types.StructType): List[String] = {
+    val errs = super.validate(config, schema)
+    if (errs.nonEmpty) errs
+    else missingColumns(schema, "values", Values.get(config).toList.flatten.map(_._1))
+  }
 
   /** Literal coercion is driven by the TARGET COLUMN's type, not the
     * literal's shape: "00501" filling a string column stays the string
@@ -214,38 +230,18 @@ object FillNaTransform extends Transform {
   }
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame =
-    config.options.getOrElse("mode", "fill") match {
+    Mode(config) match {
       case "fill" =>
-        required(config, "values")
-        // quote-aware split so a fill literal can carry a comma
-        val pairs = graft.config.ExprUtils.splitTopLevel(config.options("values"))
-          .map(_.trim).filter(_.nonEmpty)
-          .map { kv =>
-            kv.split(":", 2) match {
-              case Array(c, v) =>
-                val name = c.trim
-                val dt = input.schema.fields
-                  .find(_.name.equalsIgnoreCase(name))
-                  .getOrElse(throw new ConfigException(
-                    s"fillna: column '$name' not found in input"))
-                  .dataType
-                name -> parseLiteral(v, dt, name)
-              case _ => throw new ConfigException(
-                s"fillna: values entry '$kv' is not col:literal")
-            }
-          }
-        if (pairs.isEmpty) throw new ConfigException("fillna: values is empty")
-        input.na.fill(pairs.toMap)
-      case "drop" =>
-        val how = config.options.getOrElse("how", "any")
-        if (how != "any" && how != "all")
-          throw new ConfigException(s"fillna: how must be any|all, got '$how'")
-        config.options.get("columns") match {
-          case Some(cs) =>
-            input.na.drop(how, graft.config.ExprUtils.parseColumns(cs))
-          case None => input.na.drop(how)
+        input.na.fill(Values(config).map { case (name, v) =>
+          val dt = input.schema.fields.find(_.name.equalsIgnoreCase(name))
+            .getOrElse(throw new ConfigException(s"fillna: column '$name' not found in input"))
+            .dataType
+          name -> parseLiteral(v, dt, name)
+        }.toMap)
+      case _ =>
+        Columns.get(config) match {
+          case Some(cs) => input.na.drop(How(config), cs)
+          case None     => input.na.drop(How(config))
         }
-      case other => throw new ConfigException(
-        s"fillna mode must be fill|drop, got '$other'")
     }
 }

@@ -1,9 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
-import graft.api.{Transform, RunContext}
+import graft.api.{ConfigException, Opt, RunContext, Transform}
 import graft.config.TransformConfig
 import graft.multimodal.Multimodal
 
@@ -40,66 +39,56 @@ import graft.multimodal.Multimodal
  */
 object MultimodalTransform extends Transform {
   val transformType = "multimodal"
-  override val columnOptions = Seq("idColumn", "bytesColumn", "sourceUriColumn")
+  private val Operation = Opt.oneOf("operation", "features", "resize", "frames", "hash",
+    "signals").required
+  private val IdColumn = Opt.column("idColumn").required
+  private val BytesColumn = Opt.column("bytesColumn").required
+  private val SourceUriColumn = Opt.column("sourceUriColumn")
+  // the decoder dispatches on the EXACT string "image", so a typo ("img")
+  // would silently route real images to the stub decoder and fabricate
+  // features with no error
+  private val Modality = Opt.oneOfIgnoringCase("modality", "image", "audio", "video").default("image")
+  private val TargetW = Opt.int("targetW").default(224)
+  private val TargetH = Opt.int("targetH").default(224)
+  private val EveryMs = Opt.long("everyMs").default(1000L)
+  private val MaxFrames = Opt.int("maxFrames").default(64)
+  private val SilenceAbs = Opt.int("silenceAbs").default(328)
+  private val ClipAbs = Opt.int("clipAbs").default(32704)
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "operation", "idColumn", "bytesColumn")
-    val id = config.options("idColumn")
-    val uriCol = config.options.getOrElse("sourceUriColumn", id)
-    // normalize + validate: the decoder dispatches on the EXACT string
-    // "image", so a typo ("Image", "img") would silently route real images
-    // to the stub decoder and fabricate features with no error
-    val modality = config.options.getOrElse("modality", "image")
-      .toLowerCase(java.util.Locale.ROOT)
-    val knownModalities = Set("image", "audio", "video")
-    if (!knownModalities.contains(modality))
-      throw new graft.api.ConfigException(
-        s"multimodal: modality must be one of ${knownModalities.mkString("|")}, " +
-          s"got '${config.options("modality")}'")
-    val media = Multimodal.asMediaFrame(input, id, config.options("bytesColumn"),
+    val id = IdColumn(config)
+    val modality = Modality(config)
+    val media = Multimodal.asMediaFrame(input, id, BytesColumn(config),
       modality = modality,
-      sourceUriCol = uriCol)
-    config.options("operation") match {
+      sourceUriCol = SourceUriColumn.get(config).getOrElse(id))
+    Operation(config) match {
       case "features" => Multimodal.extractFeatures(media)
       case "resize" =>
-        // audio reads (targetW, targetH) as (sampleRate, channels): the
-        // 224×224 IMAGE defaults would silently mean "resample to 224 Hz,
-        // 224 channels" — require explicit values and a sane channel count
         if (modality == "audio") {
-          Seq("targetW", "targetH").filterNot(config.options.contains)
-            .foreach { k => throw new graft.api.ConfigException(
+          Seq(TargetW, TargetH).filterNot(_.isSet(config))
+            .foreach { k => throw new ConfigException(
               s"multimodal: resize on audio reads targetW/targetH as " +
-                s"sampleRate/channels — set $k explicitly (the 224-pixel " +
+                s"sampleRate/channels — set ${k.key} explicitly (the 224-pixel " +
                 "image defaults are not a sample rate)") }
-          val ch = intOption(config, "targetH", 224)
-          if (ch < 1 || ch > 16) throw new graft.api.ConfigException(
+          val ch = TargetH(config)
+          if (ch < 1 || ch > 16) throw new ConfigException(
             s"multimodal: resize on audio got targetH=$ch channels — " +
               "outside [1, 16]; targetH is the CHANNEL count for audio " +
               "(did you pass image pixel dimensions?)")
         }
-        Multimodal.resize(media,
-          targetW = intOption(config, "targetW", 224),
-          targetH = intOption(config, "targetH", 224))
+        Multimodal.resize(media, targetW = TargetW(config), targetH = TargetH(config))
       case "frames" => Multimodal.sampleFrames(media,
-        everyMs = longOption(config, "everyMs", 1000L),
-        maxFrames = intOption(config, "maxFrames", 64))
-      // perceptual hash: (media_id, dhash) — the slim frame image dedup
-      // joins on (see dedup_image for the end-to-end removal)
+        everyMs = EveryMs(config), maxFrames = MaxFrames(config))
       case "hash" => Multimodal.imageHashes(media)
-      // quality signals: the text_signals idea for media — score columns
-      // a downstream quality_rules/filter gate consumes (visual
-      // brightness/contrast/sharpness, audio rms/clip_frac/silence_frac)
-      case "signals" =>
-        val silence = intOption(config, "silenceAbs", 328)
-        val clip = intOption(config, "clipAbs", 32704)
+      case _ =>
+        val silence = SilenceAbs(config)
+        val clip = ClipAbs(config)
         if (silence < 0 || clip <= silence || clip > 32768)
-          throw new graft.api.ConfigException(
+          throw new ConfigException(
             s"multimodal: signals needs 0 <= silenceAbs < clipAbs <= 32768 " +
               s"(int16 absolute-amplitude thresholds), got " +
               s"silenceAbs=$silence clipAbs=$clip")
         Multimodal.mediaSignals(media, silenceAbs = silence, clipAbs = clip)
-      case other => throw new IllegalArgumentException(
-        s"multimodal operation must be features|resize|frames|hash|signals, got '$other'")
     }
   }
 }

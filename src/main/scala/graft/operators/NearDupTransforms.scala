@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.api.{Transform, RunContext, ConfigException}
+import graft.api.{ConfigException, Opt, RunContext, Transform}
 import graft.config.TransformConfig
 import graft.dedup.Dedup
 
@@ -34,11 +34,28 @@ abstract class NearDupTransform extends Transform {
   /** Option naming the content column the matcher reads — textColumn for
     * the text matchers, vecColumn for the embedding matcher. */
   protected def contentOption: String = "textColumn"
+  protected val IdColumn = Opt.column("idColumn").required
+  protected val Content = Opt.column(contentOption).required
+  private val SurvivorColumn = Opt.column("survivorColumn")
+  private val SurvivorOrder = Opt.oneOf("survivorOrder", "max", "min")
+  private val Survivor = Opt.oneOf("survivor", "pair", "cluster").default("pair")
+  private val ClusterMaxIter = Opt.int("clusterMaxIter").default(20)
+  // minlabel (default): O(diameter) rounds; star: O(log n) — for
+  // adversarial long duplicate chains
+  private val ClusterAlgorithm = Opt.oneOf("clusterAlgorithm", "minlabel", "star")
+    .default("minlabel")
 
-  override def columnOptions: Seq[String] = Seq("idColumn", contentOption, "survivorColumn")
+  /** The survivor options, refused in an incremental mode: the reference
+    * always survives; it is not part of the frame. */
+  protected def rejectSurvivorOpts(config: TransformConfig, modeOption: String): Unit =
+    Seq(Survivor, SurvivorColumn, SurvivorOrder).filter(_.isSet(config)).foreach { o =>
+      throw new ConfigException(
+        s"$transformType: ${o.key} does not apply with $modeOption — the " +
+          "reference is not part of the frame, so there is no election " +
+          "to run")
+    }
 
   def apply(input0: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "idColumn", contentOption)
     // the input is consumed at least twice (the pair engine + the final
     // left_anti keep join; survivor election adds a third read) — in a
     // composed pipeline each consumer would otherwise re-execute the
@@ -47,8 +64,8 @@ abstract class NearDupTransform extends Transform {
     // ~0.5 s). The lazy shared checkpoint materializes the frame on
     // first use; every consumer reads the same blocks.
     val input = graft.api.Checkpointing.shared(input0)
-    val id = config.options("idColumn")
-    val content = config.options(contentOption)
+    val id = IdColumn(config)
+    val content = Content(config)
     // quality-keyed survivor election: `survivorColumn` names a numeric
     // column (a quality score, a token count, a recency stamp) and the
     // BEST-scoring side of each pair/cluster survives instead of the
@@ -58,26 +75,21 @@ abstract class NearDupTransform extends Transform {
     // always loses). Costs two slim id-keyed joins against the pair/label
     // frame — the corpus itself never reshuffles.
     val survivorKey: Option[Column => Column] =
-      config.options.get("survivorColumn").map { sc =>
-        val sign = config.options.getOrElse("survivorOrder", "max") match {
-          case "max" => -1.0
-          case "min" => 1.0
-          case other => throw new ConfigException(
-            s"$transformType: survivorOrder must be max|min, got '$other'")
-        }
+      SurvivorColumn.get(config).map { sc =>
+        val sign = if (SurvivorOrder.get(config).contains("min")) 1.0 else -1.0
         // lexicographic rank, LOWER wins: (±score with null → +inf, id)
         (idc: Column) => struct(
           coalesce(lit(sign) * col(sc).cast("double"),
             lit(Double.PositiveInfinity)).as("s"),
           idc.as("i"))
       }
-    if (survivorKey.isEmpty && config.options.contains("survivorOrder"))
+    if (survivorKey.isEmpty && SurvivorOrder.isSet(config))
       throw new ConfigException(
         s"$transformType: survivorOrder requires survivorColumn")
     def scores = input.select(col(id).as("__nid"),
       survivorKey.get(col(id)).as("__nkey"))
     val dupPairs = pairs(input, id, content, config)
-    val toDrop = config.options.getOrElse("survivor", "pair") match {
+    val toDrop = Survivor(config) match {
       // pairs carry (id_a < id_b); dropping every id_b keeps every node
       // that is nobody's duplicate-with-a-smaller-id — greedy edge-drop,
       // zero extra passes
@@ -108,12 +120,9 @@ abstract class NearDupTransform extends Transform {
       // rounds of driver-looped jobs over the node-sized pair graph (an
       // exception to the no-action transform rule, like shard's
       // prefix-sum collect — documented).
-      case "cluster" =>
+      case _ =>
         val labels = graft.dedup.Dedup.clusters(dupPairs,
-          maxIter = intOption(config, "clusterMaxIter", 20),
-          // minlabel (default): O(diameter) rounds; star: O(log n) —
-          // for adversarial long duplicate chains
-          algorithm = config.options.getOrElse("clusterAlgorithm", "minlabel"))
+          maxIter = ClusterMaxIter(config), algorithm = ClusterAlgorithm(config))
         survivorKey match {
           case None =>
             labels.where(col("id") =!= col("cluster_id")).select(col("id").as(id))
@@ -130,11 +139,16 @@ abstract class NearDupTransform extends Transform {
             withKey.join(keep, Seq("cluster_id"))
               .where(col("id") =!= col("__keep")).select(col("id").as(id))
         }
-      case other => throw new graft.api.ConfigException(
-        s"$transformType: survivor must be pair|cluster, got '$other'")
     }
     input.join(toDrop, Seq(id), "left_anti")
   }
+}
+
+/** The MinHash LSH knobs `dedup_minhash` and `minhash_signatures` share. */
+private[operators] trait MinhashKnobs extends Transform {
+  protected val Bands = Opt.int("bands").default(16)
+  protected val RowsPerBand = Opt.int("rowsPerBand").default(4)
+  protected val ShingleSize = Opt.int("shingleSize").default(3)
 }
 
 /** MinHash+LSH near-dup removal: options bands/rowsPerBand/shingleSize/
@@ -151,59 +165,57 @@ abstract class NearDupTransform extends Transform {
   * do not apply in either incremental mode (the reference always
   * survives; it is not part of the frame) and are REJECTED rather than
   * silently ignored. */
-object MinhashDedupTransform extends NearDupTransform {
+object MinhashDedupTransform extends NearDupTransform with MinhashKnobs {
   val transformType = "dedup_minhash"
+  private val Threshold = Opt.double("threshold").default(0.5)
+  private val MaxBucketSize = Opt.int("maxBucketSize").default(1000)
+  // incremental mode: a reference corpus, or a persisted signature store
+  private val ReferenceView = Opt.view("referenceView")
+  private val SignatureView = Opt.view("signatureView")
+  private val ReferenceIdColumn = Opt.string("referenceIdColumn")
+  private val ReferenceTextColumn = Opt.string("referenceTextColumn")
   protected def pairs(input: DataFrame, id: String, text: String,
                       config: TransformConfig): DataFrame =
     Dedup.minhashNearDups(input, id, text,
-      bands = intOption(config, "bands", 16),
-      rowsPerBand = intOption(config, "rowsPerBand", 4),
-      shingleSize = intOption(config, "shingleSize", 3),
-      threshold = doubleOption(config, "threshold", 0.5),
-      maxBucketSize = intOption(config, "maxBucketSize", 1000))
+      bands = Bands(config),
+      rowsPerBand = RowsPerBand(config),
+      shingleSize = ShingleSize(config),
+      threshold = Threshold(config),
+      maxBucketSize = MaxBucketSize(config))
 
   override def apply(input: DataFrame, config: TransformConfig,
                      ctx: RunContext): DataFrame =
-    (config.options.get("referenceView"), config.options.get("signatureView")) match {
-      case (None, None) => super.apply(input, config, ctx)
-      case (Some(_), Some(_)) => throw new graft.api.ConfigException(
+    (ReferenceView.isSet(config), SignatureView.isSet(config)) match {
+      case (false, false) => super.apply(input, config, ctx)
+      case (true, true) => throw new graft.api.ConfigException(
         "dedup_minhash: referenceView and signatureView are mutually " +
           "exclusive — the reference is either a text corpus or a " +
           "precomputed signature store, not both")
-      case (refView, sigView) =>
+      case (byCorpus, _) =>
         // the two incremental modes share everything but the hits call.
         // survivor options don't apply (the reference always survives; it
         // is not part of the frame) — reject them loudly rather than
         // silently ignoring a user's election intent
-        Seq("survivor", "survivorColumn", "survivorOrder")
-          .filter(config.options.contains).foreach { opt =>
-            throw new graft.api.ConfigException(
-              s"$transformType: $opt does not apply with " +
-                "referenceView/signatureView — the reference is not part " +
-                "of the frame, so there is no election to run")
-          }
-        required(config, "idColumn", "textColumn")
-        val id = config.options("idColumn")
-        val text = config.options("textColumn")
-        val bands = intOption(config, "bands", 16)
-        val rowsPerBand = intOption(config, "rowsPerBand", 4)
-        val shingleSize = intOption(config, "shingleSize", 3)
-        val threshold = doubleOption(config, "threshold", 0.5)
-        val maxBucketSize = intOption(config, "maxBucketSize", 1000)
+        rejectSurvivorOpts(config, "referenceView/signatureView")
+        val id = IdColumn(config)
+        val text = Content(config)
+        val bands = Bands(config)
+        val rowsPerBand = RowsPerBand(config)
+        val shingleSize = ShingleSize(config)
+        val threshold = Threshold(config)
+        val maxBucketSize = MaxBucketSize(config)
         // multi-consumer branch (signature pass + keep join): stage once
         // so a composed upstream tower executes once, not per consumer
         val staged = graft.api.Checkpointing.shared(input)
-        val hits = (refView, sigView) match {
-          case (Some(view), None) => Dedup.minhashNearDupsAgainst(
-            staged, ctx.spark.table(view), id, text,
-            config.options.getOrElse("referenceIdColumn", id),
-            config.options.getOrElse("referenceTextColumn", text),
+        val hits =
+          if (byCorpus) Dedup.minhashNearDupsAgainst(
+            staged, ReferenceView.table(config, ctx.spark), id, text,
+            ReferenceIdColumn.get(config).getOrElse(id),
+            ReferenceTextColumn.get(config).getOrElse(text),
             bands, rowsPerBand, shingleSize, threshold, maxBucketSize)
-          case (None, Some(view)) => Dedup.minhashNearDupsAgainstSignatures(
-            staged, ctx.spark.table(view), id, text,
+          else Dedup.minhashNearDupsAgainstSignatures(
+            staged, SignatureView.table(config, ctx.spark), id, text,
             bands, rowsPerBand, shingleSize, threshold, maxBucketSize)
-          case _ => throw new IllegalStateException("unreachable")
-        }
         staged.join(hits.select(col("id").as(id)).distinct(), Seq(id), "left_anti")
     }
 }
@@ -216,47 +228,86 @@ object MinhashDedupTransform extends NearDupTransform {
   * increment then dedups against history without re-scanning history's
   * text. Options: idColumn/textColumn required; bands (16),
   * rowsPerBand (4), shingleSize (3). Zero-shuffle projection. */
-object MinhashSignaturesTransform extends Transform {
+object MinhashSignaturesTransform extends MinhashKnobs {
   val transformType = "minhash_signatures"
-  override val columnOptions = Seq("idColumn", "textColumn")
+  private val IdColumn = Opt.column("idColumn").required
+  private val TextColumn = Opt.column("textColumn").required
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "idColumn", "textColumn")
-    Dedup.minhashSignatures(input,
-      config.options("idColumn"), config.options("textColumn"),
-      bands = intOption(config, "bands", 16),
-      rowsPerBand = intOption(config, "rowsPerBand", 4),
-      shingleSize = intOption(config, "shingleSize", 3))
+    Dedup.minhashSignatures(input, IdColumn(config), TextColumn(config),
+      bands = Bands(config),
+      rowsPerBand = RowsPerBand(config),
+      shingleSize = ShingleSize(config))
   }
 }
 
 /** SimHash near-dup removal: options maxHamming (default 3),
   * maxBucketSize (default 10000 — caps 16-bit-chunk blocking buckets). */
-object SimhashDedupTransform extends NearDupTransform {
+object SimhashDedupTransform extends NearDupTransform with HammingKnobs {
   val transformType = "dedup_simhash"
   protected def pairs(input: DataFrame, id: String, text: String,
                       config: TransformConfig): DataFrame =
     Dedup.simhashNearDups(input, id, text,
-      maxHamming = intOption(config, "maxHamming", 3),
-      maxBucketSize = intOption(config, "maxBucketSize", 10000))
+      maxHamming = MaxHamming(config),
+      maxBucketSize = MaxBucketSize(config))
 }
 
-/** Shared plumbing for the media dedup family's `signatureView`
-  * (incremental) mode — the [[MinhashDedupTransform]] discipline: the
-  * reference is a PERSISTED [[graft.multimodal.Multimodal.mediaSignatures]]
-  * store (typically yesterday's `media_signatures` output re-loaded from
-  * parquet), so the increment dedups against history without re-parsing
-  * a single historical container. Survivor options are rejected (the
-  * reference always survives; it is not part of the frame). */
-private[operators] object MediaSigIncrement {
-  def rejectSurvivorOpts(transformType: String, config: TransformConfig,
-                         modeOption: String = "signatureView"): Unit =
-    Seq("survivor", "survivorColumn", "survivorOrder")
-      .filter(config.options.contains).foreach { opt =>
-        throw new ConfigException(
-          s"$transformType: $opt does not apply with $modeOption — the " +
-            "reference is not part of the frame, so there is no election " +
-            "to run")
-      }
+/** The hamming-engine knobs of the SimHash and media dedup family, and
+  * the media family's `signatureView` (incremental) mode — the
+  * [[MinhashDedupTransform]] discipline: the reference is a PERSISTED
+  * [[graft.multimodal.Multimodal.mediaSignatures]] store (typically
+  * yesterday's `media_signatures` output re-loaded from parquet), so the
+  * increment dedups against history without re-parsing a single
+  * historical container. */
+private[operators] trait HammingKnobs extends Transform {
+  protected val MaxHamming = Opt.int("maxHamming").default(3)
+  protected val MaxBucketSize = Opt.int("maxBucketSize").default(10000)
+}
+private[operators] trait MediaSigIncrement extends NearDupTransform with HammingKnobs {
+  override protected def contentOption: String = "bytesColumn"
+  protected val SignatureView = Opt.view("signatureView")
+  protected def modality(config: TransformConfig): String
+  protected def tag: String
+
+  protected def media(input: DataFrame, id: String, bytesCol: String,
+                      config: TransformConfig): DataFrame =
+    graft.multimodal.Multimodal.asMediaFrame(
+      input, id, bytesCol, modality = modality(config), sourceUriCol = id)
+
+  /** Each payload's (doc_id, sig): the frame-0 dHash, or audio's aHash. */
+  protected def stills(media: DataFrame): DataFrame =
+    graft.multimodal.Multimodal.imageHashes(media)
+      .select(col("media_id").as("doc_id"), col("dhash").as("sig"))
+
+  protected def pairs(input: DataFrame, id: String, bytesCol: String,
+                      config: TransformConfig): DataFrame =
+    Dedup.hammingNearDups(stills(media(input, id, bytesCol, config)),
+      maxHamming = MaxHamming(config), maxBucketSize = MaxBucketSize(config), tag = tag)
+
+  /** The incremental hits (id, ref_id) of `media` against a persisted
+    * store. A video store's `sig` is the TEMPORAL hash, so a still pairs
+    * with its frame-0 spatial `sig2`. */
+  protected def hits(media: DataFrame, store: DataFrame, config: TransformConfig): DataFrame =
+    Dedup.hammingNearDupsAgainstSignatures(stills(media),
+      store.select(col("doc_id"), col(if (modality(config) == "video") "sig2" else "sig").as("sig")),
+      maxHamming = MaxHamming(config), maxBucketSize = MaxBucketSize(config), tag = tag)
+
+  /** With `signatureView`: INCREMENTAL mode against a persisted
+    * [[graft.multimodal.Multimodal.mediaSignatures]] store — drop input
+    * payloads near-duplicate to any stored signature, without re-parsing
+    * history. */
+  override def apply(input: DataFrame, config: TransformConfig,
+                     ctx: RunContext): DataFrame =
+    SignatureView.tableIfSet(config, ctx.spark) match {
+      case None => super.apply(input, config, ctx)
+      case Some(view) =>
+        rejectSurvivorOpts(config, "signatureView")
+        val id = IdColumn(config)
+        // two consumers (decode pass + keep join): stage once
+        val staged = graft.api.Checkpointing.shared(input)
+        val found = hits(media(staged, id, Content(config), config),
+          graft.multimodal.Multimodal.loadMediaSignatures(view, modality(config)), config)
+        staged.join(found.select(col("id").as(id)).distinct(), Seq(id), "left_anti")
+    }
 }
 
 /** Perceptual IMAGE near-dup removal over a binary media column: each
@@ -274,67 +325,12 @@ private[operators] object MediaSigIncrement {
   * NULL and never pair (they are kept — dropping what we cannot read is
   * a quality gate's decision, not dedup's). Scale shape: only the slim
   * (id, dhash) frame ever shuffles; media bytes stay in their scan. */
-object ImageDedupTransform extends NearDupTransform {
+object ImageDedupTransform extends MediaSigIncrement {
   val transformType = "dedup_image"
-  override protected def contentOption: String = "bytesColumn"
-
-  private def checkedModality(config: TransformConfig): String = {
-    val modality = config.options.getOrElse("modality", "image")
-      .toLowerCase(java.util.Locale.ROOT)
-    if (modality != "image" && modality != "video")
-      throw new ConfigException(
-        s"$transformType: modality must be image|video (the modalities " +
-          s"with a visual still to hash), got '${config.options("modality")}'")
-    modality
-  }
-
-  protected def pairs(input: DataFrame, id: String, bytesCol: String,
-                      config: TransformConfig): DataFrame = {
-    val media = graft.multimodal.Multimodal.asMediaFrame(
-      input, id, bytesCol, modality = checkedModality(config), sourceUriCol = id)
-    Dedup.hammingNearDups(
-      graft.multimodal.Multimodal.imageHashes(media)
-        .withColumnRenamed("media_id", "doc_id")
-        .withColumnRenamed("dhash", "sig"),
-      maxHamming = intOption(config, "maxHamming", 3),
-      maxBucketSize = intOption(config, "maxBucketSize", 10000),
-      tag = "image")
-  }
-
-  /** With `signatureView`: INCREMENTAL mode against a persisted
-    * [[graft.multimodal.Multimodal.mediaSignatures]] store — drop input
-    * payloads whose frame-0 dHash is within maxHamming of any stored
-    * signature, without re-parsing history. For `modality: video` the
-    * store side pairs on `sig2` (a video store's `sig` is the TEMPORAL
-    * hash; frame-0 spatial lives in sig2). */
-  override def apply(input: DataFrame, config: TransformConfig,
-                     ctx: RunContext): DataFrame =
-    config.options.get("signatureView") match {
-      case None => super.apply(input, config, ctx)
-      case Some(view) =>
-        MediaSigIncrement.rejectSurvivorOpts(transformType, config)
-        required(config, "idColumn", "bytesColumn")
-        val id = config.options("idColumn")
-        val modality = checkedModality(config)
-        // two consumers (decode pass + keep join): stage once
-        val staged = graft.api.Checkpointing.shared(input)
-        val media = graft.multimodal.Multimodal.asMediaFrame(
-          staged, id, config.options("bytesColumn"), modality = modality,
-          sourceUriCol = id)
-        val newSigs = graft.multimodal.Multimodal.imageHashes(media)
-          .select(col("media_id").as("doc_id"), col("dhash").as("sig"))
-        val store = graft.multimodal.Multimodal.loadMediaSignatures(
-          ctx.spark.table(view), modality)
-        val storeSigs =
-          if (modality == "video")
-            store.select(col("doc_id"), col("sig2").as("sig"))
-          else store.select("doc_id", "sig")
-        val hits = Dedup.hammingNearDupsAgainstSignatures(newSigs, storeSigs,
-          maxHamming = intOption(config, "maxHamming", 3),
-          maxBucketSize = intOption(config, "maxBucketSize", 10000),
-          tag = "image")
-        staged.join(hits.select(col("id").as(id)).distinct(), Seq(id), "left_anti")
-    }
+  protected val tag = "image"
+  // the modalities with a visual still to hash
+  private val Modality = Opt.oneOfIgnoringCase("modality", "image", "video").default("image")
+  protected def modality(config: TransformConfig): String = Modality(config)
 }
 
 /** Perceptual AUDIO near-dup removal over a binary media column: each
@@ -347,49 +343,10 @@ object ImageDedupTransform extends NearDupTransform {
   * maxHamming (default 3), maxBucketSize (default 10000), plus the
   * shared survivor election. Unparseable payloads hash NULL and are
   * kept. Only the slim (id, hash) frame shuffles. */
-object AudioDedupTransform extends NearDupTransform {
+object AudioDedupTransform extends MediaSigIncrement {
   val transformType = "dedup_audio"
-  override protected def contentOption: String = "bytesColumn"
-  protected def pairs(input: DataFrame, id: String, bytesCol: String,
-                      config: TransformConfig): DataFrame = {
-    val media = graft.multimodal.Multimodal.asMediaFrame(
-      input, id, bytesCol, modality = "audio", sourceUriCol = id)
-    Dedup.hammingNearDups(
-      graft.multimodal.Multimodal.imageHashes(media)
-        .withColumnRenamed("media_id", "doc_id")
-        .withColumnRenamed("dhash", "sig"),
-      maxHamming = intOption(config, "maxHamming", 3),
-      maxBucketSize = intOption(config, "maxBucketSize", 10000),
-      tag = "audio")
-  }
-
-  /** With `signatureView`: INCREMENTAL mode — drop input payloads whose
-    * aHash is within maxHamming of any stored audio signature, without
-    * re-parsing history ([[ImageDedupTransform]]'s contract). */
-  override def apply(input: DataFrame, config: TransformConfig,
-                     ctx: RunContext): DataFrame =
-    config.options.get("signatureView") match {
-      case None => super.apply(input, config, ctx)
-      case Some(view) =>
-        MediaSigIncrement.rejectSurvivorOpts(transformType, config)
-        required(config, "idColumn", "bytesColumn")
-        val id = config.options("idColumn")
-        // two consumers (decode pass + keep join): stage once
-        val staged = graft.api.Checkpointing.shared(input)
-        val media = graft.multimodal.Multimodal.asMediaFrame(
-          staged, id, config.options("bytesColumn"), modality = "audio",
-          sourceUriCol = id)
-        val newSigs = graft.multimodal.Multimodal.imageHashes(media)
-          .select(col("media_id").as("doc_id"), col("dhash").as("sig"))
-        val store = graft.multimodal.Multimodal.loadMediaSignatures(
-          ctx.spark.table(view), "audio")
-        val hits = Dedup.hammingNearDupsAgainstSignatures(newSigs,
-          store.select("doc_id", "sig"),
-          maxHamming = intOption(config, "maxHamming", 3),
-          maxBucketSize = intOption(config, "maxBucketSize", 10000),
-          tag = "audio")
-        staged.join(hits.select(col("id").as(id)).distinct(), Seq(id), "left_anti")
-    }
+  protected val tag = "audio"
+  protected def modality(config: TransformConfig): String = "audio"
 }
 
 /** Perceptual VIDEO near-dup removal over a binary media column — the
@@ -413,28 +370,26 @@ object AudioDedupTransform extends NearDupTransform {
   * re-decode the corpus); only the slim (id, thash, dhash) frame ever
   * shuffles, and the confirm joins are id-keyed against the near-dup-
   * sized pair frame. */
-object VideoDedupTransform extends NearDupTransform {
+object VideoDedupTransform extends MediaSigIncrement {
   val transformType = "dedup_video"
-  override protected def contentOption: String = "bytesColumn"
-  protected def pairs(input: DataFrame, id: String, bytesCol: String,
-                      config: TransformConfig): DataFrame = {
-    val media = graft.multimodal.Multimodal.asMediaFrame(
-      input, id, bytesCol, modality = "video", sourceUriCol = id)
-    val maxTemporal = intOption(config, "maxHamming", 3)
+  // the spatial confirm budget: bits of the 64-bit frame-0 dHash two
+  // clips may differ by (default maxHamming)
+  private val MaxSpatialHamming = Opt.int("maxSpatialHamming", min = 0, max = 64)
+  protected val tag = "video"
+  protected def modality(config: TransformConfig): String = "video"
+  override protected def pairs(input: DataFrame, id: String, bytesCol: String,
+                               config: TransformConfig): DataFrame = {
+    val maxTemporal = MaxHamming(config)
     // hammingNearDups validates the temporal budget; the spatial confirm
     // must be just as loud — a negative budget would silently make
     // bit_count(xor) <= k false for EVERY pair (no dedup at all)
-    val maxSpatial = intOption(config, "maxSpatialHamming", maxTemporal)
-    if (maxSpatial < 0 || maxSpatial > 64)
-      throw new ConfigException(
-        s"$transformType: maxSpatialHamming must be in [0, 64] (bits of " +
-          s"the 64-bit frame-0 dHash two clips may differ by), got $maxSpatial")
+    val maxSpatial = MaxSpatialHamming.get(config).getOrElse(maxTemporal)
     val hashes = graft.api.Checkpointing.checkpoint(
-      graft.multimodal.Multimodal.videoHashes(media), eager = false)
+      graft.multimodal.Multimodal.videoHashes(media(input, id, bytesCol, config)), eager = false)
     val temporalPairs = Dedup.hammingNearDups(
       hashes.select(col("media_id").as("doc_id"), col("thash").as("sig")),
       maxHamming = maxTemporal,
-      maxBucketSize = intOption(config, "maxBucketSize", 10000),
+      maxBucketSize = MaxBucketSize(config),
       tag = "video")
     val spatial = hashes.where(col("dhash").isNotNull)
     temporalPairs
@@ -446,51 +401,27 @@ object VideoDedupTransform extends NearDupTransform {
       .select("id_a", "id_b", "hamming")
   }
 
-  /** With `signatureView`: INCREMENTAL mode — block input clips' temporal
-    * tHashes against the store's `sig`, confirm each hit spatially
-    * (input frame-0 dHash vs store `sig2`), drop the confirmed, all
-    * without re-parsing (or re-decoding a single frame of) history. */
-  override def apply(input: DataFrame, config: TransformConfig,
-                     ctx: RunContext): DataFrame =
-    config.options.get("signatureView") match {
-      case None => super.apply(input, config, ctx)
-      case Some(view) =>
-        MediaSigIncrement.rejectSurvivorOpts(transformType, config)
-        required(config, "idColumn", "bytesColumn")
-        val id = config.options("idColumn")
-        val maxTemporal = intOption(config, "maxHamming", 3)
-        val maxSpatial = intOption(config, "maxSpatialHamming", maxTemporal)
-        if (maxSpatial < 0 || maxSpatial > 64)
-          throw new ConfigException(
-            s"$transformType: maxSpatialHamming must be in [0, 64], got " +
-              s"$maxSpatial")
-        // two consumers (decode pass + keep join): stage once
-        val staged = graft.api.Checkpointing.shared(input)
-        val media = graft.multimodal.Multimodal.asMediaFrame(
-          staged, id, config.options("bytesColumn"), modality = "video",
-          sourceUriCol = id)
-        // ONE parse per input payload serves the temporal block and the
-        // spatial confirm (the self-join mode's lazy-checkpoint shape)
-        val hashes = graft.api.Checkpointing.checkpoint(
-          graft.multimodal.Multimodal.videoHashes(media), eager = false)
-        val store = graft.multimodal.Multimodal.loadMediaSignatures(
-          ctx.spark.table(view), "video")
-        val temporalHits = Dedup.hammingNearDupsAgainstSignatures(
-          hashes.select(col("media_id").as("doc_id"), col("thash").as("sig")),
-          store.select("doc_id", "sig"),
-          maxHamming = maxTemporal,
-          maxBucketSize = intOption(config, "maxBucketSize", 10000),
-          tag = "video")
-        val confirmed = temporalHits
-          .join(hashes.where(col("dhash").isNotNull)
-            .select(col("media_id").as("id"), col("dhash").as("__sa")), Seq("id"))
-          .join(store.where(col("sig2").isNotNull)
-            .select(col("doc_id").as("ref_id"), col("sig2").as("__sb")),
-            Seq("ref_id"))
-          .where(bit_count(col("__sa").bitwiseXOR(col("__sb"))) <= maxSpatial)
-        staged.join(confirmed.select(col("id").as(id)).distinct(),
-          Seq(id), "left_anti")
-    }
+  /** INCREMENTAL mode's hits: input clips' temporal tHashes block against
+    * the store's `sig`, and each hit confirms spatially (input frame-0
+    * dHash vs store `sig2`), without re-decoding a frame of history. */
+  override protected def hits(media: DataFrame, store: DataFrame,
+                              config: TransformConfig): DataFrame = {
+    val maxTemporal = MaxHamming(config)
+    val maxSpatial = MaxSpatialHamming.get(config).getOrElse(maxTemporal)
+    // ONE parse per input payload serves the temporal block and the
+    // spatial confirm (the self-join mode's lazy-checkpoint shape)
+    val hashes = graft.api.Checkpointing.checkpoint(
+      graft.multimodal.Multimodal.videoHashes(media), eager = false)
+    Dedup.hammingNearDupsAgainstSignatures(
+      hashes.select(col("media_id").as("doc_id"), col("thash").as("sig")),
+      store.select("doc_id", "sig"),
+      maxHamming = maxTemporal, maxBucketSize = MaxBucketSize(config), tag = tag)
+      .join(hashes.where(col("dhash").isNotNull)
+        .select(col("media_id").as("id"), col("dhash").as("__sa")), Seq("id"))
+      .join(store.where(col("sig2").isNotNull)
+        .select(col("doc_id").as("ref_id"), col("sig2").as("__sb")), Seq("ref_id"))
+      .where(bit_count(col("__sa").bitwiseXOR(col("__sb"))) <= maxSpatial)
+  }
 }
 
 /** Producer half of the persisted media-signature loop
@@ -508,20 +439,14 @@ object VideoDedupTransform extends NearDupTransform {
   * output REPLACES the frame. */
 object MediaSignaturesTransform extends Transform {
   val transformType = "media_signatures"
-  override val columnOptions = Seq("idColumn", "bytesColumn")
-  def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "idColumn", "bytesColumn")
-    val modality = config.options.getOrElse("modality", "image")
-      .toLowerCase(java.util.Locale.ROOT)
-    if (!Set("image", "audio", "video").contains(modality))
-      throw new ConfigException(
-        s"$transformType: modality must be image|audio|video, got " +
-          s"'${config.options("modality")}'")
+  private val IdColumn = Opt.column("idColumn").required
+  private val BytesColumn = Opt.column("bytesColumn").required
+  private val Modality = Opt.oneOfIgnoringCase("modality", "image", "audio", "video").default("image")
+  def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame =
     graft.multimodal.Multimodal.mediaSignatures(
       graft.multimodal.Multimodal.asMediaFrame(
-        input, config.options("idColumn"), config.options("bytesColumn"),
-        modality = modality, sourceUriCol = config.options("idColumn")))
-  }
+        input, IdColumn(config), BytesColumn(config),
+        modality = Modality(config), sourceUriCol = IdColumn(config)))
 }
 
 /** Embedding-cosine near-dup removal over an Array[Float] vector column:
@@ -540,40 +465,50 @@ object MediaSignaturesTransform extends Transform {
   * through the same deterministic hyperplanes; identical vectors always
   * collide). Survivor options are rejected in incremental mode — the
   * reference always survives; it is not part of the frame. */
-object EmbeddingDedupTransform extends NearDupTransform {
-  val transformType = "dedup_embedding"
+/** The embedding dedup family's `threshold` and its `referenceView`
+  * (incremental) mode, with the reference's id and vector columns. */
+private[operators] trait EmbeddingIncrement extends NearDupTransform {
   override protected def contentOption: String = "vecColumn"
+  protected val Threshold = Opt.double("threshold").default(0.9)
+  protected val ReferenceView = Opt.view("referenceView")
+  protected val ReferenceIdColumn = Opt.string("referenceIdColumn")
+  protected val ReferenceVecColumn = Opt.string("referenceVecColumn")
+}
+
+object EmbeddingDedupTransform extends EmbeddingIncrement {
+  val transformType = "dedup_embedding"
+  private val Bits = Opt.int("bits").default(8)
+  private val Tables = Opt.int("tables").default(4)
+  private val MaxBucketSize = Opt.int("maxBucketSize").default(1000)
   protected def pairs(input: DataFrame, id: String, vec: String,
                       config: TransformConfig): DataFrame =
     graft.ann.Ann.cosineNearDups(input, id, vec,
-      threshold = doubleOption(config, "threshold", 0.9),
-      bits = intOption(config, "bits", 8),
-      tables = intOption(config, "tables", 4),
-      maxBucketSize = intOption(config, "maxBucketSize", 1000))
+      threshold = Threshold(config),
+      bits = Bits(config),
+      tables = Tables(config),
+      maxBucketSize = MaxBucketSize(config))
 
   override def apply(input: DataFrame, config: TransformConfig,
                      ctx: RunContext): DataFrame =
-    config.options.get("referenceView") match {
+    ReferenceView.tableIfSet(config, ctx.spark) match {
       case None => super.apply(input, config, ctx)
       case Some(view) =>
-        MediaSigIncrement.rejectSurvivorOpts(transformType, config,
-          modeOption = "referenceView")
-        required(config, "idColumn", "vecColumn")
-        val id = config.options("idColumn")
-        val vec = config.options("vecColumn")
+        rejectSurvivorOpts(config, "referenceView")
+        val id = IdColumn(config)
+        val vec = Content(config)
         // stage once: this branch consumes `input` three times (bucket
         // assignment, the vector re-join inside the Against call, and the
         // final keep join) — without truncation a composed upstream tower
         // re-executes per consumer (the q154 lesson)
         val staged = graft.api.Checkpointing.shared(input)
         val hits = graft.ann.Ann.cosineNearDupsAgainst(
-          staged, ctx.spark.table(view), id, vec,
-          config.options.getOrElse("referenceIdColumn", id),
-          config.options.getOrElse("referenceVecColumn", vec),
-          threshold = doubleOption(config, "threshold", 0.9),
-          bits = intOption(config, "bits", 8),
-          tables = intOption(config, "tables", 4),
-          maxBucketSize = intOption(config, "maxBucketSize", 1000))
+          staged, view, id, vec,
+          ReferenceIdColumn.get(config).getOrElse(id),
+          ReferenceVecColumn.get(config).getOrElse(vec),
+          threshold = Threshold(config),
+          bits = Bits(config),
+          tables = Tables(config),
+          maxBucketSize = MaxBucketSize(config))
         staged.join(hits.select(col("id").as(id)).distinct(), Seq(id), "left_anti")
     }
 }
@@ -589,9 +524,13 @@ object EmbeddingDedupTransform extends NearDupTransform {
   * driver-local over the hash-sample — no per-round corpus scans) — a
   * documented exception to the no-action transform rule, like
   * survivor=cluster. */
-object SemanticDedupTransform extends NearDupTransform {
+object SemanticDedupTransform extends EmbeddingIncrement {
   val transformType = "dedup_semantic"
-  override protected def contentOption: String = "vecColumn"
+  // trained-cell knobs; with codebookView, stamps the store must match
+  private val NClusters = Opt.int("nClusters")
+  private val KmeansIters = Opt.int("kmeansIters")
+  private val MaxClusterSize = Opt.int("maxClusterSize").default(1000)
+  private val CodebookView = Opt.view("codebookView")
 
   /** `codebookView` reuses a persisted `codebook` store (the
     * cluster_embeddings loop): no sampling scan, stable cells across
@@ -599,19 +538,17 @@ object SemanticDedupTransform extends NearDupTransform {
   private def storedCodebook(config: TransformConfig,
                              spark: org.apache.spark.sql.SparkSession)
       : Option[Array[Array[Float]]] =
-    config.options.get("codebookView").map { view =>
-      graft.ann.Ann.loadCodebook(spark.table(view),
-        intOption(config, "nClusters"),
-        intOption(config, "kmeansIters"))
+    CodebookView.tableIfSet(config, spark).map { store =>
+      graft.ann.Ann.loadCodebook(store, NClusters.get(config), KmeansIters.get(config))
     }
 
   protected def pairs(input: DataFrame, id: String, vec: String,
                       config: TransformConfig): DataFrame =
     graft.ann.Ann.semanticNearDups(input, id, vec,
-      threshold = doubleOption(config, "threshold", 0.9),
-      nClusters = intOption(config, "nClusters", 64),
-      kmeansIters = intOption(config, "kmeansIters", 3),
-      maxClusterSize = intOption(config, "maxClusterSize", 1000),
+      threshold = Threshold(config),
+      nClusters = NClusters.get(config).getOrElse(64),
+      kmeansIters = KmeansIters.get(config).getOrElse(3),
+      maxClusterSize = MaxClusterSize(config),
       codebook = storedCodebook(config, input.sparkSession))
 
   /** With `referenceView` (+ optional `referenceIdColumn`/
@@ -624,24 +561,22 @@ object SemanticDedupTransform extends NearDupTransform {
     * Survivor options are rejected in incremental mode. */
   override def apply(input: DataFrame, config: TransformConfig,
                      ctx: RunContext): DataFrame =
-    config.options.get("referenceView") match {
+    ReferenceView.tableIfSet(config, ctx.spark) match {
       case None => super.apply(input, config, ctx)
       case Some(view) =>
-        MediaSigIncrement.rejectSurvivorOpts(transformType, config,
-          modeOption = "referenceView")
-        required(config, "idColumn", "vecColumn")
-        val id = config.options("idColumn")
-        val vec = config.options("vecColumn")
+        rejectSurvivorOpts(config, "referenceView")
+        val id = IdColumn(config)
+        val vec = Content(config)
         // multi-consumer branch: stage once (see EmbeddingDedupTransform)
         val staged = graft.api.Checkpointing.shared(input)
         val hits = graft.ann.Ann.semanticNearDupsAgainst(
-          staged, ctx.spark.table(view), id, vec,
-          config.options.getOrElse("referenceIdColumn", id),
-          config.options.getOrElse("referenceVecColumn", vec),
-          threshold = doubleOption(config, "threshold", 0.9),
-          nClusters = intOption(config, "nClusters", 64),
-          kmeansIters = intOption(config, "kmeansIters", 3),
-          maxClusterSize = intOption(config, "maxClusterSize", 1000),
+          staged, view, id, vec,
+          ReferenceIdColumn.get(config).getOrElse(id),
+          ReferenceVecColumn.get(config).getOrElse(vec),
+          threshold = Threshold(config),
+          nClusters = NClusters.get(config).getOrElse(64),
+          kmeansIters = KmeansIters.get(config).getOrElse(3),
+          maxClusterSize = MaxClusterSize(config),
           codebook = storedCodebook(config, ctx.spark))
         staged.join(hits.select(col("id").as(id)).distinct(), Seq(id), "left_anti")
     }
@@ -667,17 +602,19 @@ object SemanticDedupTransform extends NearDupTransform {
  * .crossMatches]] — exact, zero corpus shuffle), hit ids reduce to a
  * broadcast-able left_anti.
  */
-object EmbeddingDecontaminateTransform extends Transform {
+object EmbeddingDecontaminateTransform extends IdVecColumns {
   val transformType = "decontaminate_embedding"
-  override val columnOptions = Seq("idColumn", "vecColumn")
+  private val BenchDataset = Opt.view("benchDataset").required
+  private val BenchIdColumn = Opt.string("benchIdColumn")
+  private val BenchVecColumn = Opt.string("benchVecColumn")
+  private val Threshold = Opt.double("threshold").default(0.95)
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "idColumn", "vecColumn", "benchDataset")
-    val id = config.options("idColumn")
-    val vec = config.options("vecColumn")
-    val bench = ctx.spark.table(config.options("benchDataset"))
-    val benchId = config.options.getOrElse("benchIdColumn", id)
-    val benchVec = config.options.getOrElse("benchVecColumn", vec)
-    val threshold = doubleOption(config, "threshold", 0.95)
+    val id = IdColumn(config)
+    val vec = VecColumn(config)
+    val bench = BenchDataset.table(config, ctx.spark)
+    val benchId = BenchIdColumn.get(config).getOrElse(id)
+    val benchVec = BenchVecColumn.get(config).getOrElse(vec)
+    val threshold = Threshold(config)
     val hits = graft.ann.Ann.crossMatches(input, bench, id, benchId, vec, benchVec)
       .where(col("sim") >= threshold)
       .select(col(id)).distinct()
@@ -703,13 +640,13 @@ object EmbeddingDecontaminateTransform extends Transform {
  */
 object DedupAgainstTransform extends Transform {
   val transformType = "dedup_against"
-  override val columnOptions = Seq("textColumn")
+  private val TextColumn = Opt.column("textColumn").required
+  private val ReferenceView = Opt.view("referenceView").required
+  private val ReferenceTextColumn = Opt.string("referenceTextColumn")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "textColumn", "referenceView")
-    val text = config.options("textColumn")
-    val ref = ctx.spark.table(config.options("referenceView"))
-    Dedup.exactAgainst(input, text, ref,
-      config.options.getOrElse("referenceTextColumn", text))
+    val text = TextColumn(config)
+    Dedup.exactAgainst(input, text, ReferenceView.table(config, ctx.spark),
+      ReferenceTextColumn.get(config).getOrElse(text))
   }
 }
 
@@ -730,23 +667,28 @@ object DedupAgainstTransform extends Transform {
   * (default = textColumn), shingleSize (default 3). */
 object DecontaminateTransform extends Transform {
   val transformType = "decontaminate"
-  override val columnOptions = Seq("idColumn", "textColumn")
+  private val IdColumn = Opt.column("idColumn").required
+  private val TextColumn = Opt.column("textColumn").required
+  private val BenchDataset = Opt.view("benchDataset").required
+  private val BenchTextColumn = Opt.string("benchTextColumn")
+  private val ShingleSize = Opt.int("shingleSize").default(3)
+  private val Method = Opt.oneOf("method", "exact", "bloom").default("exact")
+  // method: bloom only
+  private val Fpp = Opt.double("fpp").default(1e-4)
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "idColumn", "textColumn", "benchDataset")
-    val id = config.options("idColumn")
-    val text = config.options("textColumn")
-    val bench = ctx.spark.table(config.options("benchDataset"))
-    val benchText = config.options.getOrElse("benchTextColumn", text)
-    val n = intOption(config, "shingleSize", 3)
+    val id = IdColumn(config)
+    val text = TextColumn(config)
+    val bench = BenchDataset.table(config, ctx.spark)
+    val benchText = BenchTextColumn.get(config).getOrElse(text)
+    val n = ShingleSize(config)
     // fpp only parameterizes the bloom sketch; with method=exact it is a
     // misconfiguration (the user likely meant method: bloom) — reject it
     // like the other inapplicable-option guards in this file
-    if (config.options.getOrElse("method", "exact") != "bloom" &&
-        config.options.contains("fpp"))
+    if (Method(config) != "bloom" && Fpp.isSet(config))
       throw new ConfigException(
         "decontaminate: fpp only applies with method: bloom — " +
           "the exact path has no false-positive rate to configure")
-    config.options.getOrElse("method", "exact") match {
+    Method(config) match {
       case "exact" =>
         // the id anti-join never equi-matches null, so contaminated
         // null-id docs used to leak through this gate (while method=bloom,
@@ -790,11 +732,9 @@ object DecontaminateTransform extends Transform {
       // clean docs (never keep contaminated ones). Builds the sketch at
       // plan time (two jobs on the SMALL side — a documented exception to
       // the no-action transform rule, like survivor=cluster).
-      case "bloom" =>
+      case _ =>
         Dedup.bloomDecontaminate(input, bench, text, benchText, n,
-          fpp = doubleOption(config, "fpp", 1e-4))
-      case other => throw new graft.api.ConfigException(
-        s"decontaminate: method must be exact|bloom, got '$other'")
+          fpp = Fpp(config))
     }
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.api.{ConfigException, RunContext, Transform}
+import graft.api.{ConfigException, Opt, RunContext}
 import graft.config.TransformConfig
 
 /**
@@ -184,51 +184,56 @@ object PackSequences {
  * pack per stratum: the prefix sum and `seq_id` restart per group, so a
  * sequence never mixes two strata).
  */
-object PackSequencesTransform extends Transform {
+object PackSequencesTransform extends BpeStoreReader {
   val transformType = "pack_sequences"
-  override val columnOptions = Seq("idColumn", "weightColumn", "textColumn", "groupBy")
+  private val IdColumn = Opt.column("idColumn").required
+  private val SeqLen = Opt.long("seqLen").required
+  private val GroupBy = Opt.columns("groupBy").default(Nil)
+  private val NumPartitions = Opt.int("numPartitions").default(0)
+  private val Emit = Opt.oneOf("emit", "spans", "text", "input_ids").default("spans")
+  // the sequence weight: weightColumn, or BPE tokens of textColumn via mergesView
+  private val WeightColumn = Opt.column("weightColumn")
+  private val TextColumn = Opt.column("textColumn")
+  protected val mergesView = Opt.view("mergesView")
+  // emit=input_ids only
+  private val AppendId = Opt.int("appendId")
+  private val PadId = Opt.int("padId")
+  private val EmitMask = Opt.bool("emitMask").default(false)
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "idColumn")
-    val groups = config.options.get("groupBy").toSeq
-      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-    val seqLen = longOption(config, "seqLen", missing(config, "seqLen"))
-    val nParts = intOption(config, "numPartitions", 0)
-    // decoded before any store read: a malformed id fails with no job run
-    val appendId = intOption(config, "appendId")
-    val padId = intOption(config, "padId")
-    val emitMask = boolOption(config, "emitMask", false)
-    if (config.options.getOrElse("emit", "spans") == "input_ids") {
+    val id = IdColumn(config)
+    val groups = GroupBy(config)
+    val seqLen = SeqLen(config)
+    val nParts = NumPartitions(config)
+    val emit = Emit(config)
+    if (emit == "input_ids") {
       // the training-export path: ids encoded against the tokenizer store,
       // weight = size(ids) by construction — an independent weightColumn
       // could only contradict the arrays it slices
-      if (config.options.contains("weightColumn")) throw new ConfigException(
+      if (WeightColumn.isSet(config)) throw new ConfigException(
         "pack_sequences: emit=input_ids derives its weight from the " +
           "encoded ids — weightColumn does not apply")
-      required(config, "textColumn", "mergesView")
+      val text = TextColumn(config)
       graft.config.ExprUtils.requireNoHelperCollision(
         "pack_sequences", input.columns.toSeq, "__bpe_ids")
-      val loaded = BpeTransforms.loadedFromView(config, ctx, transformType)
-      val encoded = graft.functions.expressions.BpeEncodeIds(
-        col(config.options("textColumn")), loaded)
+      val encoded = graft.functions.expressions.BpeEncodeIds(col(text), loadedStore(config, ctx))
       // appendId: the GPT-2/Pile end-of-text convention — one separator
       // token id after every NON-empty document, so the model can learn
       // document boundaries inside sequences that cross them. The id is
       // caller-chosen (typically reserved at vocab size, or <unk>=0);
       // empty documents stay empty (a separator-only doc would be noise)
-      val withSep = appendId.map { sep =>
+      val withSep = AppendId.get(config).map { sep =>
         when(size(encoded) > 0,
           concat(encoded, array(lit(sep)))).otherwise(encoded)
       }.getOrElse(encoded)
       val staged = input.withColumn("__bpe_ids", withSep)
-      return try PackSequences.materializeIds(staged,
-        config.options("idColumn"), "__bpe_ids",
-        seqLen, nParts, groups, padId, emitMask)
+      return try PackSequences.materializeIds(staged, id, "__bpe_ids",
+        seqLen, nParts, groups, PadId.get(config), EmitMask(config))
       catch { case e: IllegalArgumentException => throw new ConfigException(e.getMessage) }
     }
-    Seq("padId", "emitMask").filter(config.options.contains).foreach { o =>
+    Seq(PadId, EmitMask).filter(_.isSet(config)).foreach { o =>
       throw new ConfigException(
-        s"pack_sequences: $o applies to emit=input_ids only — spans carry " +
+        s"pack_sequences: ${o.key} applies to emit=input_ids only — spans carry " +
           "offsets, and text packs by characters")
     }
     // the sequence weight: a pre-computed weightColumn, or tokenizer-exact
@@ -236,21 +241,20 @@ object PackSequencesTransform extends Transform {
     // cuts by CHARACTER offsets, so its weight must be char length, and a
     // token-weighted substring would silently be nonsense)
     val (staged, weightCol, derived) =
-      (config.options.get("weightColumn"), config.options.get("mergesView")) match {
+      (WeightColumn.get(config), mergesView.get(config)) match {
         case (Some(w), None) => (input, w, false)
         case (None, Some(_)) =>
-          required(config, "textColumn")
-          if (config.options.getOrElse("emit", "spans") != "spans")
+          val text = TextColumn(config)
+          if (emit != "spans")
             throw new ConfigException(
               "pack_sequences: mergesView packs in BPE tokens and only " +
                 "emits spans — emit=text needs character weights " +
                 "(weightColumn = char length)")
           graft.config.ExprUtils.requireNoHelperCollision(
             "pack_sequences", input.columns.toSeq, "__bpe_w")
-          val loaded = BpeTransforms.loadedFromView(config, ctx, transformType)
           (input.withColumn("__bpe_w",
             graft.functions.expressions.BpeEncode.count(
-              col(config.options("textColumn")), loaded).cast("long")),
+              col(text), loadedStore(config, ctx)).cast("long")),
             "__bpe_w", true)
         case (Some(_), Some(_)) => throw new ConfigException(
           "pack_sequences: weightColumn and mergesView are mutually " +
@@ -259,19 +263,11 @@ object PackSequencesTransform extends Transform {
           "pack_sequences: needs weightColumn, or mergesView + textColumn " +
             "for tokenizer-exact packing")
       }
-    val build = config.options.getOrElse("emit", "spans") match {
-      case "spans" => () => PackSequences.packGrouped(
-        staged, config.options("idColumn"), weightCol,
-        groups, seqLen, nParts)
-      case "text" => () => PackSequences.materialize(
-        staged, config.options("idColumn"),
-        config.options.getOrElse("textColumn",
-          throw new ConfigException("pack_sequences: emit=text requires 'textColumn'")),
-        weightCol,
-        seqLen, nParts, groups)
-      case other => throw new ConfigException(
-        s"pack_sequences: emit must be spans|text|input_ids, got '$other'")
-    }
+    val build =
+      if (emit == "spans") () => PackSequences.packGrouped(
+        staged, id, weightCol, groups, seqLen, nParts)
+      else () => PackSequences.materialize(
+        staged, id, TextColumn(config), weightCol, seqLen, nParts, groups)
     val packed =
       try build()
       catch { case e: IllegalArgumentException => throw new ConfigException(e.getMessage) }

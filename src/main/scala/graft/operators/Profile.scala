@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.{Window => W}
 import org.apache.spark.sql.functions._
 
-import graft.api.{Transform, RunContext}
+import graft.api.{Opt, RunContext, Transform}
 import graft.config.TransformConfig
 
 /**
@@ -167,15 +167,12 @@ object Profile {
  */
 object ProfileTransform extends Transform {
   val transformType = "profile"
-  override val columnOptions = Seq("columns", "groupBy")
-  def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "columns")
-    val cols = graft.config.ExprUtils.parseColumns(config.options("columns"))
-    val groups = config.options.get("groupBy")
-      .map(graft.config.ExprUtils.parseColumns).getOrElse(Nil)
-    Profile.profile(input, cols,
-      exact = boolOption(config, "exact", false), groupBy = groups)
-  }
+  private val Columns = Opt.columns("columns").required
+  private val GroupBy = Opt.columns("groupBy").default(Nil)
+  private val Exact = Opt.bool("exact").default(false)
+  def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame =
+    Profile.profile(input, Columns(config, input.schema),
+      exact = Exact(config), groupBy = GroupBy(config, input.schema))
 }
 
 /**
@@ -190,17 +187,14 @@ object ProfileTransform extends Transform {
  */
 object TfidfTransform extends Transform {
   val transformType = "tfidf"
-  override val columnOptions = Seq("idColumn", "textColumn")
+  private val IdColumn = Opt.column("idColumn").required
+  private val TextColumn = Opt.column("textColumn").required
+  private val Scoring = Opt.oneOf("scoring", "tfidf", "bm25").default("tfidf")
+  private val K1 = Opt.double("k1").default(1.2)
+  private val B = Opt.double("b").default(0.75)
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "idColumn", "textColumn")
-    val id = config.options("idColumn"); val text = config.options("textColumn")
-    config.options.getOrElse("scoring", "tfidf") match {
-      case "tfidf" => graft.functions.TextFunctions.tfidf(input, id, text)
-      case "bm25" => graft.functions.TextFunctions.bm25(input, id, text,
-        k1 = doubleOption(config, "k1", 1.2),
-        b = doubleOption(config, "b", 0.75))
-      case other => throw new IllegalArgumentException(
-        s"tfidf scoring must be tfidf|bm25, got '$other'")
-    }
+    val id = IdColumn(config); val text = TextColumn(config)
+    if (Scoring(config) == "tfidf") graft.functions.TextFunctions.tfidf(input, id, text)
+    else graft.functions.TextFunctions.bm25(input, id, text, k1 = K1(config), b = B(config))
   }
 }

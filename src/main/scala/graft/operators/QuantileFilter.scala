@@ -3,8 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.api.{ConfigException, RunContext, Transform}
-import graft.config.{ExprUtils, TransformConfig}
+import graft.api.{ConfigException, Opt, RunContext, Transform}
+import graft.config.TransformConfig
 
 /**
  * quantile_filter — percentile-threshold selection over a numeric column:
@@ -47,24 +47,25 @@ import graft.config.{ExprUtils, TransformConfig}
 object QuantileFilterTransform extends Transform {
   val transformType = "quantile_filter"
 
-  override val columnOptions = Seq("column", "groupBy")
+  private val Target = Opt.column("column").required
+  private val Lower = Opt.double("lower", min = 0.0, max = 1.0)
+  private val Upper = Opt.double("upper", min = 0.0, max = 1.0)
+  private val GroupBy = Opt.columns("groupBy").default(Nil)
+  private val Exact = Opt.bool("exact").default(false)
+  private val Accuracy = Opt.int("accuracy").default(10000)
+  private val Mode = Opt.oneOf("mode", "keep", "clip").default("keep")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "column")
-    val c = config.options("column")
-    val lower = doubleOption(config, "lower")
-    val upper = doubleOption(config, "upper")
+    val c = Target(config)
+    val lower = Lower.get(config)
+    val upper = Upper.get(config)
     if (lower.isEmpty && upper.isEmpty) throw new ConfigException(
       "quantile_filter: at least one of lower/upper is required")
-    (lower.toList ++ upper.toList).foreach { p =>
-      if (p < 0.0 || p > 1.0) throw new ConfigException(
-        s"quantile_filter: percentiles must be in [0,1], got $p")
-    }
     for (lo <- lower; hi <- upper; if lo > hi) throw new ConfigException(
       s"quantile_filter: lower ($lo) must be <= upper ($hi)")
-    val groups = config.options.get("groupBy").map(ExprUtils.parseColumns).getOrElse(Nil)
-    val exact = boolOption(config, "exact", false)
-    val accuracy = intOption(config, "accuracy", 10000)
+    val groups = GroupBy(config)
+    val exact = Exact(config)
+    val accuracy = Accuracy(config)
 
     def pct(p: Double): Column = {
       val v = if (exact) expr(s"percentile(`$c`, $p)")
@@ -76,7 +77,7 @@ object QuantileFilterTransform extends Transform {
     val thresholds =
       (if (groups.isEmpty) input.groupBy() else input.groupBy(groups.map(col): _*))
         .agg(aggs.head, aggs.tail: _*)
-    val mode = config.options.getOrElse("mode", "keep")
+    val mode = Mode(config)
     // clip removes no rows, so a NULL group key (which joins nothing) must
     // not drop the row — it passes through unclamped. keep drops it: a row
     // outside every group has no distribution position, like a NULL value.
@@ -94,7 +95,7 @@ object QuantileFilterTransform extends Transform {
                     lower.map(_ => x >= col("__q_lo")).toList ++
                     upper.map(_ => x <= col("__q_hi")).toList).reduce(_ && _)
         joined.filter(cond).drop("__q_lo", "__q_hi")
-      case "clip" =>
+      case _ =>
         // clamp in the COLUMN's type family? No — percentiles interpolate,
         // so the clipped value is inherently a double
         val lo = lower.map(_ => col("__q_lo"))
@@ -106,8 +107,6 @@ object QuantileFilterTransform extends Transform {
           // a fabricated value; like NULL it has no position, clip to null
           when(x.isNull || isnan(x), lit(null).cast("double")).otherwise(clamped))
           .drop("__q_lo", "__q_hi")
-      case other => throw new ConfigException(
-        s"quantile_filter mode must be keep|clip, got '$other'")
     }
   }
 }

@@ -8,8 +8,8 @@ import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
-import graft.api.{ConfigException, RunContext, Transform}
-import graft.config.{ExprUtils, Options, TransformConfig}
+import graft.api.{ConfigException, Opt, RunContext}
+import graft.config.{Options, TransformConfig}
 
 /**
  * Serialization shell for a KLL sketch aggregation buffer: DataSketches
@@ -125,36 +125,34 @@ object QuantileSketchTransform extends SketchColumns {
     s"p$s"
   }
 
+  private val SketchK = Opt.int("sketchK").default(200)
+  private val Quantiles = Opt.parsed("quantiles") { v =>
+    v.split(",").map(_.trim).filter(_.nonEmpty)
+      .map(Options.double(transformType, "quantiles", _)).toSeq.map { p =>
+        if (p <= 0.0 || p > 1.0) throw new ConfigException(
+          s"quantile_sketch: quantiles must be in (0,1], got $p")
+        p
+      }
+  }.default(Seq(0.25, 0.5, 0.75))
+
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "columns")
-    val cols = ExprUtils.parseColumns(config.options("columns"))
-    if (cols.isEmpty) throw new ConfigException(
-      "quantile_sketch: columns lists no column names")
-    val groups = config.options.get("groupBy").map(ExprUtils.parseColumns).getOrElse(Nil)
-    val k = intOption(config, "sketchK", 200)
-    def grouped(df: DataFrame) =
-      if (groups.isEmpty) df.groupBy() else df.groupBy(groups.map(col): _*)
-    config.options.getOrElse("mode", "build") match {
+    val cols = Columns(config)
+    val k = SketchK(config)
+    Mode(config) match {
       case "build" =>
         // the Option[Double] input encoder flattens to one nullable DOUBLE
         // column — pass the bare column, NULLs arrive as None and are skipped
         val build = udaf(new KllBuildAggregator(k), Encoders.product[KllIn])
         val aggs = cols.map(c =>
           build(col(c).cast("double")).as(s"${c}_kll"))
-        grouped(input).agg(aggs.head, aggs.tail: _*)
+        grouped(input, config).agg(aggs.head, aggs.tail: _*)
       case "merge" =>
         val mergeA = udaf(new KllMergeAggregator(k), Encoders.product[KllBytesIn])
         val aggs = cols.map(c =>
           mergeA(col(s"${c}_kll")).as(s"${c}_kll"))
-        grouped(input).agg(aggs.head, aggs.tail: _*)
-      case "estimate" =>
-        val ps = config.options.getOrElse("quantiles", "0.25,0.5,0.75")
-          .split(",").map(_.trim).filter(_.nonEmpty)
-          .map(Options.double(transformType, "quantiles", _)).toSeq
-        ps.foreach { p =>
-          if (p <= 0.0 || p > 1.0) throw new ConfigException(
-            s"quantile_sketch: quantiles must be in (0,1], got $p")
-        }
+        grouped(input, config).agg(aggs.head, aggs.tail: _*)
+      case _ =>
+        val ps = Quantiles(config)
         val est = udf { (bytes: Array[Byte], p: Double) =>
           if (bytes == null) null
           else {
@@ -167,8 +165,6 @@ object QuantileSketchTransform extends SketchColumns {
             d.withColumn(s"${c}_${pLabel(p)}", est(col(s"${c}_kll"), lit(p)))
           }.drop(s"${c}_kll")
         }
-      case other => throw new ConfigException(
-        s"quantile_sketch mode must be build|merge|estimate, got '$other'")
     }
   }
 }

@@ -2,9 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.TimestampType
 
-import graft.api.{Transform, RunContext}
+import graft.api.{Opt, RunContext, Transform}
 import graft.config.{ExprUtils, TransformConfig}
 
 /**
@@ -121,15 +120,17 @@ object RangeJoin {
  */
 object RangeJoinTransform extends Transform {
   val transformType = "join_range"
-  override val columnOptions = Seq("on", "point")
-  def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "rightDataset", "point", "lo", "hi", "binWidth")
-    val keys = config.options.get("on")
-      .map(ExprUtils.parseColumns).getOrElse(Seq.empty)
-    RangeJoin.rangeJoin(input, ctx.spark.table(config.options("rightDataset")),
-      keys, config.options("point"), config.options("lo"), config.options("hi"),
-      binWidth = longOption(config, "binWidth", missing(config, "binWidth")),
-      maxBins = intOption(config, "maxBins", 4096),
-      prefix = config.options.getOrElse("prefix", "range_"))
-  }
+  private val RightDataset = Opt.view("rightDataset").required
+  private val On = Opt.columns("on").default(Nil)
+  private val Point = Opt.column("point").required
+  // interval bounds: columns of the right side
+  private val Lo = Opt.string("lo").required
+  private val Hi = Opt.string("hi").required
+  private val BinWidth = Opt.long("binWidth").required
+  private val MaxBins = Opt.int("maxBins").default(4096)
+  private val Prefix = Opt.string("prefix").default("range_")
+  def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame =
+    RangeJoin.rangeJoin(input, RightDataset.table(config, ctx.spark),
+      On(config), Point(config), Lo(config), Hi(config),
+      binWidth = BinWidth(config), maxBins = MaxBins(config), prefix = Prefix(config))
 }

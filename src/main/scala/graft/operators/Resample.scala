@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.{Window => W}
 import org.apache.spark.sql.functions._
 
-import graft.api.{RunContext, Transform}
+import graft.api.{Opt, RunContext, Transform}
 import graft.config.{ExprUtils, TransformConfig}
 
 /**
@@ -40,13 +40,15 @@ import graft.config.{ExprUtils, TransformConfig}
  */
 object ResampleTransform extends Transform {
   val transformType = "resample"
-  override val columnOptions = Seq("timeColumn", "groupBy")
+  private val TimeColumn = Opt.column("timeColumn").required
+  private val Interval = Opt.string("interval").required
+  private val GroupBy = Opt.columns("groupBy").default(Nil)
+  private val Aggregations = Opt.expr("aggregations").required
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "timeColumn", "interval", "aggregations")
-    val ts = config.options("timeColumn")
-    val interval = config.options("interval")
-    val keys = config.options.get("groupBy").map(ExprUtils.parseColumns).getOrElse(Nil)
-    val aggs = ExprUtils.parseAggregations(config.options("aggregations"))
+    val ts = TimeColumn(config)
+    val interval = Interval(config)
+    val keys = GroupBy(config)
+    val aggs = ExprUtils.parseAggregations(Aggregations(config))
 
     // rows with a null time belong to no bucket: excluded EXPLICITLY here
     // (a null bucket group would otherwise survive the aggregation and then

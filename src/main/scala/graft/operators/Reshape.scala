@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.api.{ConfigException, RunContext, Transform}
+import graft.api.{ConfigException, Opt, RunContext, Transform}
 import graft.config.{ExprUtils, TransformConfig}
 
 /**
@@ -36,15 +36,15 @@ import graft.config.{ExprUtils, TransformConfig}
  */
 object PivotTransform extends Transform {
   val transformType = "pivot"
-  override val columnOptions = Seq("groupBy", "pivotColumn")
+  private val GroupBy = Opt.columns("groupBy").required
+  private val PivotColumn = Opt.column("pivotColumn").required
+  private val Values = Opt.parsed("values")(ExprUtils.splitTopLevel(_)).required
+  private val Aggregations = Opt.expr("aggregations").required
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "groupBy", "pivotColumn", "values", "aggregations")
-    val groups = ExprUtils.parseColumns(config.options("groupBy"))
-    val values = ExprUtils.splitTopLevel(config.options("values")).map(_.trim)
-    val aggs = ExprUtils.parseAggregations(config.options("aggregations"))
-    input.groupBy(groups.map(col): _*)
-      .pivot(config.options("pivotColumn"), values)
-      .agg(aggs.head, aggs.tail: _*)
+    val grouped = input.groupBy(GroupBy(config).map(col): _*)
+      .pivot(PivotColumn(config), Values(config))
+    val aggs = ExprUtils.parseAggregations(Aggregations(config))
+    grouped.agg(aggs.head, aggs.tail: _*)
   }
 }
 
@@ -64,14 +64,13 @@ object PivotTransform extends Transform {
  */
 object UnpivotTransform extends Transform {
   val transformType = "unpivot"
-  override val columnOptions = Seq("ids", "cols")
+  private val Ids = Opt.columns("ids").required
+  private val Cols = Opt.columns("cols").required
+  private val VariableColumn = Opt.string("variableColumn").default("variable")
+  private val ValueColumn = Opt.string("valueColumn").default("value")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "ids", "cols")
-    val ids = ExprUtils.parseColumns(config.options("ids")).map(col)
-    val vals = ExprUtils.parseColumns(config.options("cols")).map(col)
-    input.unpivot(ids.toArray, vals.toArray,
-      config.options.getOrElse("variableColumn", "variable"),
-      config.options.getOrElse("valueColumn", "value"))
+    input.unpivot(Ids(config).map(col).toArray, Cols(config).map(col).toArray,
+      VariableColumn(config), ValueColumn(config))
   }
 }
 
@@ -91,16 +90,16 @@ object UnpivotTransform extends Transform {
  */
 object SetOpTransform extends Transform {
   val transformType = "setop"
+  private val RightDataset = Opt.view("rightDataset").required
+  private val Mode = Opt.oneOf("mode", "intersect", "intersect_all", "except", "except_all")
+    .required
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "rightDataset", "mode")
-    val right = input.sparkSession.table(config.options("rightDataset"))
-    config.options("mode") match {
+    val right = RightDataset.table(config, input.sparkSession)
+    Mode(config) match {
       case "intersect"     => input.intersect(right)
       case "intersect_all" => input.intersectAll(right)
       case "except"        => input.except(right)
-      case "except_all"    => input.exceptAll(right)
-      case other => throw new ConfigException(
-        s"setop mode must be intersect|intersect_all|except|except_all, got '$other'")
+      case _               => input.exceptAll(right)
     }
   }
 }
@@ -125,11 +124,13 @@ object SetOpTransform extends Transform {
  */
 object ExplodeTransform extends Transform {
   val transformType = "explode"
-  override val columnOptions = Seq("column")
+  private val Column = Opt.column("column").required
+  private val Outer = Opt.bool("outer").default(false)
+  private val As = Opt.string("as")
+  private val PositionColumn = Opt.string("positionColumn")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "column")
-    val c = config.options("column")
-    val outer = boolOption(config, "outer", false)
+    val c = Column(config)
+    val outer = Outer(config)
     // case-insensitive, like validation and Spark's own resolution — an
     // exact-case filter would KEEP the original array column alongside the
     // exploded one, breaking the documented replace and making any
@@ -140,16 +141,15 @@ object ExplodeTransform extends Transform {
     // a map explodes to TWO columns (key, value) — one alias would fail
     // analysis with a generator-arity error
     val outNames: Seq[String] =
-      if (!isMap) Seq(config.options.getOrElse("as", c))
+      if (!isMap) Seq(As.get(config).getOrElse(c))
       else {
-        val names = config.options.get("as").map(ExprUtils.parseColumns)
-          .getOrElse(Seq("key", "value"))
+        val names = As.get(config).map(ExprUtils.parseColumns).getOrElse(Seq("key", "value"))
         if (names.length != 2) throw new ConfigException(
           "explode: a map column explodes to two columns — give `as` two " +
             s"comma-separated names (got '${names.mkString(",")}')")
         names
       }
-    config.options.get("positionColumn") match {
+    PositionColumn.get(config) match {
       case None =>
         val gen = if (outer) explode_outer(col(c)) else explode(col(c))
         input.select(others :+ gen.as(outNames): _*)

@@ -3,8 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.api.{ConfigException, RunContext, Transform}
-import graft.config.{ExprUtils, TransformConfig}
+import graft.api.{Opt, RunContext, Transform}
+import graft.config.TransformConfig
 
 /**
  * scale — numeric feature normalization: z-score (`(x − μ) / σ`),
@@ -37,15 +37,17 @@ import graft.config.{ExprUtils, TransformConfig}
  */
 object ScaleTransform extends Transform {
   val transformType = "scale"
-  override val columnOptions = Seq("columns")
+  private val Columns = Opt.columns("columns").required
+  private val Method = Opt.oneOf("method", "zscore", "minmax", "robust").default("zscore")
+  private val RoundTo = Opt.int("roundTo")
+  private val Exact = Opt.bool("exact").default(false)
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "columns")
-    val cols = ExprUtils.parseColumns(config.options("columns"))
-    val method = config.options.getOrElse("method", "zscore")
-    val round2 = intOption(config, "roundTo")
+    val cols = Columns(config)
+    val method = Method(config)
+    val round2 = RoundTo.get(config)
     def maybeRound(c: org.apache.spark.sql.Column) =
       round2.map(r => round(c, r)).getOrElse(c)
-    val exact = boolOption(config, "exact", false)
+    val exact = Exact(config)
     def med(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       if (exact) percentile(c, lit(0.5))
       else percentile_approx(c, lit(0.5), lit(10000)).cast("double")
@@ -60,7 +62,7 @@ object ScaleTransform extends Transform {
           min(col(c)).cast("double").as(s"__lo_$c"),
           max(col(c)).cast("double").as(s"__hi_$c")) }
         input.agg(stats.head, stats.tail: _*)
-      case "robust" =>
+      case _ =>
         // MAD is defined around the median → two sequential 1-row aggs;
         // both broadcast, the corpus never shuffles
         val medStats = cols.map(c => med(col(c).cast("double")).as(s"__med_$c"))
@@ -70,8 +72,6 @@ object ScaleTransform extends Transform {
         val madOne = input.crossJoin(broadcast(medOne))
           .agg(madStats.head, madStats.tail: _*)
         medOne.crossJoin(broadcast(madOne))
-      case other => throw new ConfigException(
-        s"scale method must be zscore|minmax|robust, got '$other'")
     }
     val joined = input.crossJoin(broadcast(one))
     val scaled = cols.foldLeft(joined) { (df, c) =>

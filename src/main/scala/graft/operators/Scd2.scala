@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.api.{ConfigException, RunContext, Transform}
+import graft.api.{ConfigException, Opt, RunContext, Transform}
 import graft.config.TransformConfig
 
 /**
@@ -84,20 +84,20 @@ object Scd2 {
  */
 object Scd2Transform extends Transform {
   val transformType = "scd2"
-  override val columnOptions = Seq("keyColumns", "timeColumn", "compareColumns")
+  private val KeyColumns = Opt.columns("keyColumns").required
+  private val TimeColumn = Opt.column("timeColumn").required
+  private val CompareColumns = Opt.columns("compareColumns")
+  private val FromColumn = Opt.string("fromColumn").default("effective_from")
+  private val ToColumn = Opt.string("toColumn").default("effective_to")
+  private val CurrentColumn = Opt.string("currentColumn").default("is_current")
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "keyColumns", "timeColumn")
-    val keys = config.options("keyColumns").split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val ts = config.options("timeColumn")
-    val cmp = config.options.get("compareColumns") match {
-      case Some(s) => s.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      case None => input.columns.filterNot(c => keys.contains(c) || c == ts).toSeq
-    }
+    val keys = KeyColumns(config)
+    val ts = TimeColumn(config)
+    val cmp = CompareColumns.get(config).getOrElse(
+      input.columns.filterNot(c => keys.contains(c) || c == ts).toList)
     if (cmp.isEmpty) throw new ConfigException("scd2: no compare columns")
-    Scd2.build(input, keys, ts, cmp,
-      config.options.getOrElse("fromColumn", "effective_from"),
-      config.options.getOrElse("toColumn", "effective_to"),
-      config.options.getOrElse("currentColumn", "is_current"))
+    Scd2.build(input, keys, ts, cmp, FromColumn(config), ToColumn(config),
+      CurrentColumn(config))
   }
 }

@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.api.{RunContext, Transform}
+import graft.api.{Opt, RunContext, Transform}
 import graft.config.{Options, TransformConfig}
 
 /**
@@ -65,17 +65,15 @@ object Shards {
  */
 object ShardTransform extends Transform {
   val transformType = "shard"
-  override val columnOptions = Seq("idColumn", "weightColumn")
+  private val IdColumn = Opt.column("idColumn").required
+  private val WeightColumn = Opt.column("weightColumn").required
+  private val Budget = Opt.long("budget").required
+  private val NumPartitions = Opt.int("numPartitions").default(0)
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "idColumn"); required(config, "weightColumn"); required(config, "budget")
     // surface a library require as the engine's ConfigException, not a
     // raw IllegalArgument stack (the TokenCap/PackSequences contract)
-    try Shards.assignShards(
-      input,
-      config.options("idColumn"),
-      config.options("weightColumn"),
-      longOption(config, "budget", missing(config, "budget")),
-      intOption(config, "numPartitions", 0))
+    try Shards.assignShards(input, IdColumn(config), WeightColumn(config), Budget(config),
+      NumPartitions(config))
     catch { case e: IllegalArgumentException => throw new graft.api.ConfigException(
       s"shard: ${e.getMessage}") }
   }
@@ -97,7 +95,7 @@ object ShardTransform extends Transform {
  */
 object RedactTransform extends Transform {
   val transformType = "redact"
-  override val columnOptions = Seq("columns")
+  private val Columns = Opt.columns("columns").required
   private[operators] val builtins: Map[String, (String, String)] = Map(
     "email" -> ("[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}" -> "<EMAIL>"),
     // boundary-anchored (RE2-safe, like ipv4) so a longer digit run — a
@@ -107,22 +105,45 @@ object RedactTransform extends Transform {
     // between a space and '+' (both non-word)
     "phone" -> ("(?:\\+|\\b)\\d{3}[- ]?\\d{3}[- ]?\\d{4}\\b" -> "<PHONE>"),
     "ipv4"  -> ("\\b\\d{1,3}(\\.\\d{1,3}){3}\\b" -> "<IP>"))
-  def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "columns")
-    val names = config.options.getOrElse("patterns", "email,phone,ipv4")
-      .split(",").map(_.trim).filter(_.nonEmpty)
-    val rules = names.map { n =>
+  private val Patterns = Opt.parsed("patterns") {
+    _.split(",").map(_.trim).filter(_.nonEmpty).toSeq.map { n =>
       builtins.getOrElse(n, throw new IllegalArgumentException(
         s"unknown redact pattern '$n' (built-ins: ${builtins.keys.mkString(", ")})"))
-    } ++ config.options.get("regex").map(r =>
-      r -> config.options.getOrElse("replacement", "<REDACTED>"))
+    }
+  }.default(Seq("email", "phone", "ipv4").map(builtins))
+  private val Regex = Opt.string("regex")
+  private val Replacement = Opt.string("replacement").default("<REDACTED>")
+  def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
+    val rules = Patterns(config) ++ Regex.get(config).map(_ -> Replacement(config))
     require(rules.nonEmpty, "redact needs at least one pattern")
-    config.options("columns").split(",").map(_.trim).filter(_.nonEmpty)
+    Columns(config)
       .foldLeft(input) { (df, c) =>
         df.withColumn(c, rules.foldLeft(col(c)) { case (acc, (re, repl)) =>
           regexp_replace(acc, re, repl)
         })
       }
+  }
+}
+
+/** The deterministic-bucket options `sample` and `mix` share: the key
+  * (`on`, or its alias `column` — bare `on` is a YAML 1.1 boolean, so
+  * unquoted YAML configs silently lose the key), `buckets`, `method` and
+  * `seed`. */
+private[operators] trait HashBuckets extends Transform {
+  protected val On = Opt.column("on").alias("column").required
+  protected val Buckets = Opt.int("buckets", min = 1)
+  protected val Method = Opt.oneOf("method", "hash", "mod").default("hash")
+  protected val Seed = Opt.long("seed").default(0L)
+
+  /** The deterministic bucket: pmod(xxhash64(key, seed), buckets), or
+    * pmod(key, buckets) with `method: mod`. */
+  protected def bucketFor(config: TransformConfig, key: Column,
+                          defaultBuckets: Int): (Column, Int) = {
+    val buckets = Buckets.get(config).getOrElse(defaultBuckets)
+    val bucket =
+      if (Method(config) == "hash") pmod(xxhash64(key, lit(Seed(config))), lit(buckets))
+      else pmod(key, lit(buckets))
+    (bucket, buckets)
   }
 }
 
@@ -151,41 +172,51 @@ object RedactTransform extends Transform {
  * `buckets` (default 100); `method` hash|mod; `seed` (hash only, default 0);
  * `splitColumn` (default `split`).
  */
-object SampleTransform extends Transform {
+object SampleTransform extends HashBuckets {
   val transformType = "sample"
-  override val columnOptions = Seq("on", "column", "weightColumn", "probColumn", "groupBy")
+  // exactly one mode: keep | splits | probColumn | perGroup | weightColumn
+  private val Keep = Opt.int("keep")
+  private val Splits = Opt.parsed("splits") { splits =>
+    splits.split(",").map(_.trim).filter(_.nonEmpty).toSeq.map { p =>
+      p.split(":") match {
+        case Array(name, w) => (name.trim, Options.int(transformType, "splits", w))
+        case _ => throw new IllegalArgumentException(
+          s"splits must be name:weight,... got '$p'")
+      }
+    }
+  }
+  private val ProbColumn = Opt.column("probColumn")
+  private val PerGroup = Opt.int("perGroup", min = 1)
+  private val WeightColumn = Opt.column("weightColumn")
+  private val SplitColumn = Opt.string("splitColumn").default("split")
+  private val K = Opt.int("k", min = 1)
+  private val GroupBy = Opt.columns("groupBy")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    // `column` is an alias for `on`: bare `on` is a YAML 1.1 boolean, so
-    // unquoted YAML configs silently lose the key
-    val keyName = config.options.get("on").orElse(config.options.get("column"))
-      .getOrElse { required(config, "on"); "" }
+    val keyName = On(config, input.schema)
     val key = col(keyName)
     // the weighted race neither buckets nor hashes, so it must dodge
     // bucketFor entirely (method=mod would spuriously reject string ids)
-    if (config.options.contains("weightColumn")) {
-      val others = Seq("keep", "splits", "probColumn", "perGroup")
-        .filter(config.options.contains)
+    if (WeightColumn.isSet(config)) {
+      val others = Seq(Keep, Splits, ProbColumn, PerGroup).filter(_.isSet(config)).map(_.key)
       require(others.isEmpty,
         s"sample: weightColumn cannot combine with ${others.mkString("/")} — " +
           "exactly one of keep | splits | probColumn | perGroup | weightColumn")
       return weightedSample(input, config, keyName)
     }
-    val stratified = config.options.contains("perGroup")
+    val stratified = PerGroup.isSet(config)
     val (bucket, buckets) = bucketFor(config, key,
       defaultBuckets = if (stratified) 1000003 else 100)
     if (stratified) {
       // same "exactly one of" contract as the match below: perGroup with a
       // co-present mode must fail, not silently win
-      val others = Seq("keep", "splits", "probColumn").filter(config.options.contains)
+      val others = Seq(Keep, Splits, ProbColumn).filter(_.isSet(config)).map(_.key)
       require(others.isEmpty,
         s"sample: perGroup cannot combine with ${others.mkString("/")} — " +
           "exactly one of keep | splits | probColumn | perGroup")
-      return stratifiedSample(input, config, key, keyName, bucket)
+      return stratifiedSample(input, config, keyName, bucket)
     }
-    (config.options.get("keep"), config.options.get("splits"),
-     config.options.get("probColumn")) match {
-      case (Some(k), None, None) =>
-        val keep = Options.int(transformType, "keep", k)
+    (Keep.get(config), Splits.get(config), ProbColumn.get(config)) match {
+      case (Some(keep), None, None) =>
         require(keep >= 0 && keep <= buckets,
           s"need 0 <= keep <= buckets, got keep=$keep buckets=$buckets")
         input.where(bucket < lit(keep))
@@ -201,22 +232,16 @@ object SampleTransform extends Transform {
         // every corrupt-scored row; null and NaN both mean "drop"
         val prob = least(greatest(nanvl(col(p).cast("double"), lit(0.0)), lit(0.0)), lit(1.0))
         input.where(bucket.cast("double") < prob * lit(buckets.toDouble))
-      case (None, Some(splits), None) =>
-        val parts = splits.split(",").map(_.trim).filter(_.nonEmpty).map { p =>
-          p.split(":") match {
-            case Array(name, w) => (name.trim, Options.int(transformType, "splits", w))
-            case _ => throw new IllegalArgumentException(
-              s"splits must be name:weight,... got '$p'")
-          }
-        }
+      case (None, Some(parts), None) =>
         require(parts.nonEmpty && parts.forall(_._2 > 0) && parts.map(_._2).sum == buckets,
-          s"split weights must be positive and sum to buckets=$buckets, got '$splits'")
+          s"split weights must be positive and sum to buckets=$buckets, got " +
+            s"'${Splits.setting(config).get._2}'")
         // cumulative ranges: first slice gets buckets [0, w0), next [w0, w0+w1)…
         val label = parts.zip(parts.scanLeft(0)(_ + _._2)).foldLeft(lit(null).cast("string")) {
           case (acc, ((name, w), lo)) =>
             when(bucket >= lit(lo) && bucket < lit(lo + w), lit(name)).otherwise(acc)
         }
-        input.withColumn(config.options.getOrElse("splitColumn", "split"), label)
+        input.withColumn(SplitColumn(config), label)
       case _ => throw new IllegalArgumentException(
         "sample needs exactly one of 'keep' (filter), 'splits' (label), " +
           "'probColumn' (importance sampling), or 'perGroup' (stratified)")
@@ -244,11 +269,9 @@ object SampleTransform extends Transform {
    */
   private def weightedSample(input: DataFrame, config: TransformConfig,
                              keyName: String): DataFrame = {
-    required(config, "k")
-    val k = intOption(config, "k", missing(config, "k"))
-    if (k <= 0) throw new graft.api.ConfigException(s"sample: k must be positive, got $k")
-    val w = numericWeight(input, transformType, config.options("weightColumn"))
-    val seed = longOption(config, "seed", 0L)
+    val k = K(config)
+    val w = numericWeight(input, transformType, WeightColumn(config))
+    val seed = Seed(config)
     // engine-portable uniform in (0,1): the md5 hex prefix parsed as an
     // integer is exact at 52 bits, and (v + 0.5)/2^52 is exact binary
     // arithmetic — any engine re-derives the identical double from
@@ -260,8 +283,7 @@ object SampleTransform extends Transform {
     // dropped inside the selector (they must never be sampled, even when
     // fewer than k valid rows exist)
     val raceKey = when(w > 0 && !isnan(w), -log(u) / w)
-    val groups = config.options.get("groupBy")
-      .map(graft.config.ExprUtils.parseColumns).getOrElse(Nil)
+    val groups = GroupBy.get(config).getOrElse(Nil)
     // the aggregator keeps HIGHEST first (ties: id asc) → negate so the
     // smallest race key wins, ties deterministically toward smaller ids
     BoundedTopK.semiJoinTopK(input, groups, negate(raceKey), keyName, k)
@@ -282,21 +304,6 @@ object SampleTransform extends Transform {
     col(field.get.name).cast("double")
   }
 
-  /** The deterministic bucket shared by sample/mix: pmod(xxhash64(key,
-    * seed) | key, buckets). */
-  private[operators] def bucketFor(config: TransformConfig, key: Column,
-                                   defaultBuckets: Int): (Column, Int) = {
-    val buckets = config.options.get("buckets")
-      .fold(defaultBuckets)(Options.int(config.transformType, "buckets", _))
-    require(buckets > 0, s"buckets must be positive, got $buckets")
-    val bucket = config.options.getOrElse("method", "hash") match {
-      case "hash" => pmod(xxhash64(key, lit(config.options.get("seed")
-        .fold(0L)(Options.long(config.transformType, "seed", _)))), lit(buckets))
-      case "mod"  => pmod(key, lit(buckets))
-      case other  => throw new IllegalArgumentException(s"sample method must be hash|mod, got '$other'")
-    }
-    (bucket, buckets)
-  }
 
   /**
    * Corpus mixing: re-weight groups (languages, sources, domains) by a
@@ -365,23 +372,21 @@ object SampleTransform extends Transform {
    * shuffles.
    */
   private def stratifiedSample(input: DataFrame, config: TransformConfig,
-                               key: Column, keyName: String, bucket: Column): DataFrame = {
-    required(config, "groupBy")
-    val n = intOption(config, "perGroup", missing(config, "perGroup"))
-    require(n > 0, s"perGroup must be positive, got $n")
+                               keyName: String, bucket: Column): DataFrame = {
+    val groups = GroupBy(config)
+    val n = PerGroup(config)
     val keyType = input.schema(keyName).dataType.typeName
     val integral = Seq("long", "integer", "short", "byte").contains(keyType)
     // hash bucketing (xxhash64) works on any type, so string/UUID doc ids
     // are fine there; mod arithmetic genuinely needs an integral key
     require(integral || (keyType == "string" &&
-        config.options.getOrElse("method", "hash") == "hash"),
+        Method(config) == "hash"),
       s"stratified sample needs an integral or (method=hash) string " +
         s"'$keyName' id column, got $keyType")
     // the aggregator keeps HIGHEST score first (ties: id asc) → negate the
     // bucket so "smallest bucket, then smallest id" wins, matching the SQL
     // row_number() ORDER BY bucket, id oracle exactly
-    BoundedTopK.semiJoinTopK(input, Seq(config.options("groupBy")),
-      negate(bucket), keyName, n)
+    BoundedTopK.semiJoinTopK(input, groups, negate(bucket), keyName, n)
   }
 }
 
@@ -426,45 +431,44 @@ object SampleTransform extends Transform {
  * explode. `maxGroups` (default 1000) bounds the derived when-chain and
  * fails loudly, pointing high-cardinality mixtures at explicit weights.
  */
-object MixTransform extends graft.api.Transform {
+object MixTransform extends HashBuckets {
   val transformType = "mix"
-  override val columnOptions = Seq("on", "column", "groupBy", "weightColumn")
+  private val GroupBy = Opt.column("groupBy").required
+  // exactly one of weights | temperature
+  private val Weights = Opt.parsed("weights")(SampleTransform.parseWeights)
+  // the reader refuses NaN and Infinity: NaN passes a plain < check and
+  // Infinity overflows pow — both would surface as an opaque
+  // NumberFormatException from BigDecimal deep in the weight loop
+  private val Temperature = Opt.double("temperature", min = 0.0)
+  private val DefaultWeight = Opt.double("defaultWeight").default(0.0)
+  private val MaxGroups = Opt.int("maxGroups").default(1000)
+  private val BudgetRows = Opt.double("budgetRows")
+  private val WeightColumn = Opt.column("weightColumn")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    val keyName = config.options.get("on").orElse(config.options.get("column"))
-      .getOrElse { required(config, "on"); "" }
-    required(config, "groupBy")
-    val group = config.options("groupBy")
-    val (bucket, buckets) = SampleTransform.bucketFor(config, col(keyName), defaultBuckets = 10000)
-    (config.options.get("weights"), config.options.get("temperature")) match {
+    val group = GroupBy(config)
+    val (bucket, buckets) = bucketFor(config, col(On(config)), defaultBuckets = 10000)
+    (Weights.get(config), Temperature.get(config)) match {
       case (Some(_), Some(_)) => throw new graft.api.ConfigException(
         "mix: weights and temperature are mutually exclusive — the mixture " +
           "is either stated explicitly or derived from group sizes, not both")
       case (None, None) => throw new graft.api.ConfigException(
         "mix: one of weights or temperature is required")
-      case (Some(spec), None) =>
-        if (config.options.contains("weightColumn"))
+      case (Some(weights), None) =>
+        if (WeightColumn.isSet(config))
           throw new graft.api.ConfigException(
             "mix: weightColumn only applies with temperature — explicit " +
               "weights already state the mixture, group sizes never enter")
-        val default = doubleOption(config, "defaultWeight", 0.0)
-        SampleTransform.mixSample(input, group,
-          SampleTransform.parseWeights(spec), default, bucket, buckets)
-      case (None, Some(alphaSpec)) =>
-        // the reader refuses NaN and Infinity: NaN passes a plain < check
-        // and Infinity overflows pow — both would surface as an opaque
-        // NumberFormatException from BigDecimal deep in the weight loop
-        val alpha = Options.double(transformType, "temperature", alphaSpec)
-        if (alpha < 0) throw new graft.api.ConfigException(
-          s"mix: temperature must be a finite number >= 0, got $alpha")
+        SampleTransform.mixSample(input, group, weights, DefaultWeight(config), bucket, buckets)
+      case (None, Some(alpha)) =>
         // every observed group gets a derived weight and null-group rows
         // drop, so a default could never apply — reject it rather than
         // silently ignoring the option
-        if (config.options.contains("defaultWeight"))
+        if (DefaultWeight.isSet(config))
           throw new graft.api.ConfigException(
             "mix: defaultWeight does not apply with temperature — every " +
               "observed group gets a derived weight and null-group rows drop")
-        val maxGroups = intOption(config, "maxGroups", 1000)
-        val budgetRows = doubleOption(config, "budgetRows")
+        val maxGroups = MaxGroups(config)
+        val budgetRows = BudgetRows.get(config)
         // bounded driver collect: one narrow count-by-group aggregate,
         // O(|groups|) rows (languages/domains — small by construction).
         // The limit makes the bound REAL: without it, a misconfigured
@@ -480,7 +484,7 @@ object MixTransform extends graft.api.Transform {
         // language's share of the TRAINING TOKENS). Zero/null-sum groups
         // derive weight 0 and their rows drop — a group with no weight
         // has nothing to contribute to a weighted mixture.
-        val sizeExpr = config.options.get("weightColumn") match {
+        val sizeExpr = WeightColumn.get(config) match {
           case None => count(lit(1)).cast("double")
           case Some(w) =>
             coalesce(sum(SampleTransform.numericWeight(input, transformType, w)), lit(0.0))
@@ -614,15 +618,12 @@ object Shuffle {
  */
 object ShuffleTransform extends Transform {
   val transformType = "shuffle"
-  override val columnOptions = Seq("idColumn")
-  def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "idColumn")
-    Shuffle.deterministicShuffle(
-      input,
-      config.options("idColumn"),
-      longOption(config, "seed", 0L),
-      config.options.getOrElse("hash", "md5"),
-      boolOption(config, "position", true),
-      intOption(config, "numPartitions", 0))
-  }
+  private val IdColumn = Opt.column("idColumn").required
+  private val Seed = Opt.long("seed").default(0L)
+  private val Hash = Opt.oneOf("hash", "md5", "xxhash64").default("md5")
+  private val Position = Opt.bool("position").default(true)
+  private val NumPartitions = Opt.int("numPartitions").default(0)
+  def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame =
+    Shuffle.deterministicShuffle(input, IdColumn(config), Seed(config), Hash(config),
+      Position(config), NumPartitions(config))
 }

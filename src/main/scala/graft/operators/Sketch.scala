@@ -3,21 +3,28 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.api.{ConfigException, RunContext, Transform}
-import graft.config.{ExprUtils, TransformConfig}
+import graft.api.{Opt, RunContext, Transform}
+import graft.config.TransformConfig
 
 /** The column options of the mergeable-sketch transforms (`sketch`,
   * `quantile_sketch`, `frequent_items`): `columns` names input columns
   * only in the modes that read raw values; the others read the
   * `<column>_<state>` columns a build step wrote. */
 private[operators] trait SketchColumns extends Transform {
+  protected def modes: Seq[String] = Seq("build", "merge", "estimate")
   protected def rawModes: Set[String] = Set("build")
-  override def columnOptions: Seq[String] = Seq("columns", "groupBy")
+  protected val Columns = Opt.columns("columns").required.nonEmpty
+  protected val GroupBy = Opt.columns("groupBy").default(Nil)
+  protected val Mode = Opt.oneOf("mode", modes: _*).default("build")
+  protected def grouped(df: DataFrame, config: TransformConfig) =
+    df.groupBy(GroupBy(config).map(col): _*)
   override def validate(config: TransformConfig,
                         schema: org.apache.spark.sql.types.StructType): List[String] =
-    super.validate(
-      if (rawModes(config.options.getOrElse("mode", "build"))) config
-      else config.copy(options = config.options - "columns"), schema)
+    checkOptions(config) match {
+      case Nil => missingColumns(schema, "groupBy", GroupBy(config)) ++
+        (if (rawModes(Mode(config))) missingColumns(schema, "columns", Columns(config)) else Nil)
+      case errs => errs
+    }
 }
 
 /**
@@ -46,32 +53,25 @@ private[operators] trait SketchColumns extends Transform {
  */
 object SketchTransform extends SketchColumns {
   val transformType = "sketch"
+  private val LgConfigK = Opt.int("lgConfigK").default(12)
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "columns")
-    val cols = ExprUtils.parseColumns(config.options("columns"))
-    if (cols.isEmpty) throw new ConfigException(
-      "sketch: columns lists no column names")
-    val groups = config.options.get("groupBy").map(ExprUtils.parseColumns).getOrElse(Nil)
-    val lgK = intOption(config, "lgConfigK", 12)
-    def grouped(df: DataFrame) =
-      if (groups.isEmpty) df.groupBy() else df.groupBy(groups.map(col): _*)
-    config.options.getOrElse("mode", "build") match {
+    val cols = Columns(config)
+    val lgK = LgConfigK(config)
+    Mode(config) match {
       case "build" =>
         val aggs = cols.map(c =>
           expr(s"hll_sketch_agg(`$c`, $lgK)").as(s"${c}_sketch"))
-        grouped(input).agg(aggs.head, aggs.tail: _*)
+        grouped(input, config).agg(aggs.head, aggs.tail: _*)
       case "merge" =>
         // allowDifferentLgConfigK=false: silently unioning sketches built
         // at different precisions degrades to the coarser one — fail instead
         val aggs = cols.map(c =>
           expr(s"hll_union_agg(`${c}_sketch`, false)").as(s"${c}_sketch"))
-        grouped(input).agg(aggs.head, aggs.tail: _*)
-      case "estimate" =>
+        grouped(input, config).agg(aggs.head, aggs.tail: _*)
+      case _ =>
         cols.foldLeft(input) { (df, c) =>
           df.withColumn(s"${c}_ndv", expr(s"hll_sketch_estimate(`${c}_sketch`)"))
         }
-      case other => throw new ConfigException(
-        s"sketch mode must be build|merge|estimate, got '$other'")
     }
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions.{col, lit}
 
-import graft.api.{ConfigException, RunContext}
+import graft.api.ConfigException
 
 /** The persisted-store contract (docs/STORES.md), enforced in one place.
   * Every store family is one [[Family]] definition; every loader asks
@@ -14,15 +14,6 @@ import graft.api.{ConfigException, RunContext}
   * byte-fallback alphabet, model-size guards, the codebook fingerprint's
   * derivation) stay in the loaders. */
 private[graft] object Stores {
-  def fromView(ctx: RunContext, view: String, option: String,
-               tname: String, storeKind: String): DataFrame =
-    try ctx.spark.table(view)
-    catch { case e: org.apache.spark.sql.AnalysisException =>
-      throw new ConfigException(
-        s"$tname: $option '$view' is not a registered view/table — " +
-          s"register the persisted $storeKind store first (${e.getMessage})")
-    }
-
   /** One parameter stamp: the store column, the knob the caller types,
     * the type both sides compare as, and — for stamps added after the
     * family's first stores were written — the value an absent column

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 
-import graft.api.{ConfigException, RunContext, Transform}
+import graft.api.{ConfigException, Opt, RunContext, Transform}
 import graft.config.TransformConfig
 import graft.functions.TextFunctions
 
@@ -28,15 +28,11 @@ import graft.functions.TextFunctions
  */
 object VocabTopKTransform extends Transform {
   val transformType = "vocab_topk"
-  override val columnOptions = Seq("textColumn")
-  def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "textColumn", "k")
-    val k = intOption(config, "k", missing(config, "k"))
-    if (k <= 0) throw new ConfigException(s"vocab_topk: k must be positive, got $k")
-    val n = intOption(config, "ngramSize", 1)
-    if (n < 1) throw new ConfigException(s"vocab_topk: ngramSize must be >= 1, got $n")
-    TextFunctions.vocabTopK(input, config.options("textColumn"), k, n)
-  }
+  private val TextColumn = Opt.column("textColumn").required
+  private val K = Opt.int("k", min = 1).required
+  private val NgramSize = Opt.int("ngramSize", min = 1).default(1)
+  def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame =
+    TextFunctions.vocabTopK(input, TextColumn(config), K(config), NgramSize(config))
 }
 
 /**
@@ -52,11 +48,10 @@ object VocabTopKTransform extends Transform {
  */
 object EntropyTransform extends Transform {
   val transformType = "entropy"
-  override val columnOptions = Seq("idColumn", "textColumn")
-  def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "idColumn", "textColumn")
-    TextFunctions.tokenEntropy(input, config.options("idColumn"), config.options("textColumn"))
-  }
+  private val IdColumn = Opt.column("idColumn").required
+  private val TextColumn = Opt.column("textColumn").required
+  def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame =
+    TextFunctions.tokenEntropy(input, IdColumn(config), TextColumn(config))
 }
 
 /**
@@ -97,19 +92,15 @@ object EntropyTransform extends Transform {
  */
 object NormalizeTextTransform extends Transform {
   val transformType = "normalize_text"
-  override val columnOptions = Seq("columns")
+  private val Columns = Opt.columns("columns").required.nonEmpty
+  private val Form = Opt.oneOf("form", "NFC", "NFD", "NFKC", "NFKD").default("NFC")
+  private val Flags = Seq("stripControl", "collapseWhitespace", "trim", "lowercase")
+    .map(Opt.bool(_).default(false))
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     import org.apache.spark.sql.functions._
-    required(config, "columns")
-    val form = config.options.getOrElse("form", "NFC")
-    if (!Set("NFC", "NFD", "NFKC", "NFKD").contains(form))
-      throw new ConfigException(s"normalize_text: form must be NFC|NFD|NFKC|NFKD, got '$form'")
-    val Seq(stripControl, collapse, doTrim, lowercase) =
-      Seq("stripControl", "collapseWhitespace", "trim", "lowercase")
-        .map(boolOption(config, _, false))
-    val cols = config.options("columns").split(",").map(_.trim).filter(_.nonEmpty)
-    if (cols.isEmpty) throw new ConfigException("normalize_text: no columns listed")
-    cols.foldLeft(input) { (df, c) =>
+    val form = Form(config)
+    val Seq(stripControl, collapse, doTrim, lowercase) = Flags.map(_(config))
+    Columns(config).foldLeft(input) { (df, c) =>
       var e = graft.functions.expressions.UnicodeNormalize(col(c), form)
       if (stripControl)
         e = regexp_replace(e, "[\\x00-\\x08\\x0B-\\x1F\\x7F]", "")
@@ -135,16 +126,11 @@ object NormalizeTextTransform extends Transform {
  */
 object CollocationsTransform extends Transform {
   val transformType = "collocations"
-  override val columnOptions = Seq("textColumn")
-  def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "textColumn", "k")
-    val k = intOption(config, "k", missing(config, "k"))
-    if (k <= 0) throw new ConfigException(s"collocations: k must be positive, got $k")
-    val minCount = longOption(config, "minCount", 5L)
-    if (minCount < 1)
-      throw new ConfigException(s"collocations: minCount must be >= 1, got $minCount")
-    TextFunctions.collocations(input, config.options("textColumn"), k, minCount)
-  }
+  private val TextColumn = Opt.column("textColumn").required
+  private val K = Opt.int("k", min = 1).required
+  private val MinCount = Opt.long("minCount", min = 1L).default(5L)
+  def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame =
+    TextFunctions.collocations(input, TextColumn(config), K(config), MinCount(config))
 }
 
 /**
@@ -164,67 +150,67 @@ object CollocationsTransform extends Transform {
  *    statistics — a store trained on the corpus itself will NOT
  *    reproduce self-mode numbers.
  */
-object ChargramNllTransform extends Transform {
+object ChargramNllTransform extends LmDrift {
   val transformType = "chargram_nll"
-  override val columnOptions = Seq("idColumn", "textColumn")
+  private val TextColumn = Opt.column("textColumn").required
+  // self mode needs an id; store mode (modelView) refuses one
+  private val IdColumn = Opt.column("idColumn")
+  private val ModelView = Opt.view("modelView")
+  private val Label = Opt.string("label")
+  private val OutputColumn = Opt.string("outputColumn").default("nll")
   // with a modelView apply refuses idColumn as having no effect: that
   // message, not a missing-column one, is the one to report
   override def validate(config: TransformConfig,
                         schema: org.apache.spark.sql.types.StructType): List[String] =
-    super.validate(
-      if (config.options.contains("modelView")) config.copy(options = config.options - "idColumn")
-      else config, schema)
+    checkOptions(config) match {
+      case Nil => missingColumns(schema, "textColumn", TextColumn.get(config).toList) ++
+        (if (ModelView.isSet(config)) Nil
+         else missingColumns(schema, "idColumn", IdColumn.get(config).toList))
+      case errs => errs
+    }
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     import org.apache.spark.sql.functions._
-    required(config, "textColumn")
-    config.options.get("modelView") match {
-      case None =>
-        required(config, "idColumn")
-        // self-mode's model contains every corpus gram by construction —
-        // an unseen fraction is identically 0, so accepting the options
-        // would imply drift tracking that cannot exist (set-but-unused)
-        Seq("unseenColumn", "maxUnseenFrac").filter(config.options.contains)
-          .foreach { o => throw new ConfigException(
-            s"chargram_nll: $o only applies with modelView — the self-mode " +
-              "model is built FROM this corpus, so nothing is ever unseen; " +
-              "drop the option or score against a persisted store") }
-        val n = intOption(config, "n", 3)
-        if (n < 1) throw new ConfigException(s"chargram_nll: n must be >= 1, got $n")
-        TextFunctions.charGramNll(input, config.options("idColumn"),
-          config.options("textColumn"), n)
-      case Some(view) =>
-        // per-row scoring against the stored model: no id plays a role
-        if (config.options.contains("idColumn")) throw new ConfigException(
-          "chargram_nll: idColumn has no effect with modelView — store-mode " +
-            "scoring is a per-row projection; drop the option")
-        val threshold = LmDrift.maxUnseenFrac(config, transformType)
-        val store = Stores.fromView(ctx, view, "modelView",
-          transformType, "chargram_lm")
-        val lm = graft.text.ChargramLm.load(store,
-          wantN = intOption(config, "n"),
-          wantMinCount = longOption(config, "minCount"))
-        val idx = config.options.get("label") match {
-          case Some(l) =>
-            val i = lm.model.labels.indexOf(l)
-            if (i < 0) throw new ConfigException(
-              s"chargram_nll: label '$l' is not in the store (labels: " +
-                s"${lm.model.labels.mkString(", ")})")
-            i
-          case None =>
-            if (lm.model.labels.length != 1) throw new ConfigException(
-              s"chargram_nll: the store carries ${lm.model.labels.length} " +
-                s"labels (${lm.model.labels.mkString(", ")}) — name which " +
-                "one to score under via `label`")
-            0
-        }
-        val out = config.options.getOrElse("outputColumn", "nll")
-        if (input.columns.exists(_.equalsIgnoreCase(out))) throw new ConfigException(
-          s"chargram_nll: output column '$out' already exists on the input — " +
-            "rename via outputColumn instead of silently overwriting")
-        LmDrift.withUnseenColumn(
-          input.withColumn(out, round(graft.functions.expressions.LmNll(
-            col(config.options("textColumn")), lm.model, idx, lm.n), 4)),
-          config, threshold, lm, config.options("textColumn"), transformType)
+    val text = TextColumn(config)
+    if (!ModelView.isSet(config)) {
+      // self-mode's model contains every corpus gram by construction —
+      // an unseen fraction is identically 0, so accepting the options
+      // would imply drift tracking that cannot exist (set-but-unused)
+      Seq(UnseenColumn, MaxUnseenFrac).filter(_.isSet(config))
+        .foreach { o => throw new ConfigException(
+          s"chargram_nll: ${o.key} only applies with modelView — the self-mode " +
+            "model is built FROM this corpus, so nothing is ever unseen; " +
+            "drop the option or score against a persisted store") }
+      TextFunctions.charGramNll(input, IdColumn(config), text, WantN.get(config).getOrElse(3))
+    } else {
+      // per-row scoring against the stored model: no id plays a role
+      if (IdColumn.isSet(config)) throw new ConfigException(
+        "chargram_nll: idColumn has no effect with modelView — store-mode " +
+          "scoring is a per-row projection; drop the option")
+      val lm = graft.text.ChargramLm.load(ModelView.table(config, ctx.spark),
+        wantN = WantN.get(config),
+        wantMinCount = WantMinCount.get(config))
+      val idx = Label.get(config) match {
+        case Some(l) =>
+          val i = lm.model.labels.indexOf(l)
+          if (i < 0) throw new ConfigException(
+            s"chargram_nll: label '$l' is not in the store (labels: " +
+              s"${lm.model.labels.mkString(", ")})")
+          i
+        case None =>
+          if (lm.model.labels.length != 1) throw new ConfigException(
+            s"chargram_nll: the store carries ${lm.model.labels.length} " +
+              s"labels (${lm.model.labels.mkString(", ")}) — name which " +
+              "one to score under via `label`")
+          0
+      }
+      val out = OutputColumn(config)
+      if (input.columns.exists(_.equalsIgnoreCase(out))) throw new ConfigException(
+        s"chargram_nll: output column '$out' already exists on the input — " +
+          "rename via outputColumn instead of silently overwriting")
+      withUnseenColumn(
+        input.withColumn(out, round(graft.functions.expressions.LmNll(
+          col(text), lm.model, idx, lm.n), 4)),
+        config, lm, text)
     }
   }
 }
@@ -258,13 +244,19 @@ object ChargramNllTransform extends Transform {
  */
 object ImportanceScoreTransform extends Transform {
   val transformType = "importance_score"
-  override val columnOptions = Seq("idColumn", "textColumn")
+  private val IdColumn = Opt.column("idColumn").required
+  private val TextColumn = Opt.column("textColumn").required
+  private val N = Opt.int("n", min = 1).default(3)
+  // exactly one of the two targets
+  private val TargetView = Opt.view("targetView")
+  private val TargetModelView = Opt.view("targetModelView")
+  // a column of targetView
+  private val TargetTextColumn = Opt.string("targetTextColumn")
+  private val TargetLabel = Opt.string("targetLabel")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     import org.apache.spark.sql.functions._
-    required(config, "idColumn", "textColumn")
-    val n = intOption(config, "n", 3)
-    if (n < 1) throw new ConfigException(s"importance_score: n must be >= 1, got $n")
-    (config.options.get("targetView"), config.options.get("targetModelView")) match {
+    val n = N(config)
+    (TargetView.get(config), TargetModelView.get(config)) match {
       case (Some(_), Some(_)) => throw new ConfigException(
         "importance_score: targetView and targetModelView are mutually " +
           "exclusive — the target model comes from the corpus OR from a " +
@@ -274,28 +266,26 @@ object ImportanceScoreTransform extends Transform {
           "option(s): targetView (a corpus) or targetModelView (a " +
           "persisted chargram_lm store)")
       case (Some(view), None) =>
-        val target = ctx.spark.table(view)
-        val targetText = config.options.getOrElse("targetTextColumn",
-          config.options("textColumn"))
+        val target = TargetView.table(config, ctx.spark)
+        val targetText = TargetTextColumn.get(config).getOrElse(TextColumn(config))
         if (!target.columns.exists(_.equalsIgnoreCase(targetText)))
           throw new ConfigException(
             s"importance_score: targetTextColumn '$targetText' not found in " +
               s"targetView '$view'")
-        TextFunctions.importanceScore(input, config.options("idColumn"),
-          config.options("textColumn"), target, targetText, n)
-      case (None, Some(view)) =>
+        TextFunctions.importanceScore(input, IdColumn(config),
+          TextColumn(config), target, targetText, n)
+      case (None, Some(_)) =>
         // the persisted-store path: the target corpus was reduced to its
         // (gram, cnt) model ONCE at store-build time — this run pays zero
         // target-side scans. The store's counts ARE the target model
         // (minCount pruning included); the n stamp must match this run's.
-        if (config.options.contains("targetTextColumn")) throw new ConfigException(
+        if (TargetTextColumn.isSet(config)) throw new ConfigException(
           "importance_score: targetTextColumn has no effect with " +
             "targetModelView — the store already holds gram counts; drop " +
             "the option")
-        val store = Stores.fromView(ctx, view, "targetModelView",
-          transformType, "chargram_lm")
+        val store = TargetModelView.table(config, ctx.spark)
         val lm = graft.text.ChargramLm.load(store, wantN = Some(n))
-        val label = config.options.get("targetLabel") match {
+        val label = TargetLabel.get(config) match {
           case Some(l) =>
             if (!lm.model.labels.contains(l)) throw new ConfigException(
               s"importance_score: targetLabel '$l' is not in the store " +
@@ -308,8 +298,7 @@ object ImportanceScoreTransform extends Transform {
                 "one is the target via `targetLabel`")
             lm.model.labels.head
         }
-        TextFunctions.importanceScoreFromCounts(input,
-          config.options("idColumn"), config.options("textColumn"),
+        TextFunctions.importanceScoreFromCounts(input, IdColumn(config), TextColumn(config),
           store.where(col("label") === label)
             .select(col("gram"), col("cnt").as("tgt_cnt")), n)
     }
@@ -332,17 +321,18 @@ object ImportanceScoreTransform extends Transform {
  */
 object UrlNormalizeTransform extends Transform {
   val transformType = "url_normalize"
-  override val columnOptions = Seq("column")
+  private val Column = Opt.column("column").required
+  private val AppendHost = Opt.string("appendHost")
+  private val AppendDomain = Opt.string("appendDomain")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     import org.apache.spark.sql.functions.col
     import graft.functions.UrlFunctions
-    required(config, "column")
-    val c = config.options("column")
+    val c = Column(config)
     val normed = input.withColumn(c, UrlFunctions.normalizeUrl(col(c)))
-    val withHost = config.options.get("appendHost")
+    val withHost = AppendHost.get(config)
       .map(h => normed.withColumn(h, UrlFunctions.urlHost(col(c))))
       .getOrElse(normed)
-    config.options.get("appendDomain")
+    AppendDomain.get(config)
       .map(d => withHost.withColumn(d, UrlFunctions.urlDomain(col(c))))
       .getOrElse(withHost)
   }

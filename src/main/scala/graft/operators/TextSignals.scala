@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.api.{ConfigException, RunContext, Transform}
+import graft.api.{ConfigException, Opt, RunContext}
 import graft.config.TransformConfig
 
 /**
@@ -29,9 +29,13 @@ import graft.config.TransformConfig
  * `chargram_lm` store) makes `lang` the TRAINED per-label prediction
  * instead of the fixed 5-language stopword heuristic.
  */
-object TextSignalsTransform extends Transform {
+object TextSignalsTransform extends BpeStoreReader {
   val transformType = "text_signals"
-  override val columnOptions = Seq("textColumn")
+  private val TextColumn = Opt.column("textColumn").required
+  private val NgramSize = Opt.int("ngramSize").default(2)
+  private val Signals = Opt.parsed("signals")(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+  protected val mergesView = Opt.view("mergesView")
+  private val LangModelView = Opt.view("langModelView")
 
   import graft.functions.TextFunctions._
   /** signal name → (output column, builder). */
@@ -51,14 +55,11 @@ object TextSignalsTransform extends Transform {
     ("dup_line_chars", "dup_line_char_frac", (c: Column) => dupLineCharFraction(c)))
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "textColumn")
-    val text = col(config.options("textColumn"))
-    val n = intOption(config, "ngramSize", 2)
-    val all = builders(n)
-    val picked0 = config.options.get("signals") match {
+    val text = col(TextColumn(config))
+    val all = builders(NgramSize(config))
+    val picked0 = Signals.get(config) match {
       case None => all
-      case Some(spec) =>
-        val names = spec.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+      case Some(names) =>
         val known = all.map(_._1).toSet
         val bad = names.filterNot(known)
         if (bad.nonEmpty) throw new ConfigException(
@@ -73,36 +74,34 @@ object TextSignalsTransform extends Transform {
     // loaded only AFTER the signal pick: set-but-unused would otherwise
     // silently pay a driver-side store read for nothing — that's a config
     // contradiction, so it fails with a guided error instead.
-    val picked1 = config.options.get("mergesView") match {
-      case None => picked0
-      case Some(_) =>
+    val picked1 =
+      if (!mergesView.isSet(config)) picked0
+      else {
         if (!picked0.exists(_._1 == "bpe_tokens")) throw new ConfigException(
           "text_signals: mergesView is set but the bpe_tokens signal is " +
             "not selected — the store would be loaded and never used; add " +
             "bpe_tokens to `signals` or drop mergesView")
-        val loaded = BpeTransforms.loadedFromView(config, ctx, transformType)
+        val loaded = loadedStore(config, ctx)
         val exact = (c: Column) =>
           graft.functions.expressions.BpeEncode.count(c, loaded)
         picked0.map {
           case ("bpe_tokens", out, _) => ("bpe_tokens", out, exact)
           case other => other
         }
-    }
+      }
     // `langModelView` (a registered chargram_lm store) upgrades the lang
     // signal from the fixed 5-language stopword heuristic to the TRAINED
     // per-label model — still one zero-shuffle projection (the codegen'd
     // LangScores expression), same lang_pred column, 'und' for gram-less
     // docs. Same set-but-unused discipline as mergesView.
-    val picked = config.options.get("langModelView") match {
-      case None => picked1
-      case Some(view) =>
+    val picked =
+      if (!LangModelView.isSet(config)) picked1
+      else {
         if (!picked1.exists(_._1 == "lang")) throw new ConfigException(
           "text_signals: langModelView is set but the lang signal is not " +
             "selected — the store would be loaded and never used; add " +
             "lang to `signals` or drop langModelView")
-        val store = Stores.fromView(ctx, view, "langModelView",
-          transformType, "chargram_lm")
-        val lm = graft.text.ChargramLm.load(store)
+        val lm = graft.text.ChargramLm.load(LangModelView.table(config, ctx.spark))
         val trained = (c: Column) => coalesce(
           graft.functions.expressions.LangScores(c, lm.model, lm.n)
             .getField("label"),
@@ -111,7 +110,7 @@ object TextSignalsTransform extends Transform {
           case ("lang", out, _) => ("lang", out, trained)
           case other => other
         }
-    }
+      }
     picked.foldLeft(input) { case (df, (_, out, build)) =>
       df.withColumn(out, build(text))
     }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.api.{ConfigException, RunContext, Transform}
+import graft.api.{ConfigException, Opt, RunContext}
 import graft.config.{Options, TransformConfig}
 
 /**
@@ -110,23 +110,42 @@ object TokenCap {
  * `budgets` per-group overrides (`group:budget,...`); `seed` (0);
  * `numPartitions` (session shuffle partitions).
  */
-object TokenCapTransform extends Transform {
+object TokenCapTransform extends BpeStoreReader {
   val transformType = "token_cap"
-  override val columnOptions = Seq("idColumn", "weightColumn", "textColumn", "groupBy")
+  private val IdColumn = Opt.column("idColumn").required
+  private val Budget = Opt.long("budget").required
+  private val WeightColumn = Opt.column("weightColumn")
+  // mergesView + textColumn derive a tokenizer-exact weight instead
+  protected val mergesView = Opt.view("mergesView")
+  private val TextColumn = Opt.column("textColumn")
+  private val GroupBy = Opt.column("groupBy").default("")
+  private val Budgets = Opt.parsed("budgets") { spec =>
+    spec.split(",").map(_.trim).filter(_.nonEmpty).map { p =>
+      p.split(":") match {
+        case Array(g, b) if b.trim.nonEmpty =>
+          // "-" = unlimited: keep the whole group (books/code in a
+          // web-capped mixture)
+          if (b.trim == "-") (g.trim, Long.MaxValue)
+          else (g.trim, Options.long(transformType, s"budgets[${g.trim}]", b))
+        case _ => throw new ConfigException(
+          s"token_cap: budgets must be group:budget,... got '$p'")
+      }
+    }.toMap
+  }.default(Map.empty[String, Long])
+  private val Seed = Opt.long("seed").default(0L)
+  private val NumPartitions = Opt.int("numPartitions").default(0)
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "idColumn", "budget")
     val (staged, weightCol, derived) =
-      (config.options.get("weightColumn"), config.options.get("mergesView")) match {
+      (WeightColumn.get(config), mergesView.get(config)) match {
         case (Some(w), None) => (input, w, false)
         case (None, Some(_)) =>
-          required(config, "textColumn")
+          val text = TextColumn(config)
           graft.config.ExprUtils.requireNoHelperCollision(
             "token_cap", input.columns.toSeq, "__bpe_w")
-          val loaded = BpeTransforms.loadedFromView(config, ctx, transformType)
+          val loaded = loadedStore(config, ctx)
           (input.withColumn("__bpe_w",
-            graft.functions.expressions.BpeEncode.count(
-              col(config.options("textColumn")), loaded).cast("long")),
+            graft.functions.expressions.BpeEncode.count(col(text), loaded).cast("long")),
             "__bpe_w", true)
         case (Some(_), Some(_)) => throw new ConfigException(
           "token_cap: weightColumn and mergesView are mutually exclusive — " +
@@ -135,29 +154,9 @@ object TokenCapTransform extends Transform {
           "token_cap: needs weightColumn, or mergesView + textColumn for " +
             "tokenizer-exact budgets")
       }
-    val overrides = config.options.get("budgets").map { spec =>
-      spec.split(",").map(_.trim).filter(_.nonEmpty).map { p =>
-        p.split(":") match {
-          case Array(g, b) if b.trim.nonEmpty =>
-            // "-" = unlimited: keep the whole group (books/code in a
-            // web-capped mixture)
-            if (b.trim == "-") (g.trim, Long.MaxValue)
-            else (g.trim, Options.long(transformType, s"budgets[${g.trim}]", b))
-          case _ => throw new ConfigException(
-            s"token_cap: budgets must be group:budget,... got '$p'")
-        }
-      }.toMap
-    }.getOrElse(Map.empty[String, Long])
     val capped =
-      try TokenCap.capByBudget(
-        staged,
-        config.options("idColumn"),
-        weightCol,
-        config.options.getOrElse("groupBy", ""),
-        longOption(config, "budget", missing(config, "budget")),
-        overrides,
-        longOption(config, "seed", 0L),
-        intOption(config, "numPartitions", 0))
+      try TokenCap.capByBudget(staged, IdColumn(config), weightCol, GroupBy(config),
+        Budget(config), Budgets(config), Seed(config), NumPartitions(config))
       catch { case e: IllegalArgumentException => throw new ConfigException(e.getMessage) }
     // the derived BPE weight is cap plumbing, not output schema — run
     // bpe_token_count beforehand to carry the count downstream

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Encoders, functions => F}
 import org.apache.spark.sql.functions._
 
-import graft.api.{ConfigException, RunContext, Transform}
+import graft.api.{ConfigException, Opt, RunContext, Transform}
 import graft.config.{ExprUtils, TransformConfig}
 
 /**
@@ -33,22 +33,17 @@ import graft.config.{ExprUtils, TransformConfig}
  */
 object TopKTransform extends Transform {
   val transformType = "topk"
-  override val columnOptions = Seq("scoreColumn", "idColumn", "groupBy")
+  private val ScoreColumn = Opt.column("scoreColumn").required
+  private val IdColumn = Opt.column("idColumn").required
+  private val GroupBy = Opt.columns("groupBy").default(Nil)
+  private val K = Opt.int("k", min = 1).required
+  private val Direction = Opt.oneOf("direction", "desc", "asc").default("desc")
+  private val Broadcast = Opt.bool("broadcast").default(true)
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "scoreColumn", "k", "idColumn")
-    val k = intOption(config, "k", missing(config, "k"))
-    if (k <= 0) throw new ConfigException(s"topk: k must be positive, got $k")
-    val idName = config.options("idColumn")
-    val groups = config.options.get("groupBy").map(ExprUtils.parseColumns).getOrElse(Nil)
-    val rawScore = col(config.options("scoreColumn")).cast("double")
-    val score = config.options.getOrElse("direction", "desc") match {
-      case "desc" => rawScore
-      case "asc"  => negate(rawScore)
-      case other  => throw new ConfigException(
-        s"topk: direction must be desc|asc, got '$other'")
-    }
-    BoundedTopK.semiJoinTopK(input, groups, score, idName, k,
-      broadcastWinners = boolOption(config, "broadcast", true))
+    val rawScore = col(ScoreColumn(config)).cast("double")
+    val score = if (Direction(config) == "asc") negate(rawScore) else rawScore
+    BoundedTopK.semiJoinTopK(input, GroupBy(config), score, IdColumn(config), K(config),
+      broadcastWinners = Broadcast(config))
   }
 }
 
@@ -77,11 +72,11 @@ private[operators] object BoundedTopK {
       case LongType | IntegerType | ShortType | ByteType =>
         val topk = F.udaf(new graft.ann.TopKAggregator(k),
           Encoders.product[graft.ann.ScoredCandidate])
-        shape(input, groupCols, score, idName, k, topk, _.cast("long"), broadcastWinners)
+        shape(input, groupCols, score, idName, topk, _.cast("long"), broadcastWinners)
       case StringType =>
         val topk = F.udaf(new graft.ann.TopKAggregatorStr(k),
           Encoders.product[graft.ann.ScoredCandidateStr])
-        shape(input, groupCols, score, idName, k, topk, identity, broadcastWinners)
+        shape(input, groupCols, score, idName, topk, identity, broadcastWinners)
       case dt => throw new ConfigException(
         s"grouped selection idColumn '$idName' must be integral or string " +
           s"and unique within its group, got ${dt.typeName} — cast it upstream")
@@ -89,7 +84,7 @@ private[operators] object BoundedTopK {
   }
 
   private def shape(input: DataFrame, groupCols: Seq[String],
-                    score: org.apache.spark.sql.Column, idName: String, k: Int,
+                    score: org.apache.spark.sql.Column, idName: String,
                     topk: org.apache.spark.sql.expressions.UserDefinedFunction,
                     castId: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
                     broadcastWinners: Boolean): DataFrame = {

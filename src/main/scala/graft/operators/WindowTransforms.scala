@@ -3,9 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.expressions.{Window => W}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
-import graft.api.{Transform, RunContext, ConfigException}
+import graft.api.{Transform, RunContext, ConfigException, Opt}
 import graft.config.{ExprUtils, Options, TransformConfig}
 
 /**
@@ -20,30 +19,27 @@ import graft.config.{ExprUtils, Options, TransformConfig}
  */
 object WindowTransform extends Transform {
   val transformType = "windowing"
-  override val columnOptions = Seq("timeColumn", "groupBy")
+  private val TimeColumn = Opt.column("timeColumn").required
+  private val GroupBy = Opt.columns("groupBy").default(Nil)
+  private val Aggregations = Opt.expr("aggregations").required
+  private val WindowType = Opt.oneOf("windowType", "tumbling", "sliding", "session")
+    .default("tumbling")
+  // each duration is required by the window types that read it
+  private val WindowDuration = Opt.string("windowDuration")
+  private val SlideDuration = Opt.string("slideDuration")
+  private val GapDuration = Opt.string("gapDuration")
+  private val Flatten = Opt.bool("flatten").default(true)
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "timeColumn", "aggregations")
-    val ts = col(config.options("timeColumn"))
-    val windowType = config.options.getOrElse("windowType", "tumbling")
+    val ts = col(TimeColumn(config))
+    val windowType = WindowType(config)
     val bucket: Column = windowType match {
-      case "tumbling" =>
-        window(ts, config.options.getOrElse("windowDuration",
-          throw new ConfigException(s"windowing '${config.name}': windowDuration required")))
-      case "sliding" =>
-        val dur = config.options.getOrElse("windowDuration",
-          throw new ConfigException(s"windowing '${config.name}': windowDuration required"))
-        val slide = config.options.getOrElse("slideDuration",
-          throw new ConfigException(s"windowing '${config.name}': sliding windows require slideDuration"))
-        window(ts, dur, slide)
-      case "session" =>
-        session_window(ts, config.options.getOrElse("gapDuration",
-          throw new ConfigException(s"windowing '${config.name}': session windows require gapDuration")))
-      case other =>
-        throw new ConfigException(s"windowing '${config.name}': unknown windowType '$other'")
+      case "tumbling" => window(ts, WindowDuration(config))
+      case "sliding"  => window(ts, WindowDuration(config), SlideDuration(config))
+      case _          => session_window(ts, GapDuration(config))
     }
-    val extraKeys = config.options.get("groupBy").map(ExprUtils.parseColumns).getOrElse(Nil)
-    val aggs = ExprUtils.parseAggregations(config.options("aggregations"))
+    val extraKeys = GroupBy(config)
+    val aggs = ExprUtils.parseAggregations(Aggregations(config))
     // aggregations: "" parses to Nil and aggs.head would be a bare
     // NoSuchElementException — same guard as the aggregation transform
     if (aggs.isEmpty) throw new ConfigException(
@@ -52,7 +48,7 @@ object WindowTransform extends Transform {
     val agged = input
       .groupBy(bucket.as(winCol) +: extraKeys.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
-    if (boolOption(config, "flatten", true)) {
+    if (Flatten(config)) {
       val rest = agged.columns.filter(_ != winCol).map(col)
       agged.select(
         col(s"$winCol.start").as("window_start") +:
@@ -72,33 +68,37 @@ object WindowTransform extends Transform {
  */
 object WindowRankTransform extends Transform {
   val transformType = "window_rank"
-  override val columnOptions = Seq("partitionBy")
+  private val PartitionBy = Opt.columns("partitionBy").default(Nil)
+  private val OrderBy = Opt.expr("orderBy").required
+  private val Global = Opt.bool("global").default(false)
+  private val Function = Opt.oneOf("function", "row_number", "rank", "dense_rank",
+    "percent_rank", "ntile").default("row_number")
+  private val N = Opt.int("n", min = 1).default(4)
+  private val Alias = Opt.string("alias").default("rank")
+  private val TopK = Opt.int("topK")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "orderBy")
-    val partCols = config.options.get("partitionBy").map(ExprUtils.parseColumns).getOrElse(Nil)
+    val partCols = PartitionBy(config)
     // same opt-in foot-gun policy as window_agg and sort: an unpartitioned
     // ordered window is a SinglePartition exchange — the whole input
     // through one task — and must be requested explicitly
-    if (partCols.isEmpty && !boolOption(config, "global", false))
+    if (partCols.isEmpty && !Global(config))
       throw new ConfigException(
         "window_rank: partitionBy is required — an unpartitioned ordered " +
           "window moves the entire input through ONE task; set " +
           "global=\"true\" to opt in for small frames")
-    val orderExprs = ExprUtils.splitTopLevel(config.options("orderBy"))
-      .map(ExprUtils.parseOrder)
+    val orderExprs = ExprUtils.splitTopLevel(OrderBy(config)).map(ExprUtils.parseOrder)
     val w0 = if (partCols.isEmpty) W.partitionBy() else W.partitionBy(partCols.map(col): _*)
     val w = w0.orderBy(orderExprs: _*)
-    val fn = config.options.getOrElse("function", "row_number") match {
-      case "row_number" => row_number()
-      case "rank"       => rank()
-      case "dense_rank" => dense_rank()
+    val fn = Function(config) match {
+      case "row_number"   => row_number()
+      case "rank"         => rank()
+      case "dense_rank"   => dense_rank()
       case "percent_rank" => percent_rank()
-      case "ntile"      => ntile(intOption(config, "n", 4))
-      case other        => throw new ConfigException(s"window_rank: unknown function '$other'")
+      case _              => ntile(N(config))
     }
-    val alias = config.options.getOrElse("alias", "rank")
+    val alias = Alias(config)
     val ranked = input.withColumn(alias, fn.over(w))
-    intOption(config, "topK").fold(ranked)(k => ranked.filter(col(alias) <= k))
+    TopK.get(config).fold(ranked)(k => ranked.filter(col(alias) <= k))
   }
 }
 
@@ -126,36 +126,34 @@ object WindowRankTransform extends Transform {
  */
 object WindowAggTransform extends Transform {
   val transformType = "window_agg"
-  override val columnOptions = Seq("partitionBy")
+  private val PartitionBy = Opt.columns("partitionBy").default(Nil)
+  private val OrderBy = Opt.expr("orderBy").required
+  private val Aggregations = Opt.expr("aggregations").required
+  private val Global = Opt.bool("global").default(false)
+  private val FrameType = Opt.oneOf("frameType", "rows", "range")
+  private def bound(key: String, unbounded: Long) = Opt.parsed(key) {
+    case "unbounded" => unbounded
+    case "current"   => W.currentRow
+    case n           => Options.long(transformType, key, n)
+  }
+  private val FrameStart = bound("frameStart", W.unboundedPreceding)
+    .default(W.unboundedPreceding)
+  private val FrameEnd = bound("frameEnd", W.unboundedFollowing).default(W.currentRow)
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "orderBy", "aggregations")
-    val partCols = config.options.get("partitionBy").map(ExprUtils.parseColumns).getOrElse(Nil)
-    if (partCols.isEmpty && !boolOption(config, "global", false))
+    val partCols = PartitionBy(config)
+    if (partCols.isEmpty && !Global(config))
       throw new ConfigException(
         "window_agg without partitionBy funnels ALL data through one task; " +
           "set global=\"true\" to accept that, or partition")
     val w0 = if (partCols.isEmpty) W.partitionBy() else W.partitionBy(partCols.map(col): _*)
-    val w1 = w0.orderBy(ExprUtils.splitTopLevel(config.options("orderBy"))
-      .map(ExprUtils.parseOrder): _*)
-    def bound(key: String, dflt: Long): Long = config.options.get(key).map {
-      case "unbounded" if key == "frameStart" => W.unboundedPreceding
-      case "unbounded"                        => W.unboundedFollowing
-      case "current"                          => W.currentRow
-      case n                                  => Options.long(transformType, key, n)
-    }.getOrElse(dflt)
-    val framed = (config.options.get("frameType"),
-                  config.options.contains("frameStart") || config.options.contains("frameEnd")) match {
-      case (None, false) => w1 // Spark default frame; lag/lead legal here
-      case (t, _) =>
-        val (s, e) = (bound("frameStart", W.unboundedPreceding), bound("frameEnd", W.currentRow))
-        t.getOrElse("rows") match {
-          case "rows"  => w1.rowsBetween(s, e)
-          case "range" => w1.rangeBetween(s, e)
-          case other => throw new ConfigException(
-            s"window_agg: frameType must be rows|range, got '$other'")
-        }
-    }
-    val pairs = ExprUtils.parseExprList(config.options("aggregations"))
+    val w1 = w0.orderBy(ExprUtils.splitTopLevel(OrderBy(config)).map(ExprUtils.parseOrder): _*)
+    val framed =
+      if (!Seq(FrameType, FrameStart, FrameEnd).exists(_.isSet(config)))
+        w1 // Spark default frame; lag/lead legal here
+      else if (FrameType.get(config).contains("range"))
+        w1.rangeBetween(FrameStart(config), FrameEnd(config))
+      else w1.rowsBetween(FrameStart(config), FrameEnd(config))
+    val pairs = ExprUtils.parseExprList(Aggregations(config))
     val dups = pairs.map(_._1).diff(pairs.map(_._1).distinct).distinct
     if (dups.nonEmpty) throw new ConfigException(
       s"window_agg: duplicate aliases: ${dups.mkString(", ")}")

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.api.{ConfigException, RunContext, Transform}
+import graft.api.{ConfigException, Opt, RunContext, Transform}
 import graft.config.{ExprUtils, Options, TransformConfig}
 
 /**
@@ -34,15 +34,20 @@ import graft.config.{ExprUtils, Options, TransformConfig}
  */
 object ZOrderTransform extends Transform {
   val transformType = "zorder"
-  override val columnOptions = Seq("columns")
+  private val Columns = Opt.columns("columns").required
+  private def bounds(key: String) = Opt.parsed(key)(
+    ExprUtils.parseColumns(_).map(Options.double(transformType, key, _))).required
+  private val Lo = bounds("lo")
+  private val Hi = bounds("hi")
+  private val Bits = Opt.int("bits").default(16)
+  private val ZColumn = Opt.string("zColumn").default("zvalue")
+  private val Cluster = Opt.bool("cluster").default(false)
+  private val NumFiles = Opt.int("numFiles", min = 1)
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "columns", "lo", "hi")
-    val cols = ExprUtils.parseColumns(config.options("columns"))
-    def bounds(key: String) =
-      ExprUtils.parseColumns(config.options(key)).map(Options.double(transformType, key, _))
-    val (los, his) = (bounds("lo"), bounds("hi"))
-    val bits = intOption(config, "bits", 16)
+    val cols = Columns(config)
+    val (los, his) = (Lo(config), Hi(config))
+    val bits = Bits(config)
     val dims = cols.length
     if (dims < 2 || dims > 4)
       throw new ConfigException(s"zorder: need 2-4 columns, got $dims")
@@ -81,9 +86,9 @@ object ZOrderTransform extends Transform {
         a.bitwiseOR(shiftleft(shiftright(bin, b).bitwiseAND(lit(1L)), b * dims + d))
       }
     }
-    val out = input.withColumn(config.options.getOrElse("zColumn", "zvalue"), z)
-    if (boolOption(config, "cluster", false)) {
-      val zc = col(config.options.getOrElse("zColumn", "zvalue"))
+    val out = input.withColumn(ZColumn(config), z)
+    if (Cluster(config)) {
+      val zc = col(ZColumn(config))
       // Spark's default ordering is NULLS FIRST; force nulls last so rows
       // with a null dimension land in the tail files as documented above.
       // numFiles pins the range-partition count (an explicit count is
@@ -91,9 +96,8 @@ object ZOrderTransform extends Transform {
       // outputs into one file and erase the tile layout the skipping
       // depends on); default leaves AQE free to size partitions.
       val ordered = zc.asc_nulls_last
-      intOption(config, "numFiles") match {
+      NumFiles.get(config) match {
         case Some(n) =>
-          if (n < 1) throw new ConfigException(s"zorder: numFiles must be >= 1, got $n")
           out.repartitionByRange(n, ordered).sortWithinPartitions(ordered)
         case None => out.repartitionByRange(ordered).sortWithinPartitions(ordered)
       }

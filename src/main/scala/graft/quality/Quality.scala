@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.api.RunContext
-import graft.config.{QualityConfig, NullCheck, NullAction}
+import graft.config.NullCheck
 
 /** Recursive StructType diff: missing/extra columns, type mismatches
   * (descending into struct/array/map), nullability violations.
@@ -64,7 +64,6 @@ final case class QualityReport(
     duplicateRows: Long) {
   def nullRate(column: String): Double =
     if (totalRows == 0) 0.0 else nullViolations.getOrElse(column, 0L).toDouble / totalRows
-  def duplicateRate: Double = if (totalRows == 0) 0.0 else duplicateRows.toDouble / totalRows
 }
 
 /**

@@ -199,6 +199,7 @@ final class PipelineExecutor(
     val source = sources.get(config.source.sourceType)
     val sErrs = source.validate(config.source)
     if (sErrs.nonEmpty) throw new ConfigException(sErrs.mkString("; "))
+    PipelineExecutor.checkSteps(config.transformations, transforms, spark)
 
     // schemaValidation (real, unlike the reference's always-valid stub at
     // SchemaValidator.scala:106-113): read with the SOURCE's own schema
@@ -332,13 +333,35 @@ object PipelineExecutor {
     * fold the batch and streaming executors and the query registry use. */
   private[graft] def applyAll(in: DataFrame, steps: Seq[TransformConfig],
                               transforms: Registry[Transform],
-                              ctx: RunContext): DataFrame =
+                              ctx: RunContext): DataFrame = {
+    checkSteps(steps, transforms, ctx.spark)
     steps.foldLeft(in) { (d, tc) =>
       val t = transforms.get(tc.transformType)
       val errs = t.validate(tc, d.schema)
       if (errs.nonEmpty) throw new ConfigException(errs.mkString("; "))
       t.apply(d, tc, ctx)
     }
+  }
+
+  /** Check every step's declared options before anything is read: the
+    * type is registered, [[Transform.checkOptions]] passes, and each view
+    * a step reads is in the catalog or defined by an earlier step. All
+    * errors of all steps fail together, as one ConfigException. */
+  private[graft] def checkSteps(steps: Seq[TransformConfig], transforms: Registry[Transform],
+                                spark: SparkSession): Unit = {
+    val defined = scala.collection.mutable.Set.empty[String]
+    val errs = steps.flatMap { tc =>
+      val t = transforms.get(tc.transformType)
+      def named(kind: Opt.Kind) = t.options.filter(_.kind == kind)
+        .flatMap(o => o.setting(tc).map { case (_, v) => o.key -> v.trim })
+      val absent = named(Opt.View).collect { case (k, v)
+        if !defined(v.toLowerCase(java.util.Locale.ROOT)) && !Opt.exists(spark, v) =>
+          Opt.notRegistered(t.transformType, k, v) }
+      defined ++= named(Opt.ViewDef).map(_._2.toLowerCase(java.util.Locale.ROOT))
+      t.checkOptions(tc) ++ absent
+    }
+    if (errs.nonEmpty) throw new ConfigException(errs.mkString("; "))
+  }
 
   /** Run `body` with the session confs a config's `performance` block
     * sets (shuffle partitions, checkpoint mode and dir, plan lint), then

@@ -3,7 +3,7 @@ package graft.sinks
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode}
 import org.apache.spark.sql.functions._
 
-import graft.api.{Sink, RunContext, LoadResult, ConfigException, LoadException}
+import graft.api.{Sink, RunContext, LoadResult, ConfigException}
 import graft.config.{ExprUtils, Options, SinkConfig, WriteMode}
 
 /** Count rows through a batch write via an Observation riding the write

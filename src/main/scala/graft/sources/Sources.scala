@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
-import graft.api.{Source, ConfigException, ExtractException}
+import graft.api.{Source, ConfigException}
 import graft.config.{Options, SourceConfig}
 
 /**

@@ -1,9 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
-import graft.api.{ConfigException, RunContext, Transform}
+import graft.api.{ConfigException, Opt, RunContext, Transform}
 import graft.config.TransformConfig
 
 /**
@@ -34,7 +33,9 @@ import graft.config.TransformConfig
  */
 object SessionizeTransform extends Transform {
   val transformType = "sessionize"
-  override val columnOptions = Seq("keyColumn", "tsColumn", "valueColumn")
+  private val KeyColumn = Opt.column("keyColumn").required
+  private val TsColumn = Opt.column("tsColumn").required
+  private val ValueColumn = Opt.column("valueColumn")
 
   private val durationRe =
     "^(\\d+)\\s*(ms|milliseconds?|s|sec|seconds?|m|min|minutes?|h|hours?)$".r
@@ -48,12 +49,12 @@ object SessionizeTransform extends Transform {
     case other => throw new ConfigException(
       s"sessionize: gap must be '<n> <ms|seconds|minutes|hours>', got '$other'")
   }
+  private val Gap = Opt.parsed("gap")(durationMs).map { ms =>
+    if (ms <= 0) throw new ConfigException("sessionize: gap must be positive") else ms }.required
 
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
-    required(config, "keyColumn", "tsColumn", "gap")
-    val keyName = config.options("keyColumn")
-    val gapMs = durationMs(config.options("gap"))
-    if (gapMs <= 0) throw new ConfigException("sessionize: gap must be positive")
+    val keyName = KeyColumn(config, input.schema)
+    val gapMs = Gap(config)
     import input.sparkSession.implicits._
     import org.apache.spark.sql.functions._
     val keyType = input.schema(keyName).dataType
@@ -72,7 +73,7 @@ object SessionizeTransform extends Transform {
             "(cast it to a lossless string encoding, e.g. base64, first)")
       case _ => ()
     }
-    val tsName = config.options("tsColumn")
+    val tsName = TsColumn(config, input.schema)
     // do NOT re-cast an already-timestamp column: the cast mints a new
     // attribute WITHOUT the watermark metadata the executor attached, and
     // EventTimeTimeout then rejects the query as unwatermarked
@@ -89,7 +90,7 @@ object SessionizeTransform extends Transform {
     val events = input.select(
       col(keyName).cast("string").as("user_id"),
       tsCol.as("ts"),
-      coalesce(config.options.get("valueColumn").map(col(_).cast("double"))
+      coalesce(ValueColumn.get(config).map(col(_).cast("double"))
         .getOrElse(lit(0.0)), lit(0.0)).as("value"))
     val sessions =
       if (input.isStreaming)

@@ -66,15 +66,13 @@ final class StreamingExecutor(
     // executor: without it a misconfigured sink/transform only surfaced
     // inside the first foreachBatch epoch as a StreamingQueryException,
     // after the checkpoint dir was already created
-    sources.get(config.source.sourceType) match {
-      case src =>
-        val sErrs = src.validate(config.source)
-        if (sErrs.nonEmpty) throw new ConfigException(sErrs.mkString("; "))
-    }
+    val sErrs = sources.get(config.source.sourceType).validate(config.source)
+    if (sErrs.nonEmpty) throw new ConfigException(sErrs.mkString("; "))
     if (!Set("file", "memory").contains(config.sink.sinkType)) {
       val errs = sinks.get(config.sink.sinkType).validate(config.sink)
       if (errs.nonEmpty) throw new ConfigException(errs.mkString("; "))
     }
+    graft.runtime.PipelineExecutor.checkSteps(config.transformations, transforms, spark)
 
     val in = readStream(config.source, st)
     val transformed =

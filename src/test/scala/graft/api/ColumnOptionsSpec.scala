@@ -7,24 +7,28 @@ import graft.SparkTestBase
 import graft.config.{PipelineConfig, SinkConfig, SourceConfig, TransformConfig}
 import graft.runtime.{PipelineExecutor, Registries}
 
-/** The declared column-option surface: every registered transform either
-  * declares the options that name its input columns or is listed as having
-  * none, and the default `Transform.validate` refuses a missing column with
-  * one guided error before any Spark job starts. */
+/** The column half of the declared option surface: every registered
+  * transform either declares the options that name its input columns
+  * (`Opt.column`/`Opt.columns`) or is listed as having none, and the
+  * default `Transform.validate` refuses a missing column with one guided
+  * error before any Spark job starts. */
 class ColumnOptionsSpec extends SparkTestBase {
   import spark.implicits._
 
   private val transforms = Registries.transforms()
 
   /** The transform types that read no option naming an input column. A new
-    * transform has to land here or declare its `columnOptions`. */
-  private val noColumnOptions = Set("bpe_vocab", "filter", "limit", "map",
+    * transform has to land here or declare its column options. */
+  private val noColumnOptions = Set("bpe_vocab", "filter", "limit",
     "materialize", "register", "setop", "sort", "union")
+
+  private def columnOptions(t: Transform): Seq[String] =
+    t.options.filter(_.kind == Opt.Column).flatMap(_.keys)
 
   private val schema = StructType(Seq(StructField("present", StringType)))
 
   test("every registered transform declares its column options or is listed as having none") {
-    transforms.list.filter(transforms.get(_).columnOptions.isEmpty).toSet shouldBe
+    transforms.list.filter(t => columnOptions(transforms.get(t)).isEmpty).toSet shouldBe
       noColumnOptions
   }
 
@@ -33,12 +37,12 @@ class ColumnOptionsSpec extends SparkTestBase {
     val misses = for {
       typ <- transforms.list
       t = transforms.get(typ)
-      opt <- t.columnOptions
+      opt <- columnOptions(t)
       step = (v: String) => TransformConfig("step", typ, Map(opt -> v))
       miss <- Seq(
-        (t.validate(step("ghost"), schema), List(s"$typ: $opt 'ghost' not found in input schema")),
+        (t.checkColumns(step("ghost"), schema), List(s"$typ: $opt 'ghost' not found in input schema")),
         // matched case-insensitively, like Spark's own column resolution
-        (t.validate(step("PRESENT"), schema), Nil))
+        (t.checkColumns(step("PRESENT"), schema), Nil))
         .collect { case (got, want) if got != want => s"$typ.$opt: got $got, want $want" }
     } yield miss
     withClue(misses.mkString("\n", "\n", "\n")) { misses shouldBe empty }
@@ -86,6 +90,8 @@ class ColumnOptionsSpec extends SparkTestBase {
     ("scd2", "compareColumns", Map("keyColumns" -> "k", "timeColumn" -> "ts")))
 
   test("compose refuses a typo'd column of a newly covered transform, guided and before any job") {
+    // the join's right side: the declared view check runs before the column check
+    Seq((1L, "a")).toDF("id", "k").createOrReplaceTempView("column_options_right")
     val source = SourceConfig("file", Map("path" -> inputPath, "format" -> "parquet",
       "schema" -> "id BIGINT, k STRING, v DOUBLE, ts TIMESTAMP, text STRING, bytes BINARY"))
     val sink = SinkConfig("file", Map("path" -> tmpDir("column-options-out")))

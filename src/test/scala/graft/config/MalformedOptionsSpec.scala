@@ -131,6 +131,13 @@ class MalformedOptionsSpec extends SparkTestBase {
     ("sessionize gap overflow", "sessionize", "gap",
       step("sessionize", "keyColumn" -> "lang", "tsColumn" -> "ts",
         "gap" -> "99999999999999999999 ms")),
+    ("aggregation unknown key", "aggregation transform 'aggregation-step'", "groupingSet",
+      step("aggregation", "groupBy" -> "lang", "aggregations" -> "n:count(*)",
+        "groupingSet" -> "rollup")),
+    ("window_rank one-of", "window_rank", "function",
+      step("window_rank", "orderBy" -> "score", "partitionBy" -> "lang", "function" -> "rnk")),
+    ("join unregistered view", "join", "rightDataset",
+      step("join", "rightDataset" -> "malformed_nowhere", "joinKeys" -> "id")),
     ("postgres source numPartitions", "postgres source", "numPartitions",
       () => new PipelineExecutor().compose(pipeline(source = SourceConfig("postgres", Map(
         "url" -> "jdbc:postgresql://localhost/db", "dbtable" -> "t", "numPartitions" -> "four"))))),

@@ -118,7 +118,6 @@ class LineDedupSpec extends SparkTestBase {
 
   test("signature-store mode equals against-reference mode and never reads " +
     "reference text; the loud-store contract fires on every malformed shape") {
-    import org.apache.spark.sql.functions.col
     val ref = Seq((1L, "boiler plate\nlegal footer"), (2L, "nav bar")).toDF("rid", "text")
     val storeDir = tmpDir("line-store")
     LineSignaturesTransform(ref, TransformConfig("t", "line_signatures",

@@ -291,7 +291,6 @@ class ExamplesSpec extends SparkTestBase {
   test("quickstart-25: language model trained in run N classifies an " +
     "unlabeled corpus in run N+1") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     // stage the LABELED training corpus: the synthetic testdata's `lang`
     // column is decorative (every row is the same English word salad), so
     // the example trains on genuinely multilingual staged text
@@ -456,7 +455,6 @@ class ExamplesSpec extends SparkTestBase {
 
   test("quickstart-27: the composed selection recipe — trained language " +
     "gate, DSIR against a persisted target, quantile gate, weighted draw") {
-    import org.apache.spark.sql.functions._
     // the target model: curated English sentences (what good data looks
     // like) — the store carries gram counts, never this text
     Seq(

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.functions.col
 
 import graft.SparkTestBase
 import graft.api.{ConfigException, RunContext}

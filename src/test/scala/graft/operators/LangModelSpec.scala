@@ -58,10 +58,10 @@ class LangModelSpec extends SparkTestBase {
     out.where(col("lang_pred") === "und")
       .where(col("lang_score").isNotNull).count() shouldBe 0L
     // idColumn is not an option — per-row scoring has no id to join on
-    (the[ConfigException] thrownBy LangClassifyTransform(docs,
-      t("lang_classify", "idColumn" -> "doc_id", "textColumn" -> "text",
-        "modelView" -> "lm_basic"), ctx))
-      .getMessage should include ("idColumn is not an option")
+    (the[ConfigException] thrownBy graft.runtime.PipelineExecutor.applyAll(docs,
+      Seq(t("lang_classify", "idColumn" -> "doc_id", "textColumn" -> "text",
+        "modelView" -> "lm_basic")), graft.runtime.Registries.transforms(), ctx))
+      .getMessage should include ("unknown option 'idColumn'")
   }
 
   test("store: stamped layout, parquet round-trip classifies identically") {
@@ -172,10 +172,11 @@ class LangModelSpec extends SparkTestBase {
         "modelView" -> "lm_cells"), ctx)
       .select("lang_pred").as[String].head() shouldBe "en"
     // the dense-era knob no longer guards anything — refused, not ignored
-    (the[ConfigException] thrownBy LangClassifyTransform(docs,
-      t("lang_classify", "textColumn" -> "text",
-        "modelView" -> "lm_cells", "maxModelCells" -> "10"), ctx))
-      .getMessage should include ("sparse")
+    (the[ConfigException] thrownBy graft.runtime.PipelineExecutor.applyAll(docs,
+      Seq(t("lang_classify", "textColumn" -> "text",
+        "modelView" -> "lm_cells", "maxModelCells" -> "10")),
+      graft.runtime.Registries.transforms(), ctx))
+      .getMessage should include ("unknown option 'maxModelCells' (did you mean 'maxModelRows'?)")
     // QUANTITATIVE sparsity: a fully label-disjoint store (every label
     // its own vocabulary) holds exactly rows pairs in memory, while the
     // dense layout allocated rows × labels cells — 60× here, the blow-up

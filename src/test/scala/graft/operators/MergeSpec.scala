@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.SparkException
 
 import graft.SparkTestBase
 import graft.api.{ConfigException, RunContext}

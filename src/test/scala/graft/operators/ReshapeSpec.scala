@@ -77,16 +77,17 @@ class ReshapeSpec extends SparkTestBase {
 
   test("schema-aware validate flags unknown columns before any job runs") {
     PivotTransform.validate(tc("pivot", "groupBy" -> "nope,k",
-      "pivotColumn" -> "p"), sales.schema) shouldBe
+      "pivotColumn" -> "p", "values" -> "x", "aggregations" -> "s:sum(v)"), sales.schema) shouldBe
       List("pivot: groupBy 'nope' not found in input schema")
     UnpivotTransform.validate(tc("unpivot", "ids" -> "k",
       "cols" -> "v,ghost"), sales.schema).head should include ("ghost")
     ChunkTransform.validate(tc("chunk", "idColumn" -> "k",
-      "textColumn" -> "missing"), sales.schema).head should include ("missing")
+      "textColumn" -> "missing", "size" -> "8"), sales.schema).head should include ("missing")
     TopKTransform.validate(tc("topk", "scoreColumn" -> "v",
-      "idColumn" -> "absent"), sales.schema).head should include ("absent")
+      "idColumn" -> "absent", "k" -> "1"), sales.schema).head should include ("absent")
     ScaleTransform.validate(tc("scale", "columns" -> "v"), sales.schema) shouldBe Nil
-    ResampleTransform.validate(tc("resample", "timeColumn" -> "gone"),
+    ResampleTransform.validate(tc("resample", "timeColumn" -> "gone",
+      "interval" -> "1 hour", "aggregations" -> "n:count(*)"),
       sales.schema).head should include ("gone")
     TextSignalsTransform.validate(tc("text_signals", "textColumn" -> "p"),
       sales.schema) shouldBe Nil

@@ -105,7 +105,7 @@ class ShardsAndSampleSpec extends SparkTestBase {
     an[IllegalArgumentException] should be thrownBy
       SampleTransform(d, t("sample", "on" -> "doc_id", "keep" -> "11",
         "buckets" -> "10"), ctx)
-    an[IllegalArgumentException] should be thrownBy
+    an[graft.api.ConfigException] should be thrownBy
       SampleTransform(d, t("sample", "on" -> "doc_id", "keep" -> "1",
         "method" -> "nope"), ctx)
   }
@@ -482,7 +482,7 @@ class ShardsAndSampleSpec extends SparkTestBase {
       t("shuffle", "idColumn" -> "doc_id", "hash" -> "xxhash64",
         "numPartitions" -> "5"), ctx)
       .select("shuffle_pos").as[Long].collect().sorted shouldBe (0L until 500L).toArray
-    an[IllegalArgumentException] should be thrownBy ShuffleTransform(
+    an[graft.api.ConfigException] should be thrownBy ShuffleTransform(
       d, t("shuffle", "idColumn" -> "doc_id", "hash" -> "sha1"), ctx)
   }
 

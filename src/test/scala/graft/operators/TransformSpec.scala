@@ -80,8 +80,8 @@ class TransformSpec extends SparkTestBase {
     (the[ConfigException] thrownBy MaterializeTransform(base,
       tc("materialize", "eager" -> "maybe"), ctx))
       .getMessage should include ("eager")
-    (the[ConfigException] thrownBy MaterializeTransform(base,
-      tc("materialize", "mode" -> "local"), ctx))
+    (the[ConfigException] thrownBy graft.runtime.PipelineExecutor.applyAll(base,
+      Seq(tc("materialize", "mode" -> "local")), graft.runtime.Registries.transforms(), ctx))
       .getMessage should include ("unknown option")
     // streaming frames refuse with a pipeline-level message, not Spark's
     // deep AnalysisException at query start

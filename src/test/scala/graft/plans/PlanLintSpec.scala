@@ -49,7 +49,6 @@ class PlanLintSpec extends SparkTestBase {
   }
 
   test("ScalaUDF in the plan warns; shuffles are counted as info") {
-    val d = (1 to 10).map(i => (i, i % 3)).toDF("x", "g")
     val u = udf((i: Long) => i + 1)
     // a LOCAL relation would constant-fold the projection away
     // (ConvertToLocalRelation), so plant the UDF over a Range scan

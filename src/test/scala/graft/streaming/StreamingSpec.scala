@@ -723,6 +723,15 @@ class StreamingSpec extends SparkTestBase {
         startWith (s"file sink: '$o' is not supported by the streaming file sink")
   }
 
+  test("streaming start refuses a bad step before its checkpoint dir exists") {
+    val (cfg, ckpt) = refusable("refuse-step")
+    refusedBeforeStart(cfg.copy(transformations = List(
+      TransformConfig("rank", "window_rank", Map("partitionBy" -> "metric", "orderBy" -> "ts",
+        "function" -> "rnk")))), ckpt) shouldBe
+      "window_rank: function must be one of row_number|rank|dense_rank|percent_rank|ntile, " +
+        "got 'rnk'"
+  }
+
   test("streaming file sink passes user options through (compression)") {
     val outDir = tmpDir("zstd-out")
     val cfg = PipelineConfig(
