@@ -15,7 +15,8 @@ import graft.api.ConfigException
  *
  * A refused value throws `ConfigException("<component>: <key> must be an
  * integer|a number|true|false, got '<value>'")`. Range checks stay with
- * the option's owner: only the owner knows that `k` must be positive.
+ * the option's owner: a transform declares its ranges with the option
+ * ([[graft.api.Opt]]).
  */
 object Options {
   def int(component: String, key: String, value: String): Int =
