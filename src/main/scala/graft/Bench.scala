@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.FileSource
+
 /** Benchmark main: one untimed warmup pass (JIT + codegen + parquet footer
   * caches), then `SPARK_GRAFT_BENCH_RUNS` (default 2) timed passes over every
   * SparkEntry query, reporting the per-query MINIMUM.
@@ -493,7 +495,7 @@ object Bench {
     // SPARK_GRAFT_CPUS (the registry bench's knob) does not apply here
     val spark = session(math.max(2, Runtime.getRuntime.availableProcessors()).toString)
     spark.sparkContext.setLogLevel("WARN")
-    val base = spark.read.parquet(s"${e.sfDir}/$table.parquet")
+    val base = FileSource.parquet(spark, s"${e.sfDir}/$table.parquet")
     val root = Scratch.dir(s"$tag-corpus")
     def dir(n: Int) = s"$root/$tag$n"
     sizes.foreach { n =>

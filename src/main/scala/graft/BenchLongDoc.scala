@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.FileSource
+
 /**
  * Long-DOCUMENT scaling bench: the cross-SF ratio gate (`BENCH_RATIO_*`)
  * scales ROWS — lineitem-derived documents stay short, so an operator
@@ -65,31 +67,31 @@ object BenchLongDoc {
     * inside); the BPE store view is registered by main before timing. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "ld_text_signals" -> ((s, dir) =>
-      ap(s.read.parquet(s"$dir/docs.parquet"), "text_signals",
+      ap(FileSource.parquet(s, s"$dir/docs.parquet"), "text_signals",
         "textColumn" -> "text")),
     "ld_quality_rules" -> ((s, dir) =>
-      ap(s.read.parquet(s"$dir/docs.parquet"), "quality_rules",
+      ap(FileSource.parquet(s, s"$dir/docs.parquet"), "quality_rules",
         "textColumn" -> "text", "maxTopNgramFraction" -> "0.9",
         "maxDupLineFraction" -> "0.95", "maxDupLineCharFraction" -> "0.95")),
     "ld_dedup_lines" -> ((s, dir) =>
-      ap(s.read.parquet(s"$dir/docs.parquet"), "dedup_lines",
+      ap(FileSource.parquet(s, s"$dir/docs.parquet"), "dedup_lines",
         "idColumn" -> "doc_id", "textColumn" -> "text")),
     "ld_span_dups" -> ((s, dir) =>
-      ap(s.read.parquet(s"$dir/docs.parquet"), "dedup_spans",
+      ap(FileSource.parquet(s, s"$dir/docs.parquet"), "dedup_spans",
         "idColumn" -> "doc_id", "textColumn" -> "text", "mode" -> "report")),
     "ld_minhash" -> ((s, dir) =>
-      ap(s.read.parquet(s"$dir/docs.parquet"), "dedup_minhash",
+      ap(FileSource.parquet(s, s"$dir/docs.parquet"), "dedup_minhash",
         "idColumn" -> "doc_id", "textColumn" -> "text", "threshold" -> "1.0")),
     "ld_bpe_encode" -> ((s, dir) =>
-      ap(s.read.parquet(s"$dir/docs.parquet"), "bpe_token_count",
+      ap(FileSource.parquet(s, s"$dir/docs.parquet"), "bpe_token_count",
         "textColumn" -> "text", "mergesView" -> "ld_bpe_store")),
     "ld_token_cap" -> ((s, dir) =>
-      ap(s.read.parquet(s"$dir/docs.parquet"), "token_cap",
+      ap(FileSource.parquet(s, s"$dir/docs.parquet"), "token_cap",
         "idColumn" -> "doc_id", "textColumn" -> "text",
         "mergesView" -> "ld_bpe_store", "groupBy" -> "source",
         "budget" -> "100000")),
     "ld_pack_sequences" -> ((s, dir) =>
-      ap(s.read.parquet(s"$dir/docs.parquet"), "pack_sequences",
+      ap(FileSource.parquet(s, s"$dir/docs.parquet"), "pack_sequences",
         "idColumn" -> "doc_id", "weightColumn" -> "n_chars",
         "seqLen" -> "4096")))
 
@@ -100,7 +102,7 @@ object BenchLongDoc {
       derive = derive, queries = queries,
       // one shared tokenizer store, trained on the SMALL corpus (untimed)
       prepare = (spark, dir) => graft.text.Bpe.mergesFrame(
-          spark.read.parquet(s"$dir/docs.parquet"), "text",
+          FileSource.parquet(spark, s"$dir/docs.parquet"), "text",
           numMerges = 200, maxWords = 50000, minCount = 2L)
         .createOrReplaceTempView("ld_bpe_store"))
 }

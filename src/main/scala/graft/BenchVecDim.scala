@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.FileSource
+
 /**
  * Embedding-DIMENSION scaling bench: the cross-SF gate scales ROWS and
  * the long-doc gate scales tokens per document, but the vector family's
@@ -48,7 +50,7 @@ object BenchVecDim {
         graft.api.RunContext(df.sparkSession, "vecdim", "bench"))
 
   private def emb(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/emb.parquet")
+    FileSource.parquet(s, s"$dir/emb.parquet")
 
   private def qs(s: SparkSession, dir: String): DataFrame =
     emb(s, dir).where("vec_id < 4")

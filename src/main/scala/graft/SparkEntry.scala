@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import graft.api.RunContext
 import graft.config.TransformConfig
 import graft.runtime.Registries
+import graft.sources.FileSource
 
 /**
  * Driver contract: one `queries` entry per implemented operator from
@@ -173,7 +174,7 @@ object SparkEntry {
   private def stagedPqCodesStore(s: SparkSession, dir: String): String =
     Scratch.staged(s"q174codes#$dir") { tmp =>
       val cbs = graft.ann.Ann.loadPqCodebooks(
-        s.read.parquet(stagedPqCodebookStore(s, dir)))
+        FileSource.parquet(s, stagedPqCodebookStore(s, dir)))
       graft.ann.Ann.pqCodesFrame(twinCorpus(tab(s, dir, "embeddings")),
           "vec_id", "embedding", cbs)
         .write.mode("overwrite").parquet(tmp)
@@ -184,7 +185,7 @@ object SparkEntry {
   private def stagedIvfPqCodesStore(s: SparkSession, dir: String): String =
     Scratch.staged(s"q175codes#$dir") { tmp =>
       val (cents, cbs) = graft.ann.Ann.loadIvfPqStore(
-        s.read.parquet(stagedIvfPqStore(s, dir)))
+        FileSource.parquet(s, stagedIvfPqStore(s, dir)))
       graft.ann.Ann.ivfPqCodesFrame(twinCorpus(tab(s, dir, "embeddings")),
           "vec_id", "embedding", cents, cbs)
         .write.mode("overwrite").parquet(tmp)
@@ -371,7 +372,7 @@ object SparkEntry {
     * end to end at sf0.001/sf0.01 where this staging is equally active. */
   private def tab(s: SparkSession, dir: String, name: String): DataFrame =
     if (stagedParts(name) <= 1) rawTab(s, dir, name)
-    else s.read.parquet(stagedPath(s, dir, name))
+    else FileSource.parquet(s, stagedPath(s, dir, name))
 
   /** The staged dir itself — for the YAML pipelines (q154/q158/q22/q135)
     * whose file source reads the corpus path directly rather than through
@@ -406,7 +407,7 @@ object SparkEntry {
   private[graft] def rawTab(s: SparkSession, dir: String, name: String): DataFrame = {
     // Harmless when ts is not NANOS; required for the legacy-nanos files.
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = s.read.parquet(s"$dir/$name.parquet")
+    val df = FileSource.parquet(s, s"$dir/$name.parquet")
     if (name != "events") df
     else {
       import org.apache.spark.sql.functions._
@@ -1132,7 +1133,7 @@ object SparkEntry {
     "q117_minhash_store_exact" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val docs = tab(s, dir, "documents")
-      s.read.parquet(stagedSignatureStore(s, dir))
+      FileSource.parquet(s, stagedSignatureStore(s, dir))
         .createOrReplaceTempView("q117_signatures")
       val copies = docs.where(col("doc_id") < 30)
         .withColumn("doc_id", col("doc_id") + 800000L)
@@ -1410,7 +1411,7 @@ object SparkEntry {
       emb.where("vec_id < 5")
         .select(col("vec_id").as("query_id"), col("embedding"))
         .createOrReplaceTempView("q127_queries")
-      s.read.parquet(stagedAnnCodebookStore(s, dir))
+      FileSource.parquet(s, stagedAnnCodebookStore(s, dir))
         .createOrReplaceTempView("q127_codebook")
       ap(corpus, t("ann_topk",
         "method" -> "ivf", "idColumn" -> "vec_id", "vecColumn" -> "embedding",
@@ -1441,7 +1442,7 @@ object SparkEntry {
     // sampling scan, and fails loud if the store's parameter stamp
     // disagrees with the asserted nClusters/kmeansIters
     "q125_codebook_store_exact" -> ((s, dir) => {
-      s.read.parquet(stagedCodebookStore(s, dir))
+      FileSource.parquet(s, stagedCodebookStore(s, dir))
         .createOrReplaceTempView("q125_codebook")
       val clustered = ap(plantedFamilies(s, dir), t("cluster_embeddings",
         "idColumn" -> "vec_id", "vecColumn" -> "embedding",
@@ -2039,7 +2040,7 @@ object SparkEntry {
       emb.where("vec_id < 5")
         .select(col("vec_id").as("query_id"), col("embedding"))
         .createOrReplaceTempView("q170_queries")
-      s.read.parquet(stagedPqCodebookStore(s, dir))
+      FileSource.parquet(s, stagedPqCodebookStore(s, dir))
         .createOrReplaceTempView("q170_codebook")
       ap(corpus, t("ann_topk",
         "method" -> "pq", "idColumn" -> "vec_id", "vecColumn" -> "embedding",
@@ -2063,9 +2064,9 @@ object SparkEntry {
       emb.where("vec_id < 5")
         .select(col("vec_id").as("query_id"), col("embedding"))
         .createOrReplaceTempView("q174_queries")
-      s.read.parquet(stagedPqCodebookStore(s, dir))
+      FileSource.parquet(s, stagedPqCodebookStore(s, dir))
         .createOrReplaceTempView("q174_codebook")
-      s.read.parquet(stagedPqCodesStore(s, dir))
+      FileSource.parquet(s, stagedPqCodesStore(s, dir))
         .createOrReplaceTempView("q174_codes")
       ap(corpus, t("ann_topk",
         "method" -> "pq", "idColumn" -> "vec_id", "vecColumn" -> "embedding",
@@ -2103,7 +2104,7 @@ object SparkEntry {
       emb.where("vec_id < 5")
         .select(col("vec_id").as("query_id"), col("embedding"))
         .createOrReplaceTempView("q172_queries")
-      s.read.parquet(stagedIvfPqStore(s, dir))
+      FileSource.parquet(s, stagedIvfPqStore(s, dir))
         .createOrReplaceTempView("q172_codebook")
       ap(corpus, t("ann_topk",
         "method" -> "ivfpq", "idColumn" -> "vec_id",
@@ -2123,9 +2124,9 @@ object SparkEntry {
       emb.where("vec_id < 5")
         .select(col("vec_id").as("query_id"), col("embedding"))
         .createOrReplaceTempView("q175_queries")
-      s.read.parquet(stagedIvfPqStore(s, dir))
+      FileSource.parquet(s, stagedIvfPqStore(s, dir))
         .createOrReplaceTempView("q175_codebook")
-      s.read.parquet(stagedIvfPqCodesStore(s, dir))
+      FileSource.parquet(s, stagedIvfPqCodesStore(s, dir))
         .createOrReplaceTempView("q175_codes")
       ap(corpus, t("ann_topk",
         "method" -> "ivfpq", "idColumn" -> "vec_id",
@@ -2536,7 +2537,7 @@ object SparkEntry {
     "q124_span_store_exact" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val docs = tab(s, dir, "documents")
-      s.read.parquet(stagedGramStore(s, dir))
+      FileSource.parquet(s, stagedGramStore(s, dir))
         .createOrReplaceTempView("q124_gram_store")
       ap(docs.where(col("doc_id") >= 250), t("dedup_spans",
         "idColumn" -> "doc_id", "textColumn" -> "text",
@@ -2564,7 +2565,7 @@ object SparkEntry {
     "q140_dedup_lines_store" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val lined = relined(s, dir)
-      s.read.parquet(stagedLineStore(s, dir))
+      FileSource.parquet(s, stagedLineStore(s, dir))
         .createOrReplaceTempView("q140_store")
       val boiler = lined.where(col("doc_id") < 100)
         .select(col("doc_id").as("rid"), expr("split(text, chr(10))[0]").as("b"))
@@ -2865,7 +2866,7 @@ object SparkEntry {
     // golden-train oracle and BpeSpec's goldens/properties
     "q131_bpe_roundtrip" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.read.parquet(stagedBpeStore(s, dir))
+      FileSource.parquet(s, stagedBpeStore(s, dir))
         .createOrReplaceTempView("q131_merges")
       ap(tab(s, dir, "documents").where(col("text").isNotNull),
         t("bpe_tokenize", "textColumn" -> "text",
@@ -2881,7 +2882,7 @@ object SparkEntry {
     // mergesView plumbing and cap window, a store whose token arithmetic
     // IS SQL-expressible)
     "q132_token_cap_bpe" -> ((s, dir) => {
-      s.read.parquet(stagedBpeStore(s, dir))
+      FileSource.parquet(s, stagedBpeStore(s, dir))
         .createOrReplaceTempView("q132_merges")
       ap(tab(s, dir, "documents"),
         t("token_cap", "idColumn" -> "doc_id", "textColumn" -> "text",
@@ -2894,7 +2895,7 @@ object SparkEntry {
     // codepoints(text minus whitespace) + word count — DuckDB re-derives
     // the weights AND the full seeded cap window
     "q133_token_cap_bpe_exact" -> ((s, dir) => {
-      s.read.parquet(stagedBpeDisjointStore(s))
+      FileSource.parquet(s, stagedBpeDisjointStore(s))
         .createOrReplaceTempView("q133_merges")
       ap(tab(s, dir, "documents"),
         t("token_cap", "idColumn" -> "doc_id", "textColumn" -> "text",
@@ -2924,7 +2925,7 @@ object SparkEntry {
     // encode/vocab disagreement breaks the match on that document
     "q136_bpe_ids_roundtrip" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.read.parquet(stagedBpeStore(s, dir))
+      FileSource.parquet(s, stagedBpeStore(s, dir))
         .createOrReplaceTempView("q136_merges")
       // encode → decode through the DECLARATIVE pair (bpe_tokenize
       // emit=ids, bpe_detokenize): both legs read the persisted store
@@ -2944,7 +2945,7 @@ object SparkEntry {
     // q136's roundtrip and the BpeTransformSpec losslessness test.
     "q137_pack_input_ids" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.read.parquet(stagedBpeDisjointStore(s))
+      FileSource.parquet(s, stagedBpeDisjointStore(s))
         .createOrReplaceTempView("q137_merges")
       ap(tab(s, dir, "documents"),
         t("pack_sequences", "idColumn" -> "doc_id", "textColumn" -> "text",
@@ -2975,7 +2976,7 @@ object SparkEntry {
     // the whitespace-normalized text THROUGH the byte tokens
     "q143_bpe_byte_fallback" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.read.parquet(stagedBpeFallbackStore(s))
+      FileSource.parquet(s, stagedBpeFallbackStore(s))
         .createOrReplaceTempView("q143_merges")
       val ids = ap(tab(s, dir, "documents").where(col("text").isNotNull),
         t("bpe_tokenize", "textColumn" -> "text",
@@ -3018,7 +3019,7 @@ object SparkEntry {
     // oracle instead of a spec-only claim
     "q145_text_signals_bpe_exact" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.read.parquet(stagedBpeDisjointStore(s))
+      FileSource.parquet(s, stagedBpeDisjointStore(s))
         .createOrReplaceTempView("q145_merges")
       ap(tab(s, dir, "documents").where(col("text").isNotNull),
         t("text_signals", "textColumn" -> "text",
@@ -3031,7 +3032,7 @@ object SparkEntry {
     // "token count in [200, 500]" — which the disjoint store makes
     // SQL-derivable (the q133 weight arithmetic inside a BETWEEN)
     "q146_gopher_bpe_tokens" -> ((s, dir) => {
-      s.read.parquet(stagedBpeDisjointStore(s))
+      FileSource.parquet(s, stagedBpeDisjointStore(s))
         .createOrReplaceTempView("q146_merges")
       ap(tab(s, dir, "documents"),
         t("quality_rules", "textColumn" -> "text", "mode" -> "filter",
@@ -3050,7 +3051,7 @@ object SparkEntry {
     // window's length including the short tail
     "q147_chunk_tokens" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      s.read.parquet(stagedBpeDisjointStore(s))
+      FileSource.parquet(s, stagedBpeDisjointStore(s))
         .createOrReplaceTempView("q147_merges")
       ap(tab(s, dir, "documents").where(col("text").isNotNull),
         t("chunk", "idColumn" -> "doc_id", "textColumn" -> "text",

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.api.RunContext
 import graft.config.NullCheck
+import graft.sources.FileSource
 
 /** Recursive StructType diff: missing/extra columns, type mismatches
   * (descending into struct/array/map), nullability violations.
@@ -183,7 +184,7 @@ object QuarantineWriter {
 
   def read(path: String, ctx: RunContext, pipelineId: Option[String] = None,
            runId: Option[String] = None): DataFrame = {
-    val df = ctx.spark.read.parquet(path)
+    val df = FileSource.parquet(ctx.spark, path)
     val f1 = pipelineId.map(p => df.filter(col("pipeline_id") === p)).getOrElse(df)
     runId.map(r => f1.filter(col("run_id") === r)).getOrElse(f1)
   }

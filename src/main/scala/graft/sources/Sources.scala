@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -13,9 +14,15 @@ import graft.config.{Options, SourceConfig}
  * Reference: extractor/S3Extractor.scala:30-78. CSV header/delimiter/
  * inferSchema, JSON multiLine, Parquet mergeSchema pass straight through as
  * Spark reader options. Unlike the reference, `schemaPath`/`schema` is
- * actually enforced: an explicit schema both skips the inference scan
- * (a full extra read at 100 TB) and acts as the strict contract the
- * reference only promised (S3Extractor.scala:163).
+ * actually enforced: an explicit schema skips inference and acts as the
+ * strict contract the reference only promised (S3Extractor.scala:163).
+ *
+ * Without a schema, inference costs what the format needs: csv and json
+ * scan their data in a Spark job; parquet reads one footer on the driver
+ * ([[org.apache.spark.sql.execution.datasources.parquet.GraftParquetFileFormat]],
+ * the file Spark's own inference job would read), and only `mergeSchema`
+ * reads every footer, in a Spark job. [[parquet]] is the same read for
+ * callers that hold a path, not a config: the program's one parquet reader.
  */
 object FileSource extends Source {
   val sourceType = "file"
@@ -28,8 +35,9 @@ object FileSource extends Source {
     if (!formats.contains(format))
       throw new ConfigException(s"file source: unknown format '$format'")
     val passthrough = config.options -- Seq("path", "format", "schema")
-    var reader = spark.read.format(format).options(passthrough)
-    explicitSchema(config).foreach(s => reader = reader.schema(s))
+    val schema = explicitSchema(config)
+    val reader = spark.read.format(provider(format, schema.isEmpty)).options(passthrough)
+    schema.foreach(reader.schema)
     try reader.load(path)
     catch {
       // avro is an optional external module; surface a capability error
@@ -48,6 +56,22 @@ object FileSource extends Source {
             s"deployment does not ship; add the module or use parquet/orc/json/csv")
     }
   }
+
+  /** Parquet at `path` with its schema inferred, read as a `file` source
+    * with format parquet and no options reads it. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.format(provider("parquet", infers = true)(spark)).load(path)
+
+  /** The data source for `format`: an inferring parquet read goes through
+    * the driver-side footer read, unless the session scans parquet with the
+    * V2 source (`spark.sql.sources.useV1SourceList` without parquet), which
+    * that V1 format would silently replace. */
+  private def provider(format: String, infers: Boolean)(implicit spark: SparkSession): String =
+    if (format == "parquet" && infers &&
+        spark.conf.get("spark.sql.sources.useV1SourceList").toLowerCase
+          .split(",").map(_.trim).contains("parquet"))
+      classOf[GraftParquetFileFormat].getName
+    else format
 
   override def validate(config: SourceConfig): List[String] = {
     val errs = List.newBuilder[String]
