@@ -63,35 +63,38 @@ object BenchLongDoc {
       .apply(df, graft.config.TransformConfig(s"ld-$typ", typ, opts.toMap),
         graft.api.RunContext(df.sparkSession, "longdoc", "bench"))
 
+  private def docs(s: SparkSession, dir: String): DataFrame =
+    FileSource.parquet(s, s"$dir/docs.parquet")
+
   /** The timed family. `dir` is the derived corpus directory (docs.parquet
     * inside); the BPE store view is registered by main before timing. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "ld_text_signals" -> ((s, dir) =>
-      ap(FileSource.parquet(s, s"$dir/docs.parquet"), "text_signals",
+      ap(docs(s, dir), "text_signals",
         "textColumn" -> "text")),
     "ld_quality_rules" -> ((s, dir) =>
-      ap(FileSource.parquet(s, s"$dir/docs.parquet"), "quality_rules",
+      ap(docs(s, dir), "quality_rules",
         "textColumn" -> "text", "maxTopNgramFraction" -> "0.9",
         "maxDupLineFraction" -> "0.95", "maxDupLineCharFraction" -> "0.95")),
     "ld_dedup_lines" -> ((s, dir) =>
-      ap(FileSource.parquet(s, s"$dir/docs.parquet"), "dedup_lines",
+      ap(docs(s, dir), "dedup_lines",
         "idColumn" -> "doc_id", "textColumn" -> "text")),
     "ld_span_dups" -> ((s, dir) =>
-      ap(FileSource.parquet(s, s"$dir/docs.parquet"), "dedup_spans",
+      ap(docs(s, dir), "dedup_spans",
         "idColumn" -> "doc_id", "textColumn" -> "text", "mode" -> "report")),
     "ld_minhash" -> ((s, dir) =>
-      ap(FileSource.parquet(s, s"$dir/docs.parquet"), "dedup_minhash",
+      ap(docs(s, dir), "dedup_minhash",
         "idColumn" -> "doc_id", "textColumn" -> "text", "threshold" -> "1.0")),
     "ld_bpe_encode" -> ((s, dir) =>
-      ap(FileSource.parquet(s, s"$dir/docs.parquet"), "bpe_token_count",
+      ap(docs(s, dir), "bpe_token_count",
         "textColumn" -> "text", "mergesView" -> "ld_bpe_store")),
     "ld_token_cap" -> ((s, dir) =>
-      ap(FileSource.parquet(s, s"$dir/docs.parquet"), "token_cap",
+      ap(docs(s, dir), "token_cap",
         "idColumn" -> "doc_id", "textColumn" -> "text",
         "mergesView" -> "ld_bpe_store", "groupBy" -> "source",
         "budget" -> "100000")),
     "ld_pack_sequences" -> ((s, dir) =>
-      ap(FileSource.parquet(s, s"$dir/docs.parquet"), "pack_sequences",
+      ap(docs(s, dir), "pack_sequences",
         "idColumn" -> "doc_id", "weightColumn" -> "n_chars",
         "seqLen" -> "4096")))
 
@@ -102,7 +105,7 @@ object BenchLongDoc {
       derive = derive, queries = queries,
       // one shared tokenizer store, trained on the SMALL corpus (untimed)
       prepare = (spark, dir) => graft.text.Bpe.mergesFrame(
-          FileSource.parquet(spark, s"$dir/docs.parquet"), "text",
+          docs(spark, dir), "text",
           numMerges = 200, maxWords = 50000, minCount = 2L)
         .createOrReplaceTempView("ld_bpe_store"))
 }

@@ -67,7 +67,7 @@ object GraftParquetFileFormat {
 
   /** The file `ParquetUtils.inferSchema` reads when schemas are not merged:
     * the first summary file in that order, else the first data file by path. */
-  def schemaFile(files: Seq[FileStatus]): Option[FileStatus] = {
+  private def schemaFile(files: Seq[FileStatus]): Option[FileStatus] = {
     def first(p: FileStatus => Boolean) = files.filter(p).minByOption(_.getPath.toString)
     summaries.iterator.map(n => first(_.getPath.getName == n)).collectFirst { case Some(f) => f }
       .orElse(first(f => !summaries.contains(f.getPath.getName)))

@@ -71,7 +71,13 @@ class ParquetInferenceSpec extends SparkTestBase {
     val dir = tmpDir("pq-multi")
     typed.repartition(2).write.mode("overwrite").parquet(dir)
     parity(dir) shouldBe Right(spark.read.parquet(dir).schema.json)
-    // the same plan as a `parquet` read: equal relations, so caching applies
+    // the same plan as a `parquet` read: equal relations with equal hashes,
+    // so caching and exchange reuse apply across the two
+    def relation(df: DataFrame) =
+      df.queryExecution.analyzed.collectFirst { case r: LogicalRelation => r.relation }.get
+    val (ours, stock) = (relation(FileSource.parquet(spark, dir)), relation(spark.read.parquet(dir)))
+    ours shouldBe stock
+    ours.hashCode shouldBe stock.hashCode
     FileSource.parquet(spark, dir).queryExecution.analyzed
       .sameResult(spark.read.parquet(dir).queryExecution.analyzed) shouldBe true
   }
