@@ -1285,28 +1285,14 @@ object Ann {
                      threshold: Double, bits: Int = 8, tables: Int = 4,
                      maxBucketSize: Int = 1000): DataFrame = {
     val ids = corpus.select(col(idCol).as("doc_id"), col(vecCol).as("vec"))
-    val buckets = withBuckets(ids, "doc_id", "vec", tables, bits)
-      .select("doc_id", "table_id", "bucket")
-
-    val capped = graft.runtime.BucketCapObserver.observeCap(
-        buckets.withColumn("bucket_n", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("table_id", "bucket"))),
-        "hyperplane", "bucket_n", maxBucketSize)
-      .filter(col("bucket_n") <= maxBucketSize)
-      .select("doc_id", "table_id", "bucket")
-
+    val capped = cappedBuckets(ids, "doc_id", tables, bits, maxBucketSize,
+      "hyperplane", selfPairs = true)
     val candidates = capped.select(col("table_id"), col("bucket"), col("doc_id").as("id_a"))
       .join(capped.select(col("table_id"), col("bucket"), col("doc_id").as("id_b")),
         Seq("table_id", "bucket"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
-
-    candidates
-      .join(ids.select(col("doc_id").as("id_a"), col("vec").as("va")), Seq("id_a"))
-      .join(ids.select(col("doc_id").as("id_b"), col("vec").as("vb")), Seq("id_b"))
-      .withColumn("sim", cosine(col("va"), col("vb")))
-      .filter(col("sim") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("sim"), 4).as("sim"))
+    verifiedCosine(candidates, "id_a", ids, "id_b", ids, threshold)
   }
 
   /**
@@ -1336,7 +1322,6 @@ object Ann {
                        kmeansIters: Int = 3,
                        maxClusterSize: Int = 1000,
                        codebook: Option[Array[Array[Float]]] = None): DataFrame = {
-    import graft.functions.expressions.ArgTopCentroids
     val ids = corpus.select(col(idCol).as("doc_id"), col(vecCol).as("vec"))
     // a provided codebook (a persisted [[codebookFrame]] store via
     // [[loadCodebook]]) skips the sampling pass AND keeps cell geometry
@@ -1344,47 +1329,56 @@ object Ann {
     val cents = codebook.getOrElse(
       kmeansCentroids(ids, "doc_id", "vec", nClusters, kmeansIters))
 
-    val assigned = ids.select(col("doc_id"),
-      ArgTopCentroids(col("vec"), cents, 1).getItem(0).as("cluster_id"))
-    val capped = graft.runtime.BucketCapObserver.observeCap(
-        assigned.withColumn("cluster_n", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("cluster_id"))),
-        "semantic_cell", "cluster_n", maxClusterSize)
-      .filter(col("cluster_n") <= maxClusterSize)
-      .select("doc_id", "cluster_id")
-
+    val capped = cappedCells(ids, "doc_id", cents, maxClusterSize,
+      "semantic_cell", selfPairs = true)
     val candidates = capped.select(col("cluster_id"), col("doc_id").as("id_a"))
       .join(capped.select(col("cluster_id"), col("doc_id").as("id_b")), Seq("cluster_id"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b")
-
-    candidates
-      .join(ids.select(col("doc_id").as("id_a"), col("vec").as("va")), Seq("id_a"))
-      .join(ids.select(col("doc_id").as("id_b"), col("vec").as("vb")), Seq("id_b"))
-      .withColumn("sim", cosine(col("va"), col("vb")))
-      .filter(col("sim") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("sim"), 4).as("sim"))
+    verifiedCosine(candidates, "id_a", ids, "id_b", ids, threshold)
   }
 
-  /** Hyperplane-bucket one side of an incremental embedding-dedup join:
-    * bucket (deterministic seeded hyperplanes — IDENTICAL planes on both
-    * sides, so an identical vector lands in identical buckets in every
-    * table), then cap mega-buckets loudly per side before any join
-    * touches them (the [[cosineNearDups]] discipline, per frame). */
+  /** Assign one side of a semantic-dedup join to its codebook cell (ONE
+    * codebook for both sides of an incremental join, so an identical
+    * vector lands in its stored copy's cell), then cap mega-cells loudly
+    * before any join touches them. */
+  private def cappedCells(frame: DataFrame, idName: String,
+                          cents: Array[Array[Float]], maxClusterSize: Int,
+                          tag: String, selfPairs: Boolean): DataFrame =
+    graft.runtime.BucketCapObserver.cappedBlocks(
+      frame.select(col(idName), graft.functions.expressions.ArgTopCentroids(
+        col("vec"), cents, 1).getItem(0).as("cluster_id")),
+      Seq("cluster_id"), maxClusterSize, tag, selfPairs, sizeCol = "cluster_n")
+
+  /** Exact-cosine verification every embedding near-dup path shares: join
+    * each candidate pair's vectors back by id (`a`, `b`: (id, `vec`)
+    * frames whose id column becomes `idA`/`idB`), keep the pairs whose
+    * RAW cosine is at least `threshold`, and round only the output. */
+  private def verifiedCosine(candidates: DataFrame, idA: String, a: DataFrame,
+                             idB: String, b: DataFrame,
+                             threshold: Double): DataFrame = {
+    def side(f: DataFrame, id: String, v: String) = {
+      val src = f.columns.head
+      f.select(if (src == id) col(id) else col(src).as(id), col("vec").as(v))
+    }
+    candidates.join(side(a, idA, "va"), Seq(idA)).join(side(b, idB, "vb"), Seq(idB))
+      .withColumn("sim", cosine(col("va"), col("vb")))
+      .filter(col("sim") >= threshold)
+      .select(col(idA), col(idB), round(col("sim"), 4).as("sim"))
+  }
+
+  /** Hyperplane-bucket one side of an embedding-dedup join: bucket
+    * (deterministic seeded hyperplanes — IDENTICAL planes on both sides of
+    * an incremental join, so an identical vector lands in identical
+    * buckets in every table), then cap mega-buckets loudly before any join
+    * touches them. */
   private def cappedBuckets(frame: DataFrame, idName: String, tables: Int,
-                            bits: Int, maxBucketSize: Int,
-                            tag: String): DataFrame =
-    graft.runtime.BucketCapObserver.observeCap(
-        withBuckets(frame, idName, "vec", tables, bits)
-          .select(col(idName), col("table_id"), col("bucket"))
-          .withColumn("bucket_n", count(lit(1)).over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy("table_id", "bucket"))),
-        // cross-join path (increment × reference): the self-join
-        // n(n-1)/2 estimate is meaningless here — report the -1 sentinel
-        tag, "bucket_n", maxBucketSize, selfPairs = false)
-      .filter(col("bucket_n") <= maxBucketSize)
-      .select(idName, "table_id", "bucket")
+                            bits: Int, maxBucketSize: Int, tag: String,
+                            selfPairs: Boolean): DataFrame =
+    graft.runtime.BucketCapObserver.cappedBlocks(
+      withBuckets(frame, idName, "vec", tables, bits)
+        .select(col(idName), col("table_id"), col("bucket")),
+      Seq("table_id", "bucket"), maxBucketSize, tag, selfPairs)
 
   /**
    * INCREMENTAL embedding-cosine near-dup — [[cosineNearDups]] against a
@@ -1416,16 +1410,12 @@ object Ann {
     val ref = reference.select(col(refIdCol).as("ref_id"),
       col(refVecCol).as("vec"))
     val l = cappedBuckets(inc, "id", tables, bits, maxBucketSize,
-      "hyperplane-new")
+      "hyperplane-new", selfPairs = false)
     val r = cappedBuckets(ref, "ref_id", tables, bits, maxBucketSize,
-      "hyperplane-ref")
-    l.join(r, Seq("table_id", "bucket"))
-      .select("id", "ref_id").dropDuplicates("id", "ref_id")
-      .join(inc.select(col("id"), col("vec").as("va")), Seq("id"))
-      .join(ref.select(col("ref_id"), col("vec").as("vb")), Seq("ref_id"))
-      .withColumn("sim", cosine(col("va"), col("vb")))
-      .filter(col("sim") >= threshold)
-      .select(col("id"), col("ref_id"), round(col("sim"), 4).as("sim"))
+      "hyperplane-ref", selfPairs = false)
+    verifiedCosine(l.join(r, Seq("table_id", "bucket"))
+      .select("id", "ref_id").dropDuplicates("id", "ref_id"),
+      "id", inc, "ref_id", ref, threshold)
   }
 
   /**
@@ -1453,29 +1443,17 @@ object Ann {
                               maxClusterSize: Int = 1000,
                               codebook: Option[Array[Array[Float]]] = None)
       : DataFrame = {
-    import graft.functions.expressions.ArgTopCentroids
     val inc = increment.select(col(idCol).as("id"), col(vecCol).as("vec"))
     val ref = reference.select(col(refIdCol).as("ref_id"),
       col(refVecCol).as("vec"))
     val cents = codebook.getOrElse(
       kmeansCentroids(ref, "ref_id", "vec", nClusters, kmeansIters))
-    def cappedCells(frame: DataFrame, idName: String, tag: String) =
-      graft.runtime.BucketCapObserver.observeCap(
-          frame.select(col(idName),
-            ArgTopCentroids(col("vec"), cents, 1).getItem(0).as("cluster_id"))
-            .withColumn("cluster_n", count(lit(1)).over(
-              org.apache.spark.sql.expressions.Window.partitionBy("cluster_id"))),
-          // cross-join path: pairs_dropped is not computable per side
-          tag, "cluster_n", maxClusterSize, selfPairs = false)
-        .filter(col("cluster_n") <= maxClusterSize)
-        .select(idName, "cluster_id")
-    cappedCells(inc, "id", "semantic_cell-new")
-      .join(cappedCells(ref, "ref_id", "semantic_cell-ref"), Seq("cluster_id"))
-      .select("id", "ref_id").dropDuplicates("id", "ref_id")
-      .join(inc.select(col("id"), col("vec").as("va")), Seq("id"))
-      .join(ref.select(col("ref_id"), col("vec").as("vb")), Seq("ref_id"))
-      .withColumn("sim", cosine(col("va"), col("vb")))
-      .filter(col("sim") >= threshold)
-      .select(col("id"), col("ref_id"), round(col("sim"), 4).as("sim"))
+    // cross-join path: pairs_dropped is not computable per side
+    verifiedCosine(cappedCells(inc, "id", cents, maxClusterSize,
+        "semantic_cell-new", selfPairs = false)
+      .join(cappedCells(ref, "ref_id", cents, maxClusterSize,
+        "semantic_cell-ref", selfPairs = false), Seq("cluster_id"))
+      .select("id", "ref_id").dropDuplicates("id", "ref_id"),
+      "id", inc, "ref_id", ref, threshold)
   }
 }

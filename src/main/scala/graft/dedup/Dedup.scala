@@ -65,12 +65,6 @@ object Dedup {
   def minhashSignatureFromHashes(shingleHashes: Column, k: Int): Column =
     graft.functions.expressions.MinHashFromHashes(shingleHashes, k)
 
-  /** Convenience form over raw text (hashes shingles inline via the native
-    * [[graft.functions.expressions.ShingleHashes]] scan). */
-  def minhashSignature(text: Column, k: Int, shingleSize: Int): Column =
-    minhashSignatureFromHashes(
-      graft.functions.expressions.ShingleHashes(text, shingleSize), k)
-
   /**
    * MinHash + LSH near-duplicate pairs.
    * signature → `bands` bands of `rowsPerBand` → explode to (band, bandHash)
@@ -99,7 +93,8 @@ object Dedup {
     // stage 2: band explode on a SLIM (doc_id, band, bh) frame — the heavy
     // shingle arrays never enter the bands×rows shuffle — with pathological
     // buckets (boilerplate/empty docs) capped before the self-join
-    val bucketed = cappedBands(sigd, bands, rowsPerBand, maxBucketSize)
+    val bucketed = cappedBands(sigd, bands, rowsPerBand, maxBucketSize,
+      selfPairs = true)
 
     val candidates = bucketed.select(col("band"), col("bh"), col("doc_id").as("id_a"))
       .join(bucketed.select(col("band"), col("bh"), col("doc_id").as("id_b")), Seq("band", "bh"))
@@ -108,19 +103,25 @@ object Dedup {
 
     // stage 3: exact-Jaccard verification — join shingle-hash sets back
     // only for surviving candidate pairs
-    val sets = sigd.select(col("doc_id"), col("sh"))
-    val pairs = candidates
-      .join(sets.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(sets.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
+    verifiedJaccard(candidates, "id_a", sigd, "id_b", sigd, threshold)
+  }
+
+  /** Exact-Jaccard verification both minhash paths share: join each
+    * candidate pair's shingle-hash sets back by id (`a`, `b`: frames with
+    * `doc_id`, `sh`), threshold the RAW jaccard and round only the output
+    * — filtering the rounded value would admit pairs up to 5e-5 below the
+    * configured threshold (the ANN cosine path does it the same way). */
+  private def verifiedJaccard(candidates: DataFrame, idA: String, a: DataFrame,
+                              idB: String, b: DataFrame,
+                              threshold: Double): DataFrame = {
     val inter = size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
     val union = size(array_union(col("sh_a"), col("sh_b"))).cast("double")
-    // threshold the RAW jaccard; round only for output — filtering the
-    // rounded value would admit pairs up to 5e-5 below the configured
-    // threshold (the ANN cosine path has always done it this way)
-    pairs
+    candidates
+      .join(a.select(col("doc_id").as(idA), col("sh").as("sh_a")), Seq(idA))
+      .join(b.select(col("doc_id").as(idB), col("sh").as("sh_b")), Seq(idB))
       .withColumn("__j", when(union === 0, 0.0).otherwise(inter / union))
       .filter(col("__j") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("__j"), 4).as("jaccard"))
+      .select(col(idA), col(idB), round(col("__j"), 4).as("jaccard"))
   }
 
   /**
@@ -207,20 +208,15 @@ object Dedup {
     * [[graft.runtime.BucketCapObserver]]) so the recall cost is visible
     * at runtime, not just documented. */
   private def cappedBands(sigd: DataFrame, bands: Int, rowsPerBand: Int,
-                          maxBucketSize: Int, selfPairs: Boolean = true): DataFrame = {
+                          maxBucketSize: Int, selfPairs: Boolean): DataFrame =
     // native one-pass band hashing (bit-identical to the interpreted
     // hash(slice) HOF it replaces); posexplode's position IS the band
-    val sized = sigd.select(col("doc_id"),
-        posexplode(graft.functions.expressions.BandHashes(
-          col("sig"), bands, rowsPerBand)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bh")
-      .withColumn("bucket_n", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("band", "bh")))
-    graft.runtime.BucketCapObserver.observeCap(
-        sized, "minhash", "bucket_n", maxBucketSize, selfPairs = selfPairs)
-      .filter(col("bucket_n") <= maxBucketSize)
-      .select("doc_id", "band", "bh")
-  }
+    graft.runtime.BucketCapObserver.cappedBlocks(
+      sigd.select(col("doc_id"),
+          posexplode(graft.functions.expressions.BandHashes(
+            col("sig"), bands, rowsPerBand)))
+        .withColumnRenamed("pos", "band").withColumnRenamed("col", "bh"),
+      Seq("band", "bh"), maxBucketSize, "minhash", selfPairs)
 
   /** Stages 2–3 of the increment×reference match: band-bucket join for
     * candidates, exact Jaccard over shingle-hash sets for verification. */
@@ -237,17 +233,7 @@ object Dedup {
         .select(col("band"), col("bh"), col("doc_id").as("ref_id")),
         Seq("band", "bh"))
       .select("id", "ref_id").dropDuplicates("id", "ref_id")
-
-    val pairs = candidates
-      .join(incSig.select(col("doc_id").as("id"), col("sh").as("sh_a")), Seq("id"))
-      .join(refSig.select(col("doc_id").as("ref_id"), col("sh").as("sh_b")), Seq("ref_id"))
-    val inter = size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
-    val union = size(array_union(col("sh_a"), col("sh_b"))).cast("double")
-    // raw-value threshold, rounded output — see minhashNearDups
-    pairs
-      .withColumn("__j", when(union === 0, 0.0).otherwise(inter / union))
-      .filter(col("__j") >= threshold)
-      .select(col("id"), col("ref_id"), round(col("__j"), 4).as("jaccard"))
+    verifiedJaccard(candidates, "id", incSig, "ref_id", refSig, threshold)
   }
 
   /**
@@ -277,18 +263,35 @@ object Dedup {
     val hashes = bench
       .select(explode(ShingleHashes(col(benchTextCol), shingleSize)).as("sh"))
       .distinct()
-    val expected = math.max(hashes.count(), 1L)
-    val bloom = hashes.stat.bloomFilter("sh", expected, fpp)
-    val bos = new java.io.ByteArrayOutputStream()
-    bloom.writeTo(bos)
-    val bloomLit = lit(bos.toByteArray)
-    import org.apache.spark.sql.GraftBridge
-    val mightContain = (h: Column) => GraftBridge.column(
-      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-        GraftBridge.expression(bloomLit), GraftBridge.expression(h)))
+    val mightContain = bloomProbe(hashes, math.max(hashes.count(), 1L), fpp)
     // null-text docs have no shingles to test — kept, like the exact path
     docs.where(col(textCol).isNull ||
       !exists(ShingleHashes(col(textCol), shingleSize), mightContain))
+  }
+
+  /** The `fpp` option of the bloom transforms (default 1e-4), bounded to
+    * (0, 1) as [[bloomProbe]]'s sketch requires. */
+  private[graft] def fppOption(implicit owner: graft.api.Transform): graft.api.Opt[Double] =
+    graft.api.Opt.double("fpp").map { v =>
+      if (v > 0 && v < 1) v else throw new graft.api.ConfigException(
+        s"${owner.transformType}: fpp must be in (0, 1), got $v")
+    }.default(1e-4)
+
+  /** The one bloom-probe builder of the dedup family: folds the single
+    * long column of `hashes` into a sketch sized for `expected` items at
+    * `fpp` (one job on the reference side), serializes it once, and
+    * returns the zero-join codegen'd `might_contain` test over Spark's
+    * native [[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain]].
+    * Each caller sizes its own sketch. */
+  private[dedup] def bloomProbe(hashes: DataFrame, expected: Long,
+                                fpp: Double): Column => Column = {
+    import org.apache.spark.sql.GraftBridge
+    val bos = new java.io.ByteArrayOutputStream()
+    hashes.stat.bloomFilter(hashes.columns.head, expected, fpp).writeTo(bos)
+    val bloomLit = lit(bos.toByteArray)
+    h => GraftBridge.column(
+      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
+        GraftBridge.expression(bloomLit), GraftBridge.expression(h)))
   }
 
   /**
@@ -347,10 +350,8 @@ object Dedup {
       s"${tag}NearDups: maxHamming must be in [0, 15] — blocking needs " +
         s"maxHamming+1 chunks of a 64-bit signature and chunks narrower " +
         s"than 4 bits degenerate into all-collide buckets, got $maxHamming")
-    // null signatures (null text / undecodable media) can never pair —
-    // without this filter they explode into null-chunk rows each, fire
-    // bogus mega-bucket cap warnings, and ride the shuffle for nothing
-    val chunked = hammingChunked(signatures, maxHamming, maxBucketSize, tag)
+    val chunked = hammingChunked(signatures, maxHamming, maxBucketSize, tag,
+      selfPairs = true)
     val l = chunked.select(col("chunk"), col("ch"), col("doc_id").as("id_a"), col("sig").as("sig_a"))
     val r = chunked.select(col("chunk"), col("ch"), col("doc_id").as("id_b"), col("sig").as("sig_b"))
     l.join(r, Seq("chunk", "ch")).filter(col("id_a") < col("id_b"))
@@ -364,7 +365,8 @@ object Dedup {
     * signatures dropped, maxHamming+1 chunk columns exploded, mega-
     * buckets capped (and observed) before any join touches them. */
   private def hammingChunked(signatures: DataFrame, maxHamming: Int,
-                             maxBucketSize: Int, tag: String): DataFrame = {
+                             maxBucketSize: Int, tag: String,
+                             selfPairs: Boolean): DataFrame = {
     // null signatures (null text / undecodable media) can never pair —
     // without this filter they explode into null-chunk rows each, fire
     // bogus mega-bucket cap warnings, and ride the shuffle for nothing
@@ -379,7 +381,7 @@ object Dedup {
           call_function("shiftright", col("sig"), lit(offset))
             .bitwiseAND(mask).as("ch"))
     }
-    val chunked0 = sigs.select(col("doc_id"), col("sig"),
+    val chunked = sigs.select(col("doc_id"), col("sig"),
         explode(array(chunkStructs: _*)).as("cc"))
       .select(col("doc_id"), col("sig"), col("cc.chunk"), col("cc.ch"))
     // cap pathological chunk buckets before the self-join, mirroring the
@@ -388,12 +390,8 @@ object Dedup {
     // is O(bucket²) — the one quadratic risk in this pipeline at scale.
     // Buckets above the cap are whole near-dup mega-clusters; production
     // pipelines drop (or route to exact-dedup) rather than pair them.
-    graft.runtime.BucketCapObserver.observeCap(
-        chunked0.withColumn("bucket_n", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("chunk", "ch"))),
-        tag, "bucket_n", maxBucketSize)
-      .filter(col("bucket_n") <= maxBucketSize)
-      .select("doc_id", "sig", "chunk", "ch")
+    graft.runtime.BucketCapObserver.cappedBlocks(
+      chunked, Seq("chunk", "ch"), maxBucketSize, tag, selfPairs)
   }
 
   /**
@@ -419,10 +417,13 @@ object Dedup {
     require(maxHamming >= 0 && maxHamming <= 15,
       s"${tag}NearDupsAgainstSignatures: maxHamming must be in [0, 15], " +
         s"got $maxHamming")
-    val l = hammingChunked(newSigs, maxHamming, maxBucketSize, s"$tag-new")
+    // selfPairs = false: an increment × store join, as in minhashAgainstCore
+    val l = hammingChunked(newSigs, maxHamming, maxBucketSize, s"$tag-new",
+        selfPairs = false)
       .select(col("chunk"), col("ch"), col("doc_id").as("id"),
         col("sig").as("sig_new"))
-    val r = hammingChunked(store, maxHamming, maxBucketSize, s"$tag-store")
+    val r = hammingChunked(store, maxHamming, maxBucketSize, s"$tag-store",
+        selfPairs = false)
       .select(col("chunk"), col("ch"), col("doc_id").as("ref_id"),
         col("sig").as("sig_ref"))
     l.join(r, Seq("chunk", "ch"))

@@ -38,8 +38,7 @@ object LineDedup {
     *         become empty strings. */
   def dedupLines(df: DataFrame, idCol: String, textCol: String,
                  separator: String = "\n", minLength: Int = 1): DataFrame = {
-    require(separator.nonEmpty, "dedupLines: separator must be non-empty")
-    require(minLength >= 1, s"dedupLines: minLength must be >= 1, got $minLength")
+    requireParams(separator, minLength)
     // the input is consumed THREE times (survivor election, the keep
     // join, and rebuild's id join) — without lineage truncation a
     // composed pipeline re-executes its whole upstream tower per
@@ -48,13 +47,7 @@ object LineDedup {
     // shared checkpoint (the tfidf pattern) materializes the frame on
     // first use and every consumer reads the same blocks.
     val staged = graft.api.Checkpointing.shared(df)
-    // null-id docs cannot participate: the id is the survivor tie-break
-    // AND the rebuild key, so a null id would elect un-rejoinable
-    // survivors (disabling dedup for those lines corpus-wide) and blank
-    // the doc's text on rebuild — they pass through verbatim instead
-    val lines = staged.where(col(idCol).isNotNull).select(col(idCol).as("__id"),
-      posexplode(split(col(textCol),
-        java.util.regex.Pattern.quote(separator), -1)).as(Seq("__pos", "__ln")))
+    val lines = lineRows(staged, idCol, textCol, separator)
     val survivors = lines.where(length(col("__ln")) >= minLength)
       .groupBy("__ln")
       .agg(min(struct(col("__id").as("__sid"), col("__pos").as("__spos"))).as("__first"))
@@ -66,6 +59,23 @@ object LineDedup {
         (col("__id") === col("__sid") && col("__pos") === col("__spos")))
     rebuild(staged, kept, idCol, textCol, separator)
   }
+
+  /** The guard every entry point applies to its line parameters. */
+  private def requireParams(separator: String, minLength: Int): Unit = {
+    require(separator.nonEmpty, "dedupLines: separator must be non-empty")
+    require(minLength >= 1, s"dedupLines: minLength must be >= 1, got $minLength")
+  }
+
+  /** (__id, __pos, __ln): every line of every id-bearing document. Null-id
+    * docs cannot participate: the id is the survivor tie-break AND the
+    * rebuild key, so a null id would elect un-rejoinable survivors
+    * (disabling dedup for those lines corpus-wide) and blank the doc's
+    * text on rebuild — they pass through verbatim instead. */
+  private def lineRows(df: DataFrame, idCol: String, textCol: String,
+                       separator: String): DataFrame =
+    df.where(col(idCol).isNotNull).select(col(idCol).as("__id"),
+      posexplode(split(col(textCol),
+        java.util.regex.Pattern.quote(separator), -1)).as(Seq("__pos", "__ln")))
 
   /** Reassemble each document from its kept (__id, __pos, __ln) lines in
     * original order; null texts stay null, fully-deduped docs become "". */
@@ -87,38 +97,19 @@ object LineDedup {
   /** INCREMENTAL variant: drop every line of `df` that appears ANYWHERE in
     * `ref` (the already-ingested corpus, or a curated boilerplate bank) —
     * today's crawl loses yesterday's boilerplate without rescanning
-    * history per increment line. Scale shape: the reference reduces ONCE
-    * to a DISTINCT 32-byte line-hash frame (broadcast-able when the
-    * boilerplate bank is small; an ordinary hash join otherwise — the
-    * increment side never shuffles its full text for the check, only the
-    * hash column rides the anti-join); the rebuild is the same (id)-keyed
-    * reduction as [[dedupLines]]. Lines shorter than `minLength` never
-    * participate and are kept verbatim. Within-increment repeats are NOT
-    * collapsed here — compose with [[dedupLines]] when both are wanted. */
+    * history per increment line. The reference reduces ONCE to the hash
+    * frame [[lineSignatures]] stamps (a DISTINCT 32-byte line-hash frame,
+    * broadcast-able when the boilerplate bank is small; an ordinary hash
+    * join otherwise), so this is [[dedupLinesAgainstSignatures]] over a
+    * store built in the same plan, without the stamp check. Lines shorter
+    * than `minLength` never participate and are kept verbatim.
+    * Within-increment repeats are NOT collapsed here — compose with
+    * [[dedupLines]] when both are wanted. */
   def dedupLinesAgainst(df: DataFrame, idCol: String, textCol: String,
                         ref: DataFrame, refTextCol: String,
-                        separator: String = "\n", minLength: Int = 1): DataFrame = {
-    require(separator.nonEmpty, "dedupLines: separator must be non-empty")
-    require(minLength >= 1, s"dedupLines: minLength must be >= 1, got $minLength")
-    val sep = java.util.regex.Pattern.quote(separator)
-    // consumed twice (line frame + rebuild's id join) — truncate lineage
-    // so a composed upstream tower executes once (the dedupLines fix)
-    val staged = graft.api.Checkpointing.shared(df)
-    // null-id docs pass through verbatim — see dedupLines
-    val lines = staged.where(col(idCol).isNotNull).select(col(idCol).as("__id"),
-      posexplode(split(col(textCol), sep, -1)).as(Seq("__pos", "__ln")))
-    val refHashes = ref
-      .select(explode(split(col(refTextCol), sep, -1)).as("__ln"))
-      .where(length(col("__ln")) >= minLength)
-      .select(sha2(col("__ln"), 256).as("__h")).distinct()
-    // short lines get a null hash, and null never matches an anti-join —
-    // they are kept verbatim (SQL semantics, same contract as dedupLines)
-    val kept = lines
-      .withColumn("__h",
-        when(length(col("__ln")) >= minLength, sha2(col("__ln"), 256)))
-      .join(refHashes, Seq("__h"), "left_anti")
-    rebuild(staged, kept, idCol, textCol, separator)
-  }
+                        separator: String = "\n", minLength: Int = 1): DataFrame =
+    dropReferenceLines(df, idCol, textCol,
+      lineHashes(ref, refTextCol, separator, minLength), separator, minLength)
 
   /** The persistable LINE-HASH STORE: the distinct sha-256 of every
     * qualifying line of the reference corpus, parameter-stamped
@@ -129,15 +120,20 @@ object LineDedup {
     * signature/gram/codebook/merges store family. The distinct shuffle
     * is paid ONCE at build time, amortized over every increment. */
   def lineSignatures(ref: DataFrame, textCol: String,
-                     separator: String = "\n", minLength: Int = 1): DataFrame = {
-    require(separator.nonEmpty, "dedupLines: separator must be non-empty")
-    require(minLength >= 1, s"dedupLines: minLength must be >= 1, got $minLength")
-    val sep = java.util.regex.Pattern.quote(separator)
-    ref.select(explode(split(col(textCol), sep, -1)).as("__ln"))
+                     separator: String = "\n", minLength: Int = 1): DataFrame =
+    lineHashes(ref, textCol, separator, minLength)
+      .select(col("__h").as("lh"), lit(minLength).as("ld_min_length"),
+        lit(separator).as("ld_separator"))
+
+  /** The distinct sha-256 (`__h`) of every line of `ref` at least
+    * `minLength` long: the reference side of both incremental forms. */
+  private def lineHashes(ref: DataFrame, textCol: String, separator: String,
+                         minLength: Int): DataFrame = {
+    requireParams(separator, minLength)
+    ref.select(explode(split(col(textCol),
+        java.util.regex.Pattern.quote(separator), -1)).as("__ln"))
       .where(length(col("__ln")) >= minLength)
-      .select(sha2(col("__ln"), 256).as("lh")).distinct()
-      .withColumn("ld_min_length", lit(minLength))
-      .withColumn("ld_separator", lit(separator))
+      .select(sha2(col("__ln"), 256).as("__h")).distinct()
   }
 
   /** [[dedupLinesAgainst]] with the reference side read from a PERSISTED
@@ -149,20 +145,28 @@ object LineDedup {
   def dedupLinesAgainstSignatures(df: DataFrame, idCol: String, textCol: String,
                                   store: DataFrame, separator: String = "\n",
                                   minLength: Int = 1): DataFrame = {
-    require(separator.nonEmpty, "dedupLines: separator must be non-empty")
-    require(minLength >= 1, s"dedupLines: minLength must be >= 1, got $minLength")
+    requireParams(separator, minLength)
     graft.operators.Stores.check(store, graft.operators.Stores.LineSignatures,
       minLength, separator)
-    val sep = java.util.regex.Pattern.quote(separator)
+    dropReferenceLines(df, idCol, textCol, store.select(col("lh").as("__h")),
+      separator, minLength)
+  }
+
+  /** The reference core both incremental forms share: drop every line of
+    * `df` whose sha-256 is in the `__h` column of `hashes`, then rebuild.
+    * Only the hash column rides the anti-join; short lines get a null
+    * hash, and null never matches an anti-join, so they are kept verbatim
+    * (the [[dedupLines]] contract). */
+  private def dropReferenceLines(df: DataFrame, idCol: String, textCol: String,
+                                 hashes: DataFrame, separator: String,
+                                 minLength: Int): DataFrame = {
     // consumed twice (line frame + rebuild's id join) — truncate lineage
     // so a composed upstream tower executes once (the dedupLines fix)
     val staged = graft.api.Checkpointing.shared(df)
-    val lines = staged.where(col(idCol).isNotNull).select(col(idCol).as("__id"),
-      posexplode(split(col(textCol), sep, -1)).as(Seq("__pos", "__ln")))
-    val kept = lines
+    val kept = lineRows(staged, idCol, textCol, separator)
       .withColumn("__h",
         when(length(col("__ln")) >= minLength, sha2(col("__ln"), 256)))
-      .join(store.select(col("lh").as("__h")), Seq("__h"), "left_anti")
+      .join(hashes, Seq("__h"), "left_anti")
     rebuild(staged, kept, idCol, textCol, separator)
   }
 
@@ -174,11 +178,21 @@ object LineDedup {
     * within pages rather than across them. */
   def dedupLinesInDoc(df: DataFrame, textCol: String,
                       separator: String = "\n", minLength: Int = 1): DataFrame = {
-    require(separator.nonEmpty, "dedupLines: separator must be non-empty")
-    require(minLength >= 1, s"dedupLines: minLength must be >= 1, got $minLength")
+    requireParams(separator, minLength)
     df.withColumn(textCol,
       graft.functions.expressions.DedupLinesInDoc(col(textCol), separator, minLength))
   }
+}
+
+/** The `separator`/`minLength` declarations both line transforms share,
+  * with the bounds [[LineDedup]] requires, so the pre-flight check refuses
+  * what the library would. */
+private[dedup] trait LineKnobs extends Transform {
+  protected val Separator = Opt.string("separator").map { s =>
+    if (s.isEmpty) throw new ConfigException(s"$transformType: separator must be non-empty")
+    s
+  }.default("\n")
+  protected val MinLength = Opt.int("minLength", min = 1).default(1)
 }
 
 /**
@@ -203,14 +217,12 @@ object LineDedup {
  * built by the `line_signatures` transform) — the increment drops
  * history's lines without ever re-reading history's text.
  */
-object LineDedupTransform extends Transform {
+object LineDedupTransform extends LineKnobs {
   val transformType = "dedup_lines"
   private val TextColumn = Opt.column("textColumn").required
   // scope: corpus only
   private val IdColumn = Opt.column("idColumn")
   private val Scope = Opt.oneOf("scope", "corpus", "document").default("corpus")
-  private val Separator = Opt.string("separator").default("\n")
-  private val MinLength = Opt.int("minLength").default(1)
   // scope: corpus, one of a reference corpus or a persisted line-hash store
   private val ReferenceView = Opt.view("referenceView")
   private val SignatureView = Opt.view("signatureView")
@@ -260,11 +272,9 @@ object LineDedupTransform extends Transform {
  * (required); `separator` (default newline), `minLength` (default 1) —
  * both stamped into the store and enforced at consume time.
  */
-object LineSignaturesTransform extends Transform {
+object LineSignaturesTransform extends LineKnobs {
   val transformType = "line_signatures"
   private val TextColumn = Opt.column("textColumn").required
-  private val Separator = Opt.string("separator").default("\n")
-  private val MinLength = Opt.int("minLength").default(1)
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     try LineDedup.lineSignatures(input, TextColumn(config),
       separator = Separator(config), minLength = MinLength(config))

@@ -26,11 +26,16 @@ import graft.config.TransformConfig
  * coverage gap). Matching is over lowercased `\s+`-tokenization
  * ([[graft.functions.TextFunctions.tokens]] parity); removal rebuilds
  * from the ORIGINAL-case tokens, so only case-insensitive repetition is
- * caught but surviving text keeps its casing. The `*Against` variants
- * swap the duplication test for membership in a reference corpus —
- * span-level decontamination (strip benchmark text that leaked into
- * training documents without dropping the documents) and incremental
- * ingestion against yesterday's corpus.
+ * caught but surviving text keeps its casing. The reference variants
+ * swap the duplication test for membership in a reference given as one
+ * frame of 64-bit gram hashes, whatever its source (a text corpus's
+ * [[SpanDedup.gramHashes]] or a persisted [[SpanDedup.gramSignatures]]
+ * store): an exact semi-join ([[SpanDedup.referenceSpans]]) or a bloom
+ * probe ([[SpanDedup.referenceSpansBloom]]) — span-level decontamination
+ * (strip benchmark text that leaked into training documents without
+ * dropping the documents) and incremental ingestion against yesterday's
+ * corpus. [[SpanDedup.removeSpans]] turns any of their span tables into
+ * the rewritten text.
  *
  * Scale shape: zero-shuffle n-gram explodes
  * ([[graft.functions.expressions.WordNgramStrings]], codegen'd) over two
@@ -64,182 +69,100 @@ object SpanDedup {
     islandSpans(dupGramStarts(df, idCol, textCol, n, minCount), idCol, n)
   }
 
-  /** INCREMENTAL / decontamination variant: maximal runs of >= `n` tokens
-    * that appear ANYWHERE in `ref` (yesterday's corpus, or a benchmark
-    * suite) — span-level `dedup_against`. The reference reduces ONCE to a
-    * DISTINCT 32-byte gram-hash frame (broadcast-able for benchmark-sized
-    * references, an ordinary hash join otherwise); the increment's gram
-    * stream semi-joins on the hash, so neither side's text rides the
-    * exchange. Within-increment repetition is deliberately NOT considered
-    * — compose with [[dupSpans]] when both are wanted. */
-  def dupSpansAgainst(df: DataFrame, idCol: String, textCol: String,
-                      ref: DataFrame, refTextCol: String, n: Int = 8): DataFrame = {
-    require(n >= 2, s"dedup_spans: n must be >= 2, got $n")
-    val refHashes = ref.select(explode(
-        graft.functions.expressions.WordNgramStrings(col(refTextCol), n)).as("__g"))
-      .select(sha2(col("__g"), 256).as("__h")).distinct()
-    val hits = gramStarts(df, idCol, textCol, n)
-      .where(col("__id").isNotNull) // null-id docs pass through verbatim
-      .withColumn("__h", sha2(col("__gram"), 256))
-      .join(refHashes, Seq("__h"), "left_semi")
-      .select(col("__id"), (col("__p0") + 1).cast("long").as("__pos"))
-    islandSpans(hits, idCol, n)
-  }
-
-  /** FIXED-SIZE variant of [[dupSpansAgainst]] for references too large to
-    * join comfortably (yesterday's 100 TB corpus as the reference): the
-    * reference's gram hashes reduce driver-side to one serialized bloom
-    * sketch (same O(small-side) driver-read class as
-    * [[Dedup.bloomDecontaminate]]), and the increment pays a zero-join
-    * codegen'd `might_contain` filter instead of the semi-join exchange.
-    * False positives only EXTEND removal to clean spans (probability ≈
-    * fpp per gram) — reference text is never missed, the conservative
-    * direction for decontamination. */
-  def dupSpansAgainstBloom(df: DataFrame, idCol: String, textCol: String,
-                           ref: DataFrame, refTextCol: String, n: Int = 8,
-                           fpp: Double = 1e-4): DataFrame = {
-    require(n >= 2, s"dedup_spans: n must be >= 2, got $n")
-    require(fpp > 0 && fpp < 1, s"dedup_spans: fpp must be in (0,1), got $fpp")
-    // the gram-hash stream stays NON-distinct: bloom insertion is
-    // idempotent, so distinct() would only add a reference-sized shuffle
-    // (twice — sizing job + build job) for nothing. Sizing comes from a
-    // one-pass HLL estimate (zero shuffle, sketch-sized exchange) with 10%
-    // headroom; an estimate a few percent low only nudges the effective
-    // fpp up, and bloom false positives are already the documented
-    // conservative direction (clean spans removed, never reference missed)
-    val refHashes = ref.select(explode(
-        graft.functions.expressions.WordNgramStrings(col(refTextCol), n)).as("__g"))
-      .select(xxhash64(col("__g")).as("__gh"))
-    val expected = math.max(
-      (refHashes.agg(approx_count_distinct(col("__gh"))).head.getLong(0) * 1.1).toLong,
-      64L)
-    bloomIslandSpans(df, idCol, textCol, n,
-      refHashes.stat.bloomFilter("__gh", expected, fpp))
-  }
-
-  /** Persistable gram-hash store for a reference corpus: the DISTINCT
-    * `xxhash64` of every lowercased word n-gram, parameter-stamped with
-    * the gram length. Build it over corpus N and persist via a file sink;
-    * run N+1 re-loads the parquet and passes it to `dedup_spans` via
-    * `signatureView` — span-level decontamination / incremental ingestion
-    * WITHOUT re-scanning the reference's text (the span analogue of
-    * [[Dedup.minhashSignatures]]). The distinct shuffle is paid once at
-    * store-build time and amortized over every increment; the store is
-    * one long + one int per distinct gram. */
-  def gramSignatures(df: DataFrame, textCol: String, n: Int = 8): DataFrame = {
+  /** The gram-hash frame of a text reference: the 64-bit `xxhash64` of
+    * every lowercased word `n`-gram of `textCol` as column `gh`, one row
+    * per occurrence. Not distinct: a bloom probe
+    * ([[referenceSpansBloom]]) folds repeats for free, so the reference
+    * pays no shuffle; [[gramSignatures]] adds the distinct a semi-join
+    * build side wants. */
+  def gramHashes(df: DataFrame, textCol: String, n: Int = 8): DataFrame = {
     require(n >= 2, s"gram_signatures: n must be >= 2, got $n")
     df.select(explode(
         graft.functions.expressions.WordNgramStrings(col(textCol), n)).as("__g"))
-      .select(xxhash64(col("__g")).as("gh")).distinct()
-      .withColumn("sg_n", lit(n))
+      .select(xxhash64(col("__g")).as("gh"))
   }
 
-  /** [[dupSpansAgainst]] with the reference replaced by a PERSISTED
-    * [[gramSignatures]] store — the increment's gram stream semi-joins the
-    * slim hash frame; no reference text is read. Matching is on the
-    * 64-bit gram hash: a birthday collision can only EXTEND removal to a
-    * clean span (the conservative direction, same as the bloom path's
-    * false positives). Fails fast on a missing/mismatched `sg_n` stamp —
+  /** Persistable gram-hash store for a reference corpus: the DISTINCT
+    * [[gramHashes]], parameter-stamped with the gram length. Build it over
+    * corpus N and persist via a file sink; run N+1 re-loads the parquet
+    * and passes it to `dedup_spans` via `signatureView` — span-level
+    * decontamination / incremental ingestion WITHOUT re-scanning the
+    * reference's text (the span analogue of [[Dedup.minhashSignatures]]).
+    * The distinct shuffle is paid once at store-build time and amortized
+    * over every increment; the store is one long + one int per distinct
+    * gram. Its `gh` column is also the exact text-reference path's hash
+    * frame, so a store and the text it was built from match the same
+    * spans by construction. */
+  def gramSignatures(df: DataFrame, textCol: String, n: Int = 8): DataFrame =
+    gramHashes(df, textCol, n).distinct().withColumn("sg_n", lit(n))
+
+  /** The `gh` hash frame of a PERSISTED [[gramSignatures]] store, after
+    * the layout and parameter-stamp check ([[graft.operators.Stores.check]]):
     * a store built with a different gram length would silently match
-    * nothing. */
-  def dupSpansAgainstStore(df: DataFrame, idCol: String, textCol: String,
-                           store: DataFrame, n: Int = 8): DataFrame = {
-    val hashes = validatedStoreHashes(store, n)
+    * nothing, so a missing or mismatched `sg_n` fails fast. */
+  def storeHashes(store: DataFrame, n: Int = 8): DataFrame = {
+    require(n >= 2, s"dedup_spans: n must be >= 2, got $n")
+    graft.operators.Stores.check(store, graft.operators.Stores.GramSignatures, n)
+    store.select("gh")
+  }
+
+  /** Reference variant of [[dupSpans]]: maximal runs of >= `n` tokens
+    * whose grams appear in a reference, given as a one-column frame of
+    * 64-bit gram hashes ([[gramHashes]] of a text corpus, distinct as in
+    * [[gramSignatures]], or a store's [[storeHashes]]) — span-level
+    * decontamination (strip benchmark text) and incremental ingestion
+    * (against yesterday's corpus). The increment's gram stream semi-joins
+    * the hash frame (broadcast-able for benchmark-sized references, an
+    * ordinary hash join otherwise), so neither side's text rides the
+    * exchange. A 64-bit collision can only EXTEND removal to a clean span,
+    * the conservative direction. Within-increment repetition is
+    * deliberately NOT considered — compose with [[dupSpans]] when both
+    * are wanted. */
+  def referenceSpans(df: DataFrame, idCol: String, textCol: String,
+                     hashes: DataFrame, n: Int = 8): DataFrame = {
+    require(n >= 2, s"dedup_spans: n must be >= 2, got $n")
     val hits = gramStarts(df, idCol, textCol, n)
       .where(col("__id").isNotNull) // null-id docs pass through verbatim
       .withColumn("__gh", xxhash64(col("__gram")))
-      .join(hashes, Seq("__gh"), "left_semi")
+      .join(hashes.select(col(hashes.columns.head).as("__gh")), Seq("__gh"),
+        "left_semi")
       .select(col("__id"), (col("__p0") + 1).cast("long").as("__pos"))
     islandSpans(hits, idCol, n)
   }
 
-  /** Bloom variant of [[dupSpansAgainstStore]]: the (already-distinct)
-    * store folds into a fixed-size sketch — sized by an exact count over
-    * the slim hash frame — and the increment pays the zero-join
-    * `might_contain` filter. For stores too large to semi-join per
-    * increment. */
-  def dupSpansAgainstStoreBloom(df: DataFrame, idCol: String, textCol: String,
-                                store: DataFrame, n: Int = 8,
-                                fpp: Double = 1e-4): DataFrame = {
+  /** FIXED-SIZE variant of [[referenceSpans]] for references too large to
+    * join per increment (yesterday's 100 TB corpus): the hash frame folds
+    * driver-side into one bloom sketch ([[Dedup.bloomProbe]]), sized by a
+    * one-pass HLL estimate of its distinct hashes with 10% headroom (zero
+    * shuffle, so a non-distinct text [[gramHashes]] frame costs the
+    * reference no exchange; an estimate a few percent low only nudges the
+    * effective fpp up), and the increment pays a zero-join codegen'd
+    * `might_contain` filter instead of the semi-join exchange. False
+    * positives only EXTEND removal to clean spans (probability ≈ fpp per
+    * gram) — reference text is never missed. */
+  def referenceSpansBloom(df: DataFrame, idCol: String, textCol: String,
+                          hashes: DataFrame, n: Int = 8,
+                          fpp: Double = 1e-4): DataFrame = {
+    require(n >= 2, s"dedup_spans: n must be >= 2, got $n")
     require(fpp > 0 && fpp < 1, s"dedup_spans: fpp must be in (0,1), got $fpp")
-    val hashes = validatedStoreHashes(store, n)
-    bloomIslandSpans(df, idCol, textCol, n,
-      hashes.stat.bloomFilter("__gh", math.max(hashes.count(), 64L), fpp))
-  }
-
-  /** Shared tail of both bloom paths (text reference and persisted
-    * store): serialize the sketch once, filter the increment's gram
-    * stream with the zero-join codegen'd `might_contain`, island the
-    * surviving starts. */
-  private def bloomIslandSpans(df: DataFrame, idCol: String, textCol: String,
-                               n: Int,
-                               bloom: org.apache.spark.util.sketch.BloomFilter): DataFrame = {
-    val bos = new java.io.ByteArrayOutputStream()
-    bloom.writeTo(bos)
-    import org.apache.spark.sql.GraftBridge
-    val mightContain = GraftBridge.column(
-      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-        GraftBridge.expression(lit(bos.toByteArray)),
-        GraftBridge.expression(xxhash64(col("__gram")))))
+    val expected = math.max(
+      (hashes.agg(approx_count_distinct(col(hashes.columns.head)))
+        .head.getLong(0) * 1.1).toLong, 64L)
+    val mightContain = Dedup.bloomProbe(hashes, expected, fpp)
     val hits = gramStarts(df, idCol, textCol, n)
       .where(col("__id").isNotNull) // null-id docs pass through verbatim
-      .where(mightContain)
+      .where(mightContain(xxhash64(col("__gram"))))
       .select(col("__id"), (col("__p0") + 1).cast("long").as("__pos"))
     islandSpans(hits, idCol, n)
   }
 
-  /** Removal through the store — see [[dupSpansAgainstStore]]. */
-  def removeSpansAgainstStore(df: DataFrame, idCol: String, textCol: String,
-                              store: DataFrame, n: Int = 8): DataFrame =
-    removeSpans(df, idCol, textCol, dupSpansAgainstStore(df, idCol, textCol, store, n))
-
-  /** Removal through the store's bloom path — see
-    * [[dupSpansAgainstStoreBloom]]. */
-  def removeSpansAgainstStoreBloom(df: DataFrame, idCol: String, textCol: String,
-                                   store: DataFrame, n: Int = 8,
-                                   fpp: Double = 1e-4): DataFrame =
-    removeSpans(df, idCol, textCol,
-      dupSpansAgainstStoreBloom(df, idCol, textCol, store, n, fpp))
-
-  /** Layout + parameter-stamp validation for a [[gramSignatures]] store
-    * ([[graft.operators.Stores.check]]); returns the slim hash frame keyed
-    * `__gh`. */
-  private def validatedStoreHashes(store: DataFrame, n: Int): DataFrame = {
-    require(n >= 2, s"dedup_spans: n must be >= 2, got $n")
-    graft.operators.Stores.check(store, graft.operators.Stores.GramSignatures, n)
-    store.select(col("gh").as("__gh"))
-  }
-
-  /** Remove every occurrence of every duplicated span from `textCol`
-    * (other columns untouched). Documents without duplicated spans are
-    * byte-identical to their input (no retokenization); affected
-    * documents are rebuilt from their surviving original-case tokens
-    * joined by single spaces — fully-duplicated documents become empty
-    * strings, null texts stay null. */
-  def removeDupSpans(df: DataFrame, idCol: String, textCol: String,
-                     n: Int = 8, minCount: Int = 2): DataFrame =
-    removeSpans(df, idCol, textCol, dupSpans(df, idCol, textCol, n, minCount))
-
-  /** Remove every span present in `ref` from `textCol` — benchmark
-    * decontamination / incremental ingestion with surgical span removal
-    * instead of whole-document drops (the `decontaminate` transform's
-    * document-level gate). Same rebuild contract as [[removeDupSpans]]. */
-  def removeSpansAgainst(df: DataFrame, idCol: String, textCol: String,
-                         ref: DataFrame, refTextCol: String, n: Int = 8): DataFrame =
-    removeSpans(df, idCol, textCol,
-      dupSpansAgainst(df, idCol, textCol, ref, refTextCol, n))
-
-  /** Removal through the bloom path — see [[dupSpansAgainstBloom]]. */
-  def removeSpansAgainstBloom(df: DataFrame, idCol: String, textCol: String,
-                              ref: DataFrame, refTextCol: String, n: Int = 8,
-                              fpp: Double = 1e-4): DataFrame =
-    removeSpans(df, idCol, textCol,
-      dupSpansAgainstBloom(df, idCol, textCol, ref, refTextCol, n, fpp))
-
-  /** Rewrite `textCol` dropping every token covered by a span in `spans`
-    * (the output shape of [[dupSpans]]). Affected documents rebuild from
-    * original-case tokens; unaffected documents pass through byte-identical. */
-  private def removeSpans(df: DataFrame, idCol: String, textCol: String,
+  /** Remove every span of `spanFrame` (the output shape of [[dupSpans]]
+    * and [[referenceSpans]]) from `textCol`, other columns untouched.
+    * Documents without spans are byte-identical to their input (no
+    * retokenization); affected documents are rebuilt from their surviving
+    * original-case tokens joined by single spaces — fully-covered
+    * documents become empty strings, null texts stay null. */
+  def removeSpans(df: DataFrame, idCol: String, textCol: String,
                           spanFrame: DataFrame): DataFrame = {
     val spans = spanFrame
       .groupBy(col(idCol).as("__sid"))
@@ -336,13 +259,13 @@ object SpanDedupTransform extends Transform {
   val transformType = "dedup_spans"
   private val IdColumn = Opt.column("idColumn").required
   private val TextColumn = Opt.column("textColumn").required
-  private val N = Opt.int("n").default(8)
-  private val MinCount = Opt.int("minCount").default(2)
+  private val N = Opt.int("n", min = 2).default(8)
+  private val MinCount = Opt.int("minCount", min = 2).default(2)
   private val ReferenceView = Opt.view("referenceView")
   private val ReferenceTextColumn = Opt.string("referenceTextColumn")
   private val SignatureView = Opt.view("signatureView")
   private val Method = Opt.oneOf("method", "exact", "bloom").default("exact")
-  private val Fpp = Opt.double("fpp").default(1e-4)
+  private val Fpp = Dedup.fppOption
   private val Mode = Opt.oneOf("mode", "remove", "report").default("remove")
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     val id = IdColumn(config); val text = TextColumn(config)
@@ -359,47 +282,36 @@ object SpanDedupTransform extends Transform {
     if ((ref.isDefined || sig.isDefined) && MinCount.isSet(config))
       throw new ConfigException("dedup_spans: minCount does not apply with " +
         "referenceView/signatureView (any reference occurrence marks the span)")
-    val method = Method(config)
-    if (method == "bloom" && ref.isEmpty && sig.isEmpty) throw new ConfigException(
+    val bloom = Method(config) == "bloom"
+    if (bloom && ref.isEmpty && sig.isEmpty) throw new ConfigException(
       "dedup_spans: method bloom requires referenceView or signatureView " +
         "(corpus-scope duplication needs exact counts, not membership)")
     // fpp only parameterizes the bloom sketch — with method=exact the user
     // likely meant method: bloom; reject rather than silently ignore
-    if (method != "bloom" && Fpp.isSet(config))
+    if (!bloom && Fpp.isSet(config))
       throw new ConfigException(
         "dedup_spans: fpp only applies with method: bloom — the exact path " +
           "has no false-positive rate to configure")
-    val fpp = Fpp(config)
-    val report = Mode(config) == "report"
     // every branch consumes the input at least twice (the gram stream,
     // corpus-scope dup counting, and remove-mode's rebuild join) — in a
     // composed pipeline each consumer would re-execute the whole upstream
     // tower without lineage truncation (the dedupLines/NearDupTransform
     // fix, measured 2-3x stage cost on q154's stack)
     val staged = graft.api.Checkpointing.shared(input)
-    (ref, sig, method, report) match {
-      case (Some((r, rt)), None, "bloom", false) =>
-        SpanDedup.removeSpansAgainstBloom(staged, id, text, r, rt, n, fpp)
-      case (Some((r, rt)), None, "bloom", true) =>
-        SpanDedup.dupSpansAgainstBloom(staged, id, text, r, rt, n, fpp)
-      case (Some((r, rt)), None, _, false) =>
-        SpanDedup.removeSpansAgainst(staged, id, text, r, rt, n)
-      case (Some((r, rt)), None, _, true) =>
-        SpanDedup.dupSpansAgainst(staged, id, text, r, rt, n)
-      case (None, Some(st), "bloom", false) =>
-        SpanDedup.removeSpansAgainstStoreBloom(staged, id, text, st, n, fpp)
-      case (None, Some(st), "bloom", true) =>
-        SpanDedup.dupSpansAgainstStoreBloom(staged, id, text, st, n, fpp)
-      case (None, Some(st), _, false) =>
-        SpanDedup.removeSpansAgainstStore(staged, id, text, st, n)
-      case (None, Some(st), _, true) =>
-        SpanDedup.dupSpansAgainstStore(staged, id, text, st, n)
-      case (None, None, _, false) =>
-        SpanDedup.removeDupSpans(staged, id, text, n, minCount)
-      case (None, None, _, true) =>
-        SpanDedup.dupSpans(staged, id, text, n, minCount)
-      case _ => throw new IllegalStateException("unreachable")
+    // the reference as a gram-hash frame: bloom insertion is idempotent,
+    // so only the semi-join's build side pays for distinct hashes
+    val hashes = ref.map { case (r, rt) =>
+        if (bloom) SpanDedup.gramHashes(r, rt, n)
+        else SpanDedup.gramSignatures(r, rt, n).select("gh")
+      }.orElse(sig.map(SpanDedup.storeHashes(_, n)))
+    val spans = hashes match {
+      case None => SpanDedup.dupSpans(staged, id, text, n, minCount)
+      case Some(h) if bloom =>
+        SpanDedup.referenceSpansBloom(staged, id, text, h, n, Fpp(config))
+      case Some(h) => SpanDedup.referenceSpans(staged, id, text, h, n)
     }
+    if (Mode(config) == "report") spans
+    else SpanDedup.removeSpans(staged, id, text, spans)
     } catch { case e: IllegalArgumentException => throw new ConfigException(e.getMessage) }
   }
 }
@@ -413,7 +325,7 @@ object SpanDedupTransform extends Transform {
 object GramSignaturesTransform extends Transform {
   val transformType = "gram_signatures"
   private val TextColumn = Opt.column("textColumn").required
-  private val N = Opt.int("n").default(8)
+  private val N = Opt.int("n", min = 2).default(8)
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     try SpanDedup.gramSignatures(input, TextColumn(config), N(config))
     catch { case e: IllegalArgumentException => throw new ConfigException(e.getMessage) }

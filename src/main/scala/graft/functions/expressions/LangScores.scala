@@ -41,14 +41,6 @@ final class LangLmModel(val labels: Array[String], val lnDen: Array[Double],
   require(labels.length == lnDen.length)
   require(gramKeys.length == gramLabelIdx.length &&
     gramKeys.length == gramLnNum.length)
-  def vocabSize: Int = gramKeys.length
-  /** Total stored (labelIdx, ln) pairs — the model's real footprint unit:
-    * equals the store's row count, NOT distinct_grams × labels. */
-  def storedPairs: Long = {
-    var s = 0L; var i = 0
-    while (i < gramLabelIdx.length) { s += gramLabelIdx(i).length; i += 1 }
-    s
-  }
   @transient lazy val table: java.util.HashMap[UTF8String, LangLmModel.Entry] = {
     val m = new java.util.HashMap[UTF8String, LangLmModel.Entry](gramKeys.length * 2)
     var i = 0

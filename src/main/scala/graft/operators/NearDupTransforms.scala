@@ -259,7 +259,8 @@ object SimhashDedupTransform extends NearDupTransform with HammingKnobs {
   * increment dedups against history without re-parsing a single
   * historical container. */
 private[operators] trait HammingKnobs extends Transform {
-  protected val MaxHamming = Opt.int("maxHamming").default(3)
+  // the blocking needs maxHamming+1 chunks of at least 4 bits
+  protected val MaxHamming = Opt.int("maxHamming", min = 0, max = 15).default(3)
   protected val MaxBucketSize = Opt.int("maxBucketSize").default(10000)
 }
 private[operators] trait MediaSigIncrement extends NearDupTransform with HammingKnobs {
@@ -477,8 +478,9 @@ private[operators] trait EmbeddingIncrement extends NearDupTransform {
 
 object EmbeddingDedupTransform extends EmbeddingIncrement {
   val transformType = "dedup_embedding"
-  private val Bits = Opt.int("bits").default(8)
-  private val Tables = Opt.int("tables").default(4)
+  // HyperplaneBuckets' bounds
+  private val Bits = Opt.int("bits", min = 1, max = 30).default(8)
+  private val Tables = Opt.int("tables", min = 1).default(4)
   private val MaxBucketSize = Opt.int("maxBucketSize").default(1000)
   protected def pairs(input: DataFrame, id: String, vec: String,
                       config: TransformConfig): DataFrame =
@@ -674,7 +676,7 @@ object DecontaminateTransform extends Transform {
   private val ShingleSize = Opt.int("shingleSize").default(3)
   private val Method = Opt.oneOf("method", "exact", "bloom").default("exact")
   // method: bloom only
-  private val Fpp = Opt.double("fpp").default(1e-4)
+  private val Fpp = Dedup.fppOption
   def apply(input: DataFrame, config: TransformConfig, ctx: RunContext): DataFrame = {
     val id = IdColumn(config)
     val text = TextColumn(config)

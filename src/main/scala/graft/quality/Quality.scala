@@ -1,6 +1,6 @@
 package graft.quality
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -59,14 +59,6 @@ object SchemaValidator {
     }
 }
 
-final case class QualityReport(
-    totalRows: Long,
-    nullViolations: Map[String, Long],
-    duplicateRows: Long) {
-  def nullRate(column: String): Double =
-    if (totalRows == 0) 0.0 else nullViolations.getOrElse(column, 0L).toDouble / totalRows
-}
-
 /**
  * One-pass data-quality metrics. The reference runs a separate
  * filter().count() job per checked column plus a distinct().count()
@@ -94,20 +86,6 @@ object QualityChecker {
         coalesce(sum(when(col(c).isNull, 1L).otherwise(0L)), lit(0L)).as(s"null_$c")) ++
        distinctColumns.map(c => countDistinct(col(c)).as(s"distinct_$c")))
     df.agg(aggs.head, aggs.tail: _*)
-  }
-
-  def checkQuality(df: DataFrame, nullColumns: Seq[String], dupColumns: Seq[String] = Nil): QualityReport = {
-    val row: Row = metricsFrame(df, nullColumns).head()
-    val total = row.getLong(0)
-    val nulls = nullColumns.zipWithIndex.map { case (c, i) => c -> row.getLong(i + 1) }.toMap
-    val dupCols = if (dupColumns.nonEmpty) dupColumns else df.columns.toSeq
-    // non-orderable columns (maps) key by their JSON form — raw distinct()
-    // over a map column fails analysis; same substitution as the executor's
-    // duplicate gate
-    val keyed = dupCols.map(c =>
-      graft.config.ExprUtils.orderableOrJson(df.schema, c).as(c))
-    val distinct = df.select(keyed: _*).distinct().count()
-    QualityReport(total, nulls, total - distinct)
   }
 
   /** Single validity predicate for the configured null checks (conjunction

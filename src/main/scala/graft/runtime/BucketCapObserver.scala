@@ -15,7 +15,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
  * observable, or an operator has no way to see how much recall the cap
  * cost on a given corpus.
  *
- * [[observeCap]] attaches a Spark `observe()` (a zero-job CollectMetrics
+ * [[cappedBlocks]] attaches a Spark `observe()` (a zero-job CollectMetrics
  * node riding the existing action) to the pre-filter frame, counting
  *   - `rows_dropped`   — (id, bucket) rows in over-cap buckets,
  *   - `pairs_dropped`  — self-join candidate pairs those rows would have
@@ -46,8 +46,22 @@ object BucketCapObserver {
   /** Prefix every cap metric name carries; the listener keys off it. */
   val MetricPrefix = "graft.cap."
 
+  /** The capped-block step every candidate-generation path shares: size
+    * each block (the rows sharing `keys`) into `sizeCol`, observe what the
+    * cap drops ([[observeCap]]), keep the blocks of at most `cap` rows and
+    * drop the size column. `op` names the calling operator in the
+    * metric/log line; `selfPairs = false` on every increment × reference
+    * side. */
+  def cappedBlocks(frame: DataFrame, keys: Seq[String], cap: Int, op: String,
+                   selfPairs: Boolean, sizeCol: String = "bucket_n"): DataFrame =
+    observeCap(frame.withColumn(sizeCol, count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*))),
+        op, sizeCol, cap, selfPairs)
+      .filter(col(sizeCol) <= cap)
+      .drop(sizeCol)
+
   /** Observe the size column BEFORE the `sizeCol <= cap` filter runs.
-    * `op` names the calling operator in the metric/log line. Every metric
+    * Every metric
     * is coalesced — an EMPTY observed frame (e.g. a no-new-docs increment)
     * yields sum() = NULL, and an uncoalesced long would NPE inside the
     * listener. `selfPairs = false` marks cross-join candidate paths
@@ -56,8 +70,8 @@ object BucketCapObserver {
     * so pairs_dropped reports the -1 "not applicable" sentinel instead of
     * a self-join number that would overstate the cost by orders of
     * magnitude. */
-  def observeCap(df: DataFrame, op: String, sizeCol: String, cap: Int,
-                 selfPairs: Boolean = true): DataFrame = {
+  private def observeCap(df: DataFrame, op: String, sizeCol: String, cap: Int,
+                         selfPairs: Boolean): DataFrame = {
     ensureListener(df.sparkSession)
     val name = s"$MetricPrefix$op.${counter.incrementAndGet()}"
     val pairs =

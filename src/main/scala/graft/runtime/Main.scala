@@ -102,7 +102,6 @@ object Main {
     val config = new YamlConfigParser().parseFile(app.pipelinePath)
     implicit val spark: SparkSession = createSparkSession(app)
     spark.sparkContext.setLogLevel("WARN")
-    val metrics = new MetricsCollector()
     // exit code decided INSIDE the try, exit called AFTER the finally:
     // sys.exit inside the try would begin JVM shutdown without unwinding
     // the stack, so the finally's spark.stop() would never run
@@ -117,7 +116,6 @@ object Main {
           log.info("dry-run ok", Map("pipelineId" -> config.pipelineId))
         case ExecutionMode.Batch =>
           val m = new PipelineExecutor().execute(config)
-          metrics.record(m)
           log.info("pipeline finished", Map(
             "pipelineId" -> m.pipelineId, "runId" -> m.runId, "status" -> m.status,
             "recordsLoaded" -> m.recordsLoaded.toString,

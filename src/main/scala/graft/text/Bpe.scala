@@ -557,15 +557,6 @@ object Bpe {
                 wantMinCount: Option[Long] = None): IndexedSeq[String] =
     load(store, wantNumMerges, wantMinCount).vocab
 
-  /** One validated store read feeding both the encoder (merges) and the
-    * id assignment (vocab). */
-  def loadMergesAndVocab(store: DataFrame, wantNumMerges: Option[Int] = None,
-                         wantMinCount: Option[Long] = None)
-      : (Seq[(String, String)], IndexedSeq[String]) = {
-    val l = load(store, wantNumMerges, wantMinCount)
-    (l.merges, l.vocab)
-  }
-
   /** [[loadVocab]] as a (token_id, token) frame — the export/join-back
     * surface (detokenize persisted id sequences in plain SQL). */
   def vocabFrame(store: DataFrame, wantNumMerges: Option[Int] = None,

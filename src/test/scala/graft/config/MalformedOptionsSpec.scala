@@ -175,6 +175,58 @@ class MalformedOptionsSpec extends SparkTestBase {
     withClue(misses.mkString("\n", "\n", "\n")) { misses shouldBe empty }
   }
 
+  test("the dedup library's ranges are declared, so the pre-flight check " +
+    "refuses them before any read") {
+    frame.columns should not be empty // registers malformed_right
+    def tc(typ: String, opts: (String, String)*) = TransformConfig(s"$typ-step", typ, opts.toMap)
+    val spans = Seq("idColumn" -> "id", "textColumn" -> "text")
+    val bloomRef = Seq("method" -> "bloom", "referenceView" -> "malformed_right")
+    val lines = Seq("idColumn" -> "id", "textColumn" -> "text")
+    val media = Seq("idColumn" -> "id", "bytesColumn" -> "text")
+    // (step, the key the refusal names)
+    val refused = Seq(
+      tc("dedup_spans", spans :+ ("n" -> "1"): _*) -> "n",
+      tc("dedup_spans", spans :+ ("minCount" -> "1"): _*) -> "minCount",
+      tc("dedup_spans", spans ++ bloomRef :+ ("fpp" -> "0"): _*) -> "fpp",
+      tc("dedup_spans", spans ++ bloomRef :+ ("fpp" -> "1"): _*) -> "fpp",
+      tc("gram_signatures", "textColumn" -> "text", "n" -> "1") -> "n",
+      tc("dedup_lines", lines :+ ("minLength" -> "0"): _*) -> "minLength",
+      tc("dedup_lines", lines :+ ("separator" -> ""): _*) -> "separator",
+      tc("line_signatures", "textColumn" -> "text", "minLength" -> "0") -> "minLength",
+      tc("line_signatures", "textColumn" -> "text", "separator" -> "") -> "separator",
+      tc("dedup_simhash", "idColumn" -> "id", "textColumn" -> "text",
+        "maxHamming" -> "16") -> "maxHamming",
+      tc("dedup_image", media :+ ("maxHamming" -> "-1"): _*) -> "maxHamming",
+      tc("dedup_audio", media :+ ("maxHamming" -> "16"): _*) -> "maxHamming",
+      tc("dedup_video", media :+ ("maxHamming" -> "16"): _*) -> "maxHamming",
+      tc("decontaminate", "idColumn" -> "id", "textColumn" -> "text",
+        "benchDataset" -> "malformed_right", "method" -> "bloom", "fpp" -> "1.5") -> "fpp",
+      tc("dedup_embedding", "idColumn" -> "id", "vecColumn" -> "vec", "bits" -> "31") -> "bits",
+      tc("dedup_embedding", "idColumn" -> "id", "vecColumn" -> "vec", "tables" -> "0") -> "tables")
+    val misses = refused.flatMap { case (step, key) =>
+      val j0 = JobCount.started(spark.sparkContext)
+      val outcome =
+        try { PipelineExecutor.checkSteps(Seq(step), transforms, spark); Some("accepted") }
+        catch {
+          case e: ConfigException =>
+            if (e.getMessage.contains(s"${step.transformType}: $key ")) None
+            else Some(s"message '${e.getMessage}' does not name $key")
+        }
+      val jobs = JobCount.started(spark.sparkContext) - j0
+      (outcome.toSeq ++ (if (jobs == 0) Nil else Seq(s"$jobs Spark job(s) started")))
+        .map(p => s"${step.transformType} ${step.options}: $p")
+    }
+    withClue(misses.mkString("\n", "\n", "\n")) { misses shouldBe empty }
+    // the bounds are inclusive where the library's are: the edge values pass
+    PipelineExecutor.checkSteps(Seq(
+      tc("dedup_spans", spans ++ Seq("n" -> "2", "minCount" -> "2"): _*),
+      tc("dedup_simhash", "idColumn" -> "id", "textColumn" -> "text", "maxHamming" -> "15"),
+      tc("dedup_simhash", "idColumn" -> "id", "textColumn" -> "text", "maxHamming" -> "0"),
+      tc("dedup_lines", lines :+ ("minLength" -> "1"): _*),
+      tc("dedup_embedding", "idColumn" -> "id", "vecColumn" -> "vec", "bits" -> "30",
+        "tables" -> "1")), transforms, spark)
+  }
+
   test("the sink's lineage flag fails the run before any job") {
     val j0 = JobCount.started(spark.sparkContext)
     val m = new PipelineExecutor().execute(

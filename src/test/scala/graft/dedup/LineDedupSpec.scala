@@ -9,6 +9,10 @@ class LineDedupSpec extends SparkTestBase {
 
   private def ctx = RunContext(spark, "t", "r")
 
+  /** Spark jobs the referenceView run of the line parity test started
+    * when `dedupLinesAgainst` had its own anti-join and rebuild. */
+  private val LineParityJobs = 5
+
   test("first occurrence survives corpus-wide; docs rebuilt in line order") {
     val d = Seq(
       (1L, "alpha\nboiler plate\nbeta"),
@@ -162,6 +166,31 @@ class LineDedupSpec extends SparkTestBase {
         Map("idColumn" -> "doc_id", "textColumn" -> "text",
           "referenceView" -> "line_ref_eq", "signatureView" -> "line_store")), ctx)
     }.getMessage should include ("mutually exclusive")
+  }
+
+  test("referenceView equals signatureView over lineSignatures(ref) on a " +
+    "planted corpus, and starts no more Spark jobs than before the shared core") {
+    // reference: 20 docs, each with one boilerplate line and one own line;
+    // increment: 40 docs, each prefixed with a reference boilerplate line
+    val ref = (0 until 20).map(i => (i.toLong, s"boiler plate $i\nreference body $i"))
+      .toDF("rid", "text")
+    val inc = (100 until 140).map(i =>
+      (i.toLong, s"boiler plate ${i % 20}\nincrement body $i\nbb\nincrement body $i"))
+      .toDF("doc_id", "text")
+    ref.createOrReplaceTempView("line_parity_ref")
+    LineDedup.lineSignatures(ref, "text").createOrReplaceTempView("line_parity_store")
+    def run(view: (String, String)) = LineDedupTransform(inc, TransformConfig("t",
+      "dedup_lines", Map("idColumn" -> "doc_id", "textColumn" -> "text", view)), ctx)
+      .as[(Long, String)].collect().sorted.toSeq
+    val j0 = org.apache.spark.scheduler.JobCount.started(spark.sparkContext)
+    val viaText = run("referenceView" -> "line_parity_ref")
+    val jobs = org.apache.spark.scheduler.JobCount.started(spark.sparkContext) - j0
+    viaText shouldBe run("signatureView" -> "line_parity_store")
+    viaText.map(_._2) shouldBe (100 until 140).map(i =>
+      s"increment body $i\nbb\nincrement body $i")
+    // the text path reads no store stamps: as many jobs as the separate
+    // text-reference implementation started on this corpus
+    jobs should be <= LineParityJobs
   }
 
   test("document scope rejects referenceView instead of silently ignoring it") {

@@ -9,6 +9,13 @@ class SpanDedupSpec extends SparkTestBase {
 
   private def ctx = RunContext(spark, "t", "r")
 
+  // a text reference as the exact core's hash frame (distinct, the
+  // gramSignatures layout) and as the bloom core's (every occurrence)
+  private def textHashes(ref: org.apache.spark.sql.DataFrame) =
+    SpanDedup.gramSignatures(ref, "text", n = 4).select("gh")
+  private def textGrams(ref: org.apache.spark.sql.DataFrame) =
+    SpanDedup.gramHashes(ref, "text", n = 4)
+
   // 10 shared tokens: every 4-gram window inside them is duplicated
   private val shared = "one two three four five six seven eight nine ten"
 
@@ -74,7 +81,8 @@ class SpanDedupSpec extends SparkTestBase {
       (4L, null.asInstanceOf[String]),
       (5L, s"prefix5 $shared")
     ).toDF("doc_id", "text")
-    val out = SpanDedup.removeDupSpans(d, "doc_id", "text", n = 4)
+    val out = SpanDedup.removeSpans(d, "doc_id", "text",
+      SpanDedup.dupSpans(d, "doc_id", "text", n = 4))
       .as[(Long, String)].collect().toMap
     out(1L) shouldBe "KeepMe  Exactly  As-Is" // double spaces preserved
     out(2L) shouldBe "Unique2"                // survivor keeps its casing
@@ -122,10 +130,11 @@ class SpanDedupSpec extends SparkTestBase {
       (1L, s"intro $shared outro"),
       (2L, "say it again say it again say it again and again today")
     ).toDF("doc_id", "text")
-    val spans = SpanDedup.dupSpansAgainst(inc, "doc_id", "text", ref, "text", n = 4)
+    val spans = SpanDedup.referenceSpans(inc, "doc_id", "text", textHashes(ref), n = 4)
       .as[(Long, Long, Long, Long)].collect().sorted
     spans shouldBe Seq((1L, 2L, 11L, 10L))
-    val out = SpanDedup.removeSpansAgainst(inc, "doc_id", "text", ref, "text", n = 4)
+    val out = SpanDedup.removeSpans(inc, "doc_id", "text",
+        SpanDedup.referenceSpans(inc, "doc_id", "text", textHashes(ref), n = 4))
       .as[(Long, String)].collect().toMap
     out(1L) shouldBe "intro outro"
     out(2L) shouldBe "say it again say it again say it again and again today"
@@ -148,17 +157,18 @@ class SpanDedupSpec extends SparkTestBase {
       (1L, s"intro $shared outro"),
       (2L, "say it again say it again say it again and again today")
     ).toDF("doc_id", "text")
-    val exact = SpanDedup.dupSpansAgainst(inc, "doc_id", "text", ref, "text", n = 4)
+    val exact = SpanDedup.referenceSpans(inc, "doc_id", "text", textHashes(ref), n = 4)
       .as[(Long, Long, Long, Long)].collect().sorted
-    val bloom = SpanDedup.dupSpansAgainstBloom(inc, "doc_id", "text", ref, "text", n = 4)
+    val bloom = SpanDedup.referenceSpansBloom(inc, "doc_id", "text", textGrams(ref), n = 4)
       .as[(Long, Long, Long, Long)].collect().sorted
     bloom shouldBe exact
-    val rem = SpanDedup.removeSpansAgainstBloom(inc, "doc_id", "text", ref, "text", n = 4)
+    val rem = SpanDedup.removeSpans(inc, "doc_id", "text",
+        SpanDedup.referenceSpansBloom(inc, "doc_id", "text", textGrams(ref), n = 4))
       .as[(Long, String)].collect().toMap
     rem(1L) shouldBe "intro outro"
     // one exchange for the islands window only: the gram filter is a
     // zero-join projection (the semi-join path has a second exchange)
-    val plan = SpanDedup.dupSpansAgainstBloom(inc, "doc_id", "text", ref, "text", n = 4)
+    val plan = SpanDedup.referenceSpansBloom(inc, "doc_id", "text", textGrams(ref), n = 4)
       .queryExecution.executedPlan.toString
     plan should include("might_contain")
     plan should not include "Join"
@@ -189,27 +199,28 @@ class SpanDedupSpec extends SparkTestBase {
     SpanDedup.gramSignatures(ref, "text", n = 4).write.mode("overwrite").parquet(dir)
     val store = spark.read.parquet(dir)
     store.columns.toSet shouldBe Set("gh", "sg_n") // slim, no text
-    val viaText = SpanDedup.dupSpansAgainst(inc, "doc_id", "text", ref, "text", n = 4)
+    val viaText = SpanDedup.referenceSpans(inc, "doc_id", "text", textHashes(ref), n = 4)
       .as[(Long, Long, Long, Long)].collect().sorted
-    SpanDedup.dupSpansAgainstStore(inc, "doc_id", "text", store, n = 4)
+    SpanDedup.referenceSpans(inc, "doc_id", "text", SpanDedup.storeHashes(store, n = 4), n = 4)
       .as[(Long, Long, Long, Long)].collect().sorted shouldBe viaText
-    SpanDedup.dupSpansAgainstStoreBloom(inc, "doc_id", "text", store, n = 4)
+    SpanDedup.referenceSpansBloom(inc, "doc_id", "text",
+        SpanDedup.storeHashes(store, n = 4), n = 4)
       .as[(Long, Long, Long, Long)].collect().sorted shouldBe viaText
-    SpanDedup.removeSpansAgainstStore(inc, "doc_id", "text", store, n = 4)
+    SpanDedup.removeSpans(inc, "doc_id", "text", SpanDedup.referenceSpans(inc,
+        "doc_id", "text", SpanDedup.storeHashes(store, n = 4), n = 4))
       .as[(Long, String)].collect().toMap.apply(1L) shouldBe "intro outro"
     an[graft.api.ConfigException] should be thrownBy
-      SpanDedup.dupSpansAgainstStore(inc, "doc_id", "text", store, n = 5)
+      SpanDedup.storeHashes(store, n = 5)
     an[graft.api.ConfigException] should be thrownBy
-      SpanDedup.dupSpansAgainstStore(inc, "doc_id", "text",
-        inc.selectExpr("doc_id AS gh"), n = 4) // missing sg_n stamp
+      SpanDedup.storeHashes(inc.selectExpr("doc_id AS gh"), n = 4) // missing sg_n stamp
     // a MIXED-stamp store (two builds appended) fails no matter which
     // row a sample would have surfaced; a null stamp is a config error
     val mixed = store.unionByName(
       SpanDedup.gramSignatures(ref, "text", n = 5))
     an[graft.api.ConfigException] should be thrownBy
-      SpanDedup.dupSpansAgainstStore(inc, "doc_id", "text", mixed, n = 4)
+      SpanDedup.storeHashes(mixed, n = 4)
     an[graft.api.ConfigException] should be thrownBy
-      SpanDedup.dupSpansAgainstStore(inc, "doc_id", "text",
+      SpanDedup.storeHashes(
         store.selectExpr("gh", "CAST(NULL AS INT) AS sg_n"), n = 4)
     // declarative surface: signatureView consumes the store; mutual
     // exclusion with referenceView enforced
@@ -248,7 +259,8 @@ class SpanDedupSpec extends SparkTestBase {
     spans(0) should not be empty
     spans(1) shouldBe spans(0)
     spans(2) shouldBe spans(0)
-    val removed = dfs.map(SpanDedup.removeDupSpans(_, "doc_id", "text", n = 4)
+    val removed = dfs.map(df => SpanDedup.removeSpans(df, "doc_id", "text",
+      SpanDedup.dupSpans(df, "doc_id", "text", n = 4))
       .as[(Long, String)].collect().sorted.toSeq)
     removed(1) shouldBe removed(0)
     removed(2) shouldBe removed(0)
@@ -277,7 +289,8 @@ class SpanDedupSpec extends SparkTestBase {
     spans.map(s => (s._1.get, s._2, s._3, s._4)).toSeq shouldBe
       Seq((1L, 4L, 13L, 10L), (2L, 1L, 10L, 10L), (3L, 2L, 11L, 10L))
     // removal: null-id docs byte-identical, id-bearing docs stripped
-    val out = SpanDedup.removeDupSpans(d, "doc_id", "text", n = 4)
+    val out = SpanDedup.removeSpans(d, "doc_id", "text",
+      SpanDedup.dupSpans(d, "doc_id", "text", n = 4))
       .as[(Option[Long], String)].collect()
     out.filter(_._1.isEmpty).map(_._2).sorted shouldBe
       Array(s"p q r $other s", s"x y $shared z")
@@ -291,6 +304,7 @@ class SpanDedupSpec extends SparkTestBase {
     spans.queryExecution.executedPlan.toString should include("Window")
     graft.plans.PlanLint.errors(spans) shouldBe empty
     graft.plans.PlanLint.errors(
-      SpanDedup.removeDupSpans(d, "doc_id", "text", n = 4)) shouldBe empty
+      SpanDedup.removeSpans(d, "doc_id", "text",
+        SpanDedup.dupSpans(d, "doc_id", "text", n = 4))) shouldBe empty
   }
 }

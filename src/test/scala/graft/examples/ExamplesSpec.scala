@@ -374,10 +374,11 @@ class ExamplesSpec extends SparkTestBase {
     out.count() should be > 0L
     out.where("doc_id < 250").count() shouldBe 0
     // the store path must rewrite exactly like the text-reference path
-    val viaText = graft.dedup.SpanDedup.removeSpansAgainst(
-      orig, "doc_id", "text",
+    val refHashes = graft.dedup.SpanDedup.gramSignatures(
       spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .where("doc_id < 250"), "text", n = 8)
+        .where("doc_id < 250"), "text", n = 8).select("gh")
+    val viaText = graft.dedup.SpanDedup.removeSpans(orig, "doc_id", "text",
+      graft.dedup.SpanDedup.referenceSpans(orig, "doc_id", "text", refHashes, n = 8))
       .where(org.apache.spark.sql.functions.length(trim(col("text"))) > 0)
     out.select("doc_id", "text").except(viaText.select("doc_id", "text"))
       .count() shouldBe 0

@@ -261,7 +261,8 @@ class BpeSpec extends SparkTestBase {
       val docs = words.flatMap(w => Seq.fill(1 + rnd.nextInt(3))(w)).mkString(" ")
       val store = Bpe.mergesFrame(Seq(docs).toDF("text"), "text",
         numMerges = rnd.nextInt(10), maxWords = 100)
-      val (merges, vocab) = Bpe.loadMergesAndVocab(store)
+      val loaded = Bpe.load(store)
+      val (merges, vocab) = (loaded.merges, loaded.vocab)
       val rank = Bpe.ranks(merges)
       vocab.head shouldBe Bpe.Unk
       vocab.distinct.size shouldBe vocab.size // ids are unique

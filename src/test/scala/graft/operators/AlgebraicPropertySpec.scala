@@ -140,7 +140,8 @@ class AlgebraicPropertySpec extends SparkTestBase {
     val near = (1 to 54).map(i => s"tok$i").mkString(" ") + " x1 x2 x3 x4 x5 x6"
     val docs = Seq((1L, base), (2L, near)).toDF("doc_id", "text")
     val sigs = docs.select(col("doc_id"),
-      graft.dedup.Dedup.minhashSignature(col("text"), 128, 1).as("sig"))
+      graft.dedup.Dedup.minhashSignatureFromHashes(
+        graft.functions.expressions.ShingleHashes(col("text"), 1), 128).as("sig"))
       .orderBy("doc_id").select("sig").as[Seq[Long]].collect()
     val agree = sigs(0).zip(sigs(1)).count { case (x, y) => x == y } / 128.0
     val exactJ = 54.0 / 66.0 // |∩|=54, |∪|=66

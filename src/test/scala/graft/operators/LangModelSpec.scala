@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
@@ -166,7 +168,7 @@ class LangModelSpec extends SparkTestBase {
     trainStore().createOrReplaceTempView("lm_cells")
     val loaded = ChargramLm.load(spark.table("lm_cells"))
     val rowsInStore = spark.table("lm_cells").count()
-    loaded.model.vocabSize.toLong should be <= rowsInStore // sparse: per-row pairs
+    loaded.model.table.size.toLong should be <= rowsInStore // sparse: per-row pairs
     LangClassifyTransform(docs,
       t("lang_classify", "textColumn" -> "text",
         "modelView" -> "lm_cells"), ctx)
@@ -187,8 +189,9 @@ class LangModelSpec extends SparkTestBase {
       .withColumn("clm_n", lit(2)).withColumn("clm_min_count", lit(1L))
     val big = ChargramLm.load(disjoint)
     big.model.labels.length shouldBe 60
-    big.model.storedPairs shouldBe 1500L        // O(rows), not rows × labels
-    big.model.vocabSize shouldBe 1500           // disjoint vocabularies
+    // stored (label, ln) pairs: O(rows), not rows × labels
+    big.model.table.values.asScala.map(_.idx.length.toLong).sum shouldBe 1500L
+    big.model.table.size shouldBe 1500          // disjoint vocabularies
     // 1500 × 60 = 90000 dense cells would have tripped a 64k-cell budget;
     // the sparse model needs no such ceiling at all
     // a store appended to itself carries IDENTICAL stamps, so the

@@ -72,8 +72,10 @@ class StoresSpec extends SparkTestBase {
         minLength = 5),
       "ld_min_length", 7, maxJobs = 2),
     Fam("gram signatures", () => SpanDedup.gramSignatures(docs, "text", n = 4),
-      s => SpanDedup.dupSpansAgainstStore(inc, "doc_id", "text", s, n = 4),
-      s => SpanDedup.dupSpansAgainstStore(inc, "doc_id", "text", s, n = 5),
+      s => SpanDedup.referenceSpans(inc, "doc_id", "text",
+        SpanDedup.storeHashes(s, n = 4), n = 4),
+      s => SpanDedup.referenceSpans(inc, "doc_id", "text",
+        SpanDedup.storeHashes(s, n = 5), n = 5),
       "sg_n", 5, maxJobs = 2),
     Fam("codebook", () => Ann.codebookFrame(corpus, "vec_id", "embedding",
         nLists = 4, kmeansIters = 1),

@@ -41,33 +41,6 @@ class QualitySpec extends SparkTestBase {
     SchemaValidator.validate(expected, actual) shouldBe empty
   }
 
-  test("checkQuality on an EMPTY frame reports zero counts (sum over zero " +
-    "rows is SQL NULL) and map columns key by JSON in the duplicate count") {
-    val empty = Seq.empty[(Long, String)].toDF("id", "name")
-    val rep = QualityChecker.checkQuality(empty, Seq("name"))
-    rep.totalRows shouldBe 0L
-    rep.nullViolations("name") shouldBe 0L
-    rep.duplicateRows shouldBe 0L
-    val withMap = Seq(
-      (1L, Map("a" -> "x")), (2L, Map("a" -> "x")), (3L, Map("b" -> "y")))
-      .toDF("id", "attrs")
-    // default dupColumns = all columns incl. the map — must not fail analysis
-    QualityChecker.checkQuality(withMap, Seq("id")).duplicateRows shouldBe 0L
-    QualityChecker.checkQuality(withMap, Seq("id"), Seq("attrs"))
-      .duplicateRows shouldBe 1L
-  }
-
-  test("one-pass quality metrics: null counts + keyed duplicate count") {
-    val df = Seq(
-      (Some("a"), Some("x")), (None, Some("y")), (Some("a"), None), (Some("a"), Some("x")))
-      .toDF("name", "email")
-    val r = QualityChecker.checkQuality(df, Seq("name", "email"), Seq("name", "email"))
-    r.totalRows shouldBe 4
-    r.nullViolations shouldBe Map("name" -> 1, "email" -> 1)
-    r.duplicateRows shouldBe 1
-    r.nullRate("name") shouldBe 0.25
-  }
-
   test("splitValidInvalid: single predicate, complementary partitions") {
     val df = Seq((Some("a"), 1), (None, 2), (Some("c"), 3)).toDF("name", "v")
     val (valid, invalid) = QualityChecker.splitValidInvalid(df, Seq(NullCheck("name")))
@@ -84,6 +57,13 @@ class QualitySpec extends SparkTestBase {
     m.columns shouldBe Array("total_rows", "null_name", "null_email", "distinct_name")
     val row = m.head()
     (row.getLong(0), row.getLong(1), row.getLong(2), row.getLong(3)) shouldBe ((4L, 1L, 1L, 1L))
+  }
+
+  test("metricsFrame on an EMPTY frame reports zero counts (sum over zero rows " +
+    "is SQL NULL)") {
+    val empty = Seq.empty[(Long, String)].toDF("id", "name")
+    val row = QualityChecker.metricsFrame(empty, Seq("name"), Seq("name")).head()
+    (row.getLong(0), row.getLong(1), row.getLong(2)) shouldBe ((0L, 0L, 0L))
   }
 
   test("writeCounted: quarantine count comes from the write's own observation") {

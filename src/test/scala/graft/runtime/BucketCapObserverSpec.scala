@@ -81,6 +81,19 @@ class BucketCapObserverSpec extends SparkTestBase {
         row.getAs[Long]("rows_dropped") should be > 0L
         row.getAs[Double]("pairs_dropped") shouldBe -1.0
       }
+      // the hamming engine's increment × store join: 6 identical
+      // signatures put every chunk bucket of both sides over the cap
+      val sigs = (0 until 6).map(i => (i.toLong, 0x0f0f0f0f0f0f0f0fL)).toDF("doc_id", "sig")
+      val hits = Dedup.hammingNearDupsAgainstSignatures(sigs.where("doc_id < 3"), sigs,
+        maxHamming = 3, maxBucketSize = 2)
+      hits.collect() shouldBe empty
+      val hamming = hits.queryExecution.observedMetrics
+        .collect { case (n, r) if n.startsWith("graft.cap.hamming-") => n -> r }
+      hamming.keys.map(_.split('.')(2)).toSet shouldBe Set("hamming-new", "hamming-store")
+      hamming.values.foreach { row =>
+        row.getAs[Long]("rows_dropped") should be > 0L
+        row.getAs[Double]("pairs_dropped") shouldBe -1.0
+      }
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 

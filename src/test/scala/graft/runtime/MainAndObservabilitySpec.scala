@@ -83,39 +83,6 @@ class MainAndObservabilitySpec extends SparkTestBase {
     spark.conf.get(isolation) shouldBe "false"
   }
 
-  test("metrics collector: per-run records, pipeline summary, throughput, JSON export") {
-    val mc = new MetricsCollector()
-    val m1 = ExecutionMetrics("p1", "r1", "SUCCESS", 100, 90, 10, 2000,
-      stages = List(StageMetric("extract", 100, 300), StageMetric("quality", 10, 120),
-        StageMetric("transform+load", 90, 1500)))
-    // the fused transform+load stage means per-stage durations sum to
-    // (at most) the run's wall time — no double-counted write phase
-    m1.stages.map(_.durationMs).sum should be <= m1.durationMs
-    mc.record(m1)
-    mc.record(ExecutionMetrics("p1", "r2", "FAILED", -1, -1, -1, 500, Some("boom")))
-    mc.record(ExecutionMetrics("p2", "r1", "SUCCESS", 5, 5, 0, 100))
-    mc.get("p1", "r1").get.recordsLoaded shouldBe 90
-    val s = mc.summary("p1")
-    (s("runs"), s("succeeded"), s("failed")) shouldBe ((2, 1, 1))
-    s("totalRecordsLoaded") shouldBe 90L
-    mc.recordsPerSecond(mc.get("p1", "r1").get) shouldBe 45.0
-    val json = mc.toJson
-    json should startWith("[")
-    json should include(""""pipelineId":"p1","runId":"r2","status":"FAILED"""")
-    // per-stage records ride the export (reference MetricsCollector parity)
-    json should include(""""stages":[{"stage":"extract","records":100,"durationMs":300}""")
-    json should include(""""stage":"quality","records":10""")
-    // FAILED runs carry their error in the export
-    json should include(""""error":"boom"""")
-    // ids with quotes (legal YAML scalars) must escape, not break the JSON
-    mc.record(ExecutionMetrics("""p"3"""", "r1", "SUCCESS", 1, 1, 0, 10))
-    val parsed = com.fasterxml.jackson.databind.json.JsonMapper.builder()
-      .build().readTree(mc.toJson)
-    parsed.isArray shouldBe true
-    (0 until parsed.size()).map(i => parsed.get(i).get("pipelineId").asText()) should
-      contain ("""p"3"""")
-  }
-
   test("structured logger emits parseable single-line JSON with escaping") {
     val err = new java.io.ByteArrayOutputStream()
     Console.withErr(new java.io.PrintStream(err)) {
