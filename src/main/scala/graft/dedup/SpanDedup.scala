@@ -132,7 +132,7 @@ object SpanDedup {
 
   /** FIXED-SIZE variant of [[referenceSpans]] for references too large to
     * join per increment (yesterday's 100 TB corpus): the hash frame folds
-    * driver-side into one bloom sketch ([[Dedup.bloomProbe]]), sized by a
+    * into one serialized bloom sketch ([[Dedup.bloomProbe]]), sized by a
     * one-pass HLL estimate of its distinct hashes with 10% headroom (zero
     * shuffle, so a non-distinct text [[gramHashes]] frame costs the
     * reference no exchange; an estimate a few percent low only nudges the
